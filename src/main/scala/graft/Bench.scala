@@ -35,6 +35,26 @@ object Bench {
     }
   }
 
+  /** Per-query seconds for stdout: 3 decimals under `Locale.ROOT` (the
+    * default locale may print a decimal comma), trailing zeros stripped
+    * but one fractional digit always kept — the adjudicator's `QUERY_RE`
+    * needs the `.`. Callers may keep only a few-KB tail of stdout, so the
+    * line stays short; full-precision doubles go to the BENCH_FULL.json
+    * sidecar.
+    */
+  private[graft] def fmt(v: Double): String = {
+    val t = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+      .reverse.dropWhile(_ == '0').reverse
+    if (t.endsWith(".")) t + "0" else t
+  }
+
+  /** The one-line stdout summary: total plus every query's min time. */
+  private[graft] def summaryLine(results: Map[String, Double], sfDir: String): String = {
+    val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(results.values.sum)},"queries":$qs,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -83,25 +103,10 @@ object Bench {
       name -> times.min
     }.toMap
     if (errors.nonEmpty) System.err.println(s"[bench] FAILED queries: ${errors.mkString(",")}")
-    // r17 (VERDICT item 2): the driver's stdout tail capture is ~4 KB and
-    // the raw-double line for 170 queries was ~7 KB — every PERF_r*.json
-    // since r14 has parsed:null. Per-query seconds now print rounded to 3
-    // decimals with trailing zeros stripped and the redundant "unit" field
-    // dropped (driver reads value+queries; VERDICT sanctioned the drop),
-    // which brings the full line under ~4 KB so it survives the capture.
-    // Full-precision doubles still go to the BENCH_FULL.json sidecar.
-    def fmt(v: Double): String = {
-      val s = f"$v%.3f"
-      val t = s.reverse.dropWhile(_ == '0').reverse
-      if (t.endsWith(".")) t.dropRight(1) else t
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
     val qsFull = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"queries":$qs,"sf":"$sfDir"}"""
+    val line = summaryLine(results, sfDir)
     val lineFull =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"sf":"$sfDir"}"""
     // the driver's stdout capture truncates past a few KB, losing ~100 of

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Msgpack, PredLiteral, PredOp, Predicates, UrlCodec}
+import graft.core.{Msgpack, PredLiteral, Predicates, UrlCodec}
 
 /** Interop with datasets written by the REFERENCE implementation — the
   * kartothek v4 on-disk format (docs/spec/storage_layout.rst:18-56,
@@ -197,12 +197,6 @@ object KartothekInterop {
     val partCols = ds.partitionKeys.toSet
     val indexedCols = ds.embeddedIndices.keySet ++ ds.externalIndices.keySet
 
-    def indexPrunable(l: PredLiteral): Boolean = l.op match {
-      case PredOp.Eq => l.value != null
-      case PredOp.In => l.value == null || !l.value.asInstanceOf[Seq[Any]].contains(null)
-      case _         => true
-    }
-
     val externalCache = scala.collection.mutable.Map.empty[(String, PredLiteral), Set[String]]
     def matchingLabels(l: PredLiteral): Set[String] =
       ds.embeddedIndices.get(l.col) match {
@@ -226,7 +220,7 @@ object KartothekInterop {
           Predicates(Seq(partLits)).matchesValues(ds.partitionValues(label, table))
         }
         val idxLits = conj.filter(l =>
-          indexedCols.contains(l.col) && !partCols.contains(l.col) && indexPrunable(l))
+          indexedCols.contains(l.col) && !partCols.contains(l.col) && Sidecars.probeable(l))
         idxLits.foldLeft(afterPart.toSet)((labels, l) => labels intersect matchingLabels(l))
     }.toSet
     all.filter(surviving.contains)
@@ -363,23 +357,8 @@ object KartothekInterop {
       uuid = ds.uuid, partitionKeys = ds.partitionKeys, partitions = partitions,
       partitionSeq = partitions.keys.map(_ -> 0L).toMap,
       schemaJson = schema.json, metadata = ds.metadata)
-    val indices = secondaryIndices.map { c =>
-      require(schema.fieldNames.contains(c), s"index column '$c' not in schema")
-      val name = Ktk.newSidecarName(c)
-      Ktk.buildIndex(spark, base, md0, c, name)
-      c -> name
-    }.toMap
-    val blooms = bloomFor.map { c =>
-      require(schema.fieldNames.contains(c), s"bloom column '$c' not in schema")
-      val name = Ktk.newSidecarName(c)
-      Ktk.buildBloom(spark, base, md0, c, partitions.keys.toSeq.sorted, name)
-      c -> name
-    }.toMap
-    zoneMapFor.foreach(c => require(schema.fieldNames.contains(c),
-      s"zone-map column '$c' not in schema"))
-    val zones = zoneMapFor.map(c => c -> Ktk.newSidecarName(c)).toMap
-    Ktk.buildZoneSidecars(spark, base, md0, zones, partitions.keys.toSeq.sorted)
-    val md = md0.copy(indices = indices, blooms = blooms, zones = zones)
+    val md = Sidecars.build(spark, base, md0,
+      Sidecars.wanted(secondaryIndices, bloomFor, zoneMapFor))
     DatasetMetadata.store(spark, base, md, operation = "ADOPT")
   }
 

@@ -31,8 +31,6 @@ import graft.core.{PredLiteral, Predicates, SchemaUtil, UrlCodec}
   */
 object Ktk extends org.apache.spark.internal.Logging {
 
-  val IndexDirName = "indices"
-
   /** Test/diagnostic probe: file-candidate count of the LAST [[merge]]'s
     * matched-row scan (−1 = none computed). Lets specs pin that collected
     * key sets — single- OR multi-column — prune below the full label set.
@@ -77,7 +75,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     * [[garbageCollect]] (which skips dot-prefixed names) until complete —
     * the write itself never mutates an existing dir (version-addressing).
     */
-  private def atomicSidecarWrite(spark: SparkSession, dir: String, name: String)(
+  private[ktk] def atomicSidecarWrite(spark: SparkSession, dir: String, name: String)(
       write: String => Unit): Unit = {
     val fsys = DatasetMetadata.fs(spark, dir)
     val tmp = s"$dir/.$name.new"
@@ -194,28 +192,12 @@ object Ktk extends org.apache.spark.internal.Logging {
           s"null values in partition columns ${partitionKeys.mkString(",")} are not allowed")
     }
 
-    (zoneMapFor ++ bloomFor).foreach(c => require(schema.fieldNames.contains(c),
-      s"zone-map/bloom column '$c' not in schema"))
     val md0 = DatasetMetadata(
       uuid = uuid, partitionKeys = partitionKeys, partitions = partitions,
       partitionSeq = partitions.keys.map(_ -> 0L).toMap,
       schemaJson = schema.json, metadata = userMetadata)
-
-    val indices = secondaryIndices.map { c =>
-      require(schema.fieldNames.contains(c), s"index column '$c' not in schema")
-      val name = newSidecarName(c)
-      buildIndex(spark, base, md0, c, name)
-      c -> name
-    }.toMap
-    val blooms = bloomFor.map { c =>
-      val name = newSidecarName(c)
-      buildBloom(spark, base, md0, c, partitions.keys.toSeq.sorted, name)
-      c -> name
-    }.toMap
-    val zones = zoneMapFor.map(c => c -> newSidecarName(c)).toMap
-    buildZoneSidecars(spark, base, md0, zones, partitions.keys.toSeq.sorted)
-
-    val md = md0.copy(indices = indices, blooms = blooms, zones = zones)
+    val md = Sidecars.build(spark, base, md0,
+      Sidecars.wanted(secondaryIndices, bloomFor, zoneMapFor))
     DatasetMetadata.store(spark, base, md, operation = "WRITE")
   }
 
@@ -234,120 +216,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     out.result()
   }
 
-  // -------------------------------------------------------------- zone maps
-
-  /** Per-file min/max for ALL of `cols` from ONE narrow scan: a row per
-    * label with `__min_c`/`__max_c` string columns (≙ Parquet zone maps
-    * lifted into a catalog sidecar). O(#files) rows — catalog-sized, never
-    * data-sized — and it stays DISTRIBUTED: nothing collects to the driver.
-    */
-  private def zoneAggRows(
-      spark: SparkSession, tableDir: String, labels: Seq[String],
-      cols: Seq[String]): DataFrame = {
-    val scan = spark.read.option("basePath", tableDir)
-      .parquet(labels.map(l => s"$tableDir/$l"): _*)
-    val aggs = cols.flatMap(c => Seq(
-      min(col(s"`$c`")).cast("string").as(s"__min_$c"),
-      max(col(s"`$c`")).cast("string").as(s"__max_$c")))
-    scan.groupBy(labelCol(spark, tableDir, input_file_name()).as("label")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Build a zone sidecar for each (column → target file name): one
-    * (label, mn, mx) row per data file (null mn/mx = all-null file).
-    * All columns share one scan; the catalog blob carries only the registry
-    * entry — same storage pattern as [[buildBloom]], so at millions of files
-    * the commit object never inlines ranges and planning reads stay lazy.
-    */
-  private[ktk] def buildZoneSidecars(
-      spark: SparkSession, base: String, md: DatasetMetadata,
-      targets: Map[String, String], labels: Seq[String]): Unit = {
-    if (targets.isEmpty || labels.isEmpty) return
-    val cols = targets.keys.toSeq.sorted
-    val agg = zoneAggRows(spark, md.tableDir(base), labels, cols)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try cols.foreach { c =>
-      atomicSidecarWrite(spark, s"$base/${md.uuid}/zones", targets(c)) { tmp =>
-        agg.select(col("label"), col(s"__min_$c").as("mn"), col(s"__max_$c").as("mx"))
-          .write.mode(SaveMode.Overwrite).parquet(tmp)
-      }
-    } finally { agg.unpersist(); () }
-  }
-
-  /** Incremental zone-sidecar merge, same shape as [[mergeBloomsIncremental]]:
-    * surviving labels keep their rows (semi-join, never an inlined In-list),
-    * new labels get freshly aggregated ones; `appendOnly` is the streaming
-    * fast path (new rows land as extra files, [[compact]] re-canonicalizes).
-    * Returns the zone registry to COMMIT: canonical rewrites land in a fresh
-    * version-addressed dir ([[sidecarName]]) so snapshots never see their
-    * sidecars mutate; appends keep the current name.
-    */
-  private def mergeZonesIncremental(
-      spark: SparkSession, base: String, md: DatasetMetadata, tableDir: String,
-      survivingOld: Seq[String], newLabels: Seq[String],
-      appendOnly: Boolean = false): Map[String, String] = {
-    import spark.implicits._
-    val cols = md.zoneRegistry.keys.toSeq.sorted
-    if (cols.isEmpty) return md.zoneRegistry
-    val fsys = DatasetMetadata.fs(spark, base)
-    val freshAgg =
-      if (newLabels.isEmpty) None
-      else Some(zoneAggRows(spark, tableDir, newLabels, cols)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try cols.map { c =>
-      val fsPath = md.zonePath(base, c)
-      val oldExists = fsys.exists(new Path(fsPath))
-      def fresh = freshAgg.get.select(col("label"),
-        col(s"__min_$c").as("mn"), col(s"__max_$c").as("mx"))
-      if (appendOnly && oldExists) {
-        if (newLabels.nonEmpty) fresh.write.mode(SaveMode.Append).parquet(fsPath)
-        c -> md.zoneRegistry(c)
-      } else if (oldExists || newLabels.nonEmpty) {
-        val survivors = survivingOld.toDF("label")
-        val rows = (oldExists, newLabels.nonEmpty) match {
-          case (true, true) =>
-            spark.read.parquet(fsPath)
-              .join(broadcast(survivors), Seq("label"), "left_semi")
-              .unionByName(fresh)
-          case (true, false) =>
-            spark.read.parquet(fsPath)
-              .join(broadcast(survivors), Seq("label"), "left_semi")
-          case (false, _) => fresh
-        }
-        val name = newSidecarName(c)
-        atomicSidecarWrite(spark, s"$base/${md.uuid}/zones", name) { tmp =>
-          rows.coalesce(SidecarCanonicalFiles)
-            .write.mode(SaveMode.Overwrite).parquet(tmp)
-        }
-        c -> name
-      } else c -> md.zoneRegistry(c)
-    }.toMap
-    finally freshAgg.foreach { a => a.unpersist(); () }
-  }
-
-  /** Migrate LEGACY inline zone maps (pre-sidecar blobs) to sidecar form:
-    * ranges move out of the blob into `<uuid>/zones/`, the blob keeps only
-    * registry entries. Runs on the first mutating op against an old dataset;
-    * the returned metadata is committed by the caller's single blob put.
-    */
-  private def migrateInlineZones(
-      spark: SparkSession, base: String, md: DatasetMetadata): DatasetMetadata = {
-    val inline = md.inlineZoneMaps
-    if (inline.isEmpty) return md
-    import spark.implicits._
-    val names = inline.toSeq.sortBy(_._1).map { case (c, perLabel) =>
-      val rows = perLabel.toSeq.map { case (l, s) =>
-        if (s == null || s.isEmpty) (l, null: String, null: String)
-        else (l, s.head, s(1))
-      }
-      val name = newSidecarName(c)
-      atomicSidecarWrite(spark, s"$base/${md.uuid}/zones", name) { tmp =>
-        rows.toDF("label", "mn", "mx").repartition(1)
-          .write.mode(SaveMode.Overwrite).parquet(tmp)
-      }
-      c -> name
-    }
-    md.copy(zoneMaps = Map.empty, zones = md.zoneRegistry ++ names)
-  }
+  // --------------------------------------------------------------- sidecars
 
   /** Materialized zone map of `column` — (label → [min, max] strings, empty
     * seq = all-null file) — from the sidecar, or the legacy inline form for
@@ -356,8 +225,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     */
   def zoneMapOf(spark: SparkSession, base: String, md: DatasetMetadata,
       column: String): Map[String, Seq[String]] = {
-    if (md.zoneRegistry.contains(column)) {
-      val p = new Path(md.zonePath(base, column))
+    val zone = Sidecars.Zone
+    if (zone.registry(md).contains(column)) {
+      val p = new Path(zone.path(base, md, column))
       if (!DatasetMetadata.fs(spark, base).exists(p)) Map.empty
       else spark.read.parquet(p.toString).select("label", "mn", "mx").collect().map { r =>
         val mn = r.getString(1); val mx = r.getString(2)
@@ -365,68 +235,6 @@ object Ktk extends org.apache.spark.internal.Logging {
       }.toMap
     } else md.inlineZoneMaps.getOrElse(column, Map.empty)
   }
-
-  /** Normalize a value for zone-range comparison: date/timestamp strings
-    * (the rendered form of `cast(ts as string)`) become epoch millis so
-    * they compare numerically with date literals.
-    */
-  private def zoneValue(x: Any): Any = x match {
-    case s: String =>
-      try java.sql.Timestamp.valueOf(s).getTime
-      catch {
-        case _: Exception =>
-          try java.sql.Date.valueOf(s).getTime catch { case _: Exception => s }
-      }
-    case d: java.sql.Date => d.getTime
-    case t: java.sql.Timestamp => t.getTime
-    case other => other
-  }
-
-  private def zoneCmp(a: Any, b: Any): Int =
-    Predicates.compare(zoneValue(a), zoneValue(b))
-
-  /** May rows in [mn, mx] satisfy the literal? CONSERVATIVE: any comparison
-    * failure keeps the file. Stats exclude nulls, so null-matching literals
-    * never prune (handled by the caller).
-    */
-  private def zoneMayMatch(l: PredLiteral, mn: String, mx: String): Boolean = {
-    import graft.core.PredOp._
-    try l.op match {
-      case Eq => zoneCmp(l.value, mn) >= 0 && zoneCmp(l.value, mx) <= 0
-      case Ne => !(zoneCmp(mn, mx) == 0 && zoneCmp(l.value, mn) == 0)
-      case Lt => zoneCmp(mn, l.value) < 0
-      case Le => zoneCmp(mn, l.value) <= 0
-      case Gt => zoneCmp(mx, l.value) > 0
-      case Ge => zoneCmp(mx, l.value) >= 0
-      case In => l.value.asInstanceOf[Seq[Any]]
-        .exists(v => v != null && zoneCmp(v, mn) >= 0 && zoneCmp(v, mx) <= 0)
-    } catch { case _: Exception => true }
-  }
-
-  /** Range check for one literal, closed over for driver or executor use.
-    * Large IN lists (semiJoinRead pushes up to maxKeys values): sort once,
-    * binary-search per file — O(files·log keys), not O(files·keys).
-    */
-  private def zoneCheckFn(l: PredLiteral): (String, String) => Boolean = l.op match {
-    case graft.core.PredOp.In =>
-      val sorted =
-        try l.value.asInstanceOf[Seq[Any]].filter(_ != null)
-          .sortWith(zoneCmp(_, _) < 0).toIndexedSeq
-        catch { case _: Exception => null }
-      if (sorted == null) (mn, mx) => zoneMayMatch(l, mn, mx)
-      else (mn, mx) => try {
-        // least value >= mn, then test <= mx
-        var lo = 0; var hi = sorted.size
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (zoneCmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
-        }
-        lo < sorted.size && zoneCmp(sorted(lo), mx) <= 0
-      } catch { case _: Exception => true }
-    case _ => (mn, mx) => zoneMayMatch(l, mn, mx)
-  }
-
-  // ---------------------------------------------------------------- blooms
 
   /** Bloom sizing bounds. Filters are sized to each file's ACTUAL distinct
     * hash count (clamped to these bounds), so small files don't pay a
@@ -438,103 +246,6 @@ object Ktk extends org.apache.spark.internal.Logging {
   val BloomMaxItems: Long = 10000000L
   val BloomFpp: Double = 0.01
 
-  /** One (label, bloom bytes) row per data file for `column`: scan only that
-    * column + file name, hash values with xxhash64 (the probe hashes literals
-    * identically), group by file label, fold each group into a Bloom filter.
-    * The shuffle moves (label, long) pairs — O(rows × 8 bytes), never values.
-    * Coverage is TOTAL over the scanned labels: a file with no non-null
-    * value gets a row with a NULL bloom (matches nothing — only
-    * non-null-matching literals ever reach the probe), so the probe can
-    * treat "not a survivor" as "safe to skip" and collect survivors only.
-    */
-  private def bloomPairs(
-      spark: SparkSession, tableDir: String, column: String, labels: Seq[String]): DataFrame = {
-    import spark.implicits._
-    if (labels.isEmpty) return spark.emptyDataset[(String, Array[Byte])].toDF("label", "bloom")
-    spark.read.option("basePath", tableDir)
-      .parquet(labels.map(l => s"$tableDir/$l"): _*)
-      .select(col(s"`$column`").as("v"), labelCol(spark, tableDir, input_file_name()).as("label"))
-      .select(col("label"),
-        when(col("v").isNotNull, xxhash64(col("v"))).as("h"))
-      .as[(String, java.lang.Long)]
-      .groupByKey(_._1)
-      .mapGroups { (label, it) =>
-        // two-pass per file: buffer the 8-byte hashes (bounded by rows per
-        // file), then size the filter to the DISTINCT count — exact FPP
-        // control per file instead of a one-size guess
-        val hs = new java.util.HashSet[java.lang.Long]()
-        it.foreach { case (_, h) => if (h != null) { hs.add(h); () } }
-        if (hs.isEmpty) (label, null: Array[Byte])
-        else {
-          val n = math.min(BloomMaxItems, math.max(BloomMinItems, hs.size.toLong))
-          val bf = org.apache.spark.util.sketch.BloomFilter.create(n, BloomFpp)
-          hs.forEach(h => bf.putLong(h))
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          (label, bos.toByteArray)
-        }
-      }
-      .toDF("label", "bloom")
-  }
-
-  /** Build the Bloom sidecar `<uuid>/blooms/<target>` for the given labels
-    * (equality/IN data skipping on high-cardinality columns where zone
-    * ranges are too wide and a secondary index too big; the catalog blob
-    * carries only the registry entry, the sidecar stays on storage).
-    */
-  private[ktk] def buildBloom(
-      spark: SparkSession, base: String, md: DatasetMetadata, column: String,
-      labels: Seq[String], target: String): Unit =
-    atomicSidecarWrite(spark, s"$base/${md.uuid}/blooms", target) { tmp =>
-      bloomPairs(spark, md.tableDir(base), column, labels)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-
-  /** Incremental sidecar merge, same shape as [[mergeIndicesIncremental]]:
-    * surviving labels keep their bloom rows (semi-join, never an inlined
-    * In-list), new labels get freshly built ones. Returns the bloom
-    * registry to COMMIT — canonical rewrites go to a fresh
-    * version-addressed dir, appends keep the current name.
-    */
-  private def mergeBloomsIncremental(
-      spark: SparkSession, base: String, md: DatasetMetadata, tableDir: String,
-      survivingOld: Seq[String], newLabels: Seq[String],
-      appendOnly: Boolean = false): Map[String, String] = {
-    import spark.implicits._
-    val fsys = DatasetMetadata.fs(spark, base)
-    md.bloomRegistry.keys.toSeq.sorted.map { c =>
-      val fsPath = md.bloomPath(base, c)
-      val oldExists = fsys.exists(new Path(fsPath))
-      if (appendOnly && oldExists) {
-        // streaming-commit fast path (see mergeIndicesIncremental): new
-        // labels' bloom rows append as extra files, O(new files) per commit
-        if (newLabels.nonEmpty)
-          bloomPairs(spark, tableDir, c, newLabels)
-            .write.mode(SaveMode.Append).parquet(fsPath)
-        c -> md.bloomRegistry(c)
-      } else if (oldExists || newLabels.nonEmpty) {
-        val survivors = survivingOld.toDF("label")
-        def fresh = bloomPairs(spark, tableDir, c, newLabels)
-        val rows = (oldExists, newLabels.nonEmpty) match {
-          case (true, true) =>
-            spark.read.parquet(fsPath)
-              .join(broadcast(survivors), Seq("label"), "left_semi")
-              .unionByName(fresh)
-          case (true, false) =>
-            spark.read.parquet(fsPath)
-              .join(broadcast(survivors), Seq("label"), "left_semi")
-          case (false, _) => fresh
-        }
-        val name = newSidecarName(c)
-        atomicSidecarWrite(spark, s"$base/${md.uuid}/blooms", name) { tmp =>
-          rows.coalesce(SidecarCanonicalFiles)
-            .write.mode(SaveMode.Overwrite).parquet(tmp)
-        }
-        c -> name
-      } else c -> md.bloomRegistry(c)
-    }.toMap
-  }
-
   /** Highest parquet-fragment count across all registered sidecars (index /
     * bloom / zone). Append-only streaming commits add one fragment set per
     * batch; this is the signal for re-canonicalization. O(sidecar dirs)
@@ -543,11 +254,7 @@ object Ktk extends org.apache.spark.internal.Logging {
   def sidecarFragments(spark: SparkSession, base: String, uuid: String): Int = {
     val md = DatasetMetadata.load(spark, base, uuid)
     val fsys = DatasetMetadata.fs(spark, base)
-    val paths =
-      md.indices.keys.map(c => md.indexPath(base, c)) ++
-        md.bloomRegistry.keys.map(c => md.bloomPath(base, c)) ++
-        md.zoneRegistry.keys.map(c => md.zonePath(base, c))
-    paths.map { p =>
+    Sidecars.kinds.flatMap(k => k.registry(md).keys.map(k.path(base, md, _))).map { p =>
       val dir = new Path(p)
       if (!fsys.exists(dir)) 0
       else fsys.listStatus(dir).count { st =>
@@ -565,18 +272,14 @@ object Ktk extends org.apache.spark.internal.Logging {
     */
   def canonicalizeSidecars(spark: SparkSession, base: String, uuid: String): Unit = {
     val md0 = DatasetMetadata.load(spark, base, uuid)
-    val md = migrateInlineZones(spark, base, md0)
-    val tableDir = md.tableDir(base)
-    val live = md.partitions.keys.toSeq.sorted
-    val idx = mergeIndicesIncremental(spark, base, md, tableDir, survivingOld = live, newLabels = Nil)
-    val blm = mergeBloomsIncremental(spark, base, md, tableDir, survivingOld = live, newLabels = Nil)
-    val zon = mergeZonesIncremental(spark, base, md, tableDir, survivingOld = live, newLabels = Nil)
+    val md = Sidecars.migrateInlineZones(spark, base, md0)
+    val merged = Sidecars.merge(spark, base, md,
+      survivors = md.partitions.keys.toSeq.sorted, newLabels = Nil)
     // canonical rewrites landed in fresh version-addressed dirs — the
     // registries naming them (plus any inline-zone migration) must COMMIT;
     // one put covers all. No-op canonicalizations commit nothing.
-    if (idx != md.indices || blm != md.bloomRegistry || zon != md.zoneRegistry || (md ne md0)) {
-      DatasetMetadata.store(spark, base,
-        md.copy(indices = idx, blooms = blm, zones = zon), parentMd = Some(md0),
+    if ((merged ne md) || (md ne md0)) {
+      DatasetMetadata.store(spark, base, merged, parentMd = Some(md0),
         operation = "CANONICALIZE SIDECARS")
       ()
     }
@@ -588,132 +291,23 @@ object Ktk extends org.apache.spark.internal.Logging {
     * which has no zone maps). One narrow scan; O(#files × #cols) metadata.
     */
   def addZoneMaps(spark: SparkSession, base: String, uuid: String,
-      columns: Seq[String]): DatasetMetadata = {
-    val md = migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
-    columns.foreach(c => require(md.schema.fieldNames.contains(c),
-      s"zone-map column '$c' not in schema"))
-    val targets = columns.map(c => c -> newSidecarName(c)).toMap
-    buildZoneSidecars(spark, base, md, targets, md.partitions.keys.toSeq.sorted)
-    val md2 = md.copy(zones = md.zoneRegistry ++ targets)
-    DatasetMetadata.store(spark, base, md2, parentMd = Some(md),
-      operation = "ADD ZONEMAPS")
-  }
+      columns: Seq[String]): DatasetMetadata =
+    Sidecars.add(spark, base, uuid, Sidecars.Zone, columns)
 
   /** Register + build a Bloom sidecar on an EXISTING dataset (the bloom
     * analog of [[addIndex]]).
     */
-  def addBloom(spark: SparkSession, base: String, uuid: String, column: String): DatasetMetadata = {
-    val md = DatasetMetadata.load(spark, base, uuid)
-    require(md.schema.fieldNames.contains(column), s"bloom column '$column' not in schema")
-    val name = newSidecarName(column)
-    buildBloom(spark, base, md, column, md.partitions.keys.toSeq.sorted, name)
-    val md2 = md.copy(blooms = md.bloomRegistry + (column -> name))
-    DatasetMetadata.store(spark, base, md2, parentMd = Some(md),
-      operation = "ADD BLOOM")
-  }
-
-  /** xxhash64 of predicate literals AT THE COLUMN'S TYPE — must agree
-    * bit-for-bit with the build side's `xxhash64(col)`, so each literal is
-    * cast through the same Catalyst type first. ONE local job hashes the
-    * whole batch (an IN-list must not cost a job per value). None (= never
-    * prune) when any cast fails or yields null: such a literal set cannot
-    * be safely probed.
-    */
-  private def literalHashes(spark: SparkSession, dt: org.apache.spark.sql.types.DataType,
-      vals: Seq[Any]): Option[Seq[Long]] =
-    try {
-      val arr = array(vals.map(v => lit(v).cast(dt)): _*)
-      val rows = spark.range(1).select(explode(arr).as("v"))
-        .select(col("v").isNull.as("n"), xxhash64(col("v")).as("h")).collect()
-      if (rows.isEmpty || rows.exists(_.getBoolean(0))) None
-      else Some(rows.map(_.getLong(1)).toSeq)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Distributed Bloom-sidecar probe for one Eq/In literal: each file's
-    * filter deserializes and evaluates ON EXECUTORS, the survivor filter is
-    * applied there too, and only labels that MIGHT match are collected —
-    * O(matching labels) driver transfer, the pruning factor itself, never
-    * O(#files). Sound to skip non-survivors because sidecar coverage is
-    * total: every committed label has a row ([[bloomPairs]] emits a null
-    * bloom for all-null files, which no non-null-matching literal — the only
-    * kind routed here — can match). Labels a LEGACY sidecar lacks are
-    * exactly the all-null files, so skipping them stays harmless.
-    * None = this literal cannot be probed safely (no sidecar file yet, or a
-    * literal failed to cast/hash) → no pruning.
-    */
-  private[graft] def bloomProbe(
-      spark: SparkSession, base: String, md: DatasetMetadata,
-      l: PredLiteral): Option[Set[String]] = {
-    val sidecar = new Path(md.bloomPath(base, l.col))
-    if (!DatasetMetadata.fs(spark, base).exists(sidecar)) None
-    else {
-      val dt = md.schema(l.col).dataType
-      val vals = l.op match {
-        case graft.core.PredOp.Eq => Seq(l.value)
-        case graft.core.PredOp.In => l.value.asInstanceOf[Seq[Any]].filter(_ != null)
-        case _                    => Seq.empty
-      }
-      // every literal must hash (a failed cast means we cannot mirror the
-      // build-side hashing for it) or the probe is unsound for this conj
-      literalHashes(spark, dt, vals) match {
-        case None => None
-        case Some(hashes) =>
-          val hs = hashes.toArray
-          val might = udf { (bytes: Array[Byte]) =>
-            bytes != null && {
-              val bf = org.apache.spark.util.sketch.BloomFilter
-                .readFrom(new java.io.ByteArrayInputStream(bytes))
-              hs.exists(bf.mightContainLong)
-            }
-          }
-          Some(spark.read.parquet(sidecar.toString)
-            .filter(might(col("bloom")))
-            .select(col("label")).collect().map(_.getString(0)).toSet)
-      }
-    }
-  }
-
-  /** Distributed zone-sidecar probe for one literal: the range check
-    * evaluates on executors, survivors only come back — O(matching labels),
-    * never O(#files). Null mn/mx = all-null or empty file, which no
-    * non-null-matching literal (the only kind routed here) can satisfy, so
-    * coverage is total over committed labels and skipping non-survivors is
-    * sound. None = no sidecar file → no pruning.
-    */
-  private[graft] def zoneProbe(
-      spark: SparkSession, base: String, md: DatasetMetadata,
-      l: PredLiteral): Option[Set[String]] = {
-    val sidecar = new Path(md.zonePath(base, l.col))
-    if (!DatasetMetadata.fs(spark, base).exists(sidecar)) None
-    else {
-      val check = zoneCheckFn(l)
-      val may = udf { (mn: String, mx: String) =>
-        mn != null && mx != null && check(mn, mx)
-      }
-      Some(spark.read.parquet(sidecar.toString)
-        .filter(may(col("mn"), col("mx")))
-        .select(col("label")).collect().map(_.getString(0)).toSet)
-    }
-  }
+  def addBloom(spark: SparkSession, base: String, uuid: String, column: String): DatasetMetadata =
+    Sidecars.add(spark, base, uuid, Sidecars.Bloom, Seq(column))
 
   // ---------------------------------------------------------------- indices
 
-  /** Build one secondary index as a Parquet table `(value, partitions:
-    * array<string>)` — the Spark-native form of ExplicitSecondaryIndex
-    * storage (core/index.py:899-955). One shuffle agg over only the indexed
-    * column + file name; Parquet column pruning keeps the scan narrow.
-    * Writes to `target` under the index dir (version-addressed by callers).
+  /** Build one secondary index over every label of `md` into `target` under
+    * the index dir (version-addressed by callers) — see [[Sidecars.Index]].
     */
   def buildIndex(spark: SparkSession, base: String, md: DatasetMetadata, column: String,
-      target: String): Unit = {
-    val tableDir = md.tableDir(base)
-    val df = spark.read.option("basePath", tableDir).parquet(
-      md.partitions.keys.toSeq.sorted.map(l => s"$tableDir/$l"): _*)
-    val labeled = df.select(col(s"`$column`").as("value"), labelCol(spark, tableDir, input_file_name()).as("label"))
-    atomicSidecarWrite(spark, s"$base/${md.uuid}/$IndexDirName", target) { tmp =>
-      indexFromPairs(labeled).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-  }
+      target: String): Unit =
+    Sidecars.Index.build(spark, base, md, Map(column -> target), md.partitions.keys.toSeq.sorted)
 
   /** Decode a URI-encoded path column back to the on-disk/metadata label
     * form. `_metadata.file_path` and `input_file_name()` render the file's
@@ -762,23 +356,6 @@ object Ktk extends org.apache.spark.internal.Logging {
           "to guess its table-relative label"))))
   }
 
-  /** (value,label) pairs → deterministic (value, partitions) index rows. */
-  /** Canonical sidecar rewrites bound their output to this many files so
-    * the streaming fragment cap converges (a canonical result wider than
-    * the cap would re-trigger every commit). Files stay value-sorted, so
-    * row-group stats prune regardless of file count.
-    */
-  private[ktk] val SidecarCanonicalFiles = 4
-
-  private def indexFromPairs(pairs: DataFrame, outFiles: Int = 0): DataFrame = {
-    val agg = pairs
-      .where(col("value").isNotNull) // nulls are not indexable (core/index.py:83-86)
-      .groupBy("value")
-      .agg(sort_array(collect_set(col("label"))).as("partitions"))
-    (if (outFiles > 0) agg.repartition(outFiles, col("value")) else agg)
-      .sortWithinPartitions("value")
-  }
-
   /** The raw index frame. One row per value after [[store]]/[[update]]/
     * [[compact]]; append-only streaming commits ([[update]] with
     * `appendSidecars`) may leave a value spread over several rows until the
@@ -792,10 +369,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     loadIndex(spark, base, md, column).select(col("value")).distinct()
 
   /** ≙ dataset.query / get_indices_as_dataframe (core/dataset.py:392-516):
-    * labels matching the predicates using ONLY partition keys + secondary
-    * indices. Per conjunction: intersect per-column label sets (the
-    * index-intersection join, smallest-first is irrelevant at driver scale);
-    * union across conjunctions.
+    * labels matching the predicates using ONLY partition keys + sidecars.
+    * Per conjunction: intersect per-literal label sets; union across
+    * conjunctions.
     */
   def queryLabels(
       spark: SparkSession,
@@ -804,96 +380,24 @@ object Ktk extends org.apache.spark.internal.Logging {
       predicates: Predicates): Seq[String] = {
     val all = md.partitions.keys.toSeq.sorted
     if (predicates.isEmpty || all.isEmpty) return all
-    val indexed = md.indices.keySet
     val partCols = md.partitionKeys.toSet
-
-    // per (column, literal): evaluate the literal INSIDE the index scan —
-    // the predicate pushes into the index parquet (written sorted by value,
-    // so row-group stats prune tightly) and only MATCHING labels come back
-    // to the driver, never the whole index. O(matching labels), not O(index).
-    val lookupCache = scala.collection.mutable.Map.empty[(String, PredLiteral), Set[String]]
-    def matchingLabels(l: PredLiteral): Set[String] =
-      lookupCache.getOrElseUpdate((l.col, l), {
-        val onValue = Predicates(Seq(Seq(l.copy(col = "value"))))
-        loadIndex(spark, base, md, l.col)
-          .filter(onValue.toColumn)
-          .select(explode(col("partitions")).as("label"))
-          .distinct()
-          .collect().map(_.getString(0)).toSet
-      })
-
-    // per (column, literal): probe the bloom / zone sidecars DISTRIBUTED —
-    // see [[bloomProbe]] / [[zoneProbe]]. Only SURVIVING labels are
-    // collected, so driver transfer is O(matching) — the pruning factor
-    // itself — never O(#files).
-    val bloomLookupCache =
-      scala.collection.mutable.Map.empty[(String, PredLiteral), Option[Set[String]]]
-    def bloomSets(l: PredLiteral): Option[Set[String]] =
-      bloomLookupCache.getOrElseUpdate((l.col, l), bloomProbe(spark, base, md, l))
-    val zoneLookupCache =
-      scala.collection.mutable.Map.empty[(String, PredLiteral), Option[Set[String]]]
-    def zoneSets(l: PredLiteral): Option[Set[String]] =
-      zoneLookupCache.getOrElseUpdate((l.col, l), zoneProbe(spark, base, md, l))
-
+    // per (kind, literal): one distributed sidecar probe — only labels that
+    // may match come back, so driver transfer is O(matching), the pruning
+    // factor itself, never O(#files)
+    val probes =
+      scala.collection.mutable.Map.empty[(Sidecars.Kind, PredLiteral), Option[Set[String]]]
     val surviving = predicates.splitPerConjunction(partCols).zip(predicates.disjunction).flatMap {
       case ((partLits, _), conj) =>
         // 1. partition-key pruning from decoded labels (PartitionIndex)
         val afterPart = all.filter { label =>
-          val values = md.partitionValues(label)
-          Predicates(Seq(partLits)).matchesValues(values)
+          Predicates(Seq(partLits)).matchesValues(md.partitionValues(label))
         }
-        // 2. secondary-index pruning: intersect per-literal label sets.
-        // Null-valued literals are NOT index-prunable: nulls are never
-        // indexed (indexFromPairs drops them), so pruning on `== null` /
-        // `in [.., null, ..]` would silently drop every partition whose
-        // rows hold nulls — leave those literals to the residual filter.
-        def indexPrunable(l: PredLiteral): Boolean = l.op match {
-          case graft.core.PredOp.Eq => l.value != null
-          case graft.core.PredOp.In =>
-            l.value == null || !l.value.asInstanceOf[Seq[Any]].contains(null)
-          case _ => true
-        }
-        val idxLits = conj.filter(l =>
-          indexed.contains(l.col) && !partCols.contains(l.col) && indexPrunable(l))
-        val afterIdx =
-          idxLits.foldLeft(afterPart.toSet)((labels, l) => labels intersect matchingLabels(l))
-        // 3. zone-map pruning: drop files whose [min, max] range excludes
-        // the literal. `indexPrunable` doubles as the null guard — nulls
-        // are invisible to stats, so null-matching literals never prune.
-        // A file with null/empty stats holds only nulls for that column,
-        // which no non-null-matching literal can satisfy. Sidecar columns
-        // probe DISTRIBUTED (zoneSets above); legacy inline maps evaluate
-        // on the driver.
-        val zoneLits = conj.filter(l =>
-          md.zoneColumns.contains(l.col) && !partCols.contains(l.col) && indexPrunable(l))
-        val afterZone = zoneLits.foldLeft(afterIdx) { (labels, l) =>
-          if (md.zoneRegistry.contains(l.col)) {
-            zoneSets(l) match {
-              case None           => labels
-              case Some(matching) => labels intersect matching
-            }
-          } else {
-            val zm = md.inlineZoneMaps(l.col)
-            val check = zoneCheckFn(l)
-            labels.filter { lbl =>
-              zm.get(lbl) match {
-                case None                  => true // no stats recorded: keep
-                case Some(s) if s.isEmpty  => false // all-null file
-                case Some(s)               => check(s.head, s(1))
-              }
-            }
-          }
-        }
-        // 4. Bloom pruning: equality/IN literals on bloom-registered columns.
-        // Labels absent from the sidecar are always kept (files written after
-        // the bloom build, or holding only nulls) — absence is conservative.
-        val bloomLits = conj.filter(l =>
-          (l.op == graft.core.PredOp.Eq || l.op == graft.core.PredOp.In) &&
-            md.bloomRegistry.contains(l.col) && !partCols.contains(l.col) && indexPrunable(l))
-        bloomLits.foldLeft(afterZone) { (labels, l) =>
-          bloomSets(l) match {
-            case None           => labels
-            case Some(matching) => labels intersect matching
+        // 2. sidecar pruning (index, bloom, zone): intersect the label sets
+        // each kind's probe returns; None (no sidecar file) keeps all
+        val lits = conj.filter(l => !partCols.contains(l.col) && Sidecars.probeable(l))
+        Sidecars.kinds.foldLeft(afterPart.toSet) { (labels, k) =>
+          lits.filter(k.covers(md, _)).foldLeft(labels) { (ls, l) =>
+            probes.getOrElseUpdate((k, l), k.probe(spark, base, md, l)).fold(ls)(ls intersect _)
           }
         }
     }.toSet
@@ -1660,15 +1164,9 @@ object Ktk extends org.apache.spark.internal.Logging {
       val finalSeq = finalPartitions.keys.map { l =>
         l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
       }.toMap
-      val survivors = md.partitions.keys.toSeq
-      val idxReg = mergeIndicesIncremental(spark, base, md, tableDir,
-        survivingOld = survivors, newLabels = newLabels.toSeq)
-      val bloomReg = mergeBloomsIncremental(spark, base, md, tableDir,
-        survivingOld = survivors, newLabels = newLabels.toSeq)
-      val zoneReg = mergeZonesIncremental(spark, base, md, tableDir,
-        survivingOld = survivors, newLabels = newLabels.toSeq)
-      val md1 = md.copy(partitions = finalPartitions, partitionSeq = finalSeq,
-        indices = idxReg, blooms = bloomReg, zones = zoneReg,
+      val merged = Sidecars.merge(spark, base, md,
+        survivors = md.partitions.keys.toSeq, newLabels = newLabels.toSeq)
+      val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
         deletes = fragmentsToCommit(spark, base, md,
           md.deleteFragments ++ fragment.map(_._1), maxFragments),
         metadata = md.metadata +
@@ -1723,8 +1221,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     val evolvedSchema: StructType =
       if (evolveSchema) {
         val cand = SchemaUtil.normalizeSchema(source.schema, md.partitionKeys)
-        val sidecarCols = md.indices.keySet ++ md.bloomRegistry.keySet ++ md.zoneColumns
-        val absent = sidecarCols.filterNot(cand.fieldNames.contains).toSeq.sorted
+        val absent = Sidecars.columns(md).filterNot(cand.fieldNames.contains).toSeq.sorted
         require(absent.isEmpty,
           s"evolveSchema merge must still carry the registered index/bloom/zone " +
             s"column(s): ${absent.mkString(", ")}")
@@ -1907,16 +1404,10 @@ object Ktk extends org.apache.spark.internal.Logging {
     val finalSeq = finalPartitions.keys.map { l =>
       l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
     }.toMap
-    val survivors = md.partitions.keys.toSeq
-    val idxReg = mergeIndicesIncremental(spark, base, md, tableDir,
-      survivingOld = survivors, newLabels = newLabels.toSeq)
-    val bloomReg = mergeBloomsIncremental(spark, base, md, tableDir,
-      survivingOld = survivors, newLabels = newLabels.toSeq)
-    val zoneReg = mergeZonesIncremental(spark, base, md, tableDir,
-      survivingOld = survivors, newLabels = newLabels.toSeq)
-    val md1 = md.copy(partitions = finalPartitions, partitionSeq = finalSeq,
+    val merged = Sidecars.merge(spark, base, md,
+      survivors = md.partitions.keys.toSeq, newLabels = newLabels.toSeq)
+    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
       schemaJson = evolvedSchema.json,
-      indices = idxReg, blooms = bloomReg, zones = zoneReg,
       deletes = fragmentsToCommit(spark, base, md,
         md.deleteFragments ++ fragment.map(_._1), MaxDeleteFragments),
       metadata = md.metadata ++ extraMetadata +
@@ -2624,9 +2115,8 @@ object Ktk extends org.apache.spark.internal.Logging {
       uuid: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       scope: Predicates = Predicates.empty): DatasetMetadata = {
-    val md = migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
     if (md.deleteFragments.isEmpty) return md
-    val tableDir = md.tableDir(base)
     // optional partition scope: fold tombstones only for matching
     // partitions' files — fragments covering out-of-scope files survive
     val inScope = partitionScope(md, scope, "materialize")
@@ -2659,18 +2149,10 @@ object Ktk extends org.apache.spark.internal.Logging {
     val finalSeq = finalPartitions.keys.map { l =>
       l -> newSeqOf.getOrElse(l, md.seqOf(l))
     }.toMap
-    val newLabels = newSeqOf.keys.toSeq.sorted
-    val idxReg = mergeIndicesIncremental(spark, base, md, tableDir,
-      survivingOld = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newLabels)
-    val bloomReg = mergeBloomsIncremental(spark, base, md, tableDir,
-      survivingOld = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newLabels)
-    val zoneReg = mergeZonesIncremental(spark, base, md, tableDir,
-      survivingOld = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newLabels)
-    val md1 = md.copy(partitions = finalPartitions, partitionSeq = finalSeq,
-      indices = idxReg, blooms = bloomReg, zones = zoneReg,
+    val merged = Sidecars.merge(spark, base, md,
+      survivors = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
+      newLabels = newSeqOf.keys.toSeq.sorted)
+    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
       // fragments covering only the rewritten files drop; with a scope,
       // fragments for untouched dirty files must survive or their deleted
       // rows would resurrect
@@ -2768,7 +2250,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       requireAppendsInScope: Boolean = false,
       dynamicPartitionOverwrite: Boolean = false): DatasetMetadata = {
 
-    val md = migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
     val tableDir = md.tableDir(base)
     if (dynamicPartitionOverwrite) {
       require(!replaceAll && deleteScope.isEmpty,
@@ -2814,8 +2296,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     val evolvedSchema: StructType = newData match {
       case Some(df) if evolveSchema =>
         val cand = SchemaUtil.normalizeSchema(df.schema, md.partitionKeys)
-        val sidecarCols = md.indices.keySet ++ md.bloomRegistry.keySet ++ md.zoneColumns
-        val absent = sidecarCols.filterNot(cand.fieldNames.contains).toSeq.sorted
+        val absent = Sidecars.columns(md).filterNot(cand.fieldNames.contains).toSeq.sorted
         require(absent.isEmpty,
           s"evolveSchema update must still carry the registered index/bloom/zone " +
             s"column(s): ${absent.mkString(", ")}")
@@ -2900,28 +2381,18 @@ object Ktk extends org.apache.spark.internal.Logging {
       val finalSeq = finalPartitions.keys.map { l =>
         l -> (if (newLabels.contains(l)) nextSeq else parent.seqOf(l))
       }.toMap
-      // incremental index merge (≙ update_indices, io_components/write.py:283-309):
-      // keep surviving labels of the old index, union the new files' pairs.
-      // Zone and bloom sidecars merge the same way; canonical rewrites land
-      // in fresh version-addressed dirs whose names commit with the blob.
       // append-only sidecar maintenance: only meaningful with no deletes —
       // after a delete the canonical merge must drop the dead labels' rows so
       // loadIndex/observedValues stay exact (queryLabels alone would tolerate
       // stale labels via its live-partition intersection)
-      val appendOnly = appendSidecars && dropped.isEmpty
-      val survivingOld = finalPartitions.keys.toSeq.filter(refs.contains)
-      val idxReg = mergeIndicesIncremental(spark, base, parent, tableDir,
-        survivingOld = survivingOld, newLabels = newLabels.toSeq, appendOnly = appendOnly)
-      val bloomReg = mergeBloomsIncremental(spark, base, parent, tableDir,
-        survivingOld = survivingOld, newLabels = newLabels.toSeq, appendOnly = appendOnly)
-      val zoneReg = mergeZonesIncremental(spark, base, parent, tableDir,
-        survivingOld = survivingOld, newLabels = newLabels.toSeq, appendOnly = appendOnly)
+      val merged = Sidecars.merge(spark, base, parent,
+        survivors = finalPartitions.keys.toSeq.filter(refs.contains),
+        newLabels = newLabels.toSeq, appendOnly = appendSidecars && dropped.isEmpty)
       val sortMeta =
         if (sortBy.isEmpty) Map.empty[String, String]
         else Map(DatasetMetadata.SortByKey -> sortBy.mkString(","))
-      val md1 = parent.copy(partitions = finalPartitions, partitionSeq = finalSeq,
+      val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
         schemaJson = evolvedNow.json,
-        indices = idxReg, blooms = bloomReg, zones = zoneReg,
         // a full content replacement also sheds pending deletion vectors —
         // every file they tombstone just left the referenced set
         deletes = if (effReplaceAll) Nil else parent.deletes,
@@ -3028,74 +2499,16 @@ object Ktk extends org.apache.spark.internal.Logging {
     if (newFiles.exists(_._1.contains("__HIVE_DEFAULT_PARTITION__")))
       throw new IllegalArgumentException("null values in partition columns are not allowed")
     val nextSeq = nextMonotoneSeq(md)
-    val md1 = md.copy(
+    val md1 = Sidecars.without(md).copy(
       partitionKeys = partitionOn,
       schemaJson = SchemaUtil.normalizeSchema(df.schema, partitionOn).json,
       partitions = newFiles.toMap,
       partitionSeq = newFiles.map(_._1 -> nextSeq).toMap,
-      indices = Map.empty, blooms = Map.empty, zones = Map.empty,
-      zoneMaps = Map.empty, deletes = Nil,
+      deletes = Nil,
       metadata = userMetadata +
         (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
     DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
       operation = "REPLACE TABLE")
-  }
-
-  /** Incremental index merge (≙ update_indices, io_components/write.py:
-    * 283-309): each registered index keeps its surviving labels' pairs and
-    * unions freshly scanned pairs for the new labels. Shared by [[update]],
-    * [[commit]] and [[compact]]. Returns the index registry to COMMIT —
-    * canonical rewrites go to a fresh version-addressed dir, appends keep
-    * the current name.
-    */
-  private def mergeIndicesIncremental(
-      spark: SparkSession, base: String, md: DatasetMetadata, tableDir: String,
-      survivingOld: Seq[String], newLabels: Seq[String],
-      appendOnly: Boolean = false): Map[String, String] = {
-    import spark.implicits._
-    val fsys = DatasetMetadata.fs(spark, base)
-    md.indices.keys.toSeq.sorted.map { c =>
-      val fsPath = md.indexPath(base, c)
-      // an index registered at createEmpty has no file until data first lands
-      val oldExists = fsys.exists(new Path(fsPath))
-      if (appendOnly && oldExists) {
-        // streaming-commit fast path: O(new files), never O(index). New
-        // labels' rows land as EXTRA parquet files in the index dir; a value
-        // may then span several rows until [[compact]] re-canonicalizes
-        // (consumers take the union — see [[loadIndex]]).
-        if (newLabels.nonEmpty)
-          indexFromPairs(spark.read.option("basePath", tableDir)
-              .parquet(newLabels.map(l => s"$tableDir/$l"): _*)
-              .select(col(s"`$c`").as("value"), labelCol(spark, tableDir, input_file_name()).as("label")))
-            .write.mode(SaveMode.Append).parquet(fsPath)
-        c -> md.indices(c)
-      } else if (oldExists || newLabels.nonEmpty) {
-        // surviving-old-labels as a semi-join, not a giant In-list — the label
-        // set is O(partitions) and must never inline into the plan
-        val survivors = survivingOld.toDF("label")
-        def freshPairs = spark.read.option("basePath", tableDir)
-          .parquet(newLabels.map(l => s"$tableDir/$l"): _*)
-          .select(col(s"`$c`").as("value"), labelCol(spark, tableDir, input_file_name()).as("label"))
-        val pairs = (oldExists, newLabels.nonEmpty) match {
-          case (true, true) =>
-            spark.read.parquet(fsPath)
-              .select(col("value"), explode(col("partitions")).as("label"))
-              .join(broadcast(survivors), Seq("label"), "left_semi")
-              .unionByName(freshPairs)
-          case (true, false) =>
-            spark.read.parquet(fsPath)
-              .select(col("value"), explode(col("partitions")).as("label"))
-              .join(broadcast(survivors), Seq("label"), "left_semi")
-          case (false, _) => freshPairs
-        }
-        val name = newSidecarName(c)
-        atomicSidecarWrite(spark, s"$base/${md.uuid}/$IndexDirName", name) { tmp =>
-          indexFromPairs(pairs, SidecarCanonicalFiles)
-            .write.mode(SaveMode.Overwrite).parquet(tmp)
-        }
-        c -> name
-      } else c -> md.indices(c)
-    }.toMap
   }
 
   /** Small-file compaction: rewrite undersized data files into
@@ -3119,8 +2532,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       extraMetadata: Map[String, String] = Map.empty,
       scope: Predicates = Predicates.empty): DatasetMetadata = {
 
-    val md = migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
-    val tableDir = md.tableDir(base)
+    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
     def dirOf(label: String): String = {
       val i = label.lastIndexOf('/')
       if (i < 0) "" else label.substring(0, i)
@@ -3176,18 +2588,10 @@ object Ktk extends org.apache.spark.internal.Logging {
       l -> newSeqOf.getOrElse(l, md.seqOf(l))
     }.toMap
 
-    val newLabels = newSeqOf.keys.toSeq.sorted
-    val idxReg = mergeIndicesIncremental(spark, base, md, tableDir,
-      survivingOld = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newLabels)
-    val bloomReg = mergeBloomsIncremental(spark, base, md, tableDir,
-      survivingOld = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newLabels)
-    val zoneReg = mergeZonesIncremental(spark, base, md, tableDir,
-      survivingOld = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newLabels)
-    val md1 = md.copy(partitions = finalPartitions, partitionSeq = finalSeq,
-      indices = idxReg, blooms = bloomReg, zones = zoneReg,
+    val merged = Sidecars.merge(spark, base, md,
+      survivors = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
+      newLabels = newSeqOf.keys.toSeq.sorted)
+    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
       // victims' deleted rows were materialized away during the rewrite
       deletes = prunedDeleteFragments(spark, base, md, victims),
       metadata = md.metadata ++ extraMetadata)
@@ -3353,7 +2757,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       columns: Seq[String],
       targetFileBytes: Long = 128L * 1024 * 1024,
       scope: Predicates = Predicates.empty): DatasetMetadata = {
-    val md = migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
     require(columns.nonEmpty && columns.size <= 8,
       s"z-order takes 1..8 columns, got ${columns.size}")
     val schema = md.schema
@@ -3411,29 +2815,22 @@ object Ktk extends org.apache.spark.internal.Logging {
       untouched.map(l => l -> md.sizeOf(l)).toMap ++ movedBySeq.flatMap(_._2)
     val finalSeq = finalPartitions.keys.map(l =>
       l -> newSeqOf.getOrElse(l, md.seqOf(l))).toMap
-    val newLabels = newSeqOf.keys.toSeq.sorted
 
     // zone maps over the clustered columns are the POINT of the layout —
     // register any that are missing, then merge sidecars over the new
     // files (out-of-scope files survive with their existing entries).
     // Under a SCOPE, a brand-new zone column may only register if the
-    // rewrite covers every file: zoneProbe pruning treats the sidecar as
+    // rewrite covers every file: zone pruning treats the sidecar as
     // TOTAL coverage, so a partial sidecar would silently drop every
     // out-of-scope file from predicate reads. Already-registered columns
     // merge incrementally (untouched labels keep their rows).
-    val registrable =
-      if (untouched.isEmpty) columns.filterNot(md.zoneRegistry.contains)
-      else Nil
-    val mdZ = md.copy(zones = md.zoneRegistry ++
-      registrable.map(c => c -> newSidecarName(c)))
-    val idxReg = mergeIndicesIncremental(spark, base, mdZ, tableDir,
-      survivingOld = untouched, newLabels = newLabels)
-    val bloomReg = mergeBloomsIncremental(spark, base, mdZ, tableDir,
-      survivingOld = untouched, newLabels = newLabels)
-    val zoneReg = mergeZonesIncremental(spark, base, mdZ, tableDir,
-      survivingOld = untouched, newLabels = newLabels)
-    val md1 = mdZ.copy(partitions = finalPartitions, partitionSeq = finalSeq,
-      indices = idxReg, blooms = bloomReg, zones = zoneReg,
+    val zones = Sidecars.Zone.registry(md)
+    val registrable = if (untouched.isEmpty) columns.filterNot(zones.contains) else Nil
+    val mdZ = Sidecars.Zone.withRegistry(md,
+      zones ++ registrable.map(c => c -> newSidecarName(c)))
+    val merged = Sidecars.merge(spark, base, mdZ,
+      survivors = untouched, newLabels = newSeqOf.keys.toSeq.sorted)
+    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
       // the rewritten files had their deletion vectors applied; fragments
       // covering only them drop, fragments for untouched files remain
       deletes = prunedDeleteFragments(spark, base, md, allLabels.toSet))
@@ -3471,17 +2868,13 @@ object Ktk extends org.apache.spark.internal.Logging {
       DatasetMetadata.invalidateCache(base, uuid)
     }
     partitionOn.foreach(c => require(schema.fieldNames.contains(c), s"partition_on column '$c' missing"))
-    (secondaryIndices ++ zoneMapFor ++ bloomFor).foreach(c =>
-      require(schema.fieldNames.contains(c), s"index/zone/bloom column '$c' not in schema"))
     val normalized = SchemaUtil.normalizeSchema(schema, partitionOn)
-    val md = DatasetMetadata(
-      uuid = uuid, partitionKeys = partitionOn,
-      indices = secondaryIndices.map(c => c -> newSidecarName(c)).toMap,
-      // registered zone/bloom columns start with no sidecar files; [[commit]]
-      // builds them as partitions publish (probes treat absence as keep-all)
-      zones = zoneMapFor.map(c => c -> newSidecarName(c)).toMap,
-      blooms = bloomFor.map(c => c -> newSidecarName(c)).toMap,
-      schemaJson = normalized.json, metadata = userMetadata)
+    // with no labels yet the sidecars are only registered; [[commit]]
+    // builds them as partitions publish
+    val md = Sidecars.build(spark, base,
+      DatasetMetadata(uuid = uuid, partitionKeys = partitionOn,
+        schemaJson = normalized.json, metadata = userMetadata),
+      Sidecars.wanted(secondaryIndices, bloomFor, zoneMapFor))
     DatasetMetadata.store(spark, base, md, operation = "CREATE EMPTY")
   }
 
@@ -3530,7 +2923,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       uuid: String,
       newLabels: Seq[String],
       deleteScope: Predicates = Predicates.empty): DatasetMetadata = {
-    val md = migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
     val tableDir = md.tableDir(base)
     // validate + size ONLY the labels being registered — O(newLabels)
     // point lookups, never a recursive listing of the table dir
@@ -3558,34 +2951,11 @@ object Ktk extends org.apache.spark.internal.Logging {
     val finalSeq = finalPartitions.keys.map { l =>
       l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
     }.toMap
-    // provisional view with the FINAL partition set, for full index builds
-    val md1p = md.copy(partitions = finalPartitions, partitionSeq = finalSeq)
-
-    // indices: first commit (no file yet) builds from scratch over the full
-    // final partition set; later commits merge incrementally exactly like
-    // [[update]] — per column, so a mixed built/unbuilt registry stays exact
-    val fsysI = DatasetMetadata.fs(spark, base)
-    val idxReg = md.indices.toSeq.sortBy(_._1).map { case (c, cur) =>
-      if (!fsysI.exists(new Path(md.indexPath(base, c)))) {
-        if (finalPartitions.nonEmpty) {
-          val name = newSidecarName(c)
-          buildIndex(spark, base, md1p, c, name)
-          c -> name
-        } else c -> cur
-      } else {
-        val one = mergeIndicesIncremental(spark, base, md.copy(indices = Map(c -> cur)),
-          tableDir, survivingOld = keepOld.toSeq.filter(finalPartitions.contains),
-          newLabels = newLabels)
-        c -> one(c)
-      }
-    }.toMap
-    val bloomReg = mergeBloomsIncremental(spark, base, md, tableDir,
-      survivingOld = keepOld.toSeq.filter(finalPartitions.contains),
-      newLabels = newLabels)
-    val zoneReg = mergeZonesIncremental(spark, base, md, tableDir,
-      survivingOld = keepOld.toSeq.filter(finalPartitions.contains),
-      newLabels = newLabels)
-    val md1 = md1p.copy(indices = idxReg, blooms = bloomReg, zones = zoneReg,
+    // sidecars merge exactly like [[update]]: the first commit after
+    // [[createEmpty]] finds no sidecar file and builds from its labels
+    val merged = Sidecars.merge(spark, base, md,
+      survivors = keepOld.toSeq.filter(finalPartitions.contains), newLabels = newLabels)
+    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
       metadata = md.metadata + (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
 
     DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
@@ -3595,15 +2965,8 @@ object Ktk extends org.apache.spark.internal.Logging {
   /** Register + build a secondary index on an EXISTING dataset
     * (≙ build_dataset_indices, io/eager.py): index job + metadata commit.
     */
-  def addIndex(spark: SparkSession, base: String, uuid: String, column: String): DatasetMetadata = {
-    val md = DatasetMetadata.load(spark, base, uuid)
-    require(md.schema.fieldNames.contains(column), s"index column '$column' not in schema")
-    val name = newSidecarName(column)
-    buildIndex(spark, base, md, column, name)
-    val md2 = md.copy(indices = md.indices + (column -> name))
-    DatasetMetadata.store(spark, base, md2, parentMd = Some(md),
-      operation = "ADD INDEX")
-  }
+  def addIndex(spark: SparkSession, base: String, uuid: String, column: String): DatasetMetadata =
+    Sidecars.add(spark, base, uuid, Sidecars.Index, Seq(column))
 
   /** Dataset-merge join (≙ merge_datasets_as_delayed,
     * io_components/merge.py:25-128): join two datasets on their shared
@@ -3739,12 +3102,8 @@ object Ktk extends org.apache.spark.internal.Logging {
       columns: Seq[String] = Nil,
       predicates: Predicates = Predicates.empty): DataFrame = {
     val snap = DatasetMetadata.loadVersion(spark, base, uuid, version)
-    def trusted(reg: Map[String, String]): Map[String, String] =
-      reg.filter { case (c, n) => isVersionAddressed(c, n) }
-    val md = snap.copy(
-      indices = trusted(snap.indices),
-      blooms = trusted(snap.bloomRegistry),
-      zones = trusted(snap.zoneRegistry))
+    val md = Sidecars.mapRegistries(snap)((_, reg) =>
+      reg.filter { case (c, n) => isVersionAddressed(c, n) })
     readTableWithMetadata(spark, base, md, columns, predicates)
   }
 
@@ -3793,14 +3152,10 @@ object Ktk extends org.apache.spark.internal.Logging {
       (0L +: cur.partitions.keys.toSeq.map(cur.seqOf)).max).max
     // re-adopt the target's version-addressed sidecars that still exist —
     // immutable, so they describe the restored content exactly
-    def surviving(reg: Map[String, String], dir: String): Map[String, String] =
+    val kept = Sidecars.mapRegistries(target)((k, reg) =>
       reg.filter { case (c, n) =>
-        isVersionAddressed(c, n) && fsys.exists(new Path(s"$base/$uuid/$dir/$n")) }
-    val keptIdx = surviving(target.indices, IndexDirName)
-    val keptBlm = surviving(target.bloomRegistry, "blooms")
-    val keptZon = surviving(target.zoneRegistry, "zones")
-    val restored = target.copy(
-      indices = keptIdx, blooms = keptBlm, zones = keptZon,
+        isVersionAddressed(c, n) && fsys.exists(new Path(s"$base/$uuid/${k.dir}/$n")) })
+    val restored = kept.copy(
       metadata = target.metadata +
         (DatasetMetadata.VersionKey -> cur.version.toString) +
         (DatasetMetadata.SeqHwmKey -> hwm.toString) +
@@ -3809,18 +3164,13 @@ object Ktk extends org.apache.spark.internal.Logging {
         // on later commits don't read as rollbacks
         (DatasetMetadata.RollbackCommitKey -> (cur.version + 1).toString) +
         (DatasetMetadata.RollbackOfKey -> toVersion.toString))
-    var out = DatasetMetadata.store(spark, base, restored, parentMd = Some(cur),
-      operation = "ROLLBACK")
-    (target.indices.keySet -- keptIdx.keySet).toSeq.sorted
-      .foreach(c => out = addIndex(spark, base, uuid, c))
-    (target.bloomRegistry.keySet -- keptBlm.keySet).toSeq.sorted
-      .foreach(c => out = addBloom(spark, base, uuid, c))
-    // inline zone maps travel INSIDE the restored blob and stay readable
-    // directly; only vacuumed sidecar-registry columns need a rebuild
-    val missingZones =
-      (target.zoneRegistry.keySet -- keptZon.keySet -- target.inlineZoneMaps.keySet).toSeq.sorted
-    if (missingZones.nonEmpty) out = addZoneMaps(spark, base, uuid, missingZones)
-    out
+    // legacy or vacuumed sidecars are rebuilt against the restored labels
+    // (inline zone maps travel INSIDE the restored blob)
+    Sidecars.kinds.foldLeft(DatasetMetadata.store(spark, base, restored, parentMd = Some(cur),
+        operation = "ROLLBACK")) { (out, k) =>
+      val missing = (k.registry(target).keySet -- k.registry(kept).keySet).toSeq.sorted
+      if (missing.isEmpty) out else Sidecars.add(spark, base, uuid, k, missing)
+    }
   }
 
   /** Recursive file enumeration via a listStatus walk — NEVER
@@ -4115,10 +3465,7 @@ object Ktk extends org.apache.spark.internal.Logging {
           issues += (("orphan_overflow", orphans.size.toLong, overflowMsg(orphans.size.toLong, cap)))
         loaded.flatMap { case (v, md) =>
           md.deleteFragments.map(("missing_dv_fragment", v, _)) ++
-            Option(md.indices).getOrElse(Map.empty[String, String]).values
-              .map(("missing_index", v, _)) ++
-            md.bloomRegistry.values.map(("missing_bloom", v, _)) ++
-            md.zoneRegistry.values.map(("missing_zone", v, _))
+            Sidecars.kinds.flatMap(k => k.registry(md).values.map((k.issue, v, _)))
         }
       } else {
         // DISTRIBUTED diff with NO driver-side snapshots at all: the
@@ -4140,20 +3487,17 @@ object Ktk extends org.apache.spark.internal.Logging {
       }
     // sidecars + fragments: newest referencing version attributed, one
     // existence probe per distinct name (registries are metadata-sized)
-    val sidecarDirs = Map(
-      "missing_dv_fragment" -> DatasetMetadata.DeletesDirName,
-      "missing_index" -> IndexDirName,
-      "missing_bloom" -> "blooms",
-      "missing_zone" -> "zones")
+    val sidecarDirs = Map("missing_dv_fragment" -> DatasetMetadata.DeletesDirName) ++
+      Sidecars.kinds.map(k => k.issue -> k.dir)
     sidecarRefs.groupMapReduce(r => (r._1, r._3))(_._2)(math.max)
       .toSeq.sortBy { case ((k, n), v) => (k, n, v) }
       .foreach { case ((kind, name), v) =>
         if (sidecarMissing(fs, base, uuid, sidecarDirs(kind), name))
           issues += ((kind, v, s"${sidecarDirs(kind)}/$name"))
       }
-    val order = Seq("missing_dv_fragment", "missing_data_file", "missing_index",
-      "missing_bloom", "missing_zone", "broken_replay_chain", "orphan_file",
-      "orphan_overflow").zipWithIndex.toMap
+    val order = (Seq("missing_dv_fragment", "missing_data_file") ++
+      Sidecars.kinds.map(_.issue) ++
+      Seq("broken_replay_chain", "orphan_file", "orphan_overflow")).zipWithIndex.toMap
     issues.result().sortBy { case (k, v, p) => (order(k), p, v) }
       .toDF("kind", "version", "path")
   }
@@ -4357,12 +3701,9 @@ object Ktk extends org.apache.spark.internal.Logging {
             case n: Number => n.longValue()
             case other     => other.toString.toLong
           }
-          def sidecars(rv: Long, dv: Seq[String], idx: Iterable[String],
-              blm: Iterable[String], zn: Iterable[String]) =
+          def sidecars(rv: Long, dv: Seq[String], regs: Seq[(String, Map[String, String])]) =
             dv.map((rv, "missing_dv_fragment", _, true, 0L, 0L)) ++
-              idx.map((rv, "missing_index", _, true, 0L, 0L)) ++
-              blm.map((rv, "missing_bloom", _, true, 0L, 0L)) ++
-              zn.map((rv, "missing_zone", _, true, 0L, 0L))
+              regs.flatMap { case (issue, reg) => reg.values.map((rv, issue, _, true, 0L, 0L)) }
           def metas(rv: Long, metadata: Map[String, String]) = {
             val md = Option(metadata).getOrElse(Map.empty[String, String])
             md.get(DatasetMetadata.CommitTsKey).map((rv, "meta_ts", _, true, 0L, 0L)).toSeq ++
@@ -4385,8 +3726,7 @@ object Ktk extends org.apache.spark.internal.Logging {
                   .iterator.map { case (l, s) =>
                     (rv, "label", l, true, widen(s), md.seqOf(l)) }.toSeq ++
                   sidecars(rv, md.deleteFragments,
-                    Option(md.indices).getOrElse(Map.empty[String, String]).values,
-                    md.bloomRegistry.values, md.zoneRegistry.values) ++
+                    Sidecars.kinds.map(k => k.issue -> k.registry(md))) ++
                   metas(rv, md.metadata)
               } else {
                 val d = m.readValue(in: java.io.InputStream, classOf[VersionDelta])
@@ -4408,9 +3748,7 @@ object Ktk extends org.apache.spark.internal.Logging {
                       seqs.get(l).map(widen).getOrElse(0L)) }.toSeq ++
                   Option(d.removes).getOrElse(Nil).map((rv, "label", _, false, 0L, 0L)) ++
                   sidecars(rv, Option(d.deletes).getOrElse(Nil),
-                    Option(d.indices).getOrElse(Map.empty[String, String]).values,
-                    Option(d.blooms).getOrElse(Map.empty[String, String]).values,
-                    Option(d.zones).getOrElse(Map.empty[String, String]).values) ++
+                    Sidecars.kinds.map(k => k.issue -> k.registry(d))) ++
                   metas(rv, d.metadata)
               }
             } finally in.close()
@@ -4461,8 +3799,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       */
     def sidecarRefs(): Seq[(String, Long, String)] = {
       import spark.implicits._
-      recRows.filter(col("kind").isin("missing_dv_fragment", "missing_index",
-          "missing_bloom", "missing_zone"))
+      recRows.filter(col("kind").isin(("missing_dv_fragment" +: Sidecars.kinds.map(_.issue)): _*))
         .join(broadcast(targetVersions.toDF("rv")), Seq("rv"))
         .select(col("kind"), col("rv"), col("name")).distinct()
         .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
@@ -4563,20 +3900,17 @@ object Ktk extends org.apache.spark.internal.Logging {
           .join(present, Seq("label"), "left_anti")
           .as[String].collect().sorted.toSeq
       }
-    def missingIn(dir: String, names: Map[String, String]): Seq[(String, String)] =
-      names.toSeq.sortBy(_._1).collect {
-        case (c, n) if sidecarMissing(fs, base, uuid, dir, n) => (c, n)
-      }
-    val deadIdx = missingIn(IndexDirName, Option(md.indices).getOrElse(Map.empty))
-    val deadBloom = missingIn("blooms", md.bloomRegistry)
-    val deadZone = missingIn("zones", md.zoneRegistry)
+    // dead registry entries, per kind: (column, sidecar name)
+    val dead: Map[Sidecars.Kind, Seq[(String, String)]] = Sidecars.kinds.map { k =>
+      k -> k.registry(md).toSeq.sortBy(_._1).filter { case (_, n) =>
+        sidecarMissing(fs, base, uuid, k.dir, n) }
+    }.toMap
     val missingFrags = md.deleteFragments.filterNot(n =>
       fs.exists(new Path(md.deletePath(base, n))))
     val report =
       missingData.map("missing_data_file" -> _) ++
-        deadIdx.map { case (c, n) => "missing_index" -> s"$IndexDirName/$n (column $c)" } ++
-        deadBloom.map { case (c, n) => "missing_bloom" -> s"blooms/$n (column $c)" } ++
-        deadZone.map { case (c, n) => "missing_zone" -> s"zones/$n (column $c)" } ++
+        Sidecars.kinds.flatMap(k => dead(k).map { case (c, n) =>
+          k.issue -> s"${k.dir}/$n (column $c)" }) ++
         missingFrags.map("missing_dv_fragment" -> _)
     // dry runs REPORT the fragment loss (that's what damage assessment is
     // for); only a real repair needs the resurrection opt-in
@@ -4588,12 +3922,9 @@ object Ktk extends org.apache.spark.internal.Logging {
           "rows (e.g. GDPR deletions). Restore the fragments from backup, or pass " +
           "acceptResurrection = true to salvage anyway.")
     val gone = missingData.toSet
-    val repaired = md.copy(
+    val repaired = Sidecars.mapRegistries(md)((k, reg) => reg -- dead(k).map(_._1)).copy(
       partitions = Option(md.partitions).getOrElse(Map.empty[String, Long]) -- gone,
       partitionSeq = Option(md.partitionSeq).getOrElse(Map.empty) -- gone,
-      indices = Option(md.indices).getOrElse(Map.empty) -- deadIdx.map(_._1),
-      blooms = md.bloomRegistry -- deadBloom.map(_._1),
-      zones = md.zoneRegistry -- deadZone.map(_._1),
       deletes = md.deleteFragments.filterNot(missingFrags.contains))
     DatasetMetadata.store(spark, base, repaired, parentMd = Some(md),
       operation = "SALVAGE")
@@ -4828,13 +4159,10 @@ object Ktk extends org.apache.spark.internal.Logging {
           .map(v => DatasetMetadata.loadVersion(spark, base, uuid, v))
         val referenced = md.partitions.keySet ++ retainedMds.flatMap(_.partitions.keySet)
         val allMds = md +: retainedMds
-        val sv = Seq(
-          IndexDirName -> allMds.flatMap(_.indices.values).toSet,
-          "blooms" -> allMds.flatMap(_.bloomRegistry.values).toSet,
-          "zones" -> allMds.flatMap(_.zoneRegistry.values).toSet,
+        val sv = Sidecars.kinds.map(k => k.dir -> allMds.flatMap(k.registry(_).values).toSet) :+
           // deletion-vector fragments pin exactly like pruning sidecars —
           // a retained snapshot NEEDS its fragments for correct reads
-          DatasetMetadata.DeletesDirName -> allMds.flatMap(_.deleteFragments).toSet)
+          (DatasetMetadata.DeletesDirName -> allMds.flatMap(_.deleteFragments).toSet)
         if (bounded)
           (None, Some(parallelizeLabels(spark, Seq(md.version -> referenced.toSeq))
             .map(_._1).toDF("label")), sv)
@@ -4857,11 +4185,9 @@ object Ktk extends org.apache.spark.internal.Logging {
         val refs = scan.sidecarRefs()
         def valid(kind: String): Set[String] =
           refs.collect { case (`kind`, _, n) => n }.toSet
-        (None, Some(scan.referenced), Seq(
-          IndexDirName -> valid("missing_index"),
-          "blooms" -> valid("missing_bloom"),
-          "zones" -> valid("missing_zone"),
-          DatasetMetadata.DeletesDirName -> valid("missing_dv_fragment")))
+        (None, Some(scan.referenced),
+          Sidecars.kinds.map(k => k.dir -> valid(k.issue)) :+
+            (DatasetMetadata.DeletesDirName -> valid("missing_dv_fragment")))
       }
     try {
       if (fs.exists(tableRoot)) {

@@ -1,0 +1,475 @@
+package graft.ktk
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.core.{PredLiteral, PredOp, Predicates}
+
+/** The catalog-level skipping sidecars — secondary index, per-file Bloom
+  * filter, zone map — behind ONE build, merge and probe path.
+  *
+  * Each sidecar is a parquet dir `<uuid>/<kind dir>/<col>.<nonce>.parquet`
+  * named by a registry entry in the metadata blob. Coverage is TOTAL over
+  * the committed labels (every live file has its rows), so a probe may
+  * treat "not returned" as "cannot match". A [[Kind]] supplies only what
+  * really differs: its directory, registry field and fsck issue; how fresh
+  * rows come from a set of labels; how the old rows of surviving labels are
+  * kept; its build/append and canonical layouts; its probe filter; and
+  * whether a missing file fails the read (index) or keeps every file
+  * (bloom, zone).
+  */
+private[graft] object Sidecars {
+
+  /** Canonical sidecar rewrites bound their output to this many files so
+    * the streaming fragment cap converges (a canonical result wider than
+    * the cap would re-trigger every commit).
+    */
+  val CanonicalFiles = 4
+
+  /** Fresh per-label rows ("units") of each requested column, plus the
+    * release of whatever the kind cached to serve them.
+    */
+  final case class Fresh(units: String => DataFrame, release: () => Unit = () => ())
+
+  sealed abstract class Kind(
+      val dir: String,
+      val issue: String,
+      val noun: String,
+      val addOperation: String) {
+
+    def registry(md: DatasetMetadata): Map[String, String]
+    def registry(d: VersionDelta): Map[String, String]
+    def withRegistry(md: DatasetMetadata, reg: Map[String, String]): DatasetMetadata
+
+    /** A missing index fails the read; a missing bloom or zone keeps every file. */
+    def absentFails: Boolean
+
+    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
+        cols: Seq[String]): Fresh
+
+    /** The old units of `survivors` (a broadcast one-column label frame);
+      * per-label rows simply semi-join.
+      */
+    protected def keep(old: DataFrame, survivors: DataFrame): DataFrame =
+      old.join(survivors, Seq("label"), "left_semi")
+
+    /** Units → sidecar rows: `outFiles` 0 for build and append, > 0 for a
+      * canonical rewrite; per-label rows only bound the file count.
+      */
+    protected def layout(units: DataFrame, outFiles: Int): DataFrame =
+      if (outFiles > 0) units.coalesce(outFiles) else units
+
+    /** Labels whose rows in `sidecar` may satisfy `l`; None = no pruning. */
+    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
+        l: PredLiteral): Option[Set[String]]
+
+    /** Is `l` routed to this kind (beyond the shared partition/null guards)? */
+    def covers(md: DatasetMetadata, l: PredLiteral): Boolean = registry(md).contains(l.col)
+
+    def path(base: String, md: DatasetMetadata, column: String): String =
+      s"$base/${md.uuid}/$dir/${registry(md)(column)}"
+
+    /** Distributed probe for one literal: the filter runs on executors and
+      * only labels that MIGHT match come back — O(matching labels) driver
+      * transfer, never O(#files).
+      */
+    def probe(spark: SparkSession, base: String, md: DatasetMetadata,
+        l: PredLiteral): Option[Set[String]] = {
+      val p = new Path(path(base, md, l.col))
+      if (!absentFails && !DatasetMetadata.fs(spark, base).exists(p)) None
+      else matching(spark, md, spark.read.parquet(p.toString), l)
+    }
+
+    /** Write fresh sidecars over `labels` under the given (column → name)
+      * targets. No labels, no file: the registry entry waits for data.
+      */
+    def build(spark: SparkSession, base: String, md: DatasetMetadata,
+        targets: Map[String, String], labels: Seq[String]): Unit = {
+      if (targets.isEmpty || labels.isEmpty) return
+      val cols = targets.keys.toSeq.sorted
+      val f = fresh(spark, md.tableDir(base), labels, cols)
+      try cols.foreach(c => write(spark, base, md, targets(c), layout(f.units(c), 0)))
+      finally f.release()
+    }
+
+    /** Incremental merge (≙ update_indices, io_components/write.py:283-309):
+      * surviving labels keep their rows (a broadcast semi-join, never an
+      * inlined In-list), new labels get fresh ones, and the result lands
+      * canonical in a fresh version-addressed dir so snapshots never see
+      * their sidecars mutate. `appendOnly` is the streaming fast path: new
+      * labels' rows append as extra files under the current name, O(new
+      * files) per commit, until a canonical merge folds them. A registered
+      * sidecar whose file is gone is rebuilt from survivors ∪ new labels —
+      * merging into nothing would leave the survivors uncovered, which
+      * every probe reads as "cannot match". Returns the registry to commit.
+      */
+    def merge(spark: SparkSession, base: String, md: DatasetMetadata,
+        survivors: Seq[String], newLabels: Seq[String],
+        appendOnly: Boolean): Map[String, String] = {
+      import spark.implicits._
+      val reg = registry(md)
+      val cols = reg.keys.toSeq.sorted
+      val fsys = DatasetMetadata.fs(spark, base)
+      val present = cols.filter(c => fsys.exists(new Path(path(base, md, c)))).toSet
+      def source(c: String): Seq[String] = if (present(c)) newLabels else survivors ++ newLabels
+      val freshBy: Map[Seq[String], Fresh] = cols.groupBy(source).collect {
+        case (labels, cs) if labels.nonEmpty => labels -> fresh(spark, md.tableDir(base), labels, cs)
+      }
+      try cols.map { c =>
+        val add = freshBy.get(source(c)).map(_.units(c))
+        if (appendOnly && present(c)) {
+          add.foreach(layout(_, 0).write.mode(SaveMode.Append).parquet(path(base, md, c)))
+          c -> reg(c)
+        } else {
+          val old =
+            if (!present(c)) None
+            else Some(keep(spark.read.parquet(path(base, md, c)), broadcast(survivors.toDF("label"))))
+          (old ++ add).reduceOption(_ unionByName _) match {
+            case None => c -> reg(c)
+            case Some(units) =>
+              val name = Ktk.newSidecarName(c)
+              write(spark, base, md, name, layout(units, CanonicalFiles))
+              c -> name
+          }
+        }
+      }.toMap
+      finally freshBy.values.foreach(_.release())
+    }
+
+    private def write(spark: SparkSession, base: String, md: DatasetMetadata,
+        name: String, rows: DataFrame): Unit =
+      Ktk.atomicSidecarWrite(spark, s"$base/${md.uuid}/$dir", name) { tmp =>
+        rows.write.mode(SaveMode.Overwrite).parquet(tmp)
+      }
+  }
+
+  private def scan(spark: SparkSession, tableDir: String, labels: Seq[String]): DataFrame =
+    spark.read.option("basePath", tableDir).parquet(labels.map(l => s"$tableDir/$l"): _*)
+
+  private def fileLabel(spark: SparkSession, tableDir: String) =
+    Ktk.labelCol(spark, tableDir, input_file_name()).as("label")
+
+  /** Secondary index `(value, partitions: array<string>)` — the Spark-native
+    * form of ExplicitSecondaryIndex storage (core/index.py:899-955). Rows
+    * are value-sorted, so the probe's value filter prunes row groups. One
+    * row per value after a canonical write; append-only commits may spread
+    * a value over several rows — readers take the union.
+    */
+  case object Index extends Kind("indices", "missing_index", "index", "ADD INDEX") {
+    def registry(md: DatasetMetadata): Map[String, String] = Option(md.indices).getOrElse(Map.empty)
+    def registry(d: VersionDelta): Map[String, String] = Option(d.indices).getOrElse(Map.empty)
+    def withRegistry(md: DatasetMetadata, reg: Map[String, String]): DatasetMetadata =
+      md.copy(indices = reg)
+    def absentFails: Boolean = true
+
+    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
+        cols: Seq[String]): Fresh =
+      Fresh(c => scan(spark, tableDir, labels)
+        .select(col(s"`$c`").as("value"), fileLabel(spark, tableDir)))
+
+    override protected def keep(old: DataFrame, survivors: DataFrame): DataFrame =
+      super.keep(old.select(col("value"), explode(col("partitions")).as("label")), survivors)
+
+    /** (value, label) pairs → deterministic (value, partitions) rows. */
+    override protected def layout(pairs: DataFrame, outFiles: Int): DataFrame = {
+      val agg = pairs
+        .where(col("value").isNotNull) // nulls are not indexable (core/index.py:83-86)
+        .groupBy("value")
+        .agg(sort_array(collect_set(col("label"))).as("partitions"))
+      (if (outFiles > 0) agg.repartition(outFiles, col("value")) else agg)
+        .sortWithinPartitions("value")
+    }
+
+    /** The literal evaluates INSIDE the index scan: only matching labels
+      * come back, never the whole index.
+      */
+    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
+        l: PredLiteral): Option[Set[String]] =
+      Some(sidecar
+        .filter(Predicates(Seq(Seq(l.copy(col = "value")))).toColumn)
+        .select(explode(col("partitions")).as("label"))
+        .distinct()
+        .collect().map(_.getString(0)).toSet)
+  }
+
+  /** Per-file Bloom filters `(label, bloom)` for equality/IN skipping on
+    * high-cardinality columns where zone ranges are too wide and an index
+    * too big. A file with no non-null value gets a NULL bloom, which no
+    * non-null-matching literal — the only kind routed here — can match.
+    */
+  case object Bloom extends Kind("blooms", "missing_bloom", "bloom", "ADD BLOOM") {
+    def registry(md: DatasetMetadata): Map[String, String] = md.bloomRegistry
+    def registry(d: VersionDelta): Map[String, String] = Option(d.blooms).getOrElse(Map.empty)
+    def withRegistry(md: DatasetMetadata, reg: Map[String, String]): DatasetMetadata =
+      md.copy(blooms = reg)
+    def absentFails: Boolean = false
+
+    override def covers(md: DatasetMetadata, l: PredLiteral): Boolean =
+      (l.op == PredOp.Eq || l.op == PredOp.In) && super.covers(md, l)
+
+    /** Scan only the column + file name, hash values with xxhash64 (the
+      * probe hashes literals identically), fold each file's hashes into a
+      * filter sized to its DISTINCT count. The shuffle moves (label, long)
+      * pairs — O(rows × 8 bytes), never values.
+      */
+    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
+        cols: Seq[String]): Fresh = Fresh { c =>
+      import spark.implicits._
+      scan(spark, tableDir, labels)
+        .select(col(s"`$c`").as("v"), fileLabel(spark, tableDir))
+        .select(col("label"), when(col("v").isNotNull, xxhash64(col("v"))).as("h"))
+        .as[(String, java.lang.Long)]
+        .groupByKey(_._1)
+        .mapGroups { (label, it) =>
+          val hs = new java.util.HashSet[java.lang.Long]()
+          it.foreach { case (_, h) => if (h != null) { hs.add(h); () } }
+          if (hs.isEmpty) (label, null: Array[Byte])
+          else {
+            val n = math.min(Ktk.BloomMaxItems, math.max(Ktk.BloomMinItems, hs.size.toLong))
+            val bf = org.apache.spark.util.sketch.BloomFilter.create(n, Ktk.BloomFpp)
+            hs.forEach(h => bf.putLong(h))
+            val bos = new java.io.ByteArrayOutputStream()
+            bf.writeTo(bos)
+            (label, bos.toByteArray)
+          }
+        }
+        .toDF("label", "bloom")
+    }
+
+    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
+        l: PredLiteral): Option[Set[String]] = {
+      val vals = l.op match {
+        case PredOp.Eq => Seq(l.value)
+        case _         => l.value.asInstanceOf[Seq[Any]].filter(_ != null)
+      }
+      // every literal must hash (a failed cast means the build-side
+      // hashing cannot be mirrored) or the probe is unsound
+      literalHashes(spark, md.schema(l.col).dataType, vals).map { hashes =>
+        val hs = hashes.toArray
+        val might = udf { (bytes: Array[Byte]) =>
+          bytes != null && {
+            val bf = org.apache.spark.util.sketch.BloomFilter
+              .readFrom(new java.io.ByteArrayInputStream(bytes))
+            hs.exists(bf.mightContainLong)
+          }
+        }
+        sidecar.filter(might(col("bloom"))).select(col("label"))
+          .collect().map(_.getString(0)).toSet
+      }
+    }
+
+    /** xxhash64 of the literals AT THE COLUMN'S TYPE — bit-for-bit the
+      * build side's `xxhash64(col)`. ONE local job hashes the batch. None
+      * when any cast fails or yields null.
+      */
+    private def literalHashes(spark: SparkSession, dt: org.apache.spark.sql.types.DataType,
+        vals: Seq[Any]): Option[Seq[Long]] =
+      try {
+        val arr = array(vals.map(v => lit(v).cast(dt)): _*)
+        val rows = spark.range(1).select(explode(arr).as("v"))
+          .select(col("v").isNull.as("n"), xxhash64(col("v")).as("h")).collect()
+        if (rows.isEmpty || rows.exists(_.getBoolean(0))) None
+        else Some(rows.map(_.getLong(1)).toSeq)
+      } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** Zone maps `(label, mn, mx)` — per-file min/max as strings (null
+    * mn/mx = all-null file), ≙ Parquet zone maps lifted into the catalog.
+    * All zone columns share ONE aggregation scan. Legacy blobs carry the
+    * ranges inline (`zoneMaps`); those columns probe on the driver until
+    * [[migrateInlineZones]] moves them out.
+    */
+  case object Zone extends Kind("zones", "missing_zone", "zone-map", "ADD ZONEMAPS") {
+    def registry(md: DatasetMetadata): Map[String, String] = md.zoneRegistry
+    def registry(d: VersionDelta): Map[String, String] = Option(d.zones).getOrElse(Map.empty)
+    def withRegistry(md: DatasetMetadata, reg: Map[String, String]): DatasetMetadata =
+      md.copy(zones = reg)
+    def absentFails: Boolean = false
+
+    override def covers(md: DatasetMetadata, l: PredLiteral): Boolean = md.zoneColumns.contains(l.col)
+
+    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
+        cols: Seq[String]): Fresh = {
+      val aggs = cols.flatMap(c => Seq(
+        min(col(s"`$c`")).cast("string").as(s"__min_$c"),
+        max(col(s"`$c`")).cast("string").as(s"__max_$c")))
+      val agg = scan(spark, tableDir, labels)
+        .groupBy(fileLabel(spark, tableDir)).agg(aggs.head, aggs.tail: _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Fresh(c => agg.select(col("label"), col(s"__min_$c").as("mn"), col(s"__max_$c").as("mx")),
+        () => { agg.unpersist(); () })
+    }
+
+    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
+        l: PredLiteral): Option[Set[String]] = {
+      val check = checkFn(l)
+      val may = udf { (mn: String, mx: String) => mn != null && mx != null && check(mn, mx) }
+      Some(sidecar.filter(may(col("mn"), col("mx"))).select(col("label"))
+        .collect().map(_.getString(0)).toSet)
+    }
+
+    /** Legacy inline ranges evaluate on the driver; a label without
+      * recorded stats is kept, an all-null one (empty range) dropped.
+      */
+    override def probe(spark: SparkSession, base: String, md: DatasetMetadata,
+        l: PredLiteral): Option[Set[String]] =
+      if (registry(md).contains(l.col)) super.probe(spark, base, md, l)
+      else {
+        val zm = md.inlineZoneMaps(l.col)
+        val check = checkFn(l)
+        Some(md.partitions.keySet.filter { lbl =>
+          zm.get(lbl) match {
+            case None                 => true
+            case Some(s) if s.isEmpty => false
+            case Some(s)              => check(s.head, s(1))
+          }
+        })
+      }
+
+    /** Date/timestamp strings (the rendered form of `cast(ts as string)`)
+      * become epoch millis so they compare numerically with date literals.
+      */
+    private def zoneValue(x: Any): Any = x match {
+      case s: String =>
+        try java.sql.Timestamp.valueOf(s).getTime
+        catch {
+          case _: Exception =>
+            try java.sql.Date.valueOf(s).getTime catch { case _: Exception => s }
+        }
+      case d: java.sql.Date => d.getTime
+      case t: java.sql.Timestamp => t.getTime
+      case other => other
+    }
+
+    private def cmp(a: Any, b: Any): Int = Predicates.compare(zoneValue(a), zoneValue(b))
+
+    /** May rows in [mn, mx] satisfy the literal? CONSERVATIVE: any
+      * comparison failure keeps the file.
+      */
+    private def mayMatch(l: PredLiteral, mn: String, mx: String): Boolean = {
+      import PredOp._
+      try l.op match {
+        case Eq => cmp(l.value, mn) >= 0 && cmp(l.value, mx) <= 0
+        case Ne => !(cmp(mn, mx) == 0 && cmp(l.value, mn) == 0)
+        case Lt => cmp(mn, l.value) < 0
+        case Le => cmp(mn, l.value) <= 0
+        case Gt => cmp(mx, l.value) > 0
+        case Ge => cmp(mx, l.value) >= 0
+        case In => l.value.asInstanceOf[Seq[Any]]
+          .exists(v => v != null && cmp(v, mn) >= 0 && cmp(v, mx) <= 0)
+      } catch { case _: Exception => true }
+    }
+
+    /** Range check for one literal, closed over for driver or executor use.
+      * Large IN lists: sort once, binary-search per file — O(files·log
+      * keys), not O(files·keys).
+      */
+    private def checkFn(l: PredLiteral): (String, String) => Boolean = l.op match {
+      case PredOp.In =>
+        val sorted =
+          try l.value.asInstanceOf[Seq[Any]].filter(_ != null)
+            .sortWith(cmp(_, _) < 0).toIndexedSeq
+          catch { case _: Exception => null }
+        if (sorted == null) (mn, mx) => mayMatch(l, mn, mx)
+        else (mn, mx) => try {
+          // least value >= mn, then test <= mx
+          var lo = 0; var hi = sorted.size
+          while (lo < hi) {
+            val mid = (lo + hi) >>> 1
+            if (cmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
+          }
+          lo < sorted.size && cmp(sorted(lo), mx) <= 0
+        } catch { case _: Exception => true }
+      case _ => (mn, mx) => mayMatch(l, mn, mx)
+    }
+  }
+
+  val kinds: Seq[Kind] = Seq(Index, Bloom, Zone)
+
+  /** The sidecar columns a writer asks for, in [[kinds]] order. */
+  def wanted(indices: Seq[String], blooms: Seq[String], zones: Seq[String]): Seq[(Kind, Seq[String])] =
+    Seq(Index -> indices, Bloom -> blooms, Zone -> zones)
+
+  /** Every column some sidecar (or legacy inline zone map) covers. */
+  def columns(md: DatasetMetadata): Set[String] =
+    kinds.flatMap(_.registry(md).keySet).toSet ++ md.inlineZoneMaps.keySet
+
+  /** `md` with each kind's registry replaced by `f(kind, registry)`. */
+  def mapRegistries(md: DatasetMetadata)(
+      f: (Kind, Map[String, String]) => Map[String, String]): DatasetMetadata =
+    kinds.foldLeft(md)((acc, k) => k.withRegistry(acc, f(k, k.registry(md))))
+
+  /** `md` with no pruning sidecars at all (snapshot reads whose canonical
+    * sidecars may hold post-snapshot content).
+    */
+  def without(md: DatasetMetadata): DatasetMetadata =
+    mapRegistries(md)((_, _) => Map.empty).copy(zoneMaps = Map.empty)
+
+  /** Null-matching literals never prune: nulls are neither indexed nor
+    * visible to min/max stats or blooms — leave them to the residual filter.
+    */
+  def probeable(l: PredLiteral): Boolean = l.op match {
+    case PredOp.Eq => l.value != null
+    case PredOp.In => l.value == null || !l.value.asInstanceOf[Seq[Any]].contains(null)
+    case _         => true
+  }
+
+  /** Validate, build over `md`'s labels and register the wanted sidecars. */
+  def build(spark: SparkSession, base: String, md: DatasetMetadata,
+      wanted: Seq[(Kind, Seq[String])]): DatasetMetadata = {
+    val fields = md.schema.fieldNames.toSet
+    wanted.foreach { case (k, cols) =>
+      cols.foreach(c => require(fields(c), s"${k.noun} column '$c' not in schema"))
+    }
+    val labels = Option(md.partitions).getOrElse(Map.empty[String, Long]).keys.toSeq.sorted
+    wanted.foldLeft(md) { case (acc, (k, cols)) =>
+      val targets = cols.map(c => c -> Ktk.newSidecarName(c)).toMap
+      k.build(spark, base, md, targets, labels)
+      k.withRegistry(acc, k.registry(acc) ++ targets)
+    }
+  }
+
+  /** Register + build sidecars of one kind on an EXISTING dataset. */
+  def add(spark: SparkSession, base: String, uuid: String, k: Kind,
+      columns: Seq[String]): DatasetMetadata = {
+    val md = migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    DatasetMetadata.store(spark, base, build(spark, base, md, Seq(k -> columns)),
+      parentMd = Some(md), operation = k.addOperation)
+  }
+
+  /** Merge every kind (see [[Kind.merge]]); `md` is the parent snapshot.
+    * Returns `md` with the registries to commit.
+    */
+  def merge(spark: SparkSession, base: String, md: DatasetMetadata,
+      survivors: Seq[String], newLabels: Seq[String],
+      appendOnly: Boolean = false): DatasetMetadata =
+    kinds.foldLeft(md) { (acc, k) =>
+      val reg = k.merge(spark, base, md, survivors, newLabels, appendOnly)
+      if (reg == k.registry(acc)) acc else k.withRegistry(acc, reg)
+    }
+
+  /** Migrate LEGACY inline zone maps (pre-sidecar blobs) to sidecar form.
+    * Runs on the first mutating op against an old dataset; the returned
+    * metadata is committed by the caller's single blob put.
+    */
+  def migrateInlineZones(
+      spark: SparkSession, base: String, md: DatasetMetadata): DatasetMetadata = {
+    val inline = md.inlineZoneMaps
+    if (inline.isEmpty) return md
+    import spark.implicits._
+    val names = inline.toSeq.sortBy(_._1).map { case (c, perLabel) =>
+      val rows = perLabel.toSeq.map { case (l, s) =>
+        if (s == null || s.isEmpty) (l, null: String, null: String)
+        else (l, s.head, s(1))
+      }
+      val name = Ktk.newSidecarName(c)
+      Ktk.atomicSidecarWrite(spark, s"$base/${md.uuid}/${Zone.dir}", name) { tmp =>
+        rows.toDF("label", "mn", "mx").repartition(1)
+          .write.mode(SaveMode.Overwrite).parquet(tmp)
+      }
+      c -> name
+    }
+    Zone.withRegistry(md.copy(zoneMaps = Map.empty), Zone.registry(md) ++ names)
+  }
+}

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringTyp
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ktk.{DatasetMetadata, Ktk}
+import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
 
 /** Catalyst [[TableCatalog]] over a graft base directory — the pure-SQL
   * surface (SURVEY §4's optional Catalyst integration, catalog tier):
@@ -108,8 +108,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
       if (!DatasetMetadata.exists(spark, base, uuid))
         throw new NoSuchTableException(ident)
       val snap = DatasetMetadata.loadVersion(spark, base, uuid, version.toLong)
-      new GraftTable(base, snap.copy(indices = Map.empty, blooms = Map.empty,
-        zones = Map.empty, zoneMaps = Map.empty))
+      new GraftTable(base, Sidecars.without(snap))
   }
 
   /** SQL `TIMESTAMP AS OF t`: the latest version committed at or before

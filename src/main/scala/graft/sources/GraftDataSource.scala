@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.{PredLiteral, PredOp, Predicates}
-import graft.ktk.{DatasetMetadata, Ktk}
+import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
 
 /** DataSource V2 connector: `spark.read.format("graft").option("uuid", u)
   * .load(base)` — the optional Catalyst-integrated surface from SURVEY §4.
@@ -92,8 +92,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     Option(options.get("asOfVersion")) match {
       case Some(v) =>
         val snap = DatasetMetadata.loadVersion(SparkSession.active, base, uuid, v.toLong)
-        (base, snap.copy(indices = Map.empty, blooms = Map.empty,
-          zones = Map.empty, zoneMaps = Map.empty))
+        (base, Sidecars.without(snap))
       case None =>
         (base, DatasetMetadata.load(SparkSession.active, base, uuid))
     }

@@ -411,7 +411,7 @@ private[sources] object StreamAdmission {
       if (v == 1L) DatasetMetadata(uuid = uuid, schemaJson = mdV.schemaJson)
       else DatasetMetadata.loadVersion(spark, base, uuid, v - 1)
     // Jackson leaves an absent `partitions` field null on old blobs
-    // (same precedent as bloomRegistry/zoneRegistry) — guard like
+    // (same precedent as the sidecar registries) — guard like
     // Ktk.history's diff does.
     val pParts = Option(mdP.partitions).getOrElse(Map.empty[String, Long])
     val vParts = Option(mdV.partitions).getOrElse(Map.empty[String, Long])

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Predicates
-import graft.ktk.{DatasetMetadata, Ktk}
+import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
 
 /** Minimal CLI (≙ kartothek/cli: info / query / index / delete / cleanup /
   * copy).
@@ -70,9 +70,7 @@ object Cli {
       println(s"version: ${md.version} (${Ktk.listVersions(spark, args(1), args(2)).size} snapshots)")
       println(s"partition keys: ${md.partitionKeys.mkString(", ")}")
       println(s"partitions: ${md.partitions.size}")
-      println(s"indices: ${md.indices.keys.toSeq.sorted.mkString(", ")}")
-      println(s"blooms: ${md.bloomRegistry.keys.toSeq.sorted.mkString(", ")}")
-      println(s"zone maps: ${md.zoneRegistry.keys.toSeq.sorted.mkString(", ")}")
+      Sidecars.kinds.foreach(k => println(s"${k.dir}: ${k.registry(md).keys.toSeq.sorted.mkString(", ")}"))
       println(s"sidecar fragments (max): ${Ktk.sidecarFragments(spark, args(1), args(2))}")
       println(s"schema:\n${md.schema.treeString}")
     case "query" =>

@@ -149,7 +149,7 @@ class BloomSpec extends SparkSpec {
     val base = tmpDir("bloom")
     val md = Ktk.store(spark, base, "ds", sample, bloomFor = Seq("id"))
     val lit = graft.core.PredLiteral("id", graft.core.PredOp.Eq, 701L)
-    val survivors = Ktk.bloomProbe(spark, base, md, lit).get
+    val survivors = Sidecars.Bloom.probe(spark, base, md, lit).get
     // the probe's return IS its driver transfer — it must be exactly the
     // matching set, a strict subset of the catalog, never all labels
     survivors should not be empty

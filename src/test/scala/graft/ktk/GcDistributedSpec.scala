@@ -35,9 +35,9 @@ class GcDistributedSpec extends SparkSpec {
     val stray = new Path(s"${md.tableDir(base)}/p=a/stray.parquet")
     val out = fs.create(stray, true); out.write(1); out.close()
     // unreferenced sidecar dir (as if a crashed index build left it)
-    fs.mkdirs(new Path(s"$base/ds/${Ktk.IndexDirName}/dead_idx.parquet"))
+    fs.mkdirs(new Path(s"$base/ds/${Sidecars.Index.dir}/dead_idx.parquet"))
     val out2 = fs.create(
-      new Path(s"$base/ds/${Ktk.IndexDirName}/dead_idx.parquet/part-0.parquet"), true)
+      new Path(s"$base/ds/${Sidecars.Index.dir}/dead_idx.parquet/part-0.parquet"), true)
     out2.write(1); out2.close()
     md
   }

@@ -77,7 +77,7 @@ class ZoneMapPropertySpec extends SparkSpec {
     raw.count() // force dataset build
     val md = DatasetMetadata.load(spark, base, "zp")
     val lit = graft.core.PredLiteral("x", PredOp.Gt, 80.0)
-    val survivors = Ktk.zoneProbe(spark, base, md, lit).get
+    val survivors = Sidecars.Zone.probe(spark, base, md, lit).get
     survivors.subsetOf(md.partitions.keySet) shouldBe true
     // the driver receives exactly the files whose [min,max] admits x>80 —
     // recompute the expectation from the materialized zone map

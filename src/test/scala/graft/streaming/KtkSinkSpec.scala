@@ -103,7 +103,7 @@ class KtkSinkSpec extends SparkSpec {
       val batch = Seq.tabulate(4)(i => (0, b * 100L + i, s"v$b-$i")).toDF("p", "k", "v")
       KtkSink.commitBatch(batch, base, "frag", batchId = b,
         compactEvery = 0, maxSidecarFragments = 6)
-      // over-cap commits canonicalize back to <= SidecarCanonicalFiles, so
+      // over-cap commits canonicalize back to <= Sidecars.CanonicalFiles, so
       // the observable post-commit count never exceeds the cap
       Ktk.sidecarFragments(spark, base, "frag") should be <= 6
     }

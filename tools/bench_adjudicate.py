@@ -46,6 +46,7 @@ import os
 import re
 import statistics
 import sys
+from decimal import ROUND_HALF_UP, Decimal
 
 BANDS_PATH = __file__.rsplit("/", 1)[0] + "/bench_bands.json"
 QUERY_RE = re.compile(r'"(q[_0-9a-zA-Z]+)":([0-9]+\.[0-9]+)[,}]')
@@ -53,6 +54,23 @@ QUERY_RE = re.compile(r'"(q[_0-9a-zA-Z]+)":([0-9]+\.[0-9]+)[,}]')
 # quiet isolated pin in the bands file
 CONTROLS = ["q_sort", "q_dsv2_scan", "q_ktk_pushdown"]
 SIDECAR = "BENCH_FULL.json"
+MILLI = Decimal("0.001")
+
+
+def java_3f(x):
+    """`x` rounded the way graft.Bench prints it: Java's %.3f rounds the
+    shortest decimal form of the double HALF_UP."""
+    return Decimal(repr(x)).quantize(MILLI, ROUND_HALF_UP)
+
+
+def same_run(printed, x):
+    """Does the tail's printed value come from the sidecar's full-precision
+    `x`? Exact equality after rounding `x` like the printer did; tails from
+    before the 3-decimal format printed the double itself."""
+    d = Decimal(printed)
+    if -d.as_tuple().exponent > 3:
+        return float(printed) == x
+    return d == java_3f(x)
 
 
 def load_times(path):
@@ -66,7 +84,8 @@ def load_times(path):
     tail = data.get("tail", "")
     # trailing [,}] in the regex rejects numbers cut mid-digit by the
     # driver's tail truncation — a half number must drop, not misparse
-    times = {m.group(1): float(m.group(2)) for m in QUERY_RE.finditer(tail)}
+    printed = {m.group(1): m.group(2) for m in QUERY_RE.finditer(tail)}
+    times = {q: float(v) for q, v in printed.items()}
     # prefer Bench's complete sidecar over the truncated tail, but only
     # when every tail-surviving query matches it (same-run guard)
     side = os.path.join(os.path.dirname(path) or ".", SIDECAR)
@@ -79,9 +98,7 @@ def load_times(path):
             full = None
         if full:
             shared = set(times) & set(full)
-            agree = shared and all(
-                abs(times[q] - full[q]) <= 1e-9 * max(1.0, abs(times[q]))
-                for q in shared)
+            agree = shared and all(same_run(printed[q], full[q]) for q in shared)
             if agree and len(full) >= len(times):
                 print(f"(using {SIDECAR}: {len(full)} queries; tail had "
                       f"{len(times)}, all {len(shared)} shared agree)")
