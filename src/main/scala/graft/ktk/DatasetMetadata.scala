@@ -44,14 +44,14 @@ final case class DatasetMetadata(
     // <uuid>/zones/ holding one (label, mn, mx) row per data file (null
     // mn/mx = all-null file). Metadata-level range skipping: files whose
     // [min, max] excludes a predicate are never SCHEDULED. Same pattern as
-    // `blooms` — the catalog blob carries only this registry, so planning
-    // loads stay distributed and the commit object never inlines ranges.
+    // `blooms` — the catalog blob carries only this registry, so the commit
+    // object never inlines ranges; probes read the rows on the driver.
     zones: Map[String, String] = Map.empty,
     // per-file Bloom filters: column → relative sidecar path under
     // <uuid>/blooms/. Equality/IN data skipping on high-cardinality columns
     // where zone ranges are too wide and a full secondary index too big:
     // the sidecar holds one (label, bloom bytes) row per file, the catalog
-    // blob only this registry — probe passes stay distributed.
+    // blob only this registry — probes test the filters on executors.
     blooms: Map[String, String] = Map.empty,
     // deletion-vector fragments (Delta/Iceberg merge-on-read row-level
     // deletes): ordered list of immutable parquet fragments under
@@ -282,8 +282,9 @@ object DatasetMetadata {
       }
     }
 
-  /** Drop every cached snapshot of one dataset — required whenever its
-    * version line is destroyed or restarted (delete, overwrite-recreate).
+  /** Drop every cached snapshot of one dataset, and its cached sidecar
+    * rows — required whenever its version line is destroyed or restarted
+    * (delete, overwrite-recreate).
     */
   def invalidateCache(base: String, uuid: String): Unit = snapshotCache.synchronized {
     val it = snapshotCache.entrySet().iterator()
@@ -294,6 +295,7 @@ object DatasetMetadata {
         it.remove()
       }
     }
+    SidecarRows.invalidate(base, uuid)
   }
 
   /** Drop one cached version — gc calls this for each pruned record so a

@@ -381,9 +381,8 @@ object Ktk extends org.apache.spark.internal.Logging {
     val all = md.partitions.keys.toSeq.sorted
     if (predicates.isEmpty || all.isEmpty) return all
     val partCols = md.partitionKeys.toSet
-    // per (kind, literal): one distributed sidecar probe — only labels that
-    // may match come back, so driver transfer is O(matching), the pruning
-    // factor itself, never O(#files)
+    // per (kind, literal): one sidecar probe — index and zone rows are read
+    // on the driver from the part-file cache, blooms tested on executors
     val probes =
       scala.collection.mutable.Map.empty[(Sidecars.Kind, PredLiteral), Option[Set[String]]]
     val surviving = predicates.splitPerConjunction(partCols).zip(predicates.disjunction).flatMap {

@@ -1,8 +1,14 @@
 package graft.ktk
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate}
+import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, OptimizeIn}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{PredLiteral, PredOp, Predicates}
 
@@ -60,8 +66,8 @@ private[graft] object Sidecars {
     protected def layout(units: DataFrame, outFiles: Int): DataFrame =
       if (outFiles > 0) units.coalesce(outFiles) else units
 
-    /** Labels whose rows in `sidecar` may satisfy `l`; None = no pruning. */
-    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
+    /** Labels whose rows in the sidecar at `p` may satisfy `l`; None = no pruning. */
+    protected def matching(spark: SparkSession, base: String, md: DatasetMetadata, p: Path,
         l: PredLiteral): Option[Set[String]]
 
     /** Is `l` routed to this kind (beyond the shared partition/null guards)? */
@@ -70,15 +76,15 @@ private[graft] object Sidecars {
     def path(base: String, md: DatasetMetadata, column: String): String =
       s"$base/${md.uuid}/$dir/${registry(md)(column)}"
 
-    /** Distributed probe for one literal: the filter runs on executors and
-      * only labels that MIGHT match come back — O(matching labels) driver
-      * transfer, never O(#files).
+    /** Probe for one literal: the labels that MIGHT match. Index and zone
+      * sidecars answer on the driver from [[SidecarRows]] (no Spark job);
+      * bloom filters are tested on executors.
       */
     def probe(spark: SparkSession, base: String, md: DatasetMetadata,
         l: PredLiteral): Option[Set[String]] = {
       val p = new Path(path(base, md, l.col))
       if (!absentFails && !DatasetMetadata.fs(spark, base).exists(p)) None
-      else matching(spark, md, spark.read.parquet(p.toString), l)
+      else matching(spark, base, md, p, l)
     }
 
     /** Write fresh sidecars over `labels` under the given (column → name)
@@ -181,16 +187,32 @@ private[graft] object Sidecars {
         .sortWithinPartitions("value")
     }
 
-    /** The literal evaluates INSIDE the index scan: only matching labels
-      * come back, never the whole index.
+    /** The labels of every row whose value satisfies `l`, on the driver.
+      * The literal is the expression a DataFrame filter on the sidecar runs —
+      * `Predicates(...).toColumn` analyzed against the sidecar schema, then
+      * the optimizer's constant folding and IN-to-InSet rewrite — so
+      * coercion, ANSI cast errors and null handling are Spark's. It is
+      * interpreted: a sidecar's rows are too few to repay a code-generation
+      * compile per literal.
       */
-    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
-        l: PredLiteral): Option[Set[String]] =
-      Some(sidecar
-        .filter(Predicates(Seq(Seq(l.copy(col = "value")))).toColumn)
-        .select(explode(col("partitions")).as("label"))
-        .distinct()
-        .collect().map(_.getString(0)).toSet)
+    protected def matching(spark: SparkSession, base: String, md: DatasetMetadata, p: Path,
+        l: PredLiteral): Option[Set[String]] = {
+      val labels = Set.newBuilder[String]
+      SidecarRows.scan(spark, base, md.uuid, p) { schema =>
+        val filter = analyzed(spark, schema)(
+          _.filter(Predicates(Seq(Seq(l.copy(col = "value")))).toColumn))
+        val Filter(cond, child) = OptimizeIn(ConstantFolding(filter)): @unchecked
+        val pred = Predicate.createInterpreted(BindReferences.bindReference(cond, child.output))
+        pred.initialize(0)
+        val parts = schema.fieldIndex("partitions")
+        row => if (pred.eval(row) && !row.isNullAt(parts)) {
+          val a = row.getArray(parts)
+          var i = 0
+          while (i < a.numElements()) { labels += a.getUTF8String(i).toString; i += 1 }
+        }
+      }
+      Some(labels.result())
+    }
   }
 
   /** Per-file Bloom filters `(label, bloom)` for equality/IN skipping on
@@ -237,7 +259,10 @@ private[graft] object Sidecars {
         .toDF("label", "bloom")
     }
 
-    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
+    /** Bloom filters are tested where they live: a file's filter can reach
+      * ~12 MB at [[Ktk.BloomMaxItems]], too much to pull to the driver.
+      */
+    protected def matching(spark: SparkSession, base: String, md: DatasetMetadata, p: Path,
         l: PredLiteral): Option[Set[String]] = {
       val vals = l.op match {
         case PredOp.Eq => Seq(l.value)
@@ -254,23 +279,27 @@ private[graft] object Sidecars {
             hs.exists(bf.mightContainLong)
           }
         }
-        sidecar.filter(might(col("bloom"))).select(col("label"))
+        // the fixed row shape spares a schema-inference job
+        spark.read.schema("label string, bloom binary").parquet(p.toString)
+          .filter(might(col("bloom"))).select(col("label"))
           .collect().map(_.getString(0)).toSet
       }
     }
 
     /** xxhash64 of the literals AT THE COLUMN'S TYPE — bit-for-bit the
-      * build side's `xxhash64(col)`. ONE local job hashes the batch. None
-      * when any cast fails or yields null.
+      * build side's `xxhash64(col)` — evaluated on the driver from the
+      * analyzed projection, no Spark job. None when any cast fails or yields
+      * null.
       */
-    private def literalHashes(spark: SparkSession, dt: org.apache.spark.sql.types.DataType,
+    private[ktk] def literalHashes(spark: SparkSession, dt: org.apache.spark.sql.types.DataType,
         vals: Seq[Any]): Option[Seq[Long]] =
       try {
-        val arr = array(vals.map(v => lit(v).cast(dt)): _*)
-        val rows = spark.range(1).select(explode(arr).as("v"))
-          .select(col("v").isNull.as("n"), xxhash64(col("v")).as("h")).collect()
-        if (rows.isEmpty || rows.exists(_.getBoolean(0))) None
-        else Some(rows.map(_.getLong(1)).toSeq)
+        val cs = vals.map(v => lit(v).cast(dt))
+        val Project(list, _) = analyzed(spark, new StructType())(
+          _.select(cs ++ cs.map(xxhash64(_)): _*)): @unchecked
+        val (cast, hashes) = list.map(_.eval(InternalRow.empty)).splitAt(vals.size)
+        if (vals.isEmpty || cast.contains(null)) None
+        else Some(hashes.map(_.asInstanceOf[Long]))
       } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -301,12 +330,18 @@ private[graft] object Sidecars {
         () => { agg.unpersist(); () })
     }
 
-    protected def matching(spark: SparkSession, md: DatasetMetadata, sidecar: DataFrame,
+    /** The ranges decide on the driver: one [[checkFn]] pass over the rows. */
+    protected def matching(spark: SparkSession, base: String, md: DatasetMetadata, p: Path,
         l: PredLiteral): Option[Set[String]] = {
       val check = checkFn(l)
-      val may = udf { (mn: String, mx: String) => mn != null && mx != null && check(mn, mx) }
-      Some(sidecar.filter(may(col("mn"), col("mx"))).select(col("label"))
-        .collect().map(_.getString(0)).toSet)
+      val labels = Set.newBuilder[String]
+      SidecarRows.scan(spark, base, md.uuid, p) { schema =>
+        val Seq(lb, mn, mx) = Seq("label", "mn", "mx").map(schema.fieldIndex)
+        row => if (!row.isNullAt(mn) && !row.isNullAt(mx) &&
+            check(row.getUTF8String(mn).toString, row.getUTF8String(mx).toString))
+          labels += row.getUTF8String(lb).toString
+      }
+      Some(labels.result())
     }
 
     /** Legacy inline ranges evaluate on the driver; a label without
@@ -361,11 +396,10 @@ private[graft] object Sidecars {
       } catch { case _: Exception => true }
     }
 
-    /** Range check for one literal, closed over for driver or executor use.
-      * Large IN lists: sort once, binary-search per file — O(files·log
+    /** Range check for one literal. Large IN lists: sort once, binary-search per file — O(files·log
       * keys), not O(files·keys).
       */
-    private def checkFn(l: PredLiteral): (String, String) => Boolean = l.op match {
+    private[ktk] def checkFn(l: PredLiteral): (String, String) => Boolean = l.op match {
       case PredOp.In =>
         val sorted =
           try l.value.asInstanceOf[Seq[Any]].filter(_ != null)
@@ -386,6 +420,15 @@ private[graft] object Sidecars {
   }
 
   val kinds: Seq[Kind] = Seq(Index, Bloom, Zone)
+
+  /** `f` over an empty relation of `schema`, analyzed and never executed:
+    * Spark's own resolution, type coercion and ANSI casts for expressions
+    * the driver then evaluates itself.
+    */
+  private def analyzed(spark: SparkSession, schema: StructType)(
+      f: DataFrame => DataFrame): LogicalPlan =
+    f(GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema))))
+      .queryExecution.analyzed
 
   /** The sidecar columns a writer asks for, in [[kinds]] order. */
   def wanted(indices: Seq[String], blooms: Seq[String], zones: Seq[String]): Seq[(Kind, Seq[String])] =

@@ -184,4 +184,31 @@ class BloomSpec extends SparkSpec {
       predicates = Predicates.of(Seq(("payload", "==", "v42"))))
     df.select("id").as[Long].collect().toSeq shouldBe Seq(42L * 7 + 1)
   }
+
+  test("driver-side literal hashes are bit-identical to Spark's xxhash64 for every type") {
+    import org.apache.spark.sql.types._
+    val cases: Seq[(DataType, Seq[Any])] = Seq(
+      LongType -> Seq(0L, -1L, Long.MaxValue, 7, "42"),
+      IntegerType -> Seq(0, Int.MinValue, 7L, "13"),
+      ShortType -> Seq(1, -300),
+      ByteType -> Seq(1, -7),
+      StringType -> Seq("", "v42", "\u00E9t\u00E9", "\uD83D\uDE00", 5),
+      DateType -> Seq(java.sql.Date.valueOf("2021-02-01"), "1999-12-31"),
+      TimestampType -> Seq(java.sql.Timestamp.valueOf("2021-02-01 12:34:56.789"), "2020-01-01 00:00:00"),
+      DecimalType(10, 2) -> Seq(new java.math.BigDecimal("1.50"), 2, "-3.25"),
+      DecimalType(38, 18) -> Seq(new java.math.BigDecimal("123.456")),
+      DoubleType -> Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity, 1.5, 2),
+      FloatType -> Seq(Float.NaN, -0.0f, 1.5f),
+      BooleanType -> Seq(true, false))
+    cases.foreach { case (dt, vals) =>
+      // the build side hashes stored values: a column of the sidecar's type
+      val want = spark.range(1).select(vals.map(v => xxhash64(lit(v).cast(dt))): _*)
+        .head().toSeq.map(_.asInstanceOf[Long])
+      withClue(s"$dt: ") { Sidecars.Bloom.literalHashes(spark, dt, vals) shouldBe Some(want) }
+    }
+    // a failed or null cast cannot mirror the build side: no pruning
+    Sidecars.Bloom.literalHashes(spark, LongType, Seq(1L, "abc")) shouldBe None
+    Sidecars.Bloom.literalHashes(spark, LongType, Seq(null)) shouldBe None
+    Sidecars.Bloom.literalHashes(spark, LongType, Seq.empty) shouldBe None
+  }
 }
