@@ -8,7 +8,6 @@ import graft.SparkSpec
 import graft.core.{PredLiteral, PredOp, Predicates}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** The driver-side probes answer from a per-JVM cache of decoded sidecar
   * part files. A cached part must never stand in for content that changed:
@@ -30,9 +29,7 @@ class SidecarCacheSpec extends SparkSpec {
 
   /** The index's labels for `l`, computed by a Spark job over the sidecar. */
   private def truth(base: String, md: DatasetMetadata, l: PredLiteral): Set[String] =
-    spark.read.parquet(md.indexPath(base, l.col))
-      .filter(Predicates(Seq(Seq(l.copy(col = "value")))).toColumn)
-      .select(explode(col("partitions"))).as[String].collect().toSet
+    SidecarOracle.index(spark, md.indexPath(base, l.col), l)
 
   test("an appendSidecars update is visible to the very next probe") {
     val base = tmpDir("sidecache")
@@ -96,7 +93,9 @@ class SidecarCacheSpec extends SparkSpec {
     val md = store(base)
     val lits = (0 until 40).map(v => eq("key", v.toLong)) ++ (0 until 7).map(eq("z", _)) ++
       Seq(PredLiteral("key", PredOp.In, (0 until 40 by 3).map(_.toLong)))
-    val want = lits.map(l => l -> truth(base, md, l)).toMap
+    val want = lits.groupBy(_.col).flatMap { case (c, ls) =>
+      ls.zip(SidecarOracle.index(spark, md.indexPath(base, c), ls).map(_.get))
+    }
     for (_ <- 0 until 3) {
       DatasetMetadata.invalidateCache(base, "ds")
       val runs = Seq(lits, lits.reverse, lits.filter(_.col == "key"), lits.filter(_.col == "z"))

@@ -3,14 +3,12 @@ package graft.ktk
 import scala.util.{Failure, Success, Try}
 
 import graft.SparkSpec
-import graft.core.{PredLiteral, PredOp, Predicates}
-import org.apache.spark.sql.functions._
+import graft.core.{PredLiteral, PredOp}
 
 /** The driver-side index and zone-map probes return exactly the label sets
-  * of the distributed expressions they replaced — kept here as the oracle:
-  * `read.parquet → filter(toColumn) → explode → distinct` for the index, the
-  * `checkFn` UDF filter for zone maps. Where the oracle throws (an ANSI cast
-  * error), the probe throws the same exception class.
+  * of the distributed expressions they replaced ([[SidecarOracle]]). Where
+  * the oracle throws (an ANSI cast error), the probe throws the same
+  * exception class.
   */
 class SidecarProbeParitySpec extends SparkSpec {
   import SidecarProbeParitySpec.T
@@ -71,29 +69,18 @@ class SidecarProbeParitySpec extends SparkSpec {
     ("x", Seq(Double.NaN, 0.0, -0.0, 1.0, Double.PositiveInfinity, "NaN", 4),
       (0 until 100).map(k => if (k == 0) Double.NaN else k * 0.25 - 4)))
 
-  private def literals(c: String, vals: Seq[Any], big: Seq[Any]): Seq[PredLiteral] =
-    vals.flatMap(v => ops.map(o => PredLiteral(c, PredOp.fromString(o), v))) ++
+  /** A value's literals under every op share one oracle scan per sidecar,
+    * and so do the column's three `in` literals.
+    */
+  private def groups(c: String, vals: Seq[Any], big: Seq[Any]): Seq[Seq[PredLiteral]] =
+    vals.map(v => ops.map(o => PredLiteral(c, PredOp.fromString(o), v))) :+
       Seq(PredLiteral(c, PredOp.In, vals), PredLiteral(c, PredOp.In, Seq.empty),
         PredLiteral(c, PredOp.In, big))
 
-  private def indexOracle(l: PredLiteral): Set[String] =
-    spark.read.parquet(md.indexPath(base, l.col))
-      .filter(Predicates(Seq(Seq(l.copy(col = "value")))).toColumn)
-      .select(explode(col("partitions")).as("label"))
-      .distinct()
-      .collect().map(_.getString(0)).toSet
-
-  private def zoneOracle(l: PredLiteral): Set[String] = {
-    val check = Sidecars.Zone.checkFn(l)
-    val may = udf { (mn: String, mx: String) => mn != null && mx != null && check(mn, mx) }
-    spark.read.parquet(md.zonePath(base, l.col)).filter(may(col("mn"), col("mx")))
-      .select(col("label")).collect().map(_.getString(0)).toSet
-  }
-
   /** Compares, and returns the oracle's label set (None when it threw). */
-  private def same(tag: String, oracle: => Set[String],
+  private def same(tag: String, oracle: Try[Set[String]],
       probe: => Option[Set[String]]): Option[Set[String]] =
-    (Try(oracle), Try(probe.get)) match {
+    (oracle, Try(probe.get)) match {
       case (Success(want), Success(got)) =>
         withClue(tag) { got shouldBe want }
         Some(want)
@@ -106,9 +93,14 @@ class SidecarProbeParitySpec extends SparkSpec {
   for ((c, vals, big) <- cases) {
     test(s"index and zone probes on column '$c' return the distributed label sets") {
       val all = md.partitions.keySet
-      val outcomes = literals(c, vals, big).flatMap { l =>
-        Seq(same(s"index $l", indexOracle(l), Sidecars.Index.probe(spark, base, md, l)),
-          same(s"zone $l", zoneOracle(l), Sidecars.Zone.probe(spark, base, md, l)))
+      val outcomes = groups(c, vals, big).flatMap { ls =>
+        val index = SidecarOracle.index(spark, md.indexPath(base, c), ls)
+        val zone = SidecarOracle.zone(spark, md.zonePath(base, c), ls)
+        ls.indices.flatMap { i =>
+          val l = ls(i)
+          Seq(same(s"index $l", index(i), Sidecars.Index.probe(spark, base, md, l)),
+            same(s"zone $l", zone(i), Sidecars.Zone.probe(spark, base, md, l)))
+        }
       }
       // the cases prune: some literals keep a strict, non-empty subset
       outcomes.flatten.exists(s => s.nonEmpty && s != all) shouldBe true
@@ -119,7 +111,7 @@ class SidecarProbeParitySpec extends SparkSpec {
     val bad = Seq(PredLiteral("l", PredOp.Eq, "abc"), PredLiteral("s", PredOp.Eq, 5),
       PredLiteral("d", PredOp.Lt, "not-a-date"))
     bad.foreach { l =>
-      val want = Try(indexOracle(l))
+      val want = Try(SidecarOracle.index(spark, md.indexPath(base, l.col), l))
       withClue(s"$l: ") { want.isFailure shouldBe true }
       val got = Try(Sidecars.Index.probe(spark, base, md, l))
       got.failed.map(_.getClass) shouldBe want.failed.map(_.getClass)
