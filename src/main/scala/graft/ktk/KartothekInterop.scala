@@ -206,7 +206,7 @@ object KartothekInterop {
         case None =>
           externalCache.getOrElseUpdate((l.col, l), {
             val onValue = Predicates(Seq(Seq(l.copy(col = "value"))))
-            spark.read.parquet(s"$base/${ds.externalIndices(l.col)}")
+            SidecarRows.frame(spark, new Path(s"$base/${ds.externalIndices(l.col)}"))
               .select(col(s"`${l.col}`").as("value"), col("partition"))
               .filter(onValue.toColumn)
               .select(explode(col("partition")).as("label"))
@@ -397,13 +397,14 @@ object KartothekInterop {
     // enumerate written files: label = relative path under <uuid>/<table>/
     val root = fs.makeQualified(new Path(tableDir))
     val prefix = root.toString + "/"
-    val labels = scala.collection.mutable.ArrayBuffer.empty[String]
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     Ktk.walkFiles(fs, root) { st =>
       val name = st.getPath.getName
       if (!name.startsWith("_") && !name.startsWith("."))
-        labels += st.getPath.toString.stripPrefix(prefix)
+        files += st.getPath.toString.stripPrefix(prefix) -> st.getLen
       ()
     }
+    val labels = files.map(_._1)
     // full schema INCLUDING partition columns (partition keys first, like
     // the reference's normalize_column_order) — the reference reconstructs
     // partition-column types from _common_metadata, so they must be present
@@ -412,11 +413,12 @@ object KartothekInterop {
       partitionOn.map(df.schema(_)) ++
         df.schema.fields.filterNot(f => partitionOn.contains(f.name)))
     writeCommonMetadata(spark, tableDir, fullSchema)
+    // the index scans plan from the walk's own sizes: no listing, no inference
+    def scan: DataFrame =
+      SnapshotScan.files(spark, tableDir, fullSchema, partitionOn, files.toSeq)
 
     // embedded indices: value → labels (the v4 `from_v2` dict form)
     val indices: Map[String, Map[String, Seq[String]]] = secondaryIndices.map { c =>
-      val scan = spark.read.option("basePath", tableDir)
-        .parquet(labels.toSeq.map(l => s"$tableDir/$l"): _*)
       val pairs = scan
         .select(col(s"`$c`").cast("string").as("value"),
           regexp_replace(Ktk.decodeUriPathCol(input_file_name()),
@@ -438,8 +440,6 @@ object KartothekInterop {
     // format for large exports.
     val extIdx: Map[String, String] = externalIndices.map { c =>
       val key = s"$uuid/indices/$c/1970-01-01T00%3A00%3A00.000000.by-dataset-index.parquet"
-      val scan = spark.read.option("basePath", tableDir)
-        .parquet(labels.toSeq.map(l => s"$tableDir/$l"): _*)
       val tmp = s"$base/$uuid/indices/.$c.tmp"
       scan
         .select(col(s"`$c`"),

@@ -51,8 +51,9 @@ object Ktk extends org.apache.spark.internal.Logging {
 
   /** Fresh VERSION-ADDRESSED sidecar file name: every canonical sidecar
     * build/rewrite writes a NEW `<col>.<nonce>.parquet` dir and commits the
-    * name through the registry, never mutating a dir an older snapshot
-    * references — so each snapshot's registries stay trustworthy and
+    * name through the registry, never rewriting a dir an older snapshot
+    * references (a pure append only adds part files holding its new
+    * labels' rows) — so each snapshot's registries stay trustworthy and
     * [[readTableAsOf]] keeps full four-layer pruning. Old dirs survive
     * until [[garbageCollect]] finds them referenced by no retained version.
     * A nonce (not the commit version) keeps racing writers from colliding
@@ -220,8 +221,10 @@ object Ktk extends org.apache.spark.internal.Logging {
 
   /** Materialized zone map of `column` — (label → [min, max] strings, empty
     * seq = all-null file) — from the sidecar, or the legacy inline form for
-    * pre-sidecar blobs. Catalog-sized; intended for tooling/tests, the read
-    * path probes the sidecar distributed without materializing this.
+    * pre-sidecar blobs. Catalog-sized; intended for tooling/tests (the read
+    * path's probe reads the same rows on the driver, from [[SidecarRows]]'
+    * part-file cache). Rows of labels `md` does not reference (fragments
+    * appended after it) are dropped.
     */
   def zoneMapOf(spark: SparkSession, base: String, md: DatasetMetadata,
       column: String): Map[String, Seq[String]] = {
@@ -229,9 +232,10 @@ object Ktk extends org.apache.spark.internal.Logging {
     if (zone.registry(md).contains(column)) {
       val p = new Path(zone.path(base, md, column))
       if (!DatasetMetadata.fs(spark, base).exists(p)) Map.empty
-      else spark.read.parquet(p.toString).select("label", "mn", "mx").collect().map { r =>
-        val mn = r.getString(1); val mx = r.getString(2)
-        r.getString(0) -> (if (mn == null || mx == null) Seq.empty[String] else Seq(mn, mx))
+      else SidecarRows.frame(spark, p).select("label", "mn", "mx").collect().collect {
+        case r if md.partitions.contains(r.getString(0)) =>
+          val mn = r.getString(1); val mx = r.getString(2)
+          r.getString(0) -> (if (mn == null || mx == null) Seq.empty[String] else Seq(mn, mx))
       }.toMap
     } else md.inlineZoneMaps.getOrElse(column, Map.empty)
   }
@@ -273,8 +277,7 @@ object Ktk extends org.apache.spark.internal.Logging {
   def canonicalizeSidecars(spark: SparkSession, base: String, uuid: String): Unit = {
     val md0 = DatasetMetadata.load(spark, base, uuid)
     val md = Sidecars.migrateInlineZones(spark, base, md0)
-    val merged = Sidecars.merge(spark, base, md,
-      survivors = md.partitions.keys.toSeq.sorted, newLabels = Nil)
+    val merged = Sidecars.merge(spark, base, md, newLabels = Set.empty)
     // canonical rewrites landed in fresh version-addressed dirs — the
     // registries naming them (plus any inline-zone migration) must COMMIT;
     // one put covers all. No-op canonicalizations commit nothing.
@@ -356,13 +359,17 @@ object Ktk extends org.apache.spark.internal.Logging {
           "to guess its table-relative label"))))
   }
 
-  /** The raw index frame. One row per value after [[store]]/[[update]]/
-    * [[compact]]; append-only streaming commits ([[update]] with
-    * `appendSidecars`) may leave a value spread over several rows until the
-    * next [[compact]] — consumers must treat rows per value as a union.
+  /** The raw index frame, with the schema read from its first part's
+    * footer (no inference job). One row per value after a canonical write
+    * ([[store]], [[compact]], or an [[update]] that drops labels); each
+    * pure-append [[update]] adds a fragment, so a value may spread over
+    * several rows until the next canonical merge — consumers must treat
+    * rows per value as a union. A fragment may also name labels `md` does
+    * not reference (appended after `md`, or by a commit that lost its
+    * race); intersect with `md`'s labels where that matters.
     */
   def loadIndex(spark: SparkSession, base: String, md: DatasetMetadata, column: String): DataFrame =
-    spark.read.parquet(md.indexPath(base, column))
+    SidecarRows.frame(spark, new Path(md.indexPath(base, column)))
 
   /** Distinct indexed values (≙ IndexBase.observed_values). */
   def observedValues(spark: SparkSession, base: String, md: DatasetMetadata, column: String): DataFrame =
@@ -467,7 +474,7 @@ object Ktk extends org.apache.spark.internal.Logging {
           keepMatchingOrUncovered(
             // null stats = all-null column in that file: present in the
             // sidecar but never matching ⇒ dropped, as before
-            spark.read.parquet(sidecar.toString).select(
+            SidecarRows.frame(spark, sidecar).select(
               col("label"),
               coalesce(col("mn").isNotNull && col("mx").isNotNull &&
                 col("mn") <= lit(hi) && col("mx") >= lit(lo),
@@ -556,12 +563,9 @@ object Ktk extends org.apache.spark.internal.Logging {
         val dirtyL = labels.filter(dirtyDeleteLabels(spark, base, md).contains)
         val cleanL = labels.filterNot(dirtyL.toSet)
         val needPos = withOverlayOrder || dirtyL.nonEmpty
-        // explicit schema: stable types + partition-column reconstruction
+        // planned from the snapshot: recorded sizes, explicit schema
         def scanOf(ls: Seq[String]): DataFrame = {
-          val s = spark.read
-            .option("basePath", tableDir)
-            .schema(schema)
-            .parquet(ls.map(l => s"$tableDir/$l"): _*)
+          val s = SnapshotScan(spark, base, md, ls)
           if (needPos)
             // label → partitionSeq / DV lookups key on (label, position
             // within file), both from the hidden _metadata column
@@ -850,8 +854,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       spark: SparkSession, base: String, md: DatasetMetadata,
       candidates: Seq[String], cond: org.apache.spark.sql.Column): DataFrame = {
     val tableDir = md.tableDir(base)
-    val hits = spark.read.option("basePath", tableDir).schema(md.schema)
-      .parquet(candidates.map(l => s"$tableDir/$l"): _*)
+    val hits = SnapshotScan(spark, base, md, candidates)
       .filter(cond)
       .select(
         labelCol(spark, tableDir).as("label"),
@@ -1125,8 +1128,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     val cond = conditionCol.orElse(filterQuery.map(expr)).getOrElse(predicates.toColumn)
     val tableDir = md.tableDir(base)
     // one scan feeds BOTH sides: (label, pos) tombstones + rows to rewrite
-    val matched = spark.read.option("basePath", tableDir).schema(schema)
-      .parquet(candidates.map(l => s"$tableDir/$l"): _*)
+    val matched = SnapshotScan(spark, base, md, candidates)
       .filter(cond)
       .withColumn("__label",
         labelCol(spark, tableDir))
@@ -1163,9 +1165,8 @@ object Ktk extends org.apache.spark.internal.Logging {
       val finalSeq = finalPartitions.keys.map { l =>
         l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
       }.toMap
-      val merged = Sidecars.merge(spark, base, md,
-        survivors = md.partitions.keys.toSeq, newLabels = newLabels.toSeq)
-      val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
+      val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions), newLabels)
+      val md1 = merged.copy(partitionSeq = finalSeq,
         deletes = fragmentsToCommit(spark, base, md,
           md.deleteFragments ++ fragment.map(_._1), maxFragments),
         metadata = md.metadata +
@@ -1352,8 +1353,7 @@ object Ktk extends org.apache.spark.internal.Logging {
         lastMergeCandidates.set(candidates.size)
         if (candidates.isEmpty) None
         else {
-          val scan0 = spark.read.option("basePath", tableDir).schema(schema)
-            .parquet(candidates.map(l => s"$tableDir/$l"): _*)
+          val scan0 = SnapshotScan(spark, base, md, candidates)
           // collected keys: also push the per-column INs into row-group
           // pruning (conjunction is a superset of the struct match);
           // large sources push their range envelope the same way
@@ -1403,10 +1403,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     val finalSeq = finalPartitions.keys.map { l =>
       l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
     }.toMap
-    val merged = Sidecars.merge(spark, base, md,
-      survivors = md.partitions.keys.toSeq, newLabels = newLabels.toSeq)
-    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
-      schemaJson = evolvedSchema.json,
+    val merged = Sidecars.merge(spark, base,
+      md.copy(partitions = finalPartitions, schemaJson = evolvedSchema.json), newLabels)
+    val md1 = merged.copy(partitionSeq = finalSeq,
       deletes = fragmentsToCommit(spark, base, md,
         md.deleteFragments ++ fragment.map(_._1), MaxDeleteFragments),
       metadata = md.metadata ++ extraMetadata +
@@ -1445,13 +1444,14 @@ object Ktk extends org.apache.spark.internal.Logging {
     * ranges) or from the distributed record scan (deep ranges), so the
     * emit code cannot diverge between modes. `parentFilter` restricts a
     * new fragment's labels to files that exist at the parent version.
+    * Labels carry their recorded sizes, which plan the scans.
     */
   private final case class CdfVersionPlan(
-      freshAdds: Seq[String],
+      freshAdds: Seq[(String, Long)],
       newFrags: Seq[String],
       parentFrags: Seq[String],
-      gone: Seq[String],
-      parentFilter: Seq[String] => Seq[String])
+      gone: Seq[(String, Long)],
+      parentFilter: Seq[String] => Seq[(String, Long)])
 
   def readChangeFeed(
       spark: SparkSession,
@@ -1475,9 +1475,8 @@ object Ktk extends org.apache.spark.internal.Logging {
     // so a feed range spanning an evolveSchema commit projects cleanly
     // (reading with each version's own schema would leave the final
     // current-schema projection unresolved).
-    def scanLabels(ls: Seq[String], withPos: Boolean): DataFrame = {
-      val s = spark.read.option("basePath", tableDir).schema(schema)
-        .parquet(ls.map(l => s"$tableDir/$l"): _*)
+    def scanLabels(files: Seq[(String, Long)], withPos: Boolean): DataFrame = {
+      val s = SnapshotScan.files(spark, tableDir, schema, cur.partitionKeys, files)
       if (withPos)
         s.withColumn("__label",
             labelCol(spark, tableDir))
@@ -1511,11 +1510,12 @@ object Ktk extends org.apache.spark.internal.Logging {
       val removed = mdP.partitions.keySet -- mdV.partitions.keySet
       val rewrittenSeqs = added.filter(l => mdV.seqOf(l) <= hwm).map(mdV.seqOf)
       CdfVersionPlan(
-        freshAdds = added.filter(l => mdV.seqOf(l) > hwm).toSeq.sorted,
+        freshAdds = SnapshotScan.sized(mdV, added.filter(l => mdV.seqOf(l) > hwm).toSeq.sorted),
         newFrags = mdV.deleteFragments.filterNot(mdP.deleteFragments.toSet),
         parentFrags = mdP.deleteFragments,
-        gone = removed.filter(l => !rewrittenSeqs.contains(mdP.seqOf(l))).toSeq.sorted,
-        parentFilter = ls => ls.filter(mdP.partitions.keySet.contains))
+        gone = SnapshotScan.sized(mdP,
+          removed.filter(l => !rewrittenSeqs.contains(mdP.seqOf(l))).toSeq.sorted),
+        parentFilter = ls => SnapshotScan.sized(mdP, ls.filter(mdP.partitions.keySet.contains)))
     }
 
     // deep-range mode: the SAME plans reconstructed from the distributed
@@ -1555,16 +1555,17 @@ object Ktk extends org.apache.spark.internal.Logging {
       val addEvents = flagged
         .filter(col("version") > fromVersion &&
           (col("prevV").isNull || col("prevV") =!= col("version") - 1))
-        .select("version", "label", "seq").as[(Long, String, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+        .select("version", "label", "seq", "size").as[(Long, String, Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSeq).toMap
       // a presence row at p with no row at p+1 = removed at p+1; the row's
-      // seq IS the parent-side seq the rewrite check needs
+      // seq IS the parent-side seq the rewrite check needs (and its size
+      // the size the removed file's scan is planned with)
       val removeEvents = flagged
         .filter((col("nextV").isNull || col("nextV") =!= col("version") + 1) &&
           col("version") < lit(to))
-        .select((col("version") + 1).as("v"), col("label"), col("seq"))
-        .as[(Long, String, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
+        .select((col("version") + 1).as("v"), col("label"), col("seq"), col("size"))
+        .as[(Long, String, Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSeq).toMap
       val maxSeq = pres.groupBy("version").agg(max("seq"))
         .as[(Long, Long)].collect().toMap
       val hwmMeta = scan.recRows.filter(col("kind") === "meta_hwm")
@@ -1578,20 +1579,20 @@ object Ktk extends org.apache.spark.internal.Logging {
       val plans = (fromVersion + 1 to to).map { v =>
         val hwm = if (v == 1L) Long.MinValue else hwmAt(v - 1)
         val adds = addEvents.getOrElse(v, Nil)
-        val rewritten = adds.collect { case (_, s) if s <= hwm => s }.toSet
+        val rewritten = adds.collect { case (_, s, _) if s <= hwm => s }.toSet
         val parentFrags = if (v == 1L) Nil else fragsByV.getOrElse(v - 1, Nil)
         val parentFragSet = parentFrags.toSet
         v -> CdfVersionPlan(
-          freshAdds = adds.collect { case (l, s) if s > hwm => l }.sorted,
+          freshAdds = adds.collect { case (l, s, size) if s > hwm => l -> size }.sorted,
           newFrags = fragsByV.getOrElse(v, Nil).filterNot(parentFragSet),
           parentFrags = parentFrags,
           gone = removeEvents.getOrElse(v, Nil)
-            .collect { case (l, s) if !rewritten.contains(s) => l }.sorted,
+            .collect { case (l, s, size) if !rewritten.contains(s) => l -> size }.sorted,
           parentFilter = ls =>
             if (v == 1L || ls.isEmpty) Nil
             else ls.toDF("label")
-              .join(pres.filter(col("version") === v - 1), Seq("label"), "left_semi")
-              .as[String].collect().toSeq)
+              .join(pres.filter(col("version") === v - 1), Seq("label"))
+              .select("label", "size").as[(String, Long)].collect().toSeq)
       }.toMap
       (plans, () => { pres.unpersist(blocking = false); scan.close() })
     }
@@ -1626,12 +1627,12 @@ object Ktk extends org.apache.spark.internal.Logging {
               else dvNew.join(readFrags(plan.parentFrags),
                 Seq("label", "pos"), "left_anti")
             val dv = fresh.select(col("label").as("__dvl"), col("pos").as("__dvp"))
-            val labels = plan.parentFilter(
+            val files = plan.parentFilter(
               dv.select("__dvl").distinct().collect().map(_.getString(0)).toSeq)
               .sorted
-            if (labels.isEmpty) None
+            if (files.isEmpty) None
             else Some(project(
-              scanLabels(labels, withPos = true)
+              scanLabels(files, withPos = true)
                 .join(dv, col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
                   "left_semi"),
               "delete", v))
@@ -2148,10 +2149,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     val finalSeq = finalPartitions.keys.map { l =>
       l -> newSeqOf.getOrElse(l, md.seqOf(l))
     }.toMap
-    val merged = Sidecars.merge(spark, base, md,
-      survivors = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newSeqOf.keys.toSeq.sorted)
-    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
+    val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions),
+      newLabels = newSeqOf.keySet.toSet)
+    val md1 = merged.copy(partitionSeq = finalSeq,
       // fragments covering only the rewritten files drop; with a scope,
       // fragments for untouched dirty files must survive or their deleted
       // rows would resurrect
@@ -2243,7 +2243,6 @@ object Ktk extends org.apache.spark.internal.Logging {
       deleteScope: Predicates = Predicates.empty,
       sortBy: Seq[String] = Nil,
       extraMetadata: Map[String, String] = Map.empty,
-      appendSidecars: Boolean = false,
       evolveSchema: Boolean = false,
       replaceAll: Boolean = false,
       requireAppendsInScope: Boolean = false,
@@ -2380,18 +2379,16 @@ object Ktk extends org.apache.spark.internal.Logging {
       val finalSeq = finalPartitions.keys.map { l =>
         l -> (if (newLabels.contains(l)) nextSeq else parent.seqOf(l))
       }.toMap
-      // append-only sidecar maintenance: only meaningful with no deletes —
-      // after a delete the canonical merge must drop the dead labels' rows so
-      // loadIndex/observedValues stay exact (queryLabels alone would tolerate
-      // stale labels via its live-partition intersection)
-      val merged = Sidecars.merge(spark, base, parent,
-        survivors = finalPartitions.keys.toSeq.filter(refs.contains),
-        newLabels = newLabels.toSeq, appendOnly = appendSidecars && dropped.isEmpty)
+      // a commit that drops no label appends the batch's sidecar rows as
+      // one more fragment — O(batch); one that drops labels merges
+      // canonically, so the dead labels' rows leave the sidecars
+      val merged = Sidecars.merge(spark, base,
+        parent.copy(partitions = finalPartitions, schemaJson = evolvedNow.json),
+        newLabels, appendOnly = dropped.isEmpty)
       val sortMeta =
         if (sortBy.isEmpty) Map.empty[String, String]
         else Map(DatasetMetadata.SortByKey -> sortBy.mkString(","))
-      val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
-        schemaJson = evolvedNow.json,
+      val md1 = merged.copy(partitionSeq = finalSeq,
         // a full content replacement also sheds pending deletion vectors —
         // every file they tombstone just left the referenced set
         deletes = if (effReplaceAll) Nil else parent.deletes,
@@ -2587,10 +2584,9 @@ object Ktk extends org.apache.spark.internal.Logging {
       l -> newSeqOf.getOrElse(l, md.seqOf(l))
     }.toMap
 
-    val merged = Sidecars.merge(spark, base, md,
-      survivors = finalPartitions.keys.toSeq.filterNot(newSeqOf.contains),
-      newLabels = newSeqOf.keys.toSeq.sorted)
-    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
+    val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions),
+      newLabels = newSeqOf.keySet.toSet)
+    val md1 = merged.copy(partitionSeq = finalSeq,
       // victims' deleted rows were materialized away during the rewrite
       deletes = prunedDeleteFragments(spark, base, md, victims),
       metadata = md.metadata ++ extraMetadata)
@@ -2694,10 +2690,7 @@ object Ktk extends org.apache.spark.internal.Logging {
         try fsys.setTimes(heartbeat, System.currentTimeMillis(), -1)
         catch { case _: java.io.IOException => () }
         val staging = s"$stagingRoot/$seq"
-        val data = applyDeletes(
-          spark.read.option("basePath", tableDir)
-            .parquet(labels.map(l => s"$tableDir/$l"): _*),
-          labels)
+        val data = applyDeletes(SnapshotScan(spark, base, md, labels), labels)
         val rewritten = shape(data, labels)
         val writer = rewritten.write.mode(SaveMode.Overwrite)
         (if (md.partitionKeys.nonEmpty) writer.partitionBy(md.partitionKeys: _*) else writer)
@@ -2769,7 +2762,6 @@ object Ktk extends org.apache.spark.internal.Logging {
         s"z-order column '$c' must be numeric/date/timestamp, got $dt")
     }
     if (md.partitions.isEmpty) return md
-    val tableDir = md.tableDir(base)
     // optional partition scope (OPTIMIZE ZORDER ... WHERE): rewrite only
     // the matching partitions' files; quantile boundaries are computed
     // over the scoped set (zone pruning is per-file min/max, so scoped
@@ -2785,8 +2777,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     }
     // one global quantile pass fixes the bucket boundaries — groups must
     // agree on them or ranges would only be tight within a group
-    val probe = spark.read.option("basePath", tableDir)
-      .parquet(allLabels.map(l => s"$tableDir/$l"): _*)
+    val probe = SnapshotScan(spark, base, md, allLabels)
       .select(columns.zipWithIndex.map { case (c, i) => asDouble(c).as(s"__z$i") }: _*)
     val probs = (1 until graft.core.ZOrder.Buckets)
       .map(_.toDouble / graft.core.ZOrder.Buckets).toArray
@@ -2827,9 +2818,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     val registrable = if (untouched.isEmpty) columns.filterNot(zones.contains) else Nil
     val mdZ = Sidecars.Zone.withRegistry(md,
       zones ++ registrable.map(c => c -> newSidecarName(c)))
-    val merged = Sidecars.merge(spark, base, mdZ,
-      survivors = untouched, newLabels = newSeqOf.keys.toSeq.sorted)
-    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
+    val merged = Sidecars.merge(spark, base, mdZ.copy(partitions = finalPartitions),
+      newLabels = newSeqOf.keySet.toSet)
+    val md1 = merged.copy(partitionSeq = finalSeq,
       // the rewritten files had their deletion vectors applied; fragments
       // covering only them drop, fragments for untouched files remain
       deletes = prunedDeleteFragments(spark, base, md, allLabels.toSet))
@@ -2952,9 +2943,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     }.toMap
     // sidecars merge exactly like [[update]]: the first commit after
     // [[createEmpty]] finds no sidecar file and builds from its labels
-    val merged = Sidecars.merge(spark, base, md,
-      survivors = keepOld.toSeq.filter(finalPartitions.contains), newLabels = newLabels)
-    val md1 = merged.copy(partitions = finalPartitions, partitionSeq = finalSeq,
+    val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions),
+      newLabels = newLabels.toSet)
+    val md1 = merged.copy(partitionSeq = finalSeq,
       metadata = md.metadata + (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
 
     DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
@@ -4353,7 +4344,8 @@ object Ktk extends org.apache.spark.internal.Logging {
     * metapartition.py:1720-1771, and collect_dataset_metadata's `frac`
     * sampling, io/dask/dataframe.py:491-574): rows, row groups, size.
     * Footer reads are distributed via mapPartitions over the file list —
-    * no data scan. `frac` < 1 samples that fraction of the FILE LIST
+    * no data scan, and no stat: each footer is found from the size the
+    * snapshot records. `frac` < 1 samples that fraction of the FILE LIST
     * (deterministically, by `seed`) before any footer is read — the
     * reference's cheap table-profile mode; at least one file is always
     * read on a non-empty table.
@@ -4363,7 +4355,8 @@ object Ktk extends org.apache.spark.internal.Logging {
     require(frac > 0.0 && frac <= 1.0, s"frac must be in (0, 1], got $frac")
     val md = DatasetMetadata.load(spark, base, uuid)
     val tableDir = md.tableDir(base)
-    val all = md.partitions.keys.toSeq.sorted.map(l => s"$tableDir/$l")
+    val all = SnapshotScan.sized(md, md.partitions.keys.toSeq.sorted)
+      .map { case (l, size) => (s"$tableDir/$l", size) }
     val files =
       if (frac >= 1.0 || all.isEmpty) all
       else new scala.util.Random(seed).shuffle(all)
@@ -4374,9 +4367,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     spark.sparkContext.parallelize(files, math.max(1, math.min(files.size, 32)))
       .mapPartitions { it =>
         val conf = serializableConf.value
-        it.map { f =>
-          val p = new Path(f)
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+        it.map { case (f, size) =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            new org.apache.hadoop.fs.FileStatus(size, false, 0, 0L, 0L, new Path(f)), conf)
           val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try {
             val fm = reader.getFooter.getBlocks

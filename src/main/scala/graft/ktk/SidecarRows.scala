@@ -2,12 +2,13 @@ package graft.ktk
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
@@ -69,6 +70,37 @@ private[ktk] object SidecarRows {
     }
   }
 
+  /** The part files of the parquet dir (or single file) at `dir`, listed
+    * as `spark.read.parquet` lists them. A missing dir fails with the
+    * filesystem's FileNotFoundException, an empty one too.
+    */
+  private def parts(conf: Configuration, dir: Path): Seq[FileStatus] = {
+    // HadoopFSUtils.shouldFilterOutPathName: `_`/`.` names are not data
+    val ps = dir.getFileSystem(conf).listStatus(dir).toSeq
+      .filterNot { s => val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") }
+      .sortBy(_.getPath.getName)
+    if (ps.isEmpty) throw new java.io.FileNotFoundException(s"sidecar $dir holds no part files")
+    ps
+  }
+
+  /** The schema Spark would infer for `part`, from its footer on the driver. */
+  private def footerSchema(spark: SparkSession, conf: Configuration, part: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(part, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(part.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The parquet dir (or file) at `dir` as a DataFrame whose schema comes
+    * from its first part's footer, read on the driver: the schema-inference
+    * job of a bare `spark.read.parquet` is never started. For sidecars,
+    * whose parts share one schema.
+    */
+  def frame(spark: SparkSession, dir: Path): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    spark.read.schema(footerSchema(spark, conf, parts(conf, dir).head)).parquet(dir.toString)
+  }
+
   /** Visit every row of the sidecar at `dir` (of dataset `uuid` under
     * `base`): `visitor` receives the sidecar schema once and returns the
     * per-row visit, which must not keep the row it is handed. A missing dir
@@ -77,19 +109,11 @@ private[ktk] object SidecarRows {
   def scan(spark: SparkSession, base: String, uuid: String, dir: Path)(
       visitor: StructType => InternalRow => Unit): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    // HadoopFSUtils.shouldFilterOutPathName: `_`/`.` names are not data
-    val parts = dir.getFileSystem(conf).listStatus(dir).toSeq
-      .filterNot { s => val n = s.getPath.getName; n.startsWith("_") || n.startsWith(".") }
-      .sortBy(_.getPath.getName)
-    if (parts.isEmpty) throw new java.io.FileNotFoundException(s"sidecar $dir holds no part files")
+    val parts = this.parts(conf, dir)
     def key(f: FileStatus): Key =
       (base, uuid, f.getPath.toString, f.getLen, f.getModificationTime)
-    val schema = lookup(key(parts.head)).map(_.schema).getOrElse {
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(parts.head, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(parts.head.getPath, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    }
+    val schema = lookup(key(parts.head)).map(_.schema)
+      .getOrElse(footerSchema(spark, conf, parts.head))
     // the relation's data schema is nullable (DataSource.resolveRelation)
     val dataSchema = StructType(schema.fields.map(_.copy(nullable = true)))
     val visit = visitor(dataSchema)

@@ -51,8 +51,9 @@ private[graft] object Sidecars {
     /** A missing index fails the read; a missing bloom or zone keeps every file. */
     def absentFails: Boolean
 
-    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
-        cols: Seq[String]): Fresh
+    /** Fresh units of `labels`, all recorded in snapshot `md`. */
+    protected def fresh(spark: SparkSession, base: String, md: DatasetMetadata,
+        labels: Seq[String], cols: Seq[String]): Fresh
 
     /** The old units of `survivors` (a broadcast one-column label frame);
       * per-label rows simply semi-join.
@@ -94,43 +95,51 @@ private[graft] object Sidecars {
         targets: Map[String, String], labels: Seq[String]): Unit = {
       if (targets.isEmpty || labels.isEmpty) return
       val cols = targets.keys.toSeq.sorted
-      val f = fresh(spark, md.tableDir(base), labels, cols)
+      val f = fresh(spark, base, md, labels, cols)
       try cols.foreach(c => write(spark, base, md, targets(c), layout(f.units(c), 0)))
       finally f.release()
     }
 
-    /** Incremental merge (≙ update_indices, io_components/write.py:283-309):
-      * surviving labels keep their rows (a broadcast semi-join, never an
-      * inlined In-list), new labels get fresh ones, and the result lands
-      * canonical in a fresh version-addressed dir so snapshots never see
-      * their sidecars mutate. `appendOnly` is the streaming fast path: new
-      * labels' rows append as extra files under the current name, O(new
-      * files) per commit, until a canonical merge folds them. A registered
-      * sidecar whose file is gone is rebuilt from survivors ∪ new labels —
-      * merging into nothing would leave the survivors uncovered, which
-      * every probe reads as "cannot match". Returns the registry to commit.
+    /** Incremental merge (≙ update_indices, io_components/write.py:283-309)
+      * into `md`, the snapshot about to commit: its labels are the
+      * survivors plus `newLabels`, its registries still the parent's.
+      *
+      * `appendOnly` (a commit that drops no label): the new labels' rows
+      * become one more fragment — extra part files — of the current dir,
+      * O(batch) per commit. Otherwise surviving labels keep their rows (a
+      * broadcast semi-join, never an inlined In-list), new labels get fresh
+      * ones, and the result lands canonical in a fresh version-addressed
+      * dir, which folds every fragment. So a dir only ever GAINS rows, and
+      * only rows of labels committed after it was written (or of a commit
+      * that lost its race): an older snapshot sharing the dir sees rows of
+      * labels it does not reference, which every probe intersects away,
+      * and never loses a row of its own. A registered sidecar whose file
+      * is gone is rebuilt from survivors ∪ new labels — merging into
+      * nothing would leave the survivors uncovered, which every probe
+      * reads as "cannot match". Returns the registry to commit.
       */
     def merge(spark: SparkSession, base: String, md: DatasetMetadata,
-        survivors: Seq[String], newLabels: Seq[String],
-        appendOnly: Boolean): Map[String, String] = {
+        newLabels: Set[String], appendOnly: Boolean): Map[String, String] = {
       import spark.implicits._
       val reg = registry(md)
       val cols = reg.keys.toSeq.sorted
       val fsys = DatasetMetadata.fs(spark, base)
+      val (added, survivors) = md.partitions.keys.toSeq.sorted.partition(newLabels)
       val present = cols.filter(c => fsys.exists(new Path(path(base, md, c)))).toSet
-      def source(c: String): Seq[String] = if (present(c)) newLabels else survivors ++ newLabels
+      def source(c: String): Seq[String] = if (present(c)) added else survivors ++ added
       val freshBy: Map[Seq[String], Fresh] = cols.groupBy(source).collect {
-        case (labels, cs) if labels.nonEmpty => labels -> fresh(spark, md.tableDir(base), labels, cs)
+        case (labels, cs) if labels.nonEmpty => labels -> fresh(spark, base, md, labels, cs)
       }
       try cols.map { c =>
         val add = freshBy.get(source(c)).map(_.units(c))
         if (appendOnly && present(c)) {
-          add.foreach(layout(_, 0).write.mode(SaveMode.Append).parquet(path(base, md, c)))
+          add.foreach(units => appendFragment(spark, base, md, c, layout(units, 0)))
           c -> reg(c)
         } else {
           val old =
             if (!present(c)) None
-            else Some(keep(spark.read.parquet(path(base, md, c)), broadcast(survivors.toDF("label"))))
+            else Some(keep(SidecarRows.frame(spark, new Path(path(base, md, c))),
+              broadcast(survivors.toDF("label"))))
           (old ++ add).reduceOption(_ unionByName _) match {
             case None => c -> reg(c)
             case Some(units) =>
@@ -148,10 +157,30 @@ private[graft] object Sidecars {
       Ktk.atomicSidecarWrite(spark, s"$base/${md.uuid}/$dir", name) { tmp =>
         rows.write.mode(SaveMode.Overwrite).parquet(tmp)
       }
-  }
 
-  private def scan(spark: SparkSession, tableDir: String, labels: Seq[String]): DataFrame =
-    spark.read.option("basePath", tableDir).parquet(labels.map(l => s"$tableDir/$l"): _*)
+    /** `rows` as extra part files of `column`'s current dir: written under
+      * a private dot-named staging dir, then renamed in file by file. A
+      * concurrent probe never lists a partial file, and concurrent
+      * appenders never share a staging area (Spark's own append would
+      * share the dir's `_temporary`).
+      */
+    private def appendFragment(spark: SparkSession, base: String, md: DatasetMetadata,
+        column: String, rows: DataFrame): Unit = {
+      val fsys = DatasetMetadata.fs(spark, base)
+      val target = new Path(path(base, md, column))
+      val staging = new Path(s"$base/${md.uuid}/$dir/.${registry(md)(column)}." +
+        s"${java.util.UUID.randomUUID.toString.take(8)}.append")
+      try {
+        rows.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+        fsys.listStatus(staging).foreach { st =>
+          val n = st.getPath.getName
+          if (!n.startsWith("_") && !n.startsWith(".") &&
+              !fsys.rename(st.getPath, new Path(target, n)))
+            throw new java.io.IOException(s"sidecar fragment rename ${st.getPath} -> $target failed")
+        }
+      } finally { fsys.delete(staging, true); () }
+    }
+  }
 
   private def fileLabel(spark: SparkSession, tableDir: String) =
     Ktk.labelCol(spark, tableDir, input_file_name()).as("label")
@@ -169,10 +198,10 @@ private[graft] object Sidecars {
       md.copy(indices = reg)
     def absentFails: Boolean = true
 
-    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
-        cols: Seq[String]): Fresh =
-      Fresh(c => scan(spark, tableDir, labels)
-        .select(col(s"`$c`").as("value"), fileLabel(spark, tableDir)))
+    protected def fresh(spark: SparkSession, base: String, md: DatasetMetadata,
+        labels: Seq[String], cols: Seq[String]): Fresh =
+      Fresh(c => SnapshotScan(spark, base, md, labels)
+        .select(col(s"`$c`").as("value"), fileLabel(spark, md.tableDir(base))))
 
     override protected def keep(old: DataFrame, survivors: DataFrame): DataFrame =
       super.keep(old.select(col("value"), explode(col("partitions")).as("label")), survivors)
@@ -235,11 +264,11 @@ private[graft] object Sidecars {
       * filter sized to its DISTINCT count. The shuffle moves (label, long)
       * pairs — O(rows × 8 bytes), never values.
       */
-    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
-        cols: Seq[String]): Fresh = Fresh { c =>
+    protected def fresh(spark: SparkSession, base: String, md: DatasetMetadata,
+        labels: Seq[String], cols: Seq[String]): Fresh = Fresh { c =>
       import spark.implicits._
-      scan(spark, tableDir, labels)
-        .select(col(s"`$c`").as("v"), fileLabel(spark, tableDir))
+      SnapshotScan(spark, base, md, labels)
+        .select(col(s"`$c`").as("v"), fileLabel(spark, md.tableDir(base)))
         .select(col("label"), when(col("v").isNotNull, xxhash64(col("v"))).as("h"))
         .as[(String, java.lang.Long)]
         .groupByKey(_._1)
@@ -318,14 +347,18 @@ private[graft] object Sidecars {
 
     override def covers(md: DatasetMetadata, l: PredLiteral): Boolean = md.zoneColumns.contains(l.col)
 
-    protected def fresh(spark: SparkSession, tableDir: String, labels: Seq[String],
-        cols: Seq[String]): Fresh = {
+    protected def fresh(spark: SparkSession, base: String, md: DatasetMetadata,
+        labels: Seq[String], cols: Seq[String]): Fresh = {
       val aggs = cols.flatMap(c => Seq(
         min(col(s"`$c`")).cast("string").as(s"__min_$c"),
         max(col(s"`$c`")).cast("string").as(s"__max_$c")))
-      val agg = scan(spark, tableDir, labels)
-        .groupBy(fileLabel(spark, tableDir)).agg(aggs.head, aggs.tail: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val agg0 = SnapshotScan(spark, base, md, labels)
+        .groupBy(fileLabel(spark, md.tableDir(base))).agg(aggs.head, aggs.tail: _*)
+      // several columns share the one aggregation; a single one needs no
+      // cache (whose build would be one more job)
+      val agg =
+        if (cols.size > 1) agg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else agg0
       Fresh(c => agg.select(col("label"), col(s"__min_$c").as("mn"), col(s"__max_$c").as("mx")),
         () => { agg.unpersist(); () })
     }
@@ -481,14 +514,14 @@ private[graft] object Sidecars {
       parentMd = Some(md), operation = k.addOperation)
   }
 
-  /** Merge every kind (see [[Kind.merge]]); `md` is the parent snapshot.
-    * Returns `md` with the registries to commit.
+  /** Merge every kind (see [[Kind.merge]]); `md` is the snapshot about to
+    * commit, still carrying the parent's registries. Returns `md` with the
+    * registries to commit.
     */
   def merge(spark: SparkSession, base: String, md: DatasetMetadata,
-      survivors: Seq[String], newLabels: Seq[String],
-      appendOnly: Boolean = false): DatasetMetadata =
+      newLabels: Set[String], appendOnly: Boolean = false): DatasetMetadata =
     kinds.foldLeft(md) { (acc, k) =>
-      val reg = k.merge(spark, base, md, survivors, newLabels, appendOnly)
+      val reg = k.merge(spark, base, md, newLabels, appendOnly)
       if (reg == k.registry(acc)) acc else k.withRegistry(acc, reg)
     }
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.{PredLiteral, PredOp, Predicates}
-import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
+import graft.ktk.{DatasetMetadata, Ktk, Sidecars, SnapshotScan}
 
 /** DataSource V2 connector: `spark.read.format("graft").option("uuid", u)
   * .load(base)` — the optional Catalyst-integrated surface from SURVEY §4.
@@ -32,6 +32,9 @@ import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
   * then delegates to Spark's own vectorized [[ParquetScan]] over the pruned
   * in-memory file index, so column pruning, row-group stats pushdown,
   * whole-stage codegen and AQE all behave exactly as a native parquet scan.
+  * The index is built from the snapshot ([[SnapshotScan]]): each file's
+  * status comes from its recorded size, so planning starts no listing job
+  * and stats no file.
   * All filters are reported back as residual — Spark re-evaluates them after
   * the scan, preserving exact semantics.
   */
@@ -491,23 +494,12 @@ final class GraftScanBuilder(base: String, md: DatasetMetadata, options: CaseIns
   private def prunedFileIndex(spark: SparkSession): InMemoryFileIndex =
     fileIndexFor(spark, Ktk.queryLabels(spark, base, md, pruningPredicates))
 
-  private def fileIndexFor(spark: SparkSession, labels: Seq[String]): InMemoryFileIndex = {
-    val tableDir = md.tableDir(base)
-    val files = labels.map(l => new Path(s"$tableDir/$l"))
-    val partSchema = StructType(md.schema.fields.filter(f => md.partitionKeys.contains(f.name)))
-    new InMemoryFileIndex(
-      spark, files,
-      Map("basePath" -> tableDir) ++ options.asScala,
-      Some(md.schema)) {
-      // pruned-to-NOTHING: inference has no paths to derive the partition
-      // columns from, and FileScan requires every read partition column to
-      // exist in the index's partition schema — report it explicitly
-      override def partitionSpec(): org.apache.spark.sql.execution.datasources.PartitionSpec =
-        if (files.isEmpty)
-          org.apache.spark.sql.execution.datasources.PartitionSpec(partSchema, Seq.empty)
-        else super.partitionSpec()
-    }
-  }
+  // planned from the snapshot's recorded sizes: no listing, no stats (a
+  // scan pruned to NOTHING reports the partition schema explicitly —
+  // FileScan requires every read partition column to exist in it)
+  private def fileIndexFor(spark: SparkSession, labels: Seq[String]): InMemoryFileIndex =
+    SnapshotScan.fileIndex(spark, md.tableDir(base), md.schema, md.partitionKeys,
+      SnapshotScan.sized(md, labels), options.asScala.toMap)
 
   /** Aggregate pushdown (MIN/MAX/COUNT, optional GROUP BY on partition
     * columns) delegates wholesale to Spark's [[ParquetScanBuilder]], whose

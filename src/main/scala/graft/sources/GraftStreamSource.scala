@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
@@ -14,7 +13,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ktk.DatasetMetadata
+import graft.ktk.{DatasetMetadata, SnapshotScan}
 
 /** Offset of the graft change feed = the dataset's COMMIT VERSION. Offset
   * `v` means "every row committed up to and including snapshot v has been
@@ -312,14 +311,12 @@ final class GraftMicroBatchStream(
 
   override def stop(): Unit = ()
 
-  private def scanFor(labels: Seq[String]): ParquetScan = {
-    val md = DatasetMetadata.load(spark, base, uuid)
-    val tableDir = md.tableDir(base)
-    val files = labels.map(l => new Path(s"$tableDir/$l"))
+  private def scanFor(md: DatasetMetadata, labels: Seq[String]): ParquetScan = {
     // FULL dataset schema for the index (partition-column typing); the
-    // scan itself splits data vs partition columns below
-    val index = new InMemoryFileIndex(
-      spark, files, Map("basePath" -> tableDir), Some(md.schema))
+    // scan itself splits data vs partition columns below. Planned from
+    // the snapshot's recorded sizes: no listing, no stats
+    val index = SnapshotScan.fileIndex(spark, md.tableDir(base), md.schema,
+      md.partitionKeys, SnapshotScan.sized(md, labels))
     ParquetScan(spark, spark.sessionState.newHadoopConf(), index,
       dataSchema, readDataSchema, readPartitionSchema,
       Array.empty, options, None, Nil, Nil)
@@ -353,11 +350,12 @@ final class GraftMicroBatchStream(
       // compaction rewrites carry their victims' seq — already emitted
       .filter(l => endMd.seqOf(l) > startMaxSeq)
     if (fresh.isEmpty) Array.empty
-    else scanFor(fresh).toBatch.planInputPartitions()
+    else scanFor(endMd, fresh).toBatch.planInputPartitions()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftStreamRowFactory(scanFor(Nil).toBatch.createReaderFactory(),
+    GraftStreamRowFactory(
+      scanFor(DatasetMetadata.load(spark, base, uuid), Nil).toBatch.createReaderFactory(),
       StructType(readDataSchema.fields ++ readPartitionSchema.fields), tableSchema)
 }
 

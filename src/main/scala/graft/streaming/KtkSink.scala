@@ -90,13 +90,12 @@ object KtkSink {
     if (!alreadyCommitted) {
       val since = md.metadata.get(SinceCompactKey).map(_.toLong).getOrElse(0L) + 1
       val willCompact = compactEvery > 0 && since >= compactEvery
-      // append-only sidecar maintenance: each commit pays O(batch), not
-      // O(index) — at high batch rates the canonical re-merge would dominate.
-      // [[Ktk.compact]] re-canonicalizes the accumulated sidecar fragments.
+      // a pure append: [[Ktk.update]] adds the batch's sidecar rows as one
+      // more fragment, O(batch) rather than O(index); [[Ktk.compact]] or
+      // the fragment cap below folds the accumulated fragments
       Ktk.update(spark, base, uuid, Some(batch), sortBy = sortBy,
         extraMetadata = extraMetadata ++ Map(bk -> batchId.toString,
-          SinceCompactKey -> since.toString),
-        appendSidecars = true)
+          SinceCompactKey -> since.toString))
       // The counter resets WITH the compaction commit, not before it: if
       // compact throws after the batch commit above, `since` stays >= the
       // threshold and the next batch retries the maintenance pass instead

@@ -40,6 +40,13 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `StructType.asNullable` (`private[spark]`): a file relation's data
+    * schema is nullable at every depth, as `DataSource.resolveRelation`
+    * makes it.
+    */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Construct a DSv2 literal carrying a catalyst-internal value — the
     * representation Spark's runtime-filter translation sends to
     * `SupportsRuntimeV2Filtering.filter` (`LiteralValue` is `private[sql]`

@@ -31,12 +31,12 @@ class SidecarCacheSpec extends SparkSpec {
   private def truth(base: String, md: DatasetMetadata, l: PredLiteral): Set[String] =
     SidecarOracle.index(spark, md.indexPath(base, l.col), l)
 
-  test("an appendSidecars update is visible to the very next probe") {
+  test("a pure-append update is visible to the very next probe") {
     val base = tmpDir("sidecache")
     val md0 = store(base)
     val before = Sidecars.Index.probe(spark, base, md0, eq("key", 7L)).get
     before shouldBe truth(base, md0, eq("key", 7L))
-    val md1 = Ktk.update(spark, base, "ds", Some(frame(200, 280)), appendSidecars = true)
+    val md1 = Ktk.update(spark, base, "ds", Some(frame(200, 280)))
     md1.indices shouldBe md0.indices // same sidecar names: the append added part files
     val after = Sidecars.Index.probe(spark, base, md1, eq("key", 7L)).get
     after shouldBe truth(base, md1, eq("key", 7L))

@@ -65,20 +65,42 @@ class SidecarSpec extends SparkSpec {
     contents(base, out)
   }
 
+  /** Part files of every registered sidecar dir of `md`. */
+  private def parts(base: String, md: DatasetMetadata): Map[String, Int] = {
+    val fs = DatasetMetadata.fs(spark, base)
+    Sidecars.kinds.flatMap(k => k.registry(md).keys.map { c =>
+      s"${k.noun}:$c" -> fs.listStatus(new Path(k.path(base, md, c))).count { st =>
+        val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      }
+    }).toMap
+  }
+
   test("incremental sidecar merges equal a fresh rebuild after every writer step (index, bloom, zone)") {
     val base = tmpDir("sidecar")
-    val steps: Seq[(String, () => DatasetMetadata)] = Seq(
-      "store" -> (() => store(base, gen(0, 400))),
-      "update append" -> (() => Ktk.update(spark, base, "ds", Some(frame(gen(400, 520))))),
-      "update delete scope" -> (() =>
+    // a commit that drops no label appends a fragment (`Fragment`) to the
+    // current dirs; every other step writes canonical dirs (`Canonical`)
+    sealed trait Shape
+    case object Fragment extends Shape
+    case object Canonical extends Shape
+    val steps: Seq[(String, Shape, () => DatasetMetadata)] = Seq(
+      ("store", Canonical, () => store(base, gen(0, 400))),
+      ("update append", Fragment, () => Ktk.update(spark, base, "ds", Some(frame(gen(400, 520))))),
+      ("update delete scope", Canonical, () =>
         Ktk.update(spark, base, "ds", None, deleteScope = Predicates.of(Seq(("p", "==", 1))))),
-      "update appendSidecars" -> (() =>
-        Ktk.update(spark, base, "ds", Some(frame(gen(520, 600))), appendSidecars = true)),
-      "compact" -> (() => Ktk.compact(spark, base, "ds")),
-      "canonicalizeSidecars" -> { () =>
+      ("second update append", Fragment, () =>
+        Ktk.update(spark, base, "ds", Some(frame(gen(520, 600))))),
+      ("third update append", Fragment, () =>
+        Ktk.update(spark, base, "ds", Some(frame(gen(600, 660))))),
+      ("compact", Canonical, () => Ktk.compact(spark, base, "ds")),
+      ("update append after compact", Fragment, () =>
+        Ktk.update(spark, base, "ds", Some(frame(gen(660, 700))))),
+      ("canonicalizeSidecars", Canonical, { () =>
         Ktk.canonicalizeSidecars(spark, base, "ds"); DatasetMetadata.load(spark, base, "ds")
-      })
-    steps.zipWithIndex.foreach { case ((name, run), i) =>
+      }))
+    var prev: Option[DatasetMetadata] = None
+    steps.zipWithIndex.foreach { case ((name, shape, run), i) =>
+      val before = prev.map(parts(base, _))
       val md = run()
       val got = contents(base, md)
       withClue(s"after $name: ") {
@@ -87,7 +109,23 @@ class SidecarSpec extends SparkSpec {
         // every kind covers exactly the live labels
         got("bloom:b").map(_.takeWhile(_ != '|')).toSet shouldBe md.partitions.keySet
         got("zone:z").map(_.takeWhile(_ != '|')).toSet shouldBe md.partitions.keySet
+        val now = parts(base, md)
+        shape match {
+          case Fragment =>
+            // same dirs, each one fragment larger: the batch's rows only
+            Sidecars.kinds.foreach(k => k.registry(md) shouldBe k.registry(prev.get))
+            now.foreach { case (sc, n) => n should be > before.get(sc) }
+          case Canonical =>
+            // a merge writes fresh dirs that fold every fragment
+            prev.foreach { p =>
+              Sidecars.kinds.foreach { k =>
+                k.registry(md).foreach { case (c, n) => k.registry(p).get(c) should not be Some(n) }
+              }
+              now.values.foreach(_ should be <= Sidecars.CanonicalFiles)
+            }
+        }
       }
+      prev = Some(md)
     }
   }
 

@@ -319,9 +319,18 @@ class VersioningSpec extends SparkSpec {
       .toDF("p", "id", "payload")
     Ktk.store(spark, base, "ds", rows, bloomFor = Seq("id"), zoneMapFor = Seq("id"))
     val v1 = DatasetMetadata.load(spark, base, "ds").version
-    // later commits rewrite canonical sidecars — into NEW nonce dirs
+    // a pure append adds a fragment to v1's own sidecar dirs: v1's as-of
+    // read sees rows of a label it does not reference and still prunes
     Ktk.update(spark, base, "ds",
       Some(Seq((9, 999999L, "fresh")).toDF("p", "id", "payload")))
+    DatasetMetadata.load(spark, base, "ds").bloomRegistry shouldBe
+      DatasetMetadata.loadVersion(spark, base, "ds", v1).bloomRegistry
+    val shared = Ktk.readTableAsOf(spark, base, "ds", v1,
+      predicates = Predicates.of(Seq(("id", "==", 999999L))))
+    shared.count() shouldBe 0
+    shared.inputFiles shouldBe empty
+    // later canonical merges rewrite the sidecars — into NEW nonce dirs
+    Ktk.canonicalizeSidecars(spark, base, "ds")
     val v1md = DatasetMetadata.loadVersion(spark, base, "ds", v1)
     val curMd = DatasetMetadata.load(spark, base, "ds")
     curMd.bloomRegistry("id") should not be v1md.bloomRegistry("id")
