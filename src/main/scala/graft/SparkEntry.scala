@@ -3180,12 +3180,6 @@ object SparkEntry {
       require(kindsFound.head == "missing_dv_fragment",
         s"silent-resurrection hazard must sort first, got $kindsFound")
       require(kindsFound.contains("missing_data_file"), s"missing file not flagged: $kindsFound")
-      // mode parity pinned in-gate (like q_ktk_gc): the distributed
-      // record-scan audit must emit row-identical faults
-      val distRows = Ktk.fsck(s, base, uuid, diffThreshold = 0)
-        .collect().map(_.toString).toSeq
-      require(distRows == issues.collect().map(_.toString).toSeq,
-        s"fsck mode parity broke: $distRows")
       // repair the fixture so later runs in the same scratch dir re-seed
       graft.ktk.DatasetMetadata.delete(s, base, uuid)
       issues.groupBy("kind").agg(count(lit(1)).as("cnt")).orderBy("kind")
@@ -3294,15 +3288,6 @@ object SparkEntry {
         partitionOn = Seq("o_orderstatus"), overwrite = true)
       Ktk.update(s, base, "orders_gc",
         Some(orders.filter(col("o_orderkey") % 2 =!= 0)))
-      // mode parity pinned in-gate: the distributed record-scan dry-run
-      // (threshold 0) must report exactly what the driver dry-run would,
-      // BEFORE the real reclamation runs
-      val drvPlan = Ktk.garbageCollect(s, base, "orders_gc", retainVersions = 0,
-        dryRun = true, diffThreshold = Int.MaxValue).sorted
-      val dstPlan = Ktk.garbageCollect(s, base, "orders_gc", retainVersions = 0,
-        dryRun = true, diffThreshold = 0).sorted
-      require(drvPlan == dstPlan,
-        s"gc mode parity broke: driver=$drvPlan distributed=$dstPlan")
       Ktk.garbageCollect(s, base, "orders_gc", retainVersions = 0)
       require(Ktk.listVersions(s, base, "orders_gc").size == 1,
         "gc(retain=0) must leave exactly the current version travelable")

@@ -354,16 +354,6 @@ object DatasetMetadata {
   def versionDeltaKey(base: String, uuid: String, v: Long): String =
     f"${versionsDir(base, uuid)}/v$v%08d.delta.json"
 
-  /** Read ONE delta record straight from storage (bypasses the snapshot
-    * cache — fsck's reachability audit must see what a FRESH JVM would).
-    */
-  private[graft] def readDeltaRecord(
-      spark: SparkSession, base: String, uuid: String, v: Long): VersionDelta = {
-    val in = fs(spark, base).open(new Path(versionDeltaKey(base, uuid, v)))
-    try mapper.readValue(in: java.io.InputStream, classOf[VersionDelta])
-    finally in.close()
-  }
-
   /** Every `CheckpointEvery`-th commit (and v1) writes a full snapshot;
     * the rest write O(delta) records — replay depth is bounded by this.
     */
@@ -371,33 +361,46 @@ object DatasetMetadata {
 
   def isCheckpointVersion(v: Long): Boolean = v == 1L || v % CheckpointEvery == 0L
 
-  /** All commit versions present (checkpoints and deltas), ascending.
-    * O(#versions) flat listing — bounded by
-    * [[graft.ktk.Ktk.garbageCollect]]'s retention pruning.
+  /** One `_versions` listing: which versions have a checkpoint record
+    * (`full`) or a delta record (`delta`), and each version's EARLIEST
+    * record mtime — the original commit, when a later checkpoint of the
+    * same version exists. Chain walks consult it instead of probing
+    * record existence one by one (each a HEAD round-trip on an object
+    * store).
     */
-  def listVersions(spark: SparkSession, base: String, uuid: String): Seq[Long] =
-    versionRecords(spark, base, uuid).map(_._1).distinct.sorted
-
-  /** Raw commit records from ONE `_versions` listing as
-    * `(version, record file mtime millis)` — the shared parse behind
-    * [[listVersions]] and `Ktk.history`.
-    */
-  private[graft] def versionRecords(
-      spark: SparkSession, base: String, uuid: String): Seq[(Long, Long)] = {
-    val dir = new Path(versionsDir(base, uuid))
-    val filesystem = fs(spark, base)
-    if (!filesystem.exists(dir)) Nil
-    else filesystem.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      val v =
-        if (n.startsWith("v") && n.endsWith(".delta.json"))
-          Some(n.stripPrefix("v").stripSuffix(".delta.json").toLong)
-        else if (n.startsWith("v") && n.endsWith(".json"))
-          Some(n.stripPrefix("v").stripSuffix(".json").toLong)
-        else None
-      v.map(_ -> st.getModificationTime)
-    }
+  private[graft] final case class VersionLog(
+      full: Set[Long], delta: Set[Long], mtimes: Map[Long, Long]) {
+    /** Every listed version, ascending. */
+    lazy val versions: Seq[Long] = (full ++ delta).toSeq.sorted
+    def has(v: Long): Boolean = full(v) || delta(v)
   }
+
+  /** List `_versions` once (counted in [[listingReads]]). O(#versions),
+    * bounded by [[graft.ktk.Ktk.garbageCollect]]'s retention pruning.
+    */
+  private[graft] def listLog(spark: SparkSession, base: String, uuid: String): VersionLog = {
+    listingReads.incrementAndGet()
+    val statuses =
+      try fs(spark, base).listStatus(new Path(versionsDir(base, uuid))).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val full = Set.newBuilder[Long]
+    val delta = Set.newBuilder[Long]
+    val mtimes = scala.collection.mutable.Map.empty[Long, Long]
+    statuses.foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("v") && n.endsWith(".json")) {
+        val isDelta = n.endsWith(".delta.json")
+        val v = n.stripPrefix("v").stripSuffix(if (isDelta) ".delta.json" else ".json").toLong
+        (if (isDelta) delta else full) += v
+        mtimes(v) = math.min(mtimes.getOrElse(v, Long.MaxValue), st.getModificationTime)
+      }
+    }
+    VersionLog(full.result(), delta.result(), mtimes.toMap)
+  }
+
+  /** All commit versions present (checkpoints and deltas), ascending. */
+  def listVersions(spark: SparkSession, base: String, uuid: String): Seq[Long] =
+    listLog(spark, base, uuid).versions
 
   /** Apply one O(delta) record to its parent snapshot (a `full` record
     * carries the complete state in `adds` and ignores the parent's
@@ -422,82 +425,121 @@ object DatasetMetadata {
       metadata = d.metadata)
   }
 
-  /** Load the immutable state of one commit (time travel): the cached
-    * snapshot if this JVM has parsed it before, else the checkpoint blob
-    * directly, or the nearest earlier checkpoint/cached snapshot + replay
-    * of the delta records up to `v` — at most [[CheckpointEvery]]-1 small
-    * reads, located through ONE `_versions` listing instead of per-step
-    * existence probes (each a HEAD round-trip on an object store). A
-    * stream tailing the log pays exactly the NEW delta records per batch:
-    * the walk-back stops at the previous batch's cached snapshot.
-    */
-  def loadVersion(spark: SparkSession, base: String, uuid: String, v: Long): DatasetMetadata = {
-    val cacheKey = (base, uuid, v)
-    val cached = cacheGet(cacheKey)
-    if (cached != null) { cacheHits.incrementAndGet(); return cached }
-    val filesystem = fs(spark, base)
-    def readFull(k: Long): DatasetMetadata = {
+  /** Commit-record reads of one dataset, each counted in [[recordReads]]. */
+  private final class Records(spark: SparkSession, val base: String, val uuid: String) {
+    private val filesystem = fs(spark, base)
+    private def read[T](key: String, cls: Class[T]): T = {
       recordReads.incrementAndGet()
-      val in = filesystem.open(new Path(versionKey(base, uuid, k)))
-      try mapper.readValue(in: java.io.InputStream, classOf[DatasetMetadata])
+      val in = filesystem.open(new Path(key))
+      try mapper.readValue(in: java.io.InputStream, cls)
       finally in.close()
     }
-    def readDelta(k: Long): VersionDelta = {
-      recordReads.incrementAndGet()
-      val in = filesystem.open(new Path(versionDeltaKey(base, uuid, k)))
-      try mapper.readValue(in: java.io.InputStream, classOf[VersionDelta])
-      finally in.close()
-    }
-    // one listing tells the whole chain's record kinds
-    listingReads.incrementAndGet()
-    val names: Set[String] =
-      try filesystem.listStatus(new Path(versionsDir(base, uuid))).map(_.getPath.getName).toSet
-      catch { case _: java.io.FileNotFoundException => Set.empty }
-    def hasFull(k: Long): Boolean = names.contains(f"v$k%08d.json")
-    def hasDelta(k: Long): Boolean = names.contains(f"v$k%08d.delta.json")
-    val result: DatasetMetadata =
-      if (hasFull(v)) readFull(v)
-      else if (!hasDelta(v))
-        throw new NoSuchElementException(
-          s"Dataset '$uuid' has no version $v (vacuumed by gc, or never committed); " +
-            s"available: ${listVersions(spark, base, uuid).mkString(",")}")
-      else {
-        // walk back to the nearest checkpoint / cached snapshot / full
-        // record, then fold the deltas forward
-        val deltas = scala.collection.mutable.ListBuffer.empty[VersionDelta]
-        var k = v
-        var baseMd: DatasetMetadata = null
-        while (baseMd == null) {
-          val cachedK = if (k != v) cacheGet((base, uuid, k)) else null
-          if (cachedK != null) { cacheHits.incrementAndGet(); baseMd = cachedK }
-          else if (hasFull(k)) baseMd = readFull(k)
-          else if (k < 1 || !hasDelta(k))
-            throw new NoSuchElementException(
-              s"Dataset '$uuid': version $v is unreachable — commit record $k of its " +
-                s"replay chain is missing (vacuumed by gc?)")
-          else {
-            val d = readDelta(k)
-            deltas.prepend(d)
-            if (d.full) baseMd = DatasetMetadata(uuid = uuid) // self-contained
-            else k -= 1
-          }
-        }
-        deltas.foldLeft(baseMd)(applyDelta)
-      }
-    cachePut(cacheKey, result)
-    result
+    def full(v: Long): DatasetMetadata = read(versionKey(base, uuid, v), classOf[DatasetMetadata])
+    def delta(v: Long): VersionDelta = read(versionDeltaKey(base, uuid, v), classOf[VersionDelta])
   }
 
-  /** Write the full snapshot of version `v` at its checkpoint key, if
+  private def noSuchVersion(uuid: String, v: Long, log: VersionLog) =
+    new NoSuchElementException(
+      s"Dataset '$uuid' has no version $v (vacuumed by gc, or never committed); " +
+        s"available: ${log.versions.mkString(",")}")
+
+  private def unreachable(uuid: String, v: Long, gap: Long) =
+    new NoSuchElementException(
+      s"Dataset '$uuid': version $v is unreachable — commit record $gap of its " +
+        s"replay chain is missing (vacuumed by gc?)")
+
+  /** Enter version `v`'s replay chain: read `v`'s own record, walk back
+    * to the nearest checkpoint / self-contained record / cached snapshot,
+    * then fold the deltas forward. A cached snapshot stands in for a
+    * record only while that record is listed — this JVM's cache must not
+    * mask a vacuumed record that strands every fresh reader. `Left(gap)`
+    * names the missing record that severs the chain; a `v` the listing
+    * does not hold fails as never committed.
+    */
+  private def enterChain(rec: Records, log: VersionLog, v: Long): Either[Long, DatasetMetadata] = {
+    if (!log.has(v)) throw noSuchVersion(rec.uuid, v, log)
+    val deltas = scala.collection.mutable.ListBuffer.empty[VersionDelta]
+    var k = v
+    var baseMd: DatasetMetadata = null
+    while (baseMd == null) {
+      val cachedK = if (k != v && log.has(k)) cacheGet((rec.base, rec.uuid, k)) else null
+      if (cachedK != null) { cacheHits.incrementAndGet(); baseMd = cachedK }
+      else if (log.full(k)) baseMd = rec.full(k)
+      else if (!log.delta(k)) return Left(k)
+      else {
+        val d = rec.delta(k)
+        deltas.prepend(d)
+        if (d.full) baseMd = DatasetMetadata(uuid = rec.uuid) // self-contained
+        else k -= 1
+      }
+    }
+    Right(deltas.foldLeft(baseMd)(applyDelta))
+  }
+
+  /** Ascending replay of the commit log — the one walk behind `history`,
+    * the change feed, fsck and gc. Yields each of `versions` (ascending,
+    * from the listing `log`) with its state, or `Left(gap)` when a missing
+    * record severs its replay chain. Each version's own record is read
+    * once: a checkpoint resets the state, a self-contained delta starts
+    * from empty, and a plain delta folds onto the previous step. The
+    * first version, and any after a gap in `versions`, enters its chain
+    * through [[loadVersion]]'s walk-back. Walking every listed version
+    * therefore never consults the snapshot cache, and no walk fills it:
+    * a walk holds one snapshot at a time.
+    */
+  private[graft] def replayChains(spark: SparkSession, base: String, uuid: String,
+      versions: Seq[Long], log: VersionLog): Iterator[(Long, Either[Long, DatasetMetadata])] = {
+    val rec = new Records(spark, base, uuid)
+    var prev: (Long, Either[Long, DatasetMetadata]) = (Long.MinValue, Left(0L))
+    versions.iterator.map { v =>
+      val step =
+        if (prev._1 == v - 1 && log.delta(v) && !log.full(v)) {
+          val d = rec.delta(v)
+          if (d.full) Right(applyDelta(DatasetMetadata(uuid = uuid), d))
+          else prev._2.map(applyDelta(_, d))
+        } else enterChain(rec, log, v)
+      prev = v -> step
+      prev
+    }
+  }
+
+  /** [[replayChains]] failing like [[loadVersion]] at the first severed
+    * chain.
+    */
+  private[graft] def replay(spark: SparkSession, base: String, uuid: String,
+      versions: Seq[Long], log: VersionLog): Iterator[(Long, DatasetMetadata)] =
+    replayChains(spark, base, uuid, versions, log).map { case (v, step) =>
+      v -> step.fold(gap => throw unreachable(uuid, v, gap), identity)
+    }
+
+  /** Load the immutable state of one commit (time travel): the cached
+    * snapshot if this JVM has parsed it before, else [[replay]]'s chain
+    * entry — the checkpoint blob directly, or the nearest earlier
+    * checkpoint/cached snapshot + replay of the delta records up to `v`:
+    * at most [[CheckpointEvery]]-1 small reads, located through ONE
+    * `_versions` listing. A stream tailing the log pays exactly the NEW
+    * delta records per batch: the walk-back stops at the previous batch's
+    * cached snapshot.
+    */
+  def loadVersion(spark: SparkSession, base: String, uuid: String, v: Long): DatasetMetadata = {
+    val cached = cacheGet((base, uuid, v))
+    if (cached != null) { cacheHits.incrementAndGet(); return cached }
+    val md = enterChain(new Records(spark, base, uuid), listLog(spark, base, uuid), v)
+      .fold(gap => throw unreachable(uuid, v, gap), identity)
+    cachePut((base, uuid, v), md)
+    md
+  }
+
+  /** Write `full`, the state of version `v`, at its checkpoint key if
     * absent — making `v` self-contained so gc can drop the older records
     * its replay chain used to need. Idempotent; the delta record (if any)
     * stays in place and [[loadVersion]] simply prefers the checkpoint.
     */
-  def materializeCheckpoint(spark: SparkSession, base: String, uuid: String, v: Long): Unit = {
+  private[graft] def materializeCheckpoint(spark: SparkSession, base: String, uuid: String,
+      v: Long, full: DatasetMetadata): Unit = {
     val filesystem = fs(spark, base)
     val key = new Path(versionKey(base, uuid, v))
     if (filesystem.exists(key)) return
-    val full = loadVersion(spark, base, uuid, v)
     val bytes =
       (if (full.partitions.size > 1000) mapper.writer()
        else mapper.writerWithDefaultPrettyPrinter()).writeValueAsBytes(full)
@@ -650,7 +692,30 @@ object DatasetMetadata {
     md
   }
 
-  def load(spark: SparkSession, base: String, uuid: String): DatasetMetadata = {
+  def load(spark: SparkSession, base: String, uuid: String): DatasetMetadata =
+    readPointer(spark, base, uuid) { tree =>
+      // new-format tiny pointer → resolve against immutable commit
+      // records (cached); legacy full blob → parse directly
+      // (zero-migration read; mutable last-writer-wins, never cached)
+      if (tree.has("pointerVersion"))
+        loadVersion(spark, base, uuid, tree.get("pointerVersion").asLong())
+      else mapper.treeToValue(tree, classOf[DatasetMetadata])
+    }
+
+  /** The published head without resolving it: `Right(version)` from the
+    * latest pointer, or `Left(snapshot)` for a legacy full-blob pointer.
+    * One pointer read, no listing — maintenance walks read the pointer
+    * BEFORE listing `_versions`, so the head's record is always listed.
+    */
+  private[graft] def head(spark: SparkSession, base: String, uuid: String)
+      : Either[DatasetMetadata, Long] =
+    readPointer(spark, base, uuid) { tree =>
+      if (tree.has("pointerVersion")) Right(tree.get("pointerVersion").asLong())
+      else Left(mapper.treeToValue(tree, classOf[DatasetMetadata]))
+    }
+
+  private def readPointer[T](spark: SparkSession, base: String, uuid: String)(
+      resolve: com.fasterxml.jackson.databind.JsonNode => T): T = {
     val key = new Path(metadataKey(base, uuid))
     val filesystem = fs(spark, base)
     // Happy path is ONE FS op: open the ~100-byte pointer and answer from
@@ -668,14 +733,7 @@ object DatasetMetadata {
         val tree =
           try mapper.readTree(in: java.io.InputStream)
           finally in.close()
-        // new-format tiny pointer → resolve against immutable commit
-        // records (cached); legacy full blob → parse directly
-        // (zero-migration read; mutable last-writer-wins, never cached)
-        val resolved =
-          if (tree.has("pointerVersion"))
-            loadVersion(spark, base, uuid, tree.get("pointerVersion").asLong())
-          else mapper.treeToValue(tree, classOf[DatasetMetadata])
-        return resolved
+        return resolve(tree)
       } catch {
         case _: java.io.FileNotFoundException =>
           // absent pointer: not-a-dataset, or a mid-commit swap window —

@@ -1415,6 +1415,18 @@ object Ktk extends org.apache.spark.internal.Logging {
       fragment.map(_._2).getOrElse(0L))
   }
 
+  /** One commit's change-feed plan, diffed against the walk's previous
+    * step and holding no snapshot: labels carry their recorded sizes,
+    * which plan the scans; `dv` is the fresh tombstones `(__dvl, __dvp)`
+    * with the parent-version files they hit.
+    */
+  private final case class CdfVersionPlan(
+      v: Long,
+      freshAdds: Seq[(String, Long)],
+      dv: Option[(DataFrame, Seq[(String, Long)])],
+      parentFrags: Seq[String],
+      gone: Seq[(String, Long)])
+
   /** Batch CDC reader (Delta CHANGE DATA FEED analog): every row-level
     * change committed in `(fromVersion, toVersion]`, with
     * `_change_type` ('insert' | 'delete') and `_commit_version` columns
@@ -1430,8 +1442,12 @@ object Ktk extends org.apache.spark.internal.Logging {
     *    the commit removed with NO same-seq re-add (a delete_scope), minus
     *    rows already dead at the parent version.
     *
-    * Work per version is O(that commit's changed rows); snapshots resolve
-    * through the cached delta log. Needs the range's snapshots AND the
+    * Work per version is O(that commit's changed rows); the snapshots come
+    * from ONE `_versions` listing and one ascending walk of the commit log
+    * over `[fromVersion, toVersion]` ([[DatasetMetadata.replay]]: one
+    * record read per version, one snapshot held at a time; a severed
+    * replay chain fails like [[DatasetMetadata.loadVersion]]). Needs the
+    * range's snapshots AND the
     * referenced files/fragments still present — run gc with
     * `retainVersions` covering the consumer's lag, like the stream.
     * Limitations (documented, not silent): a `rollback` restores content
@@ -1439,42 +1455,79 @@ object Ktk extends org.apache.spark.internal.Logging {
     * remove side — re-sync after rollbacks; intra-commit insert+delete of
     * the same row (no current writer produces one) would emit both.
     */
-  /** One version's CDF plan — everything [[readChangeFeed]]'s DataFrame
-    * construction needs, derived either from driver snapshots (small
-    * ranges) or from the distributed record scan (deep ranges), so the
-    * emit code cannot diverge between modes. `parentFilter` restricts a
-    * new fragment's labels to files that exist at the parent version.
-    * Labels carry their recorded sizes, which plan the scans.
-    */
-  private final case class CdfVersionPlan(
-      freshAdds: Seq[(String, Long)],
-      newFrags: Seq[String],
-      parentFrags: Seq[String],
-      gone: Seq[(String, Long)],
-      parentFilter: Seq[String] => Seq[(String, Long)])
-
   def readChangeFeed(
       spark: SparkSession,
       base: String,
       uuid: String,
       fromVersion: Long,
-      toVersion: Long = -1L,
-      diffThreshold: Int = SessionDiffThreshold): DataFrame = {
-    val cur = DatasetMetadata.load(spark, base, uuid)
-    val to = if (toVersion < 0) cur.version else toVersion
+      toVersion: Long = -1L): DataFrame = {
+    // the pointer before the listing: every published version is listed
+    val head = DatasetMetadata.head(spark, base, uuid)
+    val log = DatasetMetadata.listLog(spark, base, uuid)
+    val headV = head.fold(_.version, identity)
+    val to = if (toVersion < 0) headV else toVersion
     require(fromVersion <= to,
       s"empty change range: fromVersion=$fromVersion > toVersion=$to")
-    val schema = cur.schema
-    val tableDir = cur.tableDir(base)
-    def emptyChanges: DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        .withColumn("_change_type", lit(""))
-        .withColumn("_commit_version", lit(0L))
+    def hwmOf(md: DatasetMetadata): Long = math.max(
+      md.metadata.get(DatasetMetadata.SeqHwmKey).map(_.toLong).getOrElse(0L),
+      (0L +: md.partitions.keys.toSeq.map(md.seqOf)).max)
+    def readFrags(frags: Seq[String]): DataFrame =
+      spark.read.schema(DvSchema)
+        .parquet(frags.map(n =>
+          s"$base/$uuid/${DatasetMetadata.DeletesDirName}/$n"): _*)
+
+    def planOf(v: Long, mdP: DatasetMetadata, mdV: DatasetMetadata): CdfVersionPlan = {
+      // bootstrap: the initial commit's labels legitimately carry seq 0 —
+      // same sentinel the streaming source uses for its first batch
+      val hwm = if (v == 1L) Long.MinValue else hwmOf(mdP)
+      val added = mdV.partitions.keySet -- mdP.partitions.keySet
+      val removed = mdP.partitions.keySet -- mdV.partitions.keySet
+      val rewrittenSeqs = added.filter(l => mdV.seqOf(l) <= hwm).map(mdV.seqOf)
+      // (a) tombstones this commit added — the fragment IS the row list.
+      // Pairs already dead at the parent are excluded: a fragment-count
+      // canonicalization folds ALL history into one "new" fragment, and
+      // without the anti-join it would re-emit every old delete.
+      val newFrags = mdV.deleteFragments.filterNot(mdP.deleteFragments.toSet)
+      val dv = Option.when(newFrags.nonEmpty) {
+        val dvNew = readFrags(newFrags)
+        val fresh =
+          if (mdP.deleteFragments.isEmpty) dvNew
+          else dvNew.join(readFrags(mdP.deleteFragments), Seq("label", "pos"), "left_anti")
+        val dv = fresh.select(col("label").as("__dvl"), col("pos").as("__dvp"))
+        val files = SnapshotScan.sized(mdP,
+          dv.select("__dvl").distinct().collect().map(_.getString(0))
+            .filter(mdP.partitions.keySet.contains).sorted.toSeq)
+        (dv, files)
+      }.filter(_._2.nonEmpty)
+      CdfVersionPlan(v,
+        freshAdds = SnapshotScan.sized(mdV, added.filter(l => mdV.seqOf(l) > hwm).toSeq.sorted),
+        dv = dv,
+        parentFrags = mdP.deleteFragments,
+        gone = SnapshotScan.sized(mdP,
+          removed.filter(l => !rewrittenSeqs.contains(mdP.seqOf(l))).toSeq.sorted))
+    }
+
+    // one walk over [from, to]: each commit diffs against the previous
+    // step; fromVersion = 0 reads the initial commit against an empty
+    // parent — the whole v1 content arrives as inserts (bootstrap)
+    var prev: DatasetMetadata = null
+    val plans = DatasetMetadata.replay(spark, base, uuid,
+        math.max(1L, fromVersion) to to, log).flatMap { case (v, mdV) =>
+      val plan = Option.when(v > fromVersion)(planOf(v,
+        if (v == 1L) DatasetMetadata(uuid = uuid, schemaJson = mdV.schemaJson) else prev, mdV))
+      prev = mdV
+      plan
+    }.toList
+    val cur =
+      if (prev != null && to == headV) prev
+      else head.fold(identity, DatasetMetadata.loadVersion(spark, base, uuid, _))
     // Always read with the CURRENT schema: additive evolution guarantees
     // files from pre-evolution versions surface the new columns as null,
     // so a feed range spanning an evolveSchema commit projects cleanly
     // (reading with each version's own schema would leave the final
     // current-schema projection unresolved).
+    val schema = cur.schema
+    val tableDir = cur.tableDir(base)
     def scanLabels(files: Seq[(String, Long)], withPos: Boolean): DataFrame = {
       val s = SnapshotScan.files(spark, tableDir, schema, cur.partitionKeys, files)
       if (withPos)
@@ -1487,176 +1540,38 @@ object Ktk extends org.apache.spark.internal.Logging {
       df.select(schema.fieldNames.map(c => col(s"`$c`")): _*)
         .withColumn("_change_type", lit(ct))
         .withColumn("_commit_version", lit(v))
-    def hwmOf(md: DatasetMetadata): Long = math.max(
-      md.metadata.get(DatasetMetadata.SeqHwmKey).map(_.toLong).getOrElse(0L),
-      (0L +: md.partitions.keys.toSeq.map(md.seqOf)).max)
-    def readFrags(frags: Seq[String]): DataFrame =
-      spark.read.schema(DvSchema)
-        .parquet(frags.map(n =>
-          s"$base/$uuid/${DatasetMetadata.DeletesDirName}/$n"): _*)
 
-    // per-version plan, driver snapshots (the exact legacy walk)
-    def driverPlan(v: Long): CdfVersionPlan = {
-      val mdV = DatasetMetadata.loadVersion(spark, base, uuid, v)
-      // fromVersion = 0 reads the initial commit against an empty parent —
-      // the whole v1 content arrives as inserts (bootstrap semantics)
-      val mdP =
-        if (v == 1L) DatasetMetadata(uuid = uuid, schemaJson = mdV.schemaJson)
-        else DatasetMetadata.loadVersion(spark, base, uuid, v - 1)
-      // bootstrap: the initial commit's labels legitimately carry seq 0 —
-      // same sentinel the streaming source uses for its first batch
-      val hwm = if (v == 1L) Long.MinValue else hwmOf(mdP)
-      val added = mdV.partitions.keySet -- mdP.partitions.keySet
-      val removed = mdP.partitions.keySet -- mdV.partitions.keySet
-      val rewrittenSeqs = added.filter(l => mdV.seqOf(l) <= hwm).map(mdV.seqOf)
-      CdfVersionPlan(
-        freshAdds = SnapshotScan.sized(mdV, added.filter(l => mdV.seqOf(l) > hwm).toSeq.sorted),
-        newFrags = mdV.deleteFragments.filterNot(mdP.deleteFragments.toSet),
-        parentFrags = mdP.deleteFragments,
-        gone = SnapshotScan.sized(mdP,
-          removed.filter(l => !rewrittenSeqs.contains(mdP.seqOf(l))).toSeq.sorted),
-        parentFilter = ls => SnapshotScan.sized(mdP, ls.filter(mdP.partitions.keySet.contains)))
+    val perVersion: Seq[DataFrame] = plans.flatMap { plan =>
+      val v = plan.v
+      val inserts: Option[DataFrame] =
+        if (plan.freshAdds.isEmpty) None
+        else Some(project(scanLabels(plan.freshAdds, withPos = false), "insert", v))
+      val dvDeletes: Option[DataFrame] = plan.dv.map { case (dv, files) =>
+        project(
+          scanLabels(files, withPos = true)
+            .join(dv, col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
+              "left_semi"),
+          "delete", v)
+      }
+      // (b) delete_scope: removed labels with no same-seq rewrite; rows
+      // already tombstoned at the parent don't die twice
+      val scopeDeletes: Option[DataFrame] =
+        if (plan.gone.isEmpty) None
+        else {
+          val raw = scanLabels(plan.gone, withPos = true)
+          val live =
+            if (plan.parentFrags.isEmpty) raw
+            else {
+              val dv = readFrags(plan.parentFrags)
+                .select(col("label").as("__dvl"), col("pos").as("__dvp"))
+              raw.join(dv,
+                col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
+                "left_anti")
+            }
+          Some(project(live, "delete", v))
+        }
+      Seq(inserts, dvDeletes, scopeDeletes).flatten
     }
-
-    // deep-range mode: the SAME plans reconstructed from the distributed
-    // commit-record scan — label add/remove events via per-label lag/lead
-    // over the per-version presence rows (seqs ride along), hwm and
-    // fragment lists from each version's own record. The driver collects
-    // O(changed labels in range), never a snapshot.
-    def distributedPlans(recordSizes: Map[String, Long])
-        : (Map[Long, CdfVersionPlan], () => Unit) = {
-      import spark.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val targets = (math.max(1L, fromVersion) to to).toSeq
-      val recordNames = recordSizes.keySet
-      targets.find(v => !recordNames.contains(f"v$v%08d.json") &&
-          !recordNames.contains(f"v$v%08d.delta.json")).foreach { v =>
-        throw new NoSuchElementException(
-          s"Dataset '$uuid' has no version $v (vacuumed by gc, or never " +
-            s"committed); available: " +
-            DatasetMetadata.listVersions(spark, base, uuid).mkString(","))
-      }
-      val (chainStarts, broken) =
-        resolveChains(spark, base, uuid, targets, recordNames)
-      broken.headOption.foreach { case (v, gap) =>
-        throw new NoSuchElementException(
-          s"Dataset '$uuid': version $v is unreachable — commit record $gap " +
-            "of its replay chain is missing; the change feed cannot replay " +
-            "it (run fsck)")
-      }
-      val scan = new CommitRecordScan(spark, base, uuid, chainStarts,
-        hasFullIn(recordNames))
-      val pres = scan.perVersionLabels
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val w = Window.partitionBy("label").orderBy("version")
-      val flagged = pres
-        .withColumn("prevV", lag("version", 1).over(w))
-        .withColumn("nextV", lead("version", 1).over(w))
-      val addEvents = flagged
-        .filter(col("version") > fromVersion &&
-          (col("prevV").isNull || col("prevV") =!= col("version") - 1))
-        .select("version", "label", "seq", "size").as[(Long, String, Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSeq).toMap
-      // a presence row at p with no row at p+1 = removed at p+1; the row's
-      // seq IS the parent-side seq the rewrite check needs (and its size
-      // the size the removed file's scan is planned with)
-      val removeEvents = flagged
-        .filter((col("nextV").isNull || col("nextV") =!= col("version") + 1) &&
-          col("version") < lit(to))
-        .select((col("version") + 1).as("v"), col("label"), col("seq"), col("size"))
-        .as[(Long, String, Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3, t._4)).toSeq).toMap
-      val maxSeq = pres.groupBy("version").agg(max("seq"))
-        .as[(Long, Long)].collect().toMap
-      val hwmMeta = scan.recRows.filter(col("kind") === "meta_hwm")
-        .select("rv", "name").as[(Long, String)].collect()
-        .map { case (v, s) => v -> s.toLong }.toMap
-      def hwmAt(v: Long): Long =
-        math.max(hwmMeta.getOrElse(v, 0L), math.max(0L, maxSeq.getOrElse(v, 0L)))
-      val fragsByV = scan.recRows.filter(col("kind") === "missing_dv_fragment")
-        .select("rv", "name").as[(Long, String)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-      val plans = (fromVersion + 1 to to).map { v =>
-        val hwm = if (v == 1L) Long.MinValue else hwmAt(v - 1)
-        val adds = addEvents.getOrElse(v, Nil)
-        val rewritten = adds.collect { case (_, s, _) if s <= hwm => s }.toSet
-        val parentFrags = if (v == 1L) Nil else fragsByV.getOrElse(v - 1, Nil)
-        val parentFragSet = parentFrags.toSet
-        v -> CdfVersionPlan(
-          freshAdds = adds.collect { case (l, s, size) if s > hwm => l -> size }.sorted,
-          newFrags = fragsByV.getOrElse(v, Nil).filterNot(parentFragSet),
-          parentFrags = parentFrags,
-          gone = removeEvents.getOrElse(v, Nil)
-            .collect { case (l, s, size) if !rewritten.contains(s) => l -> size }.sorted,
-          parentFilter = ls =>
-            if (v == 1L || ls.isEmpty) Nil
-            else ls.toDF("label")
-              .join(pres.filter(col("version") === v - 1), Seq("label"))
-              .select("label", "size").as[(String, Long)].collect().toSeq)
-      }.toMap
-      (plans, () => { pres.unpersist(blocking = false); scan.close() })
-    }
-
-    val fsys = DatasetMetadata.fs(spark, base)
-    val recordSizes = versionRecordSizes(spark, fsys, base, uuid)
-    val estimated = estimatePairs(cur.partitions.size.toLong,
-      (to - fromVersion).toInt + 1, recordSizes)
-    val threshold = auditThreshold(spark, diffThreshold)
-    val distributed = estimated > threshold && to > fromVersion
-    lastAuditDistributed.set(distributed)
-    val (planOf: (Long => CdfVersionPlan), closePlans: (() => Unit)) =
-      if (!distributed) ((v: Long) => driverPlan(v), () => ())
-      else { val (m, c) = distributedPlans(recordSizes); ((v: Long) => m(v), c) }
-
-    val perVersion: Seq[DataFrame] = try {
-      (fromVersion + 1 to to).flatMap { v =>
-        val plan = planOf(v)
-        val inserts: Option[DataFrame] =
-          if (plan.freshAdds.isEmpty) None
-          else Some(project(scanLabels(plan.freshAdds, withPos = false), "insert", v))
-        // (a) tombstones this commit added — the fragment IS the row list.
-        // Pairs already dead at the parent are excluded: a fragment-count
-        // canonicalization folds ALL history into one "new" fragment, and
-        // without the anti-join it would re-emit every old delete.
-        val dvDeletes: Option[DataFrame] =
-          if (plan.newFrags.isEmpty) None
-          else {
-            val dvNew = readFrags(plan.newFrags)
-            val fresh =
-              if (plan.parentFrags.isEmpty) dvNew
-              else dvNew.join(readFrags(plan.parentFrags),
-                Seq("label", "pos"), "left_anti")
-            val dv = fresh.select(col("label").as("__dvl"), col("pos").as("__dvp"))
-            val files = plan.parentFilter(
-              dv.select("__dvl").distinct().collect().map(_.getString(0)).toSeq)
-              .sorted
-            if (files.isEmpty) None
-            else Some(project(
-              scanLabels(files, withPos = true)
-                .join(dv, col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
-                  "left_semi"),
-              "delete", v))
-          }
-        // (b) delete_scope: removed labels with no same-seq rewrite; rows
-        // already tombstoned at the parent don't die twice
-        val scopeDeletes: Option[DataFrame] =
-          if (plan.gone.isEmpty) None
-          else {
-            val raw = scanLabels(plan.gone, withPos = true)
-            val live =
-              if (plan.parentFrags.isEmpty) raw
-              else {
-                val dv = readFrags(plan.parentFrags)
-                  .select(col("label").as("__dvl"), col("pos").as("__dvp"))
-                raw.join(dv,
-                  col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
-                  "left_anti")
-              }
-            Some(project(live, "delete", v))
-          }
-        Seq(inserts, dvDeletes, scopeDeletes).flatten
-      }
-    } finally closePlans()
     // BALANCED union tree: a left-deep unionByName chain re-analyzes a
     // growing plan per link (quadratic in the version count); grouping
     // keeps analysis O(n log n), so wide ranges (100+ versions) plan flat.
@@ -1666,49 +1581,34 @@ object Ktk extends org.apache.spark.internal.Logging {
       // recurse on the group results too — reducing them left-deep would
       // reintroduce the quadratic chain one level up
       else unionBalanced(dfs.grouped(8).map(unionBalanced).toSeq)
-    if (perVersion.isEmpty) emptyChanges else unionBalanced(perVersion)
+    if (perVersion.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .withColumn("_change_type", lit(""))
+        .withColumn("_commit_version", lit(0L))
+    else unionBalanced(perVersion)
   }
 
   /** Commit history as a DataFrame (`DESCRIBE HISTORY` analog): one row
     * per surviving version with file/byte/tombstone counts, the commit
     * record's filesystem mtime as `committed_at`, and rollback
-    * attribution from the commit markers. O(retained versions) metadata
-    * loads through the snapshot cache plus ONE `_versions` listing —
-    * never touches data.
+    * attribution from the commit markers. ONE `_versions` listing and
+    * one ascending walk of the commit log ([[DatasetMetadata.replay]],
+    * one record read per version, one snapshot held at a time) — never
+    * touches data. A version whose replay chain is severed fails the
+    * call like [[DatasetMetadata.loadVersion]].
     */
-  def history(spark: SparkSession, base: String, uuid: String,
-      diffThreshold: Int = SessionDiffThreshold): DataFrame = {
+  def history(spark: SparkSession, base: String, uuid: String): DataFrame = {
     import spark.implicits._
-    // ONE listing feeds both the version list and the mtimes; filename
-    // parsing stays in DatasetMetadata (single source of truth). A version
-    // with several records (e.g. a delta plus a later checkpoint of the
-    // same commit line) reports the EARLIEST mtime — the original commit.
-    val records = DatasetMetadata.versionRecords(spark, base, uuid)
-    val mtimes: Map[Long, Long] = records.groupMapReduce(_._1)(_._2)(math.min)
-    // past the same estimated-pairs threshold fsck/gc use, per-version
-    // metrics reconstruct from the distributed commit-record scan instead
-    // of loading every snapshot through the driver cache — DESCRIBE
-    // HISTORY on a million-version table stays O(versions) driver rows
-    val fsys = DatasetMetadata.fs(spark, base)
-    val recordSizes = versionRecordSizes(spark, fsys, base, uuid)
-    val curLabels = DatasetMetadata.load(spark, base, uuid).partitions.size.toLong
-    val allVersions = records.map(_._1).distinct.sorted
-    val estimated = estimatePairs(curLabels, allVersions.size, recordSizes)
-    val threshold = auditThreshold(spark, diffThreshold)
-    lastAuditDistributed.set(estimated > threshold)
-    if (estimated > threshold)
-      return historyDistributed(spark, base, uuid, allVersions, mtimes,
-        recordSizes.keySet)
+    val log = DatasetMetadata.listLog(spark, base, uuid)
     // per-commit metrics diff against the PREVIOUS RETAINED version (the
-    // ascending walk already loads it). The earliest retained version
-    // after a gc has an unknown parent — its metrics report null rather
-    // than claiming the whole content was added there.
-    var prev: Option[DatasetMetadata] = None
-    val rows = records.map(_._1).distinct.sorted.map { v =>
-      val md = DatasetMetadata.loadVersion(spark, base, uuid, v)
+    // walk's previous step). The earliest retained version after a gc has
+    // an unknown parent — its metrics report null rather than claiming
+    // the whole content was added there.
+    var prev: Option[(Long, DatasetMetadata)] = None
+    val rows = DatasetMetadata.replay(spark, base, uuid, log.versions, log).map { case (v, md) =>
       val parentForMetrics: Option[DatasetMetadata] =
         if (v == 1L) Some(DatasetMetadata(uuid = uuid, schemaJson = md.schemaJson))
-        else prev.filter(_.version == v - 1)
+        else prev.collect { case (p, pmd) if p == v - 1 => pmd }
       val (fAdd, fDel, bAdd) = parentForMetrics match {
         case Some(p) =>
           val pL = Option(p.partitions).getOrElse(Map.empty[String, Long]).keySet
@@ -1717,13 +1617,13 @@ object Ktk extends org.apache.spark.internal.Logging {
             Some(added.map(md.sizeOf).sum))
         case None => (None, None, None)
       }
-      prev = Some(md)
+      prev = Some(v -> md)
       val rb = md.metadata.get(DatasetMetadata.RollbackCommitKey)
         .exists(_.toLong == v)
       // in-commit stamp (monotone, copy-stable) wins; record mtime is the
       // fallback for commits predating the stamp
       val at = md.metadata.get(DatasetMetadata.CommitTsKey).map(_.toLong)
-        .orElse(mtimes.get(v)).map(new java.sql.Timestamp(_))
+        .orElse(log.mtimes.get(v)).map(new java.sql.Timestamp(_))
       // operation verb only when stamped BY this commit — inherited
       // copies carry an older commit number and display as null
       val op = md.metadata.get(DatasetMetadata.OperationKey).filter(_ =>
@@ -1735,110 +1635,10 @@ object Ktk extends org.apache.spark.internal.Logging {
         md.partitions.keysIterator.map(md.sizeOf).sum,
         fAdd, fDel, bAdd, md.deleteFragments.size.toLong, rb,
         if (rb) md.metadata.get(DatasetMetadata.RollbackOfKey).map(_.toLong) else None)
-    }
+    }.toList
     rows.toDF("version", "committed_at", "operation", "files", "bytes",
       "files_added", "files_removed", "bytes_added",
       "tombstone_fragments", "is_rollback", "rollback_of")
-  }
-
-  /** [[history]]'s big-table mode: per-version metrics reconstructed from
-    * the distributed commit-record scan — the driver never materializes a
-    * snapshot, so a deep history costs O(versions) result rows instead of
-    * O(versions × labels) snapshot loads through the cache. Semantics
-    * match the driver walk exactly (parity-pinned in HistorySpec):
-    * files/bytes from each version's last-op-wins label state;
-    * added/removed/bytes_added diffed against version v-1 via per-label
-    * lag/lead over the presence rows (null for the oldest retained version
-    * after a gc, whose parent is unknown — the driver rule); operation /
-    * commit-ts / rollback attribution and the tombstone-fragment count
-    * from each version's OWN record (deltas carry them wholesale).
-    */
-  private def historyDistributed(spark: SparkSession, base: String,
-      uuid: String, versions: Seq[Long], mtimes: Map[Long, Long],
-      recordNames: Set[String]): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val (chainStarts, broken) = resolveChains(spark, base, uuid, versions, recordNames)
-    // a version whose chain is broken fails history exactly like the
-    // driver path's loadVersion would
-    broken.headOption.foreach { case (v, gap) =>
-      throw new NoSuchElementException(
-        s"Dataset '$uuid': version $v is unreachable — commit record $gap of " +
-          "its replay chain is missing; history cannot replay it (run fsck)")
-    }
-    val scan = new CommitRecordScan(spark, base, uuid, chainStarts,
-      hasFullIn(recordNames))
-    try {
-      val vMax = versions.max
-      val pres = scan.perVersionLabels
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val w = Window.partitionBy("label").orderBy("version")
-        val flagged = pres
-          .withColumn("prevV", lag("version", 1).over(w))
-          .withColumn("nextV", lead("version", 1).over(w))
-        val perV = pres.groupBy("version")
-          .agg(count(lit(1)).as("files"), sum("size").as("bytes"))
-        // a label counts ADDED at v when it has no presence row at v-1
-        // (retained versions are dense, so lag == v-1 ⇔ present at parent)
-        val adds = flagged
-          .filter(col("prevV").isNull || col("prevV") =!= col("version") - 1)
-          .groupBy("version")
-          .agg(count(lit(1)).as("files_added"), sum("size").as("bytes_added"))
-        // ...and REMOVED at p+1 when present at p with no row at p+1
-        val rems = flagged
-          .filter((col("nextV").isNull || col("nextV") =!= col("version") + 1) &&
-            col("version") < lit(vMax))
-          .select((col("version") + 1).as("version"))
-          .groupBy("version").agg(count(lit(1)).as("files_removed"))
-        val meta = scan.recRows
-          .filter(col("kind").isin("meta_ts", "meta_op", "meta_rb",
-            "missing_dv_fragment"))
-          .withColumnRenamed("rv", "version")
-          .groupBy("version").agg(
-            max(when(col("kind") === "meta_ts", col("name"))).as("ts"),
-            max(when(col("kind") === "meta_op", col("name"))).as("op"),
-            max(when(col("kind") === "meta_rb", col("name"))).as("rb"),
-            sum(when(col("kind") === "missing_dv_fragment", 1L).otherwise(0L))
-              .as("frags"))
-        val joined = versions.toDF("version")
-          .join(perV, Seq("version"), "left")
-          .join(adds, Seq("version"), "left")
-          .join(rems, Seq("version"), "left")
-          .join(meta, Seq("version"), "left")
-          .join(mtimes.toSeq.toDF("version", "mtime"), Seq("version"), "left")
-          .orderBy("version")
-          .collect()
-        def optLong(r: Row, field: String): Option[Long] =
-          Option(r.getAs[java.lang.Long](field)).map(_.toLong)
-        val retained = versions.toSet
-        val rows = joined.toSeq.map { r =>
-          val v = r.getAs[Long]("version")
-          // a version whose parent (v-1) is NOT retained has an unknown
-          // parent — its metrics report null, like the driver walk
-          // (`prev.filter(_.version == v - 1)`). Membership, not `> vMin`:
-          // retained versions need not be contiguous — a middle version's
-          // records can be vacuumed while a later checkpoint keeps later
-          // versions loadable, and the lag/lead diff would otherwise count
-          // every surviving label as added at the post-gap version (v1
-          // diffs against the empty dataset: all its labels count added)
-          val parentKnown = v == 1L || retained.contains(v - 1)
-          val fAdd = if (parentKnown) Some(optLong(r, "files_added").getOrElse(0L)) else None
-          val fDel = if (parentKnown) Some(optLong(r, "files_removed").getOrElse(0L)) else None
-          val bAdd = if (parentKnown) Some(optLong(r, "bytes_added").getOrElse(0L)) else None
-          val at = Option(r.getAs[String]("ts")).map(_.toLong)
-            .orElse(optLong(r, "mtime")).map(new java.sql.Timestamp(_))
-          val rbOf = Option(r.getAs[String]("rb")).map(_.toLong)
-          (v, at, Option(r.getAs[String]("op")),
-            optLong(r, "files").getOrElse(0L), optLong(r, "bytes").getOrElse(0L),
-            fAdd, fDel, bAdd, optLong(r, "frags").getOrElse(0L),
-            rbOf.isDefined, rbOf)
-        }
-        rows.toDF("version", "committed_at", "operation", "files", "bytes",
-          "files_added", "files_removed", "bytes_added",
-          "tombstone_fragments", "is_rollback", "rollback_of")
-      } finally { pres.unpersist(blocking = false); () }
-    } finally scan.close()
   }
 
   /** Latest commit version whose committed-at time (the in-commit stamp
@@ -1850,8 +1650,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     */
   def versionAtTimestamp(
       spark: SparkSession, base: String, uuid: String, atMillis: Long): Option[Long] = {
-    val mtimes = DatasetMetadata.versionRecords(spark, base, uuid)
-      .groupMapReduce(_._1)(_._2)(math.min)
+    val mtimes = DatasetMetadata.listLog(spark, base, uuid).mtimes
     val versions = mtimes.keys.toArray.sorted
     if (versions.isEmpty) return None
     def stampOpt(v: Long): Option[Long] =
@@ -3331,48 +3130,30 @@ object Ktk extends org.apache.spark.internal.Logging {
     norm.substring(prefix.length)
   }
 
-  /** Past this many (label × retained-version) attribution pairs, fsck and
-    * salvage compute referenced-vs-present as DataFrame anti-joins instead
-    * of driver-side Sets/Maps — same threshold pattern as the parallel
-    * listing: a 1M-file table with deep retained history would otherwise
-    * cost O(100M) driver map operations and hundreds of MB of label
-    * strings (the Delta-VACUUM driver bottleneck). fsck ESTIMATES the
-    * count as (newest reachable snapshot's labels × retained versions) so
-    * the mode decision itself never loads the full history; both sides of
-    * the threshold are exact and FsckSpec pins their parity at 0.
-    */
-  private[graft] val DistributedDiffThreshold = 2 * 1000 * 1000
-
-  /** Ship driver-resident (version, labels) references to executors for
-    * [[salvage]]'s distributed missing-data diff (the CURRENT snapshot is
-    * already on the driver there — the repair commit rewrites it — so
-    * shipping its label references beats re-reading the record).
-    * [[fsck]]'s multi-version side no longer goes through here: its
-    * distributed mode reconstructs every retained version from a record
-    * scan without materializing snapshots at all ([[distributedAudit]]).
-    * ONE `parallelize` call over bounded slices; the (label, version)
-    * tupling runs in the executor flatMap.
+  /** Ship the referenced labels to executors for gc's bounded report,
+    * whose present-vs-referenced diff stays a DataFrame anti-join so no
+    * orphan name lands on the driver. ONE `parallelize` call over bounded
+    * slices.
     */
   private def parallelizeLabels(
-      spark: SparkSession, perVersion: Seq[(Long, Seq[String])]): org.apache.spark.rdd.RDD[(String, Long)] = {
-    val slices: Seq[(Long, Seq[String])] = perVersion.flatMap { case (v, ls) =>
-      if (ls.size <= 100000) Seq(v -> ls)
-      else ls.grouped(100000).map(v -> _).toSeq
-    }
+      spark: SparkSession, labels: Seq[String]): org.apache.spark.rdd.RDD[String] = {
+    val slices = labels.grouped(100000).toSeq
     spark.sparkContext
       .parallelize(slices, math.max(1, math.min(64, slices.size)))
-      .flatMap { case (v, ls) => ls.iterator.map((_, v)) }
+      .flatMap(_.iterator)
   }
 
   /** Integrity audit (the FSCK verb of operational table formats),
     * METADATA-DRIVEN and strictly read-only: verifies that everything the
     * retained commit history references still exists in storage, and
     * previews unreferenced leftovers gc would reap. One recursive listing
-    * of `table/` + O(retained versions) commit-record reads — cached
-    * snapshot loads on small tables, a distributed record scan that never
-    * materializes a snapshot on the driver past [[DistributedDiffThreshold]]
-    * ([[distributedAudit]]) — no data pages read, safe against a live
-    * table at any size. Rows
+    * of `table/`, ONE `_versions` listing and one ascending walk of the
+    * commit log ([[DatasetMetadata.replayChains]]: one record read per
+    * version, one snapshot held at a time) — no data pages read, safe
+    * against a live table. Walking every listed version, it reads
+    * STORAGE, never this JVM's snapshot cache, which would mask a
+    * vacuumed record that strands every fresh reader (the fault fsck
+    * exists to find). Rows
     * `(kind, version, path)`, `version` = the newest retained commit
     * affected:
     *
@@ -3392,125 +3173,54 @@ object Ktk extends org.apache.spark.internal.Logging {
     *    fault class (O(garbage), not O(damage)): listed rows cap at
     *    `spark.graft.fsck.orphanLimit` (sorted, deterministic), with an
     *    `orphan_overflow` row carrying the FULL count in `version` when
-    *    truncated — a million-orphan table audits with a bounded driver.
+    *    truncated.
     *
-    * Output order is deterministic in BOTH diff modes: the final
-    * `(kind, path, version)` sort normalizes whatever order the
-    * driver maps or the distributed anti-join collects produced.
+    * Output order is deterministic: `(kind, path, version)`.
     */
-  def fsck(spark: SparkSession, base: String, uuid: String,
-      diffThreshold: Int = SessionDiffThreshold): DataFrame = {
+  def fsck(spark: SparkSession, base: String, uuid: String): DataFrame = {
     import spark.implicits._
     val fs = DatasetMetadata.fs(spark, base)
     val issues = Seq.newBuilder[(String, Long, String)]
-    val versions = DatasetMetadata.listVersions(spark, base, uuid)
-    // replay-chain reachability is audited from STORAGE record names, never
-    // through loadVersion: this JVM's snapshot cache would mask a vacuumed
-    // record that strands every FRESH reader (the fault fsck exists to
-    // find). One listing + at most one tiny delta read per non-checkpoint
-    // version (self-contained deltas terminate chains like checkpoints).
-    val recordSizes = versionRecordSizes(spark, fs, base, uuid)
-    val recordNames = recordSizes.keySet
-    val (chainStarts, brokenChains) =
-      resolveChains(spark, base, uuid, versions, recordNames)
-    brokenChains.foreach { case (v, gap) =>
-      issues += (("broken_replay_chain", v,
-        DatasetMetadata.versionDeltaKey(base, uuid, gap)))
+    val log = DatasetMetadata.listLog(spark, base, uuid)
+    // newest referencing version per label and per sidecar / fragment
+    // name, folded as the walk ascends (Option-guarded: absent fields
+    // deserialize to null on old blobs)
+    val referenced = scala.collection.mutable.HashMap.empty[String, Long]
+    val sidecarRefs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+    DatasetMetadata.replayChains(spark, base, uuid, log.versions, log).foreach {
+      case (v, Left(gap)) =>
+        issues += (("broken_replay_chain", v, DatasetMetadata.versionDeltaKey(base, uuid, gap)))
+      case (v, Right(md)) =>
+        Option(md.partitions).getOrElse(Map.empty[String, Long]).keysIterator
+          .foreach(referenced(_) = v)
+        md.deleteFragments.foreach(n => sidecarRefs(("missing_dv_fragment", n)) = v)
+        Sidecars.kinds.foreach(k => k.registry(md).values.foreach(n => sidecarRefs((k.issue, n)) = v))
     }
-    val reachable = chainStarts.map(_._1)
     // one (parallel-capable) listing answers both data-file checks
     val tableRoot = fs.makeQualified(new Path(s"$base/$uuid/table"))
-    def labelsOf(md: DatasetMetadata): scala.collection.Iterable[String] =
-      Option(md.partitions).getOrElse(Map.empty[String, Long]).keys
-    // the mode decision must not itself materialize every snapshot, so the
-    // pair count is ESTIMATED ([[estimatePairs]]): newest reachable
-    // snapshot × retained count, floored by total record bytes so a
-    // mass-delete-shrunk current snapshot can't hide huge old checkpoints
-    val newestMd = reachable.lastOption
-      .map(v => DatasetMetadata.loadVersion(spark, base, uuid, v))
-    val estimatedPairs = estimatePairs(
-      newestMd.map(labelsOf(_).size.toLong).getOrElse(0L),
-      reachable.size, recordSizes)
-    val threshold = auditThreshold(spark, diffThreshold)
-    lastAuditDistributed.set(estimatedPairs > threshold)
-    val sidecarRefs: Seq[(String, Long, String)] =
-      if (estimatedPairs <= threshold) {
-        val loaded: Seq[(Long, DatasetMetadata)] =
-          reachable.map(v => v -> DatasetMetadata.loadVersion(spark, base, uuid, v))
-        val present: Set[String] = listTableFiles(spark, fs, tableRoot).toSet
-        // newest version referencing each label wins the attribution
-        // (Option-guarded: absent fields deserialize to null on old blobs)
-        val referenced = scala.collection.mutable.Map.empty[String, Long]
-        loaded.foreach { case (v, md) =>
-          labelsOf(md).foreach(l => referenced(l) =
-            math.max(referenced.getOrElse(l, Long.MinValue), v))
-        }
-        referenced.toSeq.sorted.foreach { case (label, v) =>
-          if (!present.contains(label)) issues += (("missing_data_file", v, label))
-        }
-        val orphans = present.toSeq.sorted.filterNot(referenced.contains)
-        val cap = orphanLimit(spark)
-        orphans.take(cap).foreach(l => issues += (("orphan_file", -1L, l)))
-        if (orphans.size > cap)
-          issues += (("orphan_overflow", orphans.size.toLong, overflowMsg(orphans.size.toLong, cap)))
-        loaded.flatMap { case (v, md) =>
-          md.deleteFragments.map(("missing_dv_fragment", v, _)) ++
-            Sidecars.kinds.flatMap(k => k.registry(md).values.map((k.issue, v, _)))
-        }
-      } else {
-        // DISTRIBUTED diff with NO driver-side snapshots at all: the
-        // retained states are reconstructed from a distributed scan of the
-        // commit records themselves. Every record carries its version's
-        // complete sidecar registries plus either the full label set
-        // (checkpoints, self-contained deltas) or its adds/removes; a
-        // version's referenced labels are exactly "the LAST record in its
-        // chain window [start, v] that touched the label said add" — an
-        // argmax over (record version, isAdd), with isAdd breaking the
-        // same-record tie the way applyDelta does (adds win over removes).
-        // Driver memory: ONE snapshot (the estimate above) + fault rows +
-        // registry-sized sidecar refs; the per-version label maps never
-        // exist anywhere — not even on executors, which stream (rv, label,
-        // isAdd) tuples straight out of Jackson parses. Measured in
-        // StressFsck.
-        distributedAudit(spark, fs, base, uuid, tableRoot, chainStarts,
-          hasFullIn(recordNames), issues)
-      }
-    // sidecars + fragments: newest referencing version attributed, one
-    // existence probe per distinct name (registries are metadata-sized)
+    val present: Set[String] = listTableFiles(spark, fs, tableRoot).toSet
+    referenced.foreach { case (label, v) =>
+      if (!present.contains(label)) issues += (("missing_data_file", v, label))
+    }
+    val orphans = present.toSeq.filterNot(referenced.contains).sorted
+    val cap = orphanLimit(spark)
+    orphans.take(cap).foreach(l => issues += (("orphan_file", -1L, l)))
+    if (orphans.size > cap)
+      issues += (("orphan_overflow", orphans.size.toLong, overflowMsg(orphans.size.toLong, cap)))
+    // sidecars + fragments: one existence probe per distinct name
+    // (registries are metadata-sized)
     val sidecarDirs = Map("missing_dv_fragment" -> DatasetMetadata.DeletesDirName) ++
       Sidecars.kinds.map(k => k.issue -> k.dir)
-    sidecarRefs.groupMapReduce(r => (r._1, r._3))(_._2)(math.max)
-      .toSeq.sortBy { case ((k, n), v) => (k, n, v) }
-      .foreach { case ((kind, name), v) =>
-        if (sidecarMissing(fs, base, uuid, sidecarDirs(kind), name))
-          issues += ((kind, v, s"${sidecarDirs(kind)}/$name"))
-      }
+    sidecarRefs.foreach { case ((kind, name), v) =>
+      if (sidecarMissing(fs, base, uuid, sidecarDirs(kind), name))
+        issues += ((kind, v, s"${sidecarDirs(kind)}/$name"))
+    }
     val order = (Seq("missing_dv_fragment", "missing_data_file") ++
       Sidecars.kinds.map(_.issue) ++
       Seq("broken_replay_chain", "orphan_file", "orphan_overflow")).zipWithIndex.toMap
     issues.result().sortBy { case (k, v, p) => (order(k), p, v) }
       .toDF("kind", "version", "path")
   }
-
-  /** One `_versions` listing as name → byte size — the storage-truth
-    * input of chain resolution (never the snapshot cache: a vacuumed
-    * record that strands FRESH readers is exactly what the audits exist
-    * to find). Sizes feed the pair-count estimate below.
-    */
-  private[graft] def versionRecordSizes(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      base: String, uuid: String): Map[String, Long] =
-    try fs.listStatus(new Path(DatasetMetadata.versionsDir(base, uuid)))
-      .map(st => st.getPath.getName -> st.getLen).toMap
-    catch { case _: java.io.FileNotFoundException => Map.empty }
-
-  /** Default `diffThreshold` argument: "not explicitly set" — resolve via
-    * the session conf, falling back to [[DistributedDiffThreshold]]. A
-    * NEGATIVE sentinel (rather than the constant itself) so a caller
-    * deliberately passing `DistributedDiffThreshold` is honored verbatim
-    * instead of being silently overridden by the conf.
-    */
-  private[graft] val SessionDiffThreshold = -1
 
   /** Default cap on the names a maintenance verb's REPORT returns through
     * the driver (gc's reclaimed paths, salvage's dropped references). The
@@ -3547,9 +3257,8 @@ object Ktk extends org.apache.spark.internal.Logging {
             throw new IllegalArgumentException(
               s"invalid $key='$s': must be an integer row cap", e)
         }
-      // zero/negative caps would make the two fsck modes diverge (the
-      // driver path previews empty; the distributed path's .limit(cap)
-      // throws mid-audit) — reject up front, same style as the parse error
+      // a zero/negative cap would silently preview nothing — reject up
+      // front, same style as the parse error
       if (cap <= 0) throw new IllegalArgumentException(
         s"invalid $key=$cap: must be a positive row cap")
       cap
@@ -3559,289 +3268,6 @@ object Ktk extends org.apache.spark.internal.Logging {
   private def overflowMsg(total: Long, cap: Int): String =
     s"$total orphan files total; listing the first $cap " +
       "(raise spark.graft.fsck.orphanLimit to list more, or gc to reap)"
-
-  /** Resolve the audit threshold: any explicit (non-negative) caller value
-    * wins; the [[SessionDiffThreshold]] sentinel consults
-    * `spark.graft.audit.diffThreshold` so operators can tune the
-    * driver-vs-distributed switch per session without code.
-    */
-  private def auditThreshold(spark: SparkSession, requested: Int): Int =
-    if (requested >= 0) requested
-    else {
-      val key = "spark.graft.audit.diffThreshold"
-      spark.conf.getOption(key).map { s =>
-        try s.trim.toInt
-        catch {
-          case e: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"invalid $key='$s': must be an integer attribution-pair count " +
-                "(the driver-vs-distributed audit mode switch)", e)
-        }
-      }.getOrElse(DistributedDiffThreshold)
-    }
-
-  /** Test observability: did the last fsck/gc on this JVM take the
-    * distributed record-scan path? (Same pattern as lastMergeCandidates.)
-    */
-  private[graft] val lastAuditDistributed =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Attribution-pair estimate for the driver-vs-distributed mode choice:
-    * the max of (newest snapshot's labels × retained count) and (total
-    * record bytes ÷ ~64 B per JSON label entry). The first alone would
-    * UNDERESTIMATE a table whose current snapshot shrank after mass
-    * deletes while old checkpoints stayed huge — exactly when driver-mode
-    * loading hurts most; record bytes can't shrink behind the estimate.
-    * Both sides of the threshold are exact, so over-estimating only
-    * trades a little wall time for bounded driver memory.
-    */
-  private def estimatePairs(
-      newestLabels: Long, retainedCount: Int,
-      recordSizes: Map[String, Long]): Long =
-    math.max(newestLabels * retainedCount, recordSizes.valuesIterator.sum / 64)
-
-  private[graft] def hasFullIn(recordNames: Set[String])(k: Long): Boolean =
-    recordNames.contains(f"v$k%08d.json")
-
-  /** Resolve each version's replay chain from STORAGE record names:
-    * returns (reachable `(v, chainStart)` pairs, broken `(v, gapRecord)`
-    * pairs) — `chainStart` is the checkpoint / self-contained record the
-    * replay folds forward from (the CHAIN WINDOW `[start, v]`), `gapRecord`
-    * the MISSING record an operator could restore. At most one tiny delta
-    * read per non-checkpoint version (for the self-contained flag).
-    */
-  private[graft] def resolveChains(
-      spark: SparkSession, base: String, uuid: String,
-      versions: Seq[Long], recordNames: Set[String])
-      : (Seq[(Long, Long)], Seq[(Long, Long)]) = {
-    val hasFull = hasFullIn(recordNames) _
-    def hasDelta(k: Long): Boolean = recordNames.contains(f"v$k%08d.delta.json")
-    val selfContained = scala.collection.mutable.Map.empty[Long, Boolean]
-    def resolve(v: Long): Either[Long, Long] = {
-      var k = v
-      while (k >= 1) {
-        if (hasFull(k)) return Right(k)
-        if (!hasDelta(k)) return Left(k)
-        if (selfContained.getOrElseUpdate(k,
-            DatasetMetadata.readDeltaRecord(spark, base, uuid, k).full)) return Right(k)
-        k -= 1
-      }
-      Left(0L)
-    }
-    val (ok, broken) = versions.map(v => v -> resolve(v)).partition(_._2.isRight)
-    (ok.collect { case (v, Right(s)) => (v, s) },
-      broken.collect { case (v, Left(g)) => (v, g) })
-  }
-
-  /** Distributed scan of a dataset's commit records — the shared engine
-    * behind [[fsck]]'s and [[garbageCollect]]'s big-table modes, where the
-    * retained history is reconstructed WITHOUT ever materializing a
-    * snapshot on the driver. Each record parses ON EXECUTORS into a
-    * stream of `(recordVersion, kind, name, isAdd)` tuples (labels from
-    * checkpoint snapshots / delta adds+removes; sidecar registries, which
-    * every record carries in full); a version's referenced label set is
-    * the last-op-wins argmax over its replay window `[chainStart, v]` —
-    * exactly what `applyDelta` folding computes, including the
-    * same-record tie (a label in both adds and removes resolves to add,
-    * because `isAdd` is the struct's second sort key).
-    *
-    * Driver memory: registry-sized sidecar refs + whatever the caller
-    * collects (fsck: fault rows; gc: orphan names). Executor memory: one
-    * record's parse at a time. Scan cost is bounded by
-    * `CheckpointEvery × (labels × versions)` shuffled rows — horizontal,
-    * never vertical. Callers MUST `close()` to release the persisted
-    * frames once their actions ran.
-    */
-  private[graft] final class CommitRecordScan(
-      spark: SparkSession, base: String, uuid: String,
-      chainStarts: Seq[(Long, Long)], hasFull: Long => Boolean) {
-    private val windows: Seq[(Long, Long)] =
-      chainStarts.flatMap { case (v, start) => (start to v).map(v -> _) }
-    private val targetVersions = chainStarts.map(_._1)
-
-    /** `(rv, kind, name, isAdd, size)` for every record in any replay
-      * window: labels (with the add's byte size), sidecar registry entries,
-      * and the per-record `meta_*` scalars [[Ktk.historyDistributed]]
-      * consumes (commit-ts, operation verb when stamped BY the record's own
-      * commit, rollback target).
-      */
-    val recRows: DataFrame = {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      val recs: Seq[(Long, String, Boolean)] =
-        windows.map(_._2).distinct.sorted.map { rv =>
-          val full = hasFull(rv) // loadVersion's preference: checkpoint over delta
-          (rv,
-            if (full) DatasetMetadata.versionKey(base, uuid, rv)
-            else DatasetMetadata.versionDeltaKey(base, uuid, rv),
-            full)
-        }
-      import spark.implicits._
-      spark.sparkContext
-        .parallelize(recs, math.max(1, math.min(64, recs.size)))
-        .mapPartitions { it =>
-          val m = new com.fasterxml.jackson.databind.ObjectMapper()
-          m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-          m.configure(
-            com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES,
-            false)
-          // Jackson narrows the erased Map[String, Long] values to Integer
-          // on deserialization — widen via Number, like md.sizeOf
-          def widen(v: Any): Long = v match {
-            case n: Number => n.longValue()
-            case other     => other.toString.toLong
-          }
-          def sidecars(rv: Long, dv: Seq[String], regs: Seq[(String, Map[String, String])]) =
-            dv.map((rv, "missing_dv_fragment", _, true, 0L, 0L)) ++
-              regs.flatMap { case (issue, reg) => reg.values.map((rv, issue, _, true, 0L, 0L)) }
-          def metas(rv: Long, metadata: Map[String, String]) = {
-            val md = Option(metadata).getOrElse(Map.empty[String, String])
-            md.get(DatasetMetadata.CommitTsKey).map((rv, "meta_ts", _, true, 0L, 0L)).toSeq ++
-              md.get(DatasetMetadata.SeqHwmKey).map((rv, "meta_hwm", _, true, 0L, 0L)) ++
-              md.get(DatasetMetadata.OperationKey).filter(_ =>
-                  md.get(DatasetMetadata.OperationCommitKey).exists(_.toLong == rv))
-                .map((rv, "meta_op", _, true, 0L, 0L)) ++
-              (if (md.get(DatasetMetadata.RollbackCommitKey).exists(_.toLong == rv))
-                 md.get(DatasetMetadata.RollbackOfKey).map((rv, "meta_rb", _, true, 0L, 0L))
-               else None)
-          }
-          it.flatMap { case (rv, pathStr, isFull) =>
-            val p = new Path(pathStr)
-            val in = p.getFileSystem(conf.value).open(p)
-            try {
-              if (isFull) {
-                val md = m.readValue(in: java.io.InputStream, classOf[DatasetMetadata])
-                Option(md.partitions).getOrElse(Map.empty[String, Long])
-                  .asInstanceOf[Map[String, Any]]
-                  .iterator.map { case (l, s) =>
-                    (rv, "label", l, true, widen(s), md.seqOf(l)) }.toSeq ++
-                  sidecars(rv, md.deleteFragments,
-                    Sidecars.kinds.map(k => k.issue -> k.registry(md))) ++
-                  metas(rv, md.metadata)
-              } else {
-                val d = m.readValue(in: java.io.InputStream, classOf[VersionDelta])
-                val seqs = Option(d.addSeq).getOrElse(Map.empty[String, Long])
-                  .asInstanceOf[Map[String, Any]]
-                val addSizes = Option(d.adds).getOrElse(Map.empty[String, Long])
-                  .asInstanceOf[Map[String, Any]]
-                // applyDelta folds adds and addSeq into the snapshot
-                // INDEPENDENTLY, so the delta format permits a seq change
-                // without a size change (or vice versa) — iterate the
-                // UNION of both keysets, each side falling back to the
-                // other map or 0, so a seq-only entry still lands a label
-                // row instead of being silently dropped (which would
-                // misclassify rewrites in the distributed CDF's seq<=hwm
-                // detection if a future writer ever split the two maps)
-                (addSizes.keySet ++ seqs.keySet).iterator.map { l =>
-                    (rv, "label", l, true,
-                      addSizes.get(l).map(widen).getOrElse(0L),
-                      seqs.get(l).map(widen).getOrElse(0L)) }.toSeq ++
-                  Option(d.removes).getOrElse(Nil).map((rv, "label", _, false, 0L, 0L)) ++
-                  sidecars(rv, Option(d.deletes).getOrElse(Nil),
-                    Sidecars.kinds.map(k => k.issue -> k.registry(d))) ++
-                  metas(rv, d.metadata)
-              }
-            } finally in.close()
-          }
-        }
-        .toDF("rv", "kind", "name", "isAdd", "size", "seq")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-    /** `(version, label, size)` — each target version's full label state
-      * (the last-op-wins argmax over its replay window), carrying the
-      * winning add's byte size. The shared core of [[referenced]] and the
-      * distributed history's per-version metrics.
-      */
-    def perVersionLabels: DataFrame = {
-      import spark.implicits._
-      recRows.filter(col("kind") === "label")
-        .join(broadcast(windows.toDF("v", "rv")), Seq("rv"))
-        .groupBy(col("v"), col("name"))
-        .agg(max(struct(col("rv"), col("isAdd"), col("size"), col("seq"))).as("last"))
-        .filter(col("last.isAdd"))
-        .select(col("v").as("version"), col("name").as("label"),
-          col("last.size").as("size"), col("last.seq").as("seq"))
-    }
-
-    /** `(label, version)` — every label some target version references,
-      * attributed to the NEWEST referencing version. Deliberately NOT
-      * built on [[perVersionLabels]]: fsck/gc need neither sizes nor
-      * seqs, and keeping the argmax struct narrow prunes those 16 B/row
-      * out of the audit shuffle (the history/CDF consumers pay for the
-      * payload only when they use it).
-      */
-    val referenced: DataFrame = {
-      import spark.implicits._
-      recRows.filter(col("kind") === "label")
-        .join(broadcast(windows.toDF("v", "rv")), Seq("rv"))
-        .groupBy(col("v"), col("name"))
-        .agg(max(struct(col("rv"), col("isAdd"))).as("last"))
-        .filter(col("last.isAdd"))
-        .select(col("name").as("label"), col("v").as("version"))
-        .groupBy("label").agg(max("version").as("version"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-    /** Sidecar registries of the target versions' OWN records — what the
-      * driver path reads off each loaded snapshot. Registry-sized collect:
-      * `(issueKind, version, name)`.
-      */
-    def sidecarRefs(): Seq[(String, Long, String)] = {
-      import spark.implicits._
-      recRows.filter(col("kind").isin(("missing_dv_fragment" +: Sidecars.kinds.map(_.issue)): _*))
-        .join(broadcast(targetVersions.toDF("rv")), Seq("rv"))
-        .select(col("kind"), col("rv"), col("name")).distinct()
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    }
-
-    def close(): Unit = {
-      recRows.unpersist(blocking = false)
-      referenced.unpersist(blocking = false)
-      ()
-    }
-  }
-
-  /** [[fsck]]'s big-table path over [[CommitRecordScan]]: appends
-    * missing/orphan fault rows to `issues` and returns the registry-sized
-    * sidecar references.
-    */
-  private def distributedAudit(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: String, uuid: String, tableRoot: Path,
-      chainStarts: Seq[(Long, Long)],
-      hasFull: Long => Boolean,
-      issues: scala.collection.mutable.Builder[(String, Long, String), Seq[(String, Long, String)]])
-      : Seq[(String, Long, String)] = {
-    import spark.implicits._
-    val scan = new CommitRecordScan(spark, base, uuid, chainStarts, hasFull)
-    val present = listTableFilesDS(spark, fs, tableRoot).toDF("label")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      scan.referenced.join(present, Seq("label"), "left_anti")
-        .collect().foreach(r =>
-          issues += (("missing_data_file", r.getLong(1), r.getString(0))))
-      // the orphan PREVIEW is the one fault class whose cardinality is
-      // unbounded (O(garbage), not O(damage)): cap the listed rows like
-      // gc's bounded report — sorted limit for determinism, full count on
-      // the overflow row — so a million-orphan table audits with a
-      // bounded driver, in both modes identically
-      val orphans = present.join(scan.referenced, Seq("label"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = orphans.count()
-        val cap = orphanLimit(spark)
-        orphans.orderBy("label").as[String].limit(cap)
-          .collect().foreach(l => issues += (("orphan_file", -1L, l)))
-        if (n > cap) issues += (("orphan_overflow", n, overflowMsg(n, cap)))
-      } finally { orphans.unpersist(blocking = false); () }
-      scan.sidecarRefs()
-    } finally {
-      present.unpersist(blocking = false)
-      scan.close()
-    }
-  }
 
   /** Sidecar/fragment existence probe shared by [[fsck]] and [[salvage]]
     * so path construction cannot silently diverge between audit and repair.
@@ -3866,30 +3292,21 @@ object Ktk extends org.apache.spark.internal.Logging {
     *    prunes them.
     *
     * Returns the dropped references as `(kind, path)`; `dryRun` reports
-    * without committing. No-op (no commit) when nothing is missing.
+    * without committing. No-op (no commit) when nothing is missing. Only
+    * the CURRENT snapshot is audited — one listing of `table/` diffed
+    * against its labels on the driver, where the repair commit holds the
+    * snapshot anyway.
     */
   def salvage(spark: SparkSession, base: String, uuid: String,
       acceptResurrection: Boolean = false,
-      dryRun: Boolean = false,
-      diffThreshold: Int = SessionDiffThreshold): Seq[(String, String)] = {
+      dryRun: Boolean = false): Seq[(String, String)] = {
     val fs = DatasetMetadata.fs(spark, base)
     val md = DatasetMetadata.load(spark, base, uuid)
     val tableRoot = fs.makeQualified(new Path(md.tableDir(base)))
-    val refLabels = Option(md.partitions).getOrElse(Map.empty[String, Long]).keys
+    val present = listTableFiles(spark, fs, tableRoot).toSet
     val missingData: Seq[String] =
-      if (refLabels.size <= auditThreshold(spark, diffThreshold)) {
-        val present = listTableFiles(spark, fs, tableRoot).toSet
-        refLabels.toSeq.sorted.filterNot(present.contains)
-      } else {
-        // distributed diff (same shape as fsck's): only the MISSING labels
-        // return to the driver — they feed the repair commit either way
-        import spark.implicits._
-        val present = listTableFilesDS(spark, fs, tableRoot).toDF("label")
-        parallelizeLabels(spark, Seq(md.version -> refLabels.toSeq))
-          .map(_._1).toDF("label")
-          .join(present, Seq("label"), "left_anti")
-          .as[String].collect().sorted.toSeq
-      }
+      Option(md.partitions).getOrElse(Map.empty[String, Long]).keys.toSeq.sorted
+        .filterNot(present.contains)
     // dead registry entries, per kind: (column, sidecar name)
     val dead: Map[Sidecars.Kind, Seq[(String, String)]] = Sidecars.kinds.map { k =>
       k -> k.registry(md).toSeq.sortBy(_._1).filter { case (_, n) =>
@@ -3932,11 +3349,10 @@ object Ktk extends org.apache.spark.internal.Logging {
   def salvageReport(spark: SparkSession, base: String, uuid: String,
       acceptResurrection: Boolean = false,
       dryRun: Boolean = false,
-      diffThreshold: Int = SessionDiffThreshold,
       reportLimit: Int = DefaultMaintenanceReportLimit): SalvageReport = {
     require(reportLimit >= 0, s"reportLimit must be >= 0, got $reportLimit " +
       "(use salvage for the unbounded Seq-returning form)")
-    val full = salvage(spark, base, uuid, acceptResurrection, dryRun, diffThreshold)
+    val full = salvage(spark, base, uuid, acceptResurrection, dryRun)
     SalvageReport(full.size.toLong, full.size > reportLimit, full.take(reportLimit))
   }
 
@@ -3991,6 +3407,14 @@ object Ktk extends org.apache.spark.internal.Logging {
     * current commit — maximal reclamation, no history (exactly the
     * reference's gc semantics).
     *
+    * The referenced set comes from ONE `_versions` listing and one
+    * ascending walk of the retained commit log
+    * ([[DatasetMetadata.replay]]: one record read per version, one
+    * snapshot held at a time); the driver holds the retained versions'
+    * labels, never their snapshots all at once. Each retained version's
+    * own record is read from storage, so a retained version stranded by
+    * a vacuumed record fails gc even when this JVM still caches it.
+    *
     * `sidecarGraceMs` (Delta-VACUUM-style retention): an unreferenced
     * sidecar dir YOUNGER than this is skipped, because every commit has a
     * window after [[atomicSidecarWrite]] renames the nonce dir into place
@@ -4015,10 +3439,9 @@ object Ktk extends org.apache.spark.internal.Logging {
       sidecarGraceMs: Long = 15L * 60 * 1000,
       dryRun: Boolean = false,
       retainLastMs: Long = -1L,
-      consumerCheckpoints: Seq[String] = Nil,
-      diffThreshold: Int = SessionDiffThreshold): Seq[String] =
+      consumerCheckpoints: Seq[String] = Nil): Seq[String] =
     gcCore(spark, base, uuid, retainVersions, sidecarGraceMs, dryRun,
-      retainLastMs, consumerCheckpoints, diffThreshold, reportLimit = -1)
+      retainLastMs, consumerCheckpoints, reportLimit = -1)
       .reclaimed
 
   /** [[garbageCollect]] with a BOUNDED driver-side report — the form an
@@ -4030,9 +3453,8 @@ object Ktk extends org.apache.spark.internal.Logging {
     * says whether anything was dropped. Under a bound the orphan names
     * never materialize on the driver at all: the present-vs-referenced
     * diff stays a DataFrame end to end — counted distributed, sampled via
-    * `limit`, and DELETED via `foreachPartition` — in BOTH diff modes (the
-    * below-threshold referenced set ships to executors instead of the
-    * listing collecting to the driver).
+    * `limit`, and DELETED via `foreachPartition` (the referenced set ships
+    * to executors instead of the listing collecting to the driver).
     */
   def garbageCollectReport(spark: SparkSession, base: String, uuid: String,
       retainVersions: Int = 0,
@@ -4040,12 +3462,11 @@ object Ktk extends org.apache.spark.internal.Logging {
       dryRun: Boolean = false,
       retainLastMs: Long = -1L,
       consumerCheckpoints: Seq[String] = Nil,
-      diffThreshold: Int = SessionDiffThreshold,
       reportLimit: Int = DefaultMaintenanceReportLimit): GcReport = {
     require(reportLimit >= 0, s"reportLimit must be >= 0, got $reportLimit " +
       "(use garbageCollect for the unbounded Seq-returning form)")
     gcCore(spark, base, uuid, retainVersions, sidecarGraceMs, dryRun,
-      retainLastMs, consumerCheckpoints, diffThreshold, reportLimit)
+      retainLastMs, consumerCheckpoints, reportLimit)
   }
 
   private def gcCore(spark: SparkSession, base: String, uuid: String,
@@ -4054,14 +3475,15 @@ object Ktk extends org.apache.spark.internal.Logging {
       dryRun: Boolean,
       retainLastMs: Long,
       consumerCheckpoints: Seq[String],
-      diffThreshold: Int,
       reportLimit: Int): GcReport = {
     import spark.implicits._
     val bounded = reportLimit >= 0
-    val md = DatasetMetadata.load(spark, base, uuid)
     val fs = DatasetMetadata.fs(spark, base)
-    val tableRoot = fs.makeQualified(new Path(md.tableDir(base)))
-    val allVersions = DatasetMetadata.listVersions(spark, base, uuid)
+    val tableRoot = fs.makeQualified(new Path(s"$base/$uuid/table"))
+    // the pointer before the listing: every published version is listed
+    val head = DatasetMetadata.head(spark, base, uuid)
+    val log = DatasetMetadata.listLog(spark, base, uuid)
+    val allVersions = log.versions
     // `retainLastMs` (Delta VACUUM's RETAIN <n> HOURS): every version
     // committed inside the wall-clock window ALSO survives — it can only
     // WIDEN what `retainVersions` keeps, so a lagging CDC consumer's
@@ -4070,13 +3492,11 @@ object Ktk extends org.apache.spark.internal.Logging {
     // freshly copied dataset gets young mtimes and so RETAINS MORE — the
     // safe direction for deletion, while time travel uses the stamp
     val keepFrom0 = {
-      val byCount = md.version - retainVersions
+      val byCount = head.fold(_.version, identity) - retainVersions
       if (retainLastMs < 0L) byCount
       else {
         val cutoff = System.currentTimeMillis() - retainLastMs
-        val timeKept = DatasetMetadata.versionRecords(spark, base, uuid)
-          .groupMapReduce(_._1)(_._2)(math.min)
-          .collect { case (v, m) if m >= cutoff => v }
+        val timeKept = log.mtimes.collect { case (v, m) if m >= cutoff => v }
         math.min(byCount, if (timeKept.isEmpty) byCount else timeKept.min)
       }
     }
@@ -4115,20 +3535,6 @@ object Ktk extends org.apache.spark.internal.Logging {
       math.min(kf, floor)
     }
     val (keptVersions, prunedVersions) = allVersions.partition(_ >= keepFrom)
-    // past the (estimated, like fsck's) pair threshold the retained states
-    // are reconstructed via the distributed commit-record scan instead of
-    // loading every snapshot on the driver: the referenced set never
-    // exists as a driver Set, the orphan diff is an anti-join, and only
-    // the ORPHAN NAMES come back (the gc API returns them) — the one
-    // driver-side O(orphans) cost this verb's contract already implies
-    // ALL record bytes, not just the kept versions': a kept delta's replay
-    // window can reach below keepFrom (its checkpoint), and over-estimating
-    // only trades wall time for bounded driver memory
-    val recordSizes = versionRecordSizes(spark, fs, base, uuid)
-    val estimatedPairs = estimatePairs(
-      md.partitions.size.toLong, keptVersions.size, recordSizes)
-    val threshold = auditThreshold(spark, diffThreshold)
-    lastAuditDistributed.set(estimatedPairs > threshold)
     val deleted = Seq.newBuilder[String]
     var total = 0L
     def record(p: String): Unit = {
@@ -4136,115 +3542,95 @@ object Ktk extends org.apache.spark.internal.Logging {
       if (!bounded || total <= reportLimit) { deleted += p; () }
     }
     val prefix = tableRoot.toString + "/"
-    // referenced labels + per-kind valid sidecar names, by diff mode. In
-    // BOUNDED mode the referenced set is exposed as a DataFrame in both
-    // modes so the orphan diff never lands on the driver; unbounded keeps
-    // the exact legacy shapes (driver Set below threshold, collected
-    // anti-join above — the Seq API returns every name anyway).
-    var scanOpen: Option[CommitRecordScan] = None
-    val (refSet: Option[Set[String]], refDF: Option[DataFrame],
-        sidecarValid: Seq[(String, Set[String])]) =
-      if (estimatedPairs <= threshold) {
-        val retainedMds = keptVersions.filter(_ != md.version)
-          .map(v => DatasetMetadata.loadVersion(spark, base, uuid, v))
-        val referenced = md.partitions.keySet ++ retainedMds.flatMap(_.partitions.keySet)
-        val allMds = md +: retainedMds
-        val sv = Sidecars.kinds.map(k => k.dir -> allMds.flatMap(k.registry(_).values).toSet) :+
-          // deletion-vector fragments pin exactly like pruning sidecars —
-          // a retained snapshot NEEDS its fragments for correct reads
-          (DatasetMetadata.DeletesDirName -> allMds.flatMap(_.deleteFragments).toSet)
-        if (bounded)
-          (None, Some(parallelizeLabels(spark, Seq(md.version -> referenced.toSeq))
-            .map(_._1).toDF("label")), sv)
-        else (Some(referenced), None, sv)
-      } else {
-        val recordNames = recordSizes.keySet
-        val (chainStarts, broken) =
-          resolveChains(spark, base, uuid, keptVersions, recordNames)
-        // a retained version whose chain is broken fails gc exactly like
-        // the driver path's loadVersion would — deleting "orphans" while
-        // blind to part of the history is how data loss happens
-        broken.headOption.foreach { case (v, gap) =>
-          throw new NoSuchElementException(
-            s"Dataset '$uuid': retained version $v is unreachable — commit record " +
-              s"$gap of its replay chain is missing; refusing to gc (run fsck)")
-        }
-        val scan = new CommitRecordScan(spark, base, uuid, chainStarts,
-          hasFullIn(recordNames))
-        scanOpen = Some(scan)
-        val refs = scan.sidecarRefs()
-        def valid(kind: String): Set[String] =
-          refs.collect { case (`kind`, _, n) => n }.toSet
-        (None, Some(scan.referenced),
-          Sidecars.kinds.map(k => k.dir -> valid(k.issue)) :+
-            (DatasetMetadata.DeletesDirName -> valid("missing_dv_fragment")))
-      }
-    try {
-      if (fs.exists(tableRoot)) {
-        if (!bounded) {
-          // parallel-capable listing (listTableFiles): a wide table's
-          // listing distributes like the deletes below already do
-          val toDeleteRels: Seq[String] = refSet match {
-            case Some(rs) => listTableFiles(spark, fs, tableRoot).filterNot(rs.contains)
-            case None => listTableFilesDS(spark, fs, tableRoot).toDF("label")
-              .join(refDF.get, Seq("label"), "left_anti")
-              .as[String].collect().toSeq
-          }
-          if (toDeleteRels.nonEmpty) {
-            val toDelete = toDeleteRels.map(rel => new Path(prefix + rel))
-            // distribute the deletes: after heavy compaction/streaming
-            // churn the orphan count is O(#historical files), and
-            // sequential driver-side deletes against an object store
-            // dominate the maintenance pass
-            if (dryRun)
-              toDelete.foreach(p => record(p.toString))
-            else if (toDelete.size <= 16)
-              toDelete.foreach { p => fs.delete(p, false); record(p.toString) }
-            else {
-              val serializableConf = new org.apache.spark.util.SerializableConfiguration(
-                spark.sessionState.newHadoopConf())
-              val paths = toDelete.map(_.toString)
-              spark.sparkContext.parallelize(paths, math.min(32, 1 + paths.size / 64))
-                .foreachPartition { ps =>
-                  val conf = serializableConf.value
-                  ps.foreach { s =>
-                    val p = new Path(s)
-                    p.getFileSystem(conf).delete(p, false); ()
-                  }
-                }
-              paths.foreach(record)
-            }
-          }
-        } else {
-          // BOUNDED: present-vs-referenced stays a DataFrame end to end —
-          // counted distributed, sampled with a sorted limit (deterministic
-          // report), deleted via foreachPartition; only reportLimit names
-          // ever reach the driver no matter how many orphans exist
-          val orphans = listTableFilesDS(spark, fs, tableRoot).toDF("label")
-            .join(refDF.get, Seq("label"), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val n = orphans.count()
-            val sample: Array[String] =
-              if (reportLimit == 0 || n == 0) Array.empty
-              else orphans.orderBy("label").as[String].limit(reportLimit).collect()
-            total += n
-            sample.foreach(rel => deleted += (prefix + rel))
-            if (!dryRun && n > 0) {
-              val serializableConf = new org.apache.spark.util.SerializableConfiguration(
-                spark.sessionState.newHadoopConf())
-              orphans.as[String].foreachPartition { (ps: Iterator[String]) =>
+    // referenced labels + per-dir valid sidecar / fragment names of every
+    // retained version, from one walk of the commit log. The walk reads
+    // each retained record from storage: a retained version stranded by a
+    // vacuumed record fails gc even when this JVM still caches it —
+    // deleting "orphans" while blind to part of the history is how data
+    // loss happens. The head joins the walk even if unlisted, so a
+    // vanished head record fails loudly too.
+    val referenced = scala.collection.mutable.HashSet.empty[String]
+    val sidecarValid = scala.collection.mutable.LinkedHashMap.from(
+      (Sidecars.kinds.map(_.dir) :+ DatasetMetadata.DeletesDirName)
+        .map(_ -> scala.collection.mutable.HashSet.empty[String]))
+    def pin(md: DatasetMetadata): Unit = {
+      referenced ++= md.partitions.keysIterator
+      Sidecars.kinds.foreach(k => sidecarValid(k.dir) ++= k.registry(md).values)
+      // deletion-vector fragments pin exactly like pruning sidecars — a
+      // retained snapshot NEEDS its fragments for correct reads
+      sidecarValid(DatasetMetadata.DeletesDirName) ++= md.deleteFragments
+    }
+    head.left.foreach(pin) // legacy full-blob pointer
+    DatasetMetadata.replay(spark, base, uuid,
+        (keptVersions ++ head.toOption).distinct.sorted, log).foreach { case (v, md) =>
+      // the OLDEST retained version may be a delta whose replay chain runs
+      // through records about to be pruned: materialize it as a
+      // self-contained checkpoint FIRST, so every retained version stays
+      // loadable from retained records alone
+      if (prunedVersions.nonEmpty && !dryRun && keptVersions.headOption.contains(v))
+        DatasetMetadata.materializeCheckpoint(spark, base, uuid, v, md)
+      pin(md)
+    }
+    if (fs.exists(tableRoot)) {
+      if (!bounded) {
+        // parallel-capable listing (listTableFiles): a wide table's
+        // listing distributes like the deletes below already do
+        val toDeleteRels: Seq[String] =
+          listTableFiles(spark, fs, tableRoot).filterNot(referenced.contains)
+        if (toDeleteRels.nonEmpty) {
+          val toDelete = toDeleteRels.map(rel => new Path(prefix + rel))
+          // distribute the deletes: after heavy compaction/streaming
+          // churn the orphan count is O(#historical files), and
+          // sequential driver-side deletes against an object store
+          // dominate the maintenance pass
+          if (dryRun)
+            toDelete.foreach(p => record(p.toString))
+          else if (toDelete.size <= 16)
+            toDelete.foreach { p => fs.delete(p, false); record(p.toString) }
+          else {
+            val serializableConf = new org.apache.spark.util.SerializableConfiguration(
+              spark.sessionState.newHadoopConf())
+            val paths = toDelete.map(_.toString)
+            spark.sparkContext.parallelize(paths, math.min(32, 1 + paths.size / 64))
+              .foreachPartition { ps =>
                 val conf = serializableConf.value
-                ps.foreach { rel =>
-                  val p = new Path(prefix + rel)
+                ps.foreach { s =>
+                  val p = new Path(s)
                   p.getFileSystem(conf).delete(p, false); ()
                 }
               }
-            }
-          } finally { orphans.unpersist(blocking = false); () }
+            paths.foreach(record)
+          }
         }
+      } else {
+        // BOUNDED: present-vs-referenced stays a DataFrame end to end —
+        // counted distributed, sampled with a sorted limit (deterministic
+        // report), deleted via foreachPartition; only reportLimit names
+        // ever reach the driver no matter how many orphans exist
+        val orphans = listTableFilesDS(spark, fs, tableRoot).toDF("label")
+          .join(parallelizeLabels(spark, referenced.toSeq).toDF("label"), Seq("label"), "left_anti")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val n = orphans.count()
+          val sample: Array[String] =
+            if (reportLimit == 0 || n == 0) Array.empty
+            else orphans.orderBy("label").as[String].limit(reportLimit).collect()
+          total += n
+          sample.foreach(rel => deleted += (prefix + rel))
+          if (!dryRun && n > 0) {
+            val serializableConf = new org.apache.spark.util.SerializableConfiguration(
+              spark.sessionState.newHadoopConf())
+            orphans.as[String].foreachPartition { (ps: Iterator[String]) =>
+              val conf = serializableConf.value
+              ps.foreach { rel =>
+                val p = new Path(prefix + rel)
+                p.getFileSystem(conf).delete(p, false); ()
+              }
+            }
+          }
+        } finally { orphans.unpersist(blocking = false); () }
       }
-    } finally scanOpen.foreach(_.close())
+    }
     // index / bloom / zone sidecar files referenced by NO retained version's
     // registry — retained snapshots pin their version-addressed sidecars
     // exactly like their data files, so time travel keeps full pruning
@@ -4269,15 +3655,8 @@ object Ktk extends org.apache.spark.internal.Logging {
       }
     }
     // commit records older than the retention window — history beyond
-    // `retainVersions` stops being time-travelable here, by design. The
-    // OLDEST retained version may be a delta whose replay chain runs
-    // through records about to be pruned: materialize it as a
-    // self-contained checkpoint FIRST, so every retained version stays
-    // loadable from retained records alone.
-    if (prunedVersions.nonEmpty && !dryRun)
-      keptVersions.minOption.foreach { v =>
-        DatasetMetadata.materializeCheckpoint(spark, base, uuid, v)
-      }
+    // `retainVersions` stops being time-travelable here, by design (the
+    // oldest retained version was checkpointed during the walk above)
     prunedVersions.foreach { v =>
       Seq(DatasetMetadata.versionKey(base, uuid, v),
           DatasetMetadata.versionDeltaKey(base, uuid, v)).foreach { k =>

@@ -361,16 +361,12 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
       versionRow(Ktk.addZoneMaps(spark, base, in.getUTF8String(0).toString, cols))
     },
     // read-only integrity audit: everything the retained history
-    // references must exist; orphans previewed (see Ktk.fsck).
-    // `diff_threshold` (attribution pairs; -1 = session conf /
-    // engine default) forces the distributed record-scan mode from SQL
-    "fsck" -> proc("fsck", Array(stringParam("table"),
-        ProcedureParameter.in("diff_threshold", IntegerType).defaultValue("-1").build()),
+    // references must exist; orphans previewed (see Ktk.fsck)
+    "fsck" -> proc("fsck", Array(stringParam("table")),
       StructType(Seq(
         StructField("kind", StringType), StructField("version", LongType),
         StructField("path", StringType)))) { in =>
-      Ktk.fsck(spark, base, in.getUTF8String(0).toString,
-          diffThreshold = in.getInt(1))
+      Ktk.fsck(spark, base, in.getUTF8String(0).toString)
         .queryExecution.executedPlan.executeCollect().toSeq
     },
     // REPAIR companion of fsck: one commit dropping current-snapshot
@@ -379,13 +375,11 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
     "salvage" -> proc("salvage",
       Array(stringParam("table"),
         ProcedureParameter.in("accept_resurrection", BooleanType).defaultValue("false").build(),
-        ProcedureParameter.in("dry_run", BooleanType).defaultValue("false").build(),
-        ProcedureParameter.in("diff_threshold", IntegerType).defaultValue("-1").build()),
+        ProcedureParameter.in("dry_run", BooleanType).defaultValue("false").build()),
       StructType(Seq(
         StructField("kind", StringType), StructField("path", StringType)))) { in =>
       Ktk.salvage(spark, base, in.getUTF8String(0).toString,
-        acceptResurrection = in.getBoolean(1), dryRun = in.getBoolean(2),
-        diffThreshold = in.getInt(3))
+        acceptResurrection = in.getBoolean(1), dryRun = in.getBoolean(2))
         .map { case (k, p) =>
           InternalRow(UTF8String.fromString(k), UTF8String.fromString(p)) }
     },
@@ -395,7 +389,6 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
       Array(stringParam("table"),
         ProcedureParameter.in("accept_resurrection", BooleanType).defaultValue("false").build(),
         ProcedureParameter.in("dry_run", BooleanType).defaultValue("false").build(),
-        ProcedureParameter.in("diff_threshold", IntegerType).defaultValue("-1").build(),
         ProcedureParameter.in("report_limit", IntegerType)
           .defaultValue(Ktk.DefaultMaintenanceReportLimit.toString).build()),
       StructType(Seq(
@@ -403,7 +396,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
         StructField("dropped_count", LongType), StructField("truncated", BooleanType)))) { in =>
       val r = Ktk.salvageReport(spark, base, in.getUTF8String(0).toString,
         acceptResurrection = in.getBoolean(1), dryRun = in.getBoolean(2),
-        diffThreshold = in.getInt(3), reportLimit = in.getInt(4))
+        reportLimit = in.getInt(3))
       if (r.dropped.isEmpty)
         Seq(InternalRow(null, null, r.droppedCount, r.truncated))
       else r.dropped.map { case (k, p) =>
@@ -419,15 +412,13 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
         ProcedureParameter.in("retain_last_ms", LongType).defaultValue("-1").build(),
         // comma-separated consumeChanges/mirror checkpoint files: versions
         // a registered consumer still needs survive (consumer-aware floor)
-        ProcedureParameter.in("consumer_checkpoints", StringType).defaultValue("''").build(),
-        ProcedureParameter.in("diff_threshold", IntegerType).defaultValue("-1").build()),
+        ProcedureParameter.in("consumer_checkpoints", StringType).defaultValue("''").build()),
       StructType(Seq(StructField("path", StringType)))) { in =>
       val ckpts = Option(in.getUTF8String(4)).map(_.toString).getOrElse("")
         .split(',').toSeq.map(_.trim).filter(_.nonEmpty)
       Ktk.garbageCollect(spark, base, in.getUTF8String(0).toString,
         retainVersions = in.getInt(1), dryRun = in.getBoolean(2),
-        retainLastMs = in.getLong(3), consumerCheckpoints = ckpts,
-        diffThreshold = in.getInt(5))
+        retainLastMs = in.getLong(3), consumerCheckpoints = ckpts)
         .map(p => InternalRow(UTF8String.fromString(p)))
     },
     // BOUNDED gc report: the full reclaimed count rides on every row and
@@ -440,7 +431,6 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
         ProcedureParameter.in("dry_run", BooleanType).defaultValue("false").build(),
         ProcedureParameter.in("retain_last_ms", LongType).defaultValue("-1").build(),
         ProcedureParameter.in("consumer_checkpoints", StringType).defaultValue("''").build(),
-        ProcedureParameter.in("diff_threshold", IntegerType).defaultValue("-1").build(),
         ProcedureParameter.in("report_limit", IntegerType)
           .defaultValue(Ktk.DefaultMaintenanceReportLimit.toString).build()),
       StructType(Seq(
@@ -451,7 +441,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
       val r = Ktk.garbageCollectReport(spark, base, in.getUTF8String(0).toString,
         retainVersions = in.getInt(1), dryRun = in.getBoolean(2),
         retainLastMs = in.getLong(3), consumerCheckpoints = ckpts,
-        diffThreshold = in.getInt(5), reportLimit = in.getInt(6))
+        reportLimit = in.getInt(5))
       if (r.reclaimed.isEmpty)
         Seq(InternalRow(null, r.reclaimedCount, r.truncated))
       else r.reclaimed.map(p =>

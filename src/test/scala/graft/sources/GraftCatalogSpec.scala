@@ -100,14 +100,9 @@ class GraftCatalogSpec extends SparkSpec {
       val plan = spark.sql(
         s"CALL $gk.system.gc(table => 't6', dry_run => true)").as[String].collect().toSet
       plan should not be empty
-      // diff_threshold forces the distributed record-scan mode from SQL
-      // with an identical plan; gc_report carries the full count + a
-      // bounded list (the DataFrame-returning incident-scale variant)
-      val planDist = spark.sql(
-        s"CALL $gk.system.gc(table => 't6', dry_run => true, diff_threshold => 0)")
-        .as[String].collect().toSet
-      planDist shouldBe plan
-      graft.ktk.Ktk.lastAuditDistributed.get() shouldBe true
+      // the SQL plan is the API's plan; gc_report carries the full count +
+      // a bounded list (the DataFrame-returning incident-scale variant)
+      graft.ktk.Ktk.garbageCollect(spark, base, "t6", dryRun = true).toSet shouldBe plan
       val rep = spark.sql(
         s"CALL $gk.system.gc_report(table => 't6', dry_run => true, report_limit => 1)")
         .as[(String, Long, Boolean)].collect()

@@ -5,23 +5,22 @@ import org.apache.spark.sql.SparkSession
 
 import graft.ktk.{DatasetMetadata, Ktk}
 
-/** Scale probe for the fsck/salvage integrity tier: a deep retained history
-  * whose (label × retained-version) attribution pairs exceed
-  * `DistributedDiffThreshold` (2M), so the referenced-vs-present diff runs
-  * as the distributed anti-join path. What a 100 TB operator cares about:
+/** Scale probe for the maintenance walk: a deep retained history of 20
+  * versions × 120k labels (2.28M label × retained-version attribution
+  * pairs) audited by fsck, gc and history through ONE ascending walk of
+  * the commit log. What a 100 TB operator cares about:
   *
-  *  1. the distributed diff finds EXACTLY the planted faults (2 vanished
-  *     data files + 1 orphan) out of 120k present files × 20 retained
-  *     versions — no false rows, deterministic order;
-  *  2. driver RSS: the distributed audit reconstructs every retained
-  *     version from a record scan WITHOUT materializing snapshots on the
-  *     driver (r11 "what's wrong" #1, closed r12) — this probe MEASURES
-  *     the remaining footprint (ΔRSS across the audit from a cold
-  *     snapshot cache: one estimate snapshot + fault rows) and the
-  *     driver-mode loads-everything cost beside it;
-  *  3. the driver-mode diff at the same width (threshold forced high) is
-  *     the A/B: both modes agree row-for-row, and the distributed mode's
-  *     driver-collected rows are the FAULTS only.
+  *  1. fsck finds EXACTLY the planted faults (2 vanished data files + 1
+  *     orphan) out of 120k present files × 20 retained versions — no
+  *     false rows, deterministic order; gc's dry run flags exactly the
+  *     orphan; history returns one row per version;
+  *  2. driver memory: each walk holds one snapshot at a time plus the
+  *     labels the retained versions reference, and fills no snapshot
+  *     cache — this probe MEASURES wall time, retained heap after the
+  *     call and the peak heap during it, and pins one record read per
+  *     retained version;
+  *  3. the million-orphan phases: gc's bounded report and fsck's capped
+  *     orphan preview keep the driver's RETURN bounded.
   *
   * History fabrication goes through the PUBLIC commit API
   * (`DatasetMetadata.store`), not hand-written JSON: v1 is a real
@@ -113,9 +112,8 @@ object StressFsck {
     val pairs = versions.map(v =>
       DatasetMetadata.loadVersion(spark, base, "ds", v).partitions.size.toLong).sum
     println(f"fabricated ${versions.size} retained versions in $tCommits%.1f s; " +
-      s"attribution pairs = $pairs (threshold ${Ktk.DistributedDiffThreshold})")
-    require(pairs > Ktk.DistributedDiffThreshold,
-      s"probe must exceed the distributed threshold: $pairs")
+      s"attribution pairs = $pairs")
+    require(pairs > 2000000L, s"probe must exceed 2M attribution pairs: $pairs")
 
     // isolate the listing cost: the shared input of every audit below
     val fs = DatasetMetadata.fs(spark, base)
@@ -132,70 +130,46 @@ object StressFsck {
     val out = fs.create(new Path(s"$tableDir/$orphan"), true)
     out.write(1); out.close()
 
-    // ---- distributed mode (the default at this width), COLD cache ----
-    DatasetMetadata.invalidateCache(base, "ds")
-    val h0 = retainedHeapMb(); resetPeaks()
-    val reads0 = DatasetMetadata.recordReads.get()
-    val (distRows, tDist) = time { Ktk.fsck(spark, base, "ds").collect() }
-    val distReads = DatasetMetadata.recordReads.get() - reads0
-    val distPeak = peakHeapMb()
-    val h1 = retainedHeapMb()
-    println(f"distributed fsck: $tDist%.1f s, ${distRows.length} fault rows, " +
-      s"retained heap $h0 -> $h1 MB (delta ${h1 - h0}), peak $distPeak MB, " +
-      s"driver record reads $distReads")
-    // the driver never replays snapshots: its record reads are the chain
-    // walk's tiny full-flag probes + ONE estimate snapshot
-    require(distReads <= versions.size + 3,
-      s"distributed fsck read $distReads records on the driver — snapshots leaking back?")
-    // retained footprint = the one estimate snapshot in cache, not 20
-    require(h1 - h0 < 300,
-      s"distributed fsck retained ${h1 - h0} MB — snapshot cache should hold ~1 entry")
+    /** One maintenance call from a COLD snapshot cache: wall time, driver
+      * record reads, retained heap after the call and peak heap during it.
+      */
+    def measured[A](name: String)(f: => A): A = {
+      DatasetMetadata.invalidateCache(base, "ds")
+      val h0 = retainedHeapMb(); resetPeaks()
+      val reads0 = DatasetMetadata.recordReads.get()
+      val (res, t) = time(f)
+      val reads = DatasetMetadata.recordReads.get() - reads0
+      val peak = peakHeapMb()
+      val h1 = retainedHeapMb()
+      println(f"$name: $t%.1f s, driver record reads $reads, " +
+        s"retained heap $h0 -> $h1 MB (delta ${h1 - h0}), peak $peak MB")
+      // one read per retained version, never a per-version chain replay
+      require(reads <= versions.size, s"$name read $reads records for ${versions.size} versions")
+      // the walk fills no snapshot cache: nothing stays behind
+      require(h1 - h0 < 300, s"$name retained ${h1 - h0} MB after returning")
+      res
+    }
 
-    val gotMissing = distRows.filter(_.getString(0) == "missing_data_file")
+    val rows = measured("fsck") { Ktk.fsck(spark, base, "ds").collect() }
+    val gotMissing = rows.filter(_.getString(0) == "missing_data_file")
       .map(_.getString(2)).toSeq.sorted
-    val gotOrphan = distRows.filter(_.getString(0) == "orphan_file")
+    val gotOrphan = rows.filter(_.getString(0) == "orphan_file")
       .map(_.getString(2)).toSeq
     require(gotMissing == victims, s"missing_data_file rows: $gotMissing")
     require(gotOrphan == Seq(orphan), s"orphan_file rows: $gotOrphan")
-    require(distRows.length == 3, s"exactly the 3 planted faults: ${distRows.length}")
+    require(rows.length == 3, s"exactly the 3 planted faults: ${rows.length}")
 
-    // ---- driver mode at the same width (A/B): rows must be identical ----
-    DatasetMetadata.invalidateCache(base, "ds")
-    val h2 = retainedHeapMb(); resetPeaks()
-    val (drvRows, tDrv) = time {
-      Ktk.fsck(spark, base, "ds", diffThreshold = Int.MaxValue).collect()
+    // gc's dry run must flag the planted orphan and NOTHING else (the two
+    // vanished victims are a storage fault, fsck's jurisdiction, not
+    // garbage)
+    val gcRep = measured("gc dry-run") {
+      Ktk.garbageCollect(spark, base, "ds", retainVersions = 25,
+        sidecarGraceMs = 0, dryRun = true)
     }
-    val drvPeak = peakHeapMb()
-    val h3 = retainedHeapMb()
-    println(f"driver-mode fsck:  $tDrv%.1f s, ${drvRows.length} fault rows, " +
-      s"retained heap $h2 -> $h3 MB (delta ${h3 - h2}), peak $drvPeak MB")
-    require(drvRows.map(_.toString).toSeq == distRows.map(_.toString).toSeq,
-      "driver and distributed modes must emit identical ordered reports")
+    require(gcRep.size == 1 && gcRep.head.endsWith(orphan), s"gc dry-run: $gcRep")
 
-    // ---- deep history served from the record scan (r12 directive #2):
-    // at this width DESCRIBE HISTORY must NOT replay snapshots through the
-    // driver cache — record reads stay at chain probes + ONE estimate
-    // snapshot, and the rows match the driver walk exactly
-    DatasetMetadata.invalidateCache(base, "ds")
-    val hReads0 = DatasetMetadata.recordReads.get()
-    val h6 = retainedHeapMb()
-    val (histDist, tHist) = time { Ktk.history(spark, base, "ds").collect() }
-    val histReads = DatasetMetadata.recordReads.get() - hReads0
-    val h7 = retainedHeapMb()
-    println(f"distributed history: $tHist%.1f s, ${histDist.length} rows, " +
-      s"driver record reads $histReads, retained heap $h6 -> $h7 MB (delta ${h7 - h6})")
-    require(Ktk.lastAuditDistributed.get(), "history should auto-pick the scan here")
-    require(histReads <= versions.size + 3,
-      s"distributed history read $histReads records on the driver — snapshots leaking?")
-    require(h7 - h6 < 300,
-      s"distributed history retained ${h7 - h6} MB — snapshot cache should hold ~1 entry")
-    DatasetMetadata.invalidateCache(base, "ds")
-    val (histDrv, tHistDrv) = time {
-      Ktk.history(spark, base, "ds", diffThreshold = Int.MaxValue).collect()
-    }
-    println(f"driver-mode history: $tHistDrv%.1f s, ${histDrv.length} rows")
-    require(histDist.map(_.toString).toSeq == histDrv.map(_.toString).toSeq,
-      "driver and distributed history must emit identical ordered rows")
+    val hist = measured("history") { Ktk.history(spark, base, "ds").collect() }
+    require(hist.length == versions.size, s"history rows: ${hist.length}")
 
     // salvage dry-run audits the CURRENT snapshot only (120k pairs):
     // exactly the two vanished labels, no commit
@@ -204,17 +178,6 @@ object StressFsck {
     println(f"salvage dry-run:   $tSalv%.1f s, ${rep.size} rows")
     require(rep.map(_._2).sorted == victims, s"salvage dry-run: $rep")
     require(DatasetMetadata.load(spark, base, "ds").version == v0, "dryRun committed!")
-
-    // gc shares the record-scan engine: at this width its referenced set
-    // never materializes on the driver either — the dry-run must flag the
-    // planted orphan and NOTHING else (the two vanished victims are a
-    // storage fault, fsck's jurisdiction, not garbage)
-    val (gcRep, tGc) = time {
-      Ktk.garbageCollect(spark, base, "ds", retainVersions = 25,
-        sidecarGraceMs = 0, dryRun = true)
-    }
-    println(f"gc dry-run (distributed): $tGc%.1f s, ${gcRep.size} rows")
-    require(gcRep.size == 1 && gcRep.head.endsWith(orphan), s"gc dry-run: $gcRep")
 
     // ---- million-orphan reap through the BOUNDED report path ----
     // the r12 "what's wrong" #1: the Seq-returning gc API is O(orphans)
@@ -255,8 +218,7 @@ object StressFsck {
     require(h5 - h4 < 300,
       s"bounded gc report retained ${h5 - h4} MB — orphan names leaking to the driver?")
     // fsck's orphan preview is capped the same way: 1000 sorted rows + an
-    // overflow row carrying the full count, bounded driver in distributed
-    // mode at 1M orphans
+    // overflow row carrying the full count at 1M orphans
     spark.conf.set("spark.graft.fsck.orphanLimit", "1000")
     DatasetMetadata.invalidateCache(base, "ds")
     val h8 = retainedHeapMb()
