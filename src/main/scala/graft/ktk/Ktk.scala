@@ -250,42 +250,16 @@ object Ktk extends org.apache.spark.internal.Logging {
   val BloomMaxItems: Long = 10000000L
   val BloomFpp: Double = 0.01
 
-  /** Highest parquet-fragment count across all registered sidecars (index /
-    * bloom / zone). Append-only streaming commits add one fragment set per
-    * batch; this is the signal for re-canonicalization. O(sidecar dirs)
-    * flat listings — never touches the table dir.
+  /** Highest part-file count across all registered sidecars (index /
+    * bloom / zone): each appending commit adds one, and the commit that
+    * finds [[Sidecars.MaxFragments]] folds the dir, so this never passes
+    * it. O(sidecar dirs) flat listings — never touches the table dir.
     */
   def sidecarFragments(spark: SparkSession, base: String, uuid: String): Int = {
     val md = DatasetMetadata.load(spark, base, uuid)
     val fsys = DatasetMetadata.fs(spark, base)
-    Sidecars.kinds.flatMap(k => k.registry(md).keys.map(k.path(base, md, _))).map { p =>
-      val dir = new Path(p)
-      if (!fsys.exists(dir)) 0
-      else fsys.listStatus(dir).count { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    }.maxOption.getOrElse(0)
-  }
-
-  /** Re-canonicalize ONLY the sidecars: each index/bloom/zone sidecar is
-    * merged back to one canonical file set (semi-join against live labels,
-    * single rewrite). No data files move, metadata is unchanged — O(sidecar)
-    * cost, so a streaming sink can afford it on a fragment-count trigger
-    * independent of full [[compact]] cadence.
-    */
-  def canonicalizeSidecars(spark: SparkSession, base: String, uuid: String): Unit = {
-    val md0 = DatasetMetadata.load(spark, base, uuid)
-    val md = Sidecars.migrateInlineZones(spark, base, md0)
-    val merged = Sidecars.merge(spark, base, md, newLabels = Set.empty)
-    // canonical rewrites landed in fresh version-addressed dirs — the
-    // registries naming them (plus any inline-zone migration) must COMMIT;
-    // one put covers all. No-op canonicalizations commit nothing.
-    if ((merged ne md) || (md ne md0)) {
-      DatasetMetadata.store(spark, base, merged, parentMd = Some(md0),
-        operation = "CANONICALIZE SIDECARS")
-      ()
-    }
+    Sidecars.kinds.flatMap(k => k.registry(md).keys.map(k.path(base, md, _)))
+      .flatMap(p => Sidecars.partFiles(fsys, new Path(p))).maxOption.getOrElse(0)
   }
 
   /** Register + compute zone maps on an EXISTING dataset (retrofit analog of
@@ -812,8 +786,16 @@ object Ktk extends org.apache.spark.internal.Logging {
   }
 
   private[graft] def dirtyDeleteLabels(
-      spark: SparkSession, base: String, md: DatasetMetadata): Set[String] = {
-    val frags = md.deleteFragments
+      spark: SparkSession, base: String, md: DatasetMetadata): Set[String] =
+    deleteFragmentLabels(spark, base, md, md.deleteFragments)
+
+  /** The labels `frags` (deletion-vector fragments of `md`'s dataset)
+    * touch, from each fragment's `_labels.json` manifest through a per-path
+    * cache — no Spark job. A fragment written before manifests existed
+    * pays one distinct-label job, once.
+    */
+  private def deleteFragmentLabels(spark: SparkSession, base: String, md: DatasetMetadata,
+      frags: Seq[String]): Set[String] = {
     if (frags.isEmpty) return Set.empty
     val fsys = DatasetMetadata.fs(spark, base)
     frags.flatMap { name =>
@@ -1014,20 +996,17 @@ object Ktk extends org.apache.spark.internal.Logging {
     to - last
   }
 
-  /** Fragment-count ceiling: past it, a delete/merge commit folds ALL
-    * fragments (old ∪ new) into ONE canonical fragment in the same commit
-    * — a sidecar-only rewrite of O(live tombstones), no data movement —
-    * so a long run of small deletes cannot make every read union an
-    * unbounded fragment list (the deletion-vector twin of
-    * `maxSidecarFragments`). Rows for labels no longer referenced are
-    * dropped while folding.
+  /** The deletion-vector fragments to commit: `withNew` while it holds at
+    * most [[Sidecars.MaxFragments]]; past that bound the commit folds ALL
+    * fragments (old ∪ new) into ONE canonical fragment — a rewrite of
+    * O(live tombstones), no data movement — so a long run of small deletes
+    * cannot make every read union an unbounded fragment list. Rows for
+    * labels no longer referenced are dropped while folding.
     */
-  val MaxDeleteFragments = 64
-
   private def fragmentsToCommit(
       spark: SparkSession, base: String, md: DatasetMetadata,
-      withNew: Seq[String], cap: Int): Seq[String] = {
-    if (withNew.size <= cap) return withNew
+      withNew: Seq[String]): Seq[String] = {
+    if (withNew.size <= Sidecars.MaxFragments) return withNew
     import spark.implicits._
     val dv = spark.read.schema(DvSchema)
       .parquet(withNew.map(md.deletePath(base, _)): _*)
@@ -1063,8 +1042,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       base: String,
       uuid: String,
       predicates: Predicates = Predicates.empty,
-      filterQuery: Option[String] = None,
-      maxFragments: Int = MaxDeleteFragments): (DatasetMetadata, Long) = {
+      filterQuery: Option[String] = None): (DatasetMetadata, Long) = {
     require(predicates.isEmpty ^ filterQuery.isEmpty,
       "deleteRows takes exactly one of predicates / filterQuery")
     val md = DatasetMetadata.load(spark, base, uuid)
@@ -1079,7 +1057,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       case None => (md, 0L)
       case Some((name, n)) =>
         val md1 = md.copy(deletes = fragmentsToCommit(spark, base, md,
-          md.deleteFragments :+ name, maxFragments))
+          md.deleteFragments :+ name))
         (DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
       operation = "DELETE"), n)
     }
@@ -1109,7 +1087,6 @@ object Ktk extends org.apache.spark.internal.Logging {
       set: Map[String, Column],
       predicates: Predicates = Predicates.empty,
       filterQuery: Option[String] = None,
-      maxFragments: Int = MaxDeleteFragments,
       conditionCol: Option[Column] = None): (DatasetMetadata, Long) = {
     require(set.nonEmpty, "updateRows requires at least one SET column")
     require(Seq(!predicates.isEmpty, filterQuery.nonEmpty, conditionCol.nonEmpty)
@@ -1165,10 +1142,10 @@ object Ktk extends org.apache.spark.internal.Logging {
       val finalSeq = finalPartitions.keys.map { l =>
         l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
       }.toMap
-      val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions), newLabels)
+      val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions), newLabels)
       val md1 = merged.copy(partitionSeq = finalSeq,
         deletes = fragmentsToCommit(spark, base, md,
-          md.deleteFragments ++ fragment.map(_._1), maxFragments),
+          md.deleteFragments ++ fragment.map(_._1)),
         metadata = md.metadata +
           (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
       (DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
@@ -1403,11 +1380,11 @@ object Ktk extends org.apache.spark.internal.Logging {
     val finalSeq = finalPartitions.keys.map { l =>
       l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
     }.toMap
-    val merged = Sidecars.merge(spark, base,
+    val merged = Sidecars.merge(spark, base, md,
       md.copy(partitions = finalPartitions, schemaJson = evolvedSchema.json), newLabels)
     val md1 = merged.copy(partitionSeq = finalSeq,
       deletes = fragmentsToCommit(spark, base, md,
-        md.deleteFragments ++ fragment.map(_._1), MaxDeleteFragments),
+        md.deleteFragments ++ fragment.map(_._1)),
       metadata = md.metadata ++ extraMetadata +
         (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
     (DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
@@ -1494,9 +1471,11 @@ object Ktk extends org.apache.spark.internal.Logging {
           if (mdP.deleteFragments.isEmpty) dvNew
           else dvNew.join(readFrags(mdP.deleteFragments), Seq("label", "pos"), "left_anti")
         val dv = fresh.select(col("label").as("__dvl"), col("pos").as("__dvp"))
+        // the manifests' labels, no job: a fold commit's manifest may name
+        // labels of old tombstones too, which the (label, pos) join drops
         val files = SnapshotScan.sized(mdP,
-          dv.select("__dvl").distinct().collect().map(_.getString(0))
-            .filter(mdP.partitions.keySet.contains).sorted.toSeq)
+          deleteFragmentLabels(spark, base, mdV, newFrags)
+            .filter(mdP.partitions.keySet.contains).toSeq.sorted)
         (dv, files)
       }.filter(_._2.nonEmpty)
       CdfVersionPlan(v,
@@ -1948,7 +1927,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     val finalSeq = finalPartitions.keys.map { l =>
       l -> newSeqOf.getOrElse(l, md.seqOf(l))
     }.toMap
-    val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions),
+    val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions),
       newLabels = newSeqOf.keySet.toSet)
     val md1 = merged.copy(partitionSeq = finalSeq,
       // fragments covering only the rewritten files drop; with a scope,
@@ -2178,12 +2157,10 @@ object Ktk extends org.apache.spark.internal.Logging {
       val finalSeq = finalPartitions.keys.map { l =>
         l -> (if (newLabels.contains(l)) nextSeq else parent.seqOf(l))
       }.toMap
-      // a commit that drops no label appends the batch's sidecar rows as
-      // one more fragment — O(batch); one that drops labels merges
-      // canonically, so the dead labels' rows leave the sidecars
-      val merged = Sidecars.merge(spark, base,
-        parent.copy(partitions = finalPartitions, schemaJson = evolvedNow.json),
-        newLabels, appendOnly = dropped.isEmpty)
+      // the batch's sidecar rows append as one more fragment — O(batch) —
+      // unless `dropped` or a full dir makes the commit fold (Sidecars.merge)
+      val merged = Sidecars.merge(spark, base, parent,
+        parent.copy(partitions = finalPartitions, schemaJson = evolvedNow.json), newLabels)
       val sortMeta =
         if (sortBy.isEmpty) Map.empty[String, String]
         else Map(DatasetMetadata.SortByKey -> sortBy.mkString(","))
@@ -2383,7 +2360,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       l -> newSeqOf.getOrElse(l, md.seqOf(l))
     }.toMap
 
-    val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions),
+    val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions),
       newLabels = newSeqOf.keySet.toSet)
     val md1 = merged.copy(partitionSeq = finalSeq,
       // victims' deleted rows were materialized away during the rewrite
@@ -2617,7 +2594,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     val registrable = if (untouched.isEmpty) columns.filterNot(zones.contains) else Nil
     val mdZ = Sidecars.Zone.withRegistry(md,
       zones ++ registrable.map(c => c -> newSidecarName(c)))
-    val merged = Sidecars.merge(spark, base, mdZ.copy(partitions = finalPartitions),
+    val merged = Sidecars.merge(spark, base, md, mdZ.copy(partitions = finalPartitions),
       newLabels = newSeqOf.keySet.toSet)
     val md1 = merged.copy(partitionSeq = finalSeq,
       // the rewritten files had their deletion vectors applied; fragments
@@ -2742,7 +2719,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     }.toMap
     // sidecars merge exactly like [[update]]: the first commit after
     // [[createEmpty]] finds no sidecar file and builds from its labels
-    val merged = Sidecars.merge(spark, base, md.copy(partitions = finalPartitions),
+    val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions),
       newLabels = newLabels.toSet)
     val md1 = merged.copy(partitionSeq = finalSeq,
       metadata = md.metadata + (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
@@ -3359,9 +3336,10 @@ object Ktk extends org.apache.spark.internal.Logging {
   /** One-call table maintenance (the OPTIMIZE entry point a scheduler
     * runs): [[compact]] small files (which also drains deletion vectors
     * for its victims and re-canonicalizes appended sidecar fragments),
-    * [[materializeDeletes]] for any remaining tombstoned files,
-    * [[canonicalizeSidecars]] if fragments still exceed the cap, then
-    * optionally [[garbageCollect]] with the given retention. Each step is
+    * [[materializeDeletes]] for any remaining tombstoned files, then
+    * optionally [[garbageCollect]] with the given retention. Sidecar
+    * fragments need no step of their own: every commit keeps them under
+    * [[Sidecars.MaxFragments]]. Each step is
     * its own atomic commit; a crash between steps leaves a smaller,
     * still-consistent dataset.
     */
@@ -3371,20 +3349,15 @@ object Ktk extends org.apache.spark.internal.Logging {
       uuid: String,
       smallFileBytes: Long = 32L * 1024 * 1024,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      maxSidecarFragments: Int = 64,
       gcRetainVersions: Int = -1,
       scope: Predicates = Predicates.empty,
       // maintenance jobs are exactly where a lagging CDC consumer gets
       // stranded — the floor applies to the optimize-embedded gc too
       consumerCheckpoints: Seq[String] = Nil): DatasetMetadata = {
-    // the scope flows into the rewrite stages; sidecar canonicalization
-    // and gc stay global (they are metadata/file reaping, not rewrites)
+    // the scope flows into the rewrite stages; gc stays global (it is
+    // file reaping, not a rewrite)
     compact(spark, base, uuid, smallFileBytes, targetFileBytes, scope = scope)
     var md = materializeDeletes(spark, base, uuid, targetFileBytes, scope = scope)
-    if (sidecarFragments(spark, base, uuid) > maxSidecarFragments) {
-      canonicalizeSidecars(spark, base, uuid)
-      md = DatasetMetadata.load(spark, base, uuid)
-    }
     if (gcRetainVersions >= 0) {
       // the report form, not the Seq API: optimize discards the names, so
       // a scheduler-driven pass after a compaction storm must not build a
@@ -3422,7 +3395,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     * it — in that window the dir is an in-flight commit, not garbage.
     * Reaping it would leave the about-to-commit registry pointing at a
     * missing path (probes degrade to no-pruning; loadIndex throws until
-    * the next canonicalize). Tests that need immediate reclamation pass 0
+    * the next fold). Tests that need immediate reclamation pass 0
     * — with the documented caveat that 0 is only safe when no writer is
     * concurrently committing.
     *

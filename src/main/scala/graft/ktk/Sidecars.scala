@@ -27,11 +27,28 @@ import graft.core.{PredLiteral, PredOp, Predicates}
   */
 private[graft] object Sidecars {
 
-  /** Canonical sidecar rewrites bound their output to this many files so
-    * the streaming fragment cap converges (a canonical result wider than
-    * the cap would re-trigger every commit).
+  /** The one fragment bound, fixed: a sidecar dir holds at most this many
+    * part files and a snapshot at most this many deletion-vector fragments.
+    * The commit that would pass it folds them, inside that same commit
+    * ([[Kind.merge]], `Ktk.fragmentsToCommit`) — the LSM / Delta-checkpoint
+    * rule that keeps probe fan-in flat however long an append run lasts.
+    */
+  val MaxFragments = 64
+
+  /** Canonical sidecar rewrites bound their output to this many files, far
+    * under [[MaxFragments]], so a fold buys many appends before the next.
     */
   val CanonicalFiles = 4
+
+  /** Part files in the sidecar dir `dir`, from one listing; None when the
+    * dir is absent.
+    */
+  def partFiles(fsys: org.apache.hadoop.fs.FileSystem, dir: Path): Option[Int] =
+    try Some(fsys.listStatus(dir).count { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    })
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Fresh per-label rows ("units") of each requested column, plus the
     * release of whatever the kind cached to serve them.
@@ -61,7 +78,8 @@ private[graft] object Sidecars {
     protected def keep(old: DataFrame, survivors: DataFrame): DataFrame =
       old.join(survivors, Seq("label"), "left_semi")
 
-    /** Units → sidecar rows: `outFiles` 0 for build and append, > 0 for a
+    /** Units → sidecar rows: `outFiles` 0 for a build, 1 for an appended
+      * fragment (one part file, no extra shuffle), [[CanonicalFiles]] for a
       * canonical rewrite; per-label rows only bound the file count.
       */
     protected def layout(units: DataFrame, outFiles: Int): DataFrame =
@@ -101,43 +119,49 @@ private[graft] object Sidecars {
     }
 
     /** Incremental merge (≙ update_indices, io_components/write.py:283-309)
-      * into `md`, the snapshot about to commit: its labels are the
-      * survivors plus `newLabels`, its registries still the parent's.
+      * of `parent`'s sidecars into `md`, the snapshot about to commit: its
+      * labels are the survivors plus `newLabels`, its registries still the
+      * parent's. The whole fragment policy lives here, per column:
       *
-      * `appendOnly` (a commit that drops no label): the new labels' rows
-      * become one more fragment — extra part files — of the current dir,
-      * O(batch) per commit. Otherwise surviving labels keep their rows (a
-      * broadcast semi-join, never an inlined In-list), new labels get fresh
-      * ones, and the result lands canonical in a fresh version-addressed
-      * dir, which folds every fragment. So a dir only ever GAINS rows, and
-      * only rows of labels committed after it was written (or of a commit
-      * that lost its race): an older snapshot sharing the dir sees rows of
-      * labels it does not reference, which every probe intersects away,
-      * and never loses a row of its own. A registered sidecar whose file
-      * is gone is rebuilt from survivors ∪ new labels — merging into
-      * nothing would leave the survivors uncovered, which every probe
-      * reads as "cannot match". Returns the registry to commit.
+      *  - APPEND when every parent label survives and the dir holds fewer
+      *    than [[MaxFragments]] part files: the new labels' rows become one
+      *    more part file of the current dir, O(batch) per commit.
+      *  - FOLD otherwise (the commit drops a label, or the dir is full):
+      *    surviving labels keep their rows (a broadcast semi-join, never an
+      *    inlined In-list), new labels get fresh ones, and the result lands
+      *    canonical in a fresh version-addressed dir of [[CanonicalFiles]].
+      *
+      * So a dir never passes [[MaxFragments]] part files, and only ever
+      * GAINS rows — only rows of labels committed after it was written (or
+      * of a commit that lost its race): an older snapshot sharing the dir
+      * sees rows of labels it does not reference, which every probe
+      * intersects away, and never loses a row of its own. A registered
+      * sidecar whose dir is gone is rebuilt from survivors ∪ new labels —
+      * merging into nothing would leave the survivors uncovered, which
+      * every probe reads as "cannot match". One listing per column decides
+      * both presence and fullness. Returns the registry to commit.
       */
-    def merge(spark: SparkSession, base: String, md: DatasetMetadata,
-        newLabels: Set[String], appendOnly: Boolean): Map[String, String] = {
+    def merge(spark: SparkSession, base: String, parent: DatasetMetadata,
+        md: DatasetMetadata, newLabels: Set[String]): Map[String, String] = {
       import spark.implicits._
       val reg = registry(md)
       val cols = reg.keys.toSeq.sorted
       val fsys = DatasetMetadata.fs(spark, base)
       val (added, survivors) = md.partitions.keys.toSeq.sorted.partition(newLabels)
-      val present = cols.filter(c => fsys.exists(new Path(path(base, md, c)))).toSet
-      def source(c: String): Seq[String] = if (present(c)) added else survivors ++ added
+      val dropsLabel = !parent.partitions.keySet.subsetOf(survivors.toSet)
+      val parts = cols.map(c => c -> partFiles(fsys, new Path(path(base, md, c)))).toMap
+      def source(c: String): Seq[String] = if (parts(c).isDefined) added else survivors ++ added
       val freshBy: Map[Seq[String], Fresh] = cols.groupBy(source).collect {
         case (labels, cs) if labels.nonEmpty => labels -> fresh(spark, base, md, labels, cs)
       }
       try cols.map { c =>
         val add = freshBy.get(source(c)).map(_.units(c))
-        if (appendOnly && present(c)) {
-          add.foreach(units => appendFragment(spark, base, md, c, layout(units, 0)))
+        if (!dropsLabel && parts(c).exists(_ < MaxFragments)) {
+          add.foreach(units => appendFragment(spark, base, md, c, layout(units, 1)))
           c -> reg(c)
         } else {
           val old =
-            if (!present(c)) None
+            if (parts(c).isEmpty) None
             else Some(keep(SidecarRows.frame(spark, new Path(path(base, md, c))),
               broadcast(survivors.toDF("label"))))
           (old ++ add).reduceOption(_ unionByName _) match {
@@ -188,7 +212,7 @@ private[graft] object Sidecars {
   /** Secondary index `(value, partitions: array<string>)` — the Spark-native
     * form of ExplicitSecondaryIndex storage (core/index.py:899-955). Rows
     * are value-sorted, so the probe's value filter prunes row groups. One
-    * row per value after a canonical write; append-only commits may spread
+    * row per value after a canonical write; appended fragments may spread
     * a value over several rows — readers take the union.
     */
   case object Index extends Kind("indices", "missing_index", "index", "ADD INDEX") {
@@ -212,7 +236,7 @@ private[graft] object Sidecars {
         .where(col("value").isNotNull) // nulls are not indexable (core/index.py:83-86)
         .groupBy("value")
         .agg(sort_array(collect_set(col("label"))).as("partitions"))
-      (if (outFiles > 0) agg.repartition(outFiles, col("value")) else agg)
+      (if (outFiles > 1) agg.repartition(outFiles, col("value")) else super.layout(agg, outFiles))
         .sortWithinPartitions("value")
     }
 
@@ -515,13 +539,13 @@ private[graft] object Sidecars {
   }
 
   /** Merge every kind (see [[Kind.merge]]); `md` is the snapshot about to
-    * commit, still carrying the parent's registries. Returns `md` with the
-    * registries to commit.
+    * commit on top of `parent`, still carrying the parent's registries.
+    * Returns `md` with the registries to commit.
     */
-  def merge(spark: SparkSession, base: String, md: DatasetMetadata,
-      newLabels: Set[String], appendOnly: Boolean = false): DatasetMetadata =
+  def merge(spark: SparkSession, base: String, parent: DatasetMetadata, md: DatasetMetadata,
+      newLabels: Set[String]): DatasetMetadata =
     kinds.foldLeft(md) { (acc, k) =>
-      val reg = k.merge(spark, base, md, newLabels, appendOnly)
+      val reg = k.merge(spark, base, parent, md, newLabels)
       if (reg == k.registry(acc)) acc else k.withRegistry(acc, reg)
     }
 

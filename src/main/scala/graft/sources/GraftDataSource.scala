@@ -42,6 +42,12 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.StreamSinkProvider {
   override def shortName(): String = "graft"
 
+  /** Every option [[createSink]] reads, lower-cased, plus the query's own
+    * `checkpointLocation`; any other is refused rather than ignored.
+    */
+  private val SinkOptions = Set("path", "uuid", "keys", "opcol", "deleteop", "versioncol",
+    "sortby", "compactevery", "evolveschema", "checkpointlocation")
+
   /** `df.writeStream.format("graft").option("uuid", u).start(base)` — the
     * streaming write surface ([[graft.streaming.GraftSink]]). GraftTable
     * does not declare STREAMING_WRITE, so `DataStreamWriter` falls back to
@@ -59,6 +65,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     val params = parameters.map { case (k, v) =>
       k.toLowerCase(java.util.Locale.ROOT) -> v
     }
+    val unknown = (params.keySet -- SinkOptions).toSeq.sorted
+    require(unknown.isEmpty, s"graft sink does not take option(s) ${unknown.mkString(", ")}; " +
+      s"it takes ${SinkOptions.toSeq.sorted.mkString(", ")}. Fragment folding has no option: " +
+      s"each commit folds sidecar and deletion-vector fragments at the fixed bound of ${Sidecars.MaxFragments}")
     val base = params.getOrElse("path",
       throw new IllegalArgumentException("graft sink requires .start(<base path>)"))
     val uuid = params.getOrElse("uuid",
@@ -80,7 +90,6 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       versionCol = params.get("versioncol").filter(_.nonEmpty),
       sortBy = csv("sortby"),
       compactEvery = params.get("compactevery").map(_.toInt).getOrElse(0),
-      maxSidecarFragments = params.get("maxsidecarfragments").map(_.toInt).getOrElse(64),
       evolveSchema = params.get("evolveschema").exists(_.toBoolean))
   }
 

@@ -38,9 +38,12 @@ import org.apache.spark.sql.streaming.OutputMode
   * commits — normal after consumer downtime — cannot resurrect deleted
   * keys or duplicate updated ones; without it the batch must carry at most
   * one image per key, e.g. via `maxVersionsPerTrigger=1`),
-  * `sortBy` (comma-separated), `compactEvery`, `maxSidecarFragments`,
-  * `evolveSchema`. Options the chosen output mode cannot honor are
-  * REFUSED, not ignored. The target dataset must already exist
+  * `sortBy` (comma-separated), `compactEvery`, `evolveSchema`, plus
+  * Spark's own `path` and `checkpointLocation`. Options the chosen output
+  * mode cannot honor, and options the sink does not know, are REFUSED,
+  * not ignored. Sidecar and deletion-vector fragments fold inside each
+  * commit at the fixed bound [[graft.ktk.Sidecars.MaxFragments]]; no
+  * option sets it. The target dataset must already exist
   * ([[graft.ktk.Ktk.createEmpty]] / a prior store): schema and partitioning
   * are dataset properties, not per-query choices.
   */
@@ -54,7 +57,6 @@ final class GraftSink(
     versionCol: Option[String],
     sortBy: Seq[String],
     compactEvery: Int,
-    maxSidecarFragments: Int,
     evolveSchema: Boolean) extends Sink {
 
   require(uuid.nonEmpty, "graft sink requires .option(\"uuid\", <dataset>)")
@@ -98,11 +100,10 @@ final class GraftSink(
       // micro-batch so its lineage (which re-reads the source) runs once
       collapsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try KtkSink.commitBatchUpsert(collapsed, base, uuid, batchId, keys,
-        compactEvery, maxSidecarFragments, opCol, evolveSchema, deleteOp)
+        compactEvery, opCol, evolveSchema, deleteOp)
       finally { collapsed.unpersist(); () }
     } else {
-      KtkSink.commitBatch(batch, base, uuid, batchId, sortBy,
-        compactEvery, maxSidecarFragments)
+      KtkSink.commitBatch(batch, base, uuid, batchId, sortBy, compactEvery)
     }
   }
 

@@ -72,16 +72,13 @@ object KtkSink {
     * the file count a long-running stream accumulates stays bounded without
     * an external maintenance job.
     *
-    * `maxSidecarFragments` is the independent safety valve: whenever any
-    * index/bloom/zone sidecar accumulates more than this many fragment
-    * files, [[Ktk.canonicalizeSidecars]] merges the sidecars back to one
-    * canonical file set (O(sidecar), no data-file rewrite) — so sidecar
-    * read fan-in stays bounded even when `compactEvery` is off or its
-    * cadence lags the batch rate.
+    * Sidecar read fan-in stays bounded with `compactEvery` off too: the
+    * batch's own commit folds a sidecar whose dir already holds
+    * [[graft.ktk.Sidecars.MaxFragments]] part files (see
+    * [[graft.ktk.Sidecars.Kind.merge]]), so no second commit is needed.
     */
   def commitBatch(batch: DataFrame, base: String, uuid: String, batchId: Long,
                   sortBy: Seq[String] = Nil, compactEvery: Int = 0,
-                  maxSidecarFragments: Int = 64,
                   extraMetadata: Map[String, String] = Map.empty): Unit = {
     val spark = batch.sparkSession
     val md = DatasetMetadata.load(spark, base, uuid)
@@ -92,7 +89,7 @@ object KtkSink {
       val willCompact = compactEvery > 0 && since >= compactEvery
       // a pure append: [[Ktk.update]] adds the batch's sidecar rows as one
       // more fragment, O(batch) rather than O(index); [[Ktk.compact]] or
-      // the fragment cap below folds the accumulated fragments
+      // the commit that reaches the fragment bound folds them
       Ktk.update(spark, base, uuid, Some(batch), sortBy = sortBy,
         extraMetadata = extraMetadata ++ Map(bk -> batchId.toString,
           SinceCompactKey -> since.toString))
@@ -100,14 +97,8 @@ object KtkSink {
       // compact throws after the batch commit above, `since` stays >= the
       // threshold and the next batch retries the maintenance pass instead
       // of deferring it a full compactEvery cycle.
-      if (willCompact) {
-        Ktk.compact(spark, base, uuid,
-          extraMetadata = Map(SinceCompactKey -> "0"))
-        ()
-      } else if (maxSidecarFragments > 0 &&
-          Ktk.sidecarFragments(spark, base, uuid) > maxSidecarFragments) {
-        Ktk.canonicalizeSidecars(spark, base, uuid)
-      }
+      if (willCompact)
+        Ktk.compact(spark, base, uuid, extraMetadata = Map(SinceCompactKey -> "0"))
     }
   }
 
@@ -148,7 +139,6 @@ object KtkSink {
                          idCol: String, textCol: String, batchId: Long,
                          hashCol: String = "content_hash",
                          sortBy: Seq[String] = Nil, compactEvery: Int = 0,
-                         maxSidecarFragments: Int = 64,
                          fpp: Double = 0.01): Unit = {
     val spark = batch.sparkSession
     val md = DatasetMetadata.load(spark, base, uuid)
@@ -162,8 +152,7 @@ object KtkSink {
     val history = Ktk.readTable(spark, base, uuid, columns = Seq(hashCol))
     val survivors = graft.ops.Dedup.exactAgainstHashes(
       intra, col(s"`$hashCol`"), history, hashCol, fpp)
-    commitBatch(survivors, base, uuid, batchId, sortBy, compactEvery,
-      maxSidecarFragments)
+    commitBatch(survivors, base, uuid, batchId, sortBy, compactEvery)
   }
 
   /** Continuous-ingest NEAR-DEDUPING sink: commit one micro-batch keeping
@@ -211,8 +200,7 @@ object KtkSink {
                              shingleK: Int = 5, numHashes: Int = 128,
                              bands: Int = 32, maxBucket: Int = 100000,
                              sigCol: String = "sig", bandsCol: String = "bands",
-                             sortBy: Seq[String] = Nil, compactEvery: Int = 0,
-                             maxSidecarFragments: Int = 64): Unit = {
+                             sortBy: Seq[String] = Nil, compactEvery: Int = 0): Unit = {
     val spark = batch.sparkSession
     val md = DatasetMetadata.load(spark, base, uuid)
     // replay guard up front: a replayed batch must not even pay the
@@ -260,7 +248,7 @@ object KtkSink {
         batchSigs.select(col("id").as(idCol), col("sig").as(sigCol),
           col("bands").as(bandsCol)), Seq(idCol))
       commitBatch(withSigs, base, uuid, batchId, sortBy, compactEvery,
-        maxSidecarFragments, extraMetadata = Map(NearDedupParamsKey -> tag))
+        extraMetadata = Map(NearDedupParamsKey -> tag))
     } finally { batchSigs.unpersist(blocking = false); () }
   }
 
@@ -281,7 +269,6 @@ object KtkSink {
     */
   def commitBatchUpsert(batch: DataFrame, base: String, uuid: String, batchId: Long,
                         keys: Seq[String], compactEvery: Int = 0,
-                        maxSidecarFragments: Int = 64,
                         opCol: Option[String] = None,
                         evolveSchema: Boolean = false,
                         deleteOp: String = "D"): Unit = {
@@ -300,14 +287,8 @@ object KtkSink {
         case None    => Ktk.merge(spark, base, uuid, batch, keys,
           extraMetadata = meta, evolveSchema = evolveSchema)
       }
-      if (willCompact) {
-        Ktk.compact(spark, base, uuid,
-          extraMetadata = Map(SinceCompactKey -> "0"))
-        ()
-      } else if (maxSidecarFragments > 0 &&
-          Ktk.sidecarFragments(spark, base, uuid) > maxSidecarFragments) {
-        Ktk.canonicalizeSidecars(spark, base, uuid)
-      }
+      if (willCompact)
+        Ktk.compact(spark, base, uuid, extraMetadata = Map(SinceCompactKey -> "0"))
     }
   }
 
@@ -335,13 +316,12 @@ object KtkSink {
   /** Attach the dataset as the sink of a streaming DataFrame. */
   def writeStream(df: DataFrame, base: String, uuid: String, checkpoint: String,
                   trigger: Trigger = Trigger.AvailableNow(),
-                  sortBy: Seq[String] = Nil, compactEvery: Int = 0,
-                  maxSidecarFragments: Int = 64): StreamingQuery =
+                  sortBy: Seq[String] = Nil, compactEvery: Int = 0): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatch(batch, base, uuid, batchId, sortBy, compactEvery, maxSidecarFragments)
+        commitBatch(batch, base, uuid, batchId, sortBy, compactEvery)
       }
       .start()
 
@@ -356,14 +336,13 @@ object KtkSink {
                         trigger: Trigger = Trigger.AvailableNow(),
                         hashCol: String = "content_hash",
                         sortBy: Seq[String] = Nil, compactEvery: Int = 0,
-                        maxSidecarFragments: Int = 64,
                         fpp: Double = 0.01): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         commitBatchDeduped(batch, base, uuid, idCol, textCol, batchId,
-          hashCol, sortBy, compactEvery, maxSidecarFragments, fpp)
+          hashCol, sortBy, compactEvery, fpp)
       }
       .start()
 
@@ -380,15 +359,14 @@ object KtkSink {
                             shingleK: Int = 5, numHashes: Int = 128,
                             bands: Int = 32, maxBucket: Int = 100000,
                             sigCol: String = "sig", bandsCol: String = "bands",
-                            sortBy: Seq[String] = Nil, compactEvery: Int = 0,
-                            maxSidecarFragments: Int = 64): StreamingQuery =
+                            sortBy: Seq[String] = Nil, compactEvery: Int = 0): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         commitBatchNearDeduped(batch, base, uuid, idCol, textCol, batchId,
           threshold, shingleK, numHashes, bands, maxBucket, sigCol, bandsCol,
-          sortBy, compactEvery, maxSidecarFragments)
+          sortBy, compactEvery)
       }
       .start()
 
@@ -403,7 +381,6 @@ object KtkSink {
   def upsertStream(df: DataFrame, base: String, uuid: String, checkpoint: String,
                    keys: Seq[String], trigger: Trigger = Trigger.AvailableNow(),
                    compactEvery: Int = 0,
-                   maxSidecarFragments: Int = 64,
                    opCol: Option[String] = None,
                    deleteOp: String = "D",
                    versionCol: Option[String] = None): StreamingQuery =
@@ -416,7 +393,7 @@ object KtkSink {
           case None    => batch
         }
         commitBatchUpsert(collapsed, base, uuid, batchId, keys, compactEvery,
-          maxSidecarFragments, opCol, deleteOp = deleteOp)
+          opCol, deleteOp = deleteOp)
       }
       .start()
 }

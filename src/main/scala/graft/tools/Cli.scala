@@ -142,8 +142,7 @@ object Cli {
       val md = Ktk.compact(spark, args(1), args(2), scope = scope)
       println(s"compacted to ${md.partitions.size} files (run cleanup to drop the old ones)")
     case "optimize" =>
-      // compact + materialize deletes + canonicalize sidecars (+ gc when a
-      // retention is given)
+      // compact + materialize deletes (+ gc when a retention is given)
       val retain = if (args.length > 3) args(3).toInt else -1
       val md = Ktk.optimize(spark, args(1), args(2), gcRetainVersions = retain)
       println(s"optimized: ${md.partitions.size} files, " +

@@ -300,24 +300,28 @@ class DeleteVectorSpec extends SparkSpec {
 
   test("fragment count stays bounded under many small deletes") {
     val base = tmpDir("dv")
-    val rows = (1L to 40L).map(k => (k, "a", k.toDouble)).toDF("k", "p", "v")
+    val n = Sidecars.MaxFragments + 4L
+    val rows = (1L to n + 10).map(k => (k, "a", k.toDouble)).toDF("k", "p", "v")
     Ktk.store(spark, base, "ds", rows, partitionOn = Seq("p"))
-    // 12 tiny delete commits with a cap of 4: the list folds instead of
-    // growing — reads never union an unbounded fragment set
-    (1L to 12L).foreach { k =>
-      Ktk.deleteRows(spark, base, "ds",
-        predicates = Predicates.of(Seq(("k", "==", k))), maxFragments = 4)
+    // MaxFragments + 4 tiny delete commits: past the bound the list folds
+    // instead of growing — reads never union an unbounded fragment set
+    val folds = (1L to n).flatMap { k =>
+      val before = DatasetMetadata.load(spark, base, "ds").deleteFragments.size
+      val (md, _) = Ktk.deleteRows(spark, base, "ds", predicates = Predicates.of(Seq(("k", "==", k))))
+      md.deleteFragments.size should be <= Sidecars.MaxFragments
+      Option.when(md.deleteFragments.size <= before)(md.version)
     }
-    val md = DatasetMetadata.load(spark, base, "ds")
-    md.deleteFragments.size should be <= 4
+    folds.size shouldBe 1
     Ktk.readTable(spark, base, "ds").select("k").as[Long].collect().sorted.toSeq shouldBe
-      (13L to 40L)
-    // the CDC feed across the fold boundaries never re-emits an old
-    // tombstone: every version reports exactly its own deleted row
-    val feed = Ktk.readChangeFeed(spark, base, "ds", 1)
+      (n + 1 to n + 10)
+    // the CDC feed across the fold boundary never re-emits an old
+    // tombstone: every version reports exactly its own deleted row (the
+    // range starts two plain commits before the fold)
+    val from = folds.head - 3
+    val feed = Ktk.readChangeFeed(spark, base, "ds", from)
       .select("k", "_change_type", "_commit_version")
       .as[(Long, String, Long)].collect().sorted.toSeq
-    feed shouldBe (1L to 12L).map(k => (k, "delete", k + 1))
+    feed shouldBe (from to n).map(k => (k, "delete", k + 1))
   }
 
   test("overlay keep-last reads compose with deletion vectors") {

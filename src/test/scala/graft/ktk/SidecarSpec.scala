@@ -79,7 +79,8 @@ class SidecarSpec extends SparkSpec {
   test("incremental sidecar merges equal a fresh rebuild after every writer step (index, bloom, zone)") {
     val base = tmpDir("sidecar")
     // a commit that drops no label appends a fragment (`Fragment`) to the
-    // current dirs; every other step writes canonical dirs (`Canonical`)
+    // current dirs, an upsert included; every other step writes canonical
+    // dirs (`Canonical`)
     sealed trait Shape
     case object Fragment extends Shape
     case object Canonical extends Shape
@@ -95,9 +96,9 @@ class SidecarSpec extends SparkSpec {
       ("compact", Canonical, () => Ktk.compact(spark, base, "ds")),
       ("update append after compact", Fragment, () =>
         Ktk.update(spark, base, "ds", Some(frame(gen(660, 700))))),
-      ("canonicalizeSidecars", Canonical, { () =>
-        Ktk.canonicalizeSidecars(spark, base, "ds"); DatasetMetadata.load(spark, base, "ds")
-      }))
+      ("merge (upsert)", Fragment, () =>
+        Ktk.merge(spark, base, "ds", frame(gen(700, 730)), keys = Seq("key"))._1),
+      ("compact after merge", Canonical, () => Ktk.compact(spark, base, "ds")))
     var prev: Option[DatasetMetadata] = None
     steps.zipWithIndex.foreach { case ((name, shape, run), i) =>
       val before = prev.map(parts(base, _))
@@ -127,6 +128,57 @@ class SidecarSpec extends SparkSpec {
       }
       prev = Some(md)
     }
+  }
+
+  test("pure appends past MaxFragments keep every sidecar dir within the bound, reads exact") {
+    val base = tmpDir("sidecar")
+    var rows = gen(0, 200)
+    Ktk.store(spark, base, "ds", frame(rows), partitionOn = Seq("p"),
+      secondaryIndices = Seq("key"), zoneMapFor = Seq("z"))
+    val reads = Seq(
+      "point" -> (Predicates.of(Seq(("key", "==", 7L))), (r: R) => r.key == 7L),
+      "range" -> (Predicates.of(Seq(("z", ">=", 3), ("z", "<=", 5))),
+        (r: R) => r.z != null && r.z >= 3 && r.z <= 5),
+      "in-list" -> (Predicates.of(Seq(("key", "in", Seq(1L, 7L, 49L)))),
+        (r: R) => Set(1L, 7L, 49L)(r.key)))
+    def exact(step: Int): Unit = reads.foreach { case (name, (preds, keep)) =>
+      withClue(s"$name read after append $step: ") {
+        Ktk.readTable(spark, base, "ds", predicates = preds)
+          .select("payload").as[String].collect().sorted.toSeq shouldBe
+          rows.filter(keep).map(_.payload).sorted
+      }
+    }
+    def names(md: DatasetMetadata): Map[String, String] =
+      Sidecars.kinds.flatMap(k => k.registry(md).map { case (c, n) => s"${k.noun}:$c" -> n }).toMap
+    var md = DatasetMetadata.load(spark, base, "ds")
+    val folds = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    // every dir starts with at least one part file, so it reaches the
+    // bound, and folds exactly once, within MaxFragments + 1 appends
+    (1 to Sidecars.MaxFragments + 1).foreach { i =>
+      // one label per batch: every commit is a pure append
+      val batch = gen(200 + 4 * i, 204 + 4 * i).map(_.copy(p = i % 4))
+      val (before, prevNames) = (parts(base, md), names(md))
+      md = Ktk.update(spark, base, "ds", Some(batch.toDF().coalesce(1)))
+      rows ++= batch
+      val now = parts(base, md)
+      withClue(s"after append $i: ") {
+        now.keySet shouldBe Set("index:key", "zone-map:z")
+        now.foreach { case (sc, n) =>
+          n should be <= Sidecars.MaxFragments
+          if (names(md)(sc) == prevNames(sc)) n shouldBe before(sc) + 1
+          else {
+            // the commit that found a full dir folded it, and only then
+            before(sc) shouldBe Sidecars.MaxFragments
+            n should be <= Sidecars.CanonicalFiles
+            folds(sc) += 1
+          }
+        }
+        if (names(md) != prevNames) exact(i)
+      }
+    }
+    folds.toMap shouldBe Map("index:key" -> 1, "zone-map:z" -> 1)
+    exact(Sidecars.MaxFragments + 1)
+    contents(base, md) shouldBe rebuilt(base, md, 0)
   }
 
   private def deleteSidecarDirs(base: String): Unit = {

@@ -335,8 +335,9 @@ class VersioningSpec extends SparkSpec {
       predicates = Predicates.of(Seq(("id", "==", 999999L))))
     shared.count() shouldBe 0
     shared.inputFiles shouldBe empty
-    // later canonical merges rewrite the sidecars — into NEW nonce dirs
-    Ktk.canonicalizeSidecars(spark, base, "ds")
+    // later canonical merges (a compaction drops labels, so it folds)
+    // rewrite the sidecars — into NEW nonce dirs
+    Ktk.compact(spark, base, "ds")
     val v1md = DatasetMetadata.loadVersion(spark, base, "ds", v1)
     val curMd = DatasetMetadata.load(spark, base, "ds")
     curMd.bloomRegistry("id") should not be v1md.bloomRegistry("id")

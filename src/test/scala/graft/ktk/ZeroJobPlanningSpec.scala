@@ -117,6 +117,26 @@ class ZeroJobPlanningSpec extends SparkSpec {
     }
   }
 
+  test("change-feed planning over deletion-vector commits starts no Spark job") {
+    val b = tmpDir("zerojob-cdf")
+    Ktk.store(spark, b, "ds", Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0),
+      (4L, "b", 40.0), (5L, "a", 50.0), (6L, "b", 60.0)).toDF("k", "p", "v"),
+      partitionOn = Seq("p")) // v1
+    (1L to 5L).foreach { k => // v2..v6
+      Ktk.deleteRows(spark, b, "ds", predicates = Predicates.of(Seq(("k", "==", k))))
+    }
+    Ktk.merge(spark, b, "ds",
+      Seq((6L, "b", 66.0), (9L, "c", 90.0)).toDF("k", "p", "v"), keys = Seq("k")) // v7
+    DatasetMetadata.invalidateCache(b, "ds")
+    val (feed, n) = jobs(Ktk.readChangeFeed(spark, b, "ds", 1))
+    n shouldBe 0
+    // each delete reports exactly its tombstoned row; the merge its
+    // matched delete plus the batch's inserts
+    feed.select("k", "_change_type", "_commit_version").as[(Long, String, Long)]
+      .collect().sorted.toSeq shouldBe (1L to 5L).map(k => (k, "delete", k + 1)) ++
+      Seq((6L, "delete", 7L), (6L, "insert", 7L), (9L, "insert", 7L))
+  }
+
   test("a pure append starts a pinned number of jobs, none reading an existing sidecar") {
     val b = wide("zerojob-append")
     val sidecarDirs = Sidecars.kinds.map(k => new org.apache.hadoop.fs.Path(s"$b/ds/${k.dir}"))

@@ -284,4 +284,19 @@ class GraftSinkSpec extends SparkSpec {
     }
     e3.getMessage should include("partition")
   }
+
+  test("refusals: a fragment-cap option names the fixed bound") {
+    val base = tmpDir("gsink-frag")
+    Ktk.createEmpty(spark, base, "s5", schema, partitionOn = Seq("p"))
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Int, Long, String)]
+    mem.addData((0, 1L, "a"))
+    val e = intercept[IllegalArgumentException] {
+      mem.toDF().toDF("p", "k", "v").writeStream.format("graft").option("uuid", "s5")
+        .option("checkpointLocation", tmpDir("ck5")).option("maxSidecarFragments", "6")
+        .trigger(Trigger.AvailableNow()).start(base).awaitTermination()
+    }
+    e.getMessage should (include("maxsidecarfragments") and
+      include(s"fixed bound of ${graft.ktk.Sidecars.MaxFragments}"))
+  }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ktk.{DatasetMetadata, Ktk}
+import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -94,18 +95,38 @@ class KtkSinkSpec extends SparkSpec {
       .groupBy("value").count().filter($"count" > 1).count() shouldBe 0
   }
 
-  test("maxSidecarFragments re-canonicalizes sidecars independent of compactEvery") {
+  test("fragment bound re-canonicalizes sidecars independent of compactEvery") {
     val base = tmpDir("ktksink5")
     Ktk.createEmpty(spark, base, "frag", schema,
       secondaryIndices = Seq("v"), bloomFor = Seq("k"), zoneMapFor = Seq("k"))
-    // compactEvery off; the fragment cap alone must bound sidecar fan-in
-    (0 to 9).foreach { b =>
+    def commit(b: Int): Unit = {
       val batch = Seq.tabulate(4)(i => (0, b * 100L + i, s"v$b-$i")).toDF("p", "k", "v")
-      KtkSink.commitBatch(batch, base, "frag", batchId = b,
-        compactEvery = 0, maxSidecarFragments = 6)
-      // over-cap commits canonicalize back to <= Sidecars.CanonicalFiles, so
-      // the observable post-commit count never exceeds the cap
-      Ktk.sidecarFragments(spark, base, "frag") should be <= 6
+      KtkSink.commitBatch(batch, base, "frag", batchId = b, compactEvery = 0)
+    }
+    commit(0)
+    // fill every sidecar dir to the bound: copies of its part file stand in
+    // for the appends of earlier batches (duplicate rows are harmless —
+    // probes take the union of a dir's rows)
+    val md0 = DatasetMetadata.load(spark, base, "frag")
+    val fs = DatasetMetadata.fs(spark, base)
+    Sidecars.kinds.foreach(k => k.registry(md0).keys.foreach { c =>
+      val dir = new Path(k.path(base, md0, c))
+      val part = fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-")).head
+      (Sidecars.partFiles(fs, dir).get until Sidecars.MaxFragments).foreach { j =>
+        FileUtil.copy(fs, part, fs, new Path(dir, s"part-fill-$j.parquet"), false,
+          spark.sparkContext.hadoopConfiguration)
+      }
+    })
+    Ktk.sidecarFragments(spark, base, "frag") shouldBe Sidecars.MaxFragments
+    // compactEvery off; the fragment bound alone must bound sidecar fan-in
+    (1 to 9).foreach { b =>
+      val v = DatasetMetadata.load(spark, base, "frag").version
+      commit(b)
+      // the batch's own commit folds a full dir: one commit per batch, and
+      // the observable post-commit count never exceeds the bound
+      DatasetMetadata.load(spark, base, "frag").version shouldBe v + 1
+      Ktk.sidecarFragments(spark, base, "frag") should be <= Sidecars.MaxFragments
+      if (b == 1) Ktk.sidecarFragments(spark, base, "frag") should be <= Sidecars.CanonicalFiles
     }
     // reads stay exact over canonicalized sidecars
     Ktk.readTable(spark, base, "frag").count() shouldBe 40

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Predicates
-import graft.ktk.{DatasetMetadata, Ktk}
+import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
 
 /** Scale probe for merge-on-read deletion vectors: a large table absorbs a
   * long run of small DELETE and MERGE commits, and the probe measures what
@@ -12,8 +12,10 @@ import graft.ktk.{DatasetMetadata, Ktk}
   *
   *  1. commit cost stays O(batch) — a delete touching 1k rows must not
   *     scale with the 2M-row table or the accumulated tombstone count;
-  *  2. the fragment list stays BOUNDED (MaxDeleteFragments folding), so
-  *     read planning never unions an unbounded fragment set;
+  *  2. the fragment list stays BOUNDED: the run crosses
+  *     [[graft.ktk.Sidecars.MaxFragments]], and the commit that would pass
+  *     it folds the list, so read planning never unions an unbounded
+  *     fragment set;
   *  3. the merge-on-read read tax is confined to dirty files — a read
   *     over the untouched partition costs the same as before any delete —
   *     and materializeDeletes returns the whole table to clean-scan cost.
@@ -52,15 +54,18 @@ object StressDeleteVectors {
     val (_, tCleanBefore) = time(readCleanSide())
     val (_, tAllBefore) = time(readAll())
 
-    // 40 small delete commits (1k rows each) + 10 small merges, all in p=0
-    val deleteTimes = (0 until 40).map { i =>
+    // nDeletes small delete commits (1k rows each) + 10 small merges, all
+    // in p=0 — together past the fragment bound, so at least one folds
+    val nDeletes = Sidecars.MaxFragments - 4
+    val mergeFrom = nDeletes * 8000L + 80000L
+    val deleteTimes = (0 until nDeletes).map { i =>
       val lo = i * 8000L
       val (_, t) = time(Ktk.deleteRows(spark, base, "big",
         filterQuery = Some(s"p = 0 AND k >= $lo AND k < ${lo + 8000}")))
       t
     }
     val mergeTimes = (0 until 10).map { i =>
-      val src = spark.range(400000L + i * 800, 400000L + i * 800 + 800)
+      val src = spark.range(mergeFrom + i * 800, mergeFrom + i * 800 + 800)
         .toDF("k").withColumn("p", lit(0L)).withColumn("v", lit(-1L))
       val (_, t) = time(Ktk.merge(spark, base, "big", src, keys = Seq("k")))
       t
@@ -88,11 +93,12 @@ object StressDeleteVectors {
     val (_, tDvClean) = time(connectorRead(split = true)) // no DVs left: plain scan
     val fragsAfter = DatasetMetadata.load(spark, base, "big").deleteFragments.size
 
-    println(f"table rows: $n; live after 40 deletes + 10 merges: $liveCount")
+    println(f"table rows: $n; live after $nDeletes deletes + 10 merges: $liveCount")
     println(f"delete commit sec: first=${deleteTimes.head}%.2f " +
-      f"median=${deleteTimes.sorted.apply(20)}%.2f last=${deleteTimes.last}%.2f")
+      f"median=${deleteTimes.sorted.apply(nDeletes / 2)}%.2f last=${deleteTimes.last}%.2f")
     println(f"merge  commit sec: first=${mergeTimes.head}%.2f last=${mergeTimes.last}%.2f")
-    println(s"fragments after 50 delete-bearing commits: $nFrags (cap ${Ktk.MaxDeleteFragments})")
+    println(s"fragments after ${nDeletes + 10} delete-bearing commits: $nFrags " +
+      s"(bound ${Sidecars.MaxFragments})")
     println(f"read clean partition: before=${tCleanBefore}%.2f after-deletes=${tCleanAfter}%.2f")
     println(f"read all: before=${tAllBefore}%.2f dirty=${tAllDirty}%.2f " +
       f"materialized=${tAllAfter}%.2f (materialize itself ${tMaterialize}%.2f)")
@@ -101,12 +107,12 @@ object StressDeleteVectors {
     println(s"fragments after materialize: $fragsAfter")
 
     // structural assertions — the probe FAILS loudly if the scale story breaks
-    require(nFrags <= Ktk.MaxDeleteFragments,
-      s"fragment list unbounded: $nFrags")
+    require(nFrags < nDeletes + 10 && nFrags <= Sidecars.MaxFragments,
+      s"fragment list did not fold at the bound: $nFrags")
     require(fragsAfter == 0, "materialize left fragments behind")
     // each delete range holds 8000 k-values of which 1/8 have p=0 → 1000
     // rows; merges re-add every row they tombstone (net zero)
-    val expectedLive = n - 40 * 1000
+    val expectedLive = n - nDeletes * 1000
     require(liveCount == expectedLive,
       s"live count wrong: $liveCount vs $expectedLive")
     require(cCombined == expectedLive && cSplit == expectedLive,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Predicates
-import graft.ktk.{DatasetMetadata, Ktk}
+import graft.ktk.{DatasetMetadata, Ktk, Sidecars}
 import graft.streaming.KtkSink
 
 /** Scale probe for streaming-commit sidecar maintenance: a dataset is
@@ -85,17 +85,22 @@ object StressStreamCommit {
       s"${Ktk.readTable(spark, appendBase, "s").count()}")
     require(speedup > 1.5, f"append mode speedup only ${speedup}%.1fx")
 
-    // ---- long run under the fragment cap alone (compactEvery off): sidecar
-    // fragment counts must stay bounded across 40 commits and reads exact
+    // ---- long run under the fixed fragment bound alone (compactEvery off):
+    // sidecar part-file counts must stay within Sidecars.MaxFragments across
+    // enough commits to cross it, with each commit folding in place
     val capBase = seed("fragcap")
     var maxFrag = 0
-    (0 until 40).foreach { b =>
-      KtkSink.commitBatch(batch(100 + b), capBase, "s", batchId = b,
-        compactEvery = 0, maxSidecarFragments = 12)
-      maxFrag = math.max(maxFrag, Ktk.sidecarFragments(spark, capBase, "s"))
+    var folds = 0
+    (0 until Sidecars.MaxFragments + 8).foreach { b =>
+      val before = Ktk.sidecarFragments(spark, capBase, "s")
+      KtkSink.commitBatch(batch(100 + b), capBase, "s", batchId = b, compactEvery = 0)
+      val now = Ktk.sidecarFragments(spark, capBase, "s")
+      if (now < before) folds += 1
+      maxFrag = math.max(maxFrag, now)
     }
-    println(s"fragment cap long run: max post-commit fragments = $maxFrag")
-    require(maxFrag <= 12, s"sidecar fragments unbounded: $maxFrag")
+    println(s"fragment bound long run: max post-commit fragments = $maxFrag, folds = $folds")
+    require(maxFrag <= Sidecars.MaxFragments, s"sidecar fragments unbounded: $maxFrag")
+    require(folds >= 1, "no commit folded a full sidecar dir")
     val capHit = Ktk.readTable(spark, capBase, "s",
       predicates = Predicates.of(Seq(("v", "==", "batch-120-55")))).count()
     require(capHit > 0, "index row lost across canonicalization passes")
