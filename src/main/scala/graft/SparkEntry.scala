@@ -1697,7 +1697,7 @@ object SparkEntry {
       val corpus = e.unionByName(j1).unionByName(jitter(j1, 2000000L))
       val pairs = Similarity.bruteForceNearDupPairs(
         corpus, "vec_id", "embedding", minCosine = 0.9)
-      Similarity.embeddingDedupCCFromPairs(corpus, "vec_id", pairs)
+      Dedup.dedupCCFromPairs(corpus, "vec_id", pairs)
         .select("vec_id").orderBy("vec_id")
     }),
 

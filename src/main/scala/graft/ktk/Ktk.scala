@@ -1461,14 +1461,18 @@ object Ktk extends org.apache.spark.internal.Logging {
       val removed = mdP.partitions.keySet -- mdV.partitions.keySet
       val rewrittenSeqs = added.filter(l => mdV.seqOf(l) <= hwm).map(mdV.seqOf)
       // (a) tombstones this commit added — the fragment IS the row list.
-      // Pairs already dead at the parent are excluded: a fragment-count
-      // canonicalization folds ALL history into one "new" fragment, and
-      // without the anti-join it would re-emit every old delete.
+      // Every fragment writer subtracts the live tombstones, so a commit
+      // that keeps all its parent's fragments adds disjoint pairs. Only a
+      // commit that dropped one (a fold or a pruned rewrite) can re-list
+      // old tombstones in its "new" fragment, so only there are the pairs
+      // already dead at the parent anti-joined away — reading every parent
+      // fragment per commit would cost a parallel-listing job past 32.
       val newFrags = mdV.deleteFragments.filterNot(mdP.deleteFragments.toSet)
+      val droppedParentFrag = !mdP.deleteFragments.forall(mdV.deleteFragments.toSet)
       val dv = Option.when(newFrags.nonEmpty) {
         val dvNew = readFrags(newFrags)
         val fresh =
-          if (mdP.deleteFragments.isEmpty) dvNew
+          if (!droppedParentFrag) dvNew
           else dvNew.join(readFrags(mdP.deleteFragments), Seq("label", "pos"), "left_anti")
         val dv = fresh.select(col("label").as("__dvl"), col("pos").as("__dvp"))
         // the manifests' labels, no job: a fold commit's manifest may name

@@ -67,32 +67,28 @@ object Dedup extends org.apache.spark.internal.Logging {
     won.select(df.columns.map(c => col("__w").getField(c).as(c)).toSeq: _*)
   }
 
-  /** Content-hash exact dedup keeping the BEST row per duplicate group
-    * (highest `score`, ties broken by least id) — the "keep the longest /
-    * highest-quality copy" policy real pipelines prefer over keep-first.
+  /** Content-hash exact dedup keeping the BEST row per duplicate group —
+    * the "keep the longest / highest-quality copy" policy real pipelines
+    * prefer over keep-first. The survivor is the first row of
+    * `ORDER BY score DESC NULLS LAST, id` within its group ([[keepBestKey]],
+    * the ordering every keep-best dedup here shares; a NaN score ranks
+    * first, as Spark orders floats).
     *
-    * Scale shape: only (hash, id, score) triples move, and the argmax is
-    * two map-side-combining aggregations + a join — NOT a window: a giant
-    * dup group (the case dedup exists for) contributes one row per map
-    * partition to each agg instead of funneling all its triples through a
-    * single window-sort task. Full rows never move until the final
-    * semi-join on id.
+    * Scale shape: ONE corpus pass — `max_by` of the full payload by the
+    * keep-best key in a single map-side-combining aggregation, NOT a
+    * window: a giant dup group (the case dedup exists for) contributes one
+    * combined row per map partition instead of funneling through a single
+    * window-sort task. The struct-ordered buffer plans as a SortAggregate
+    * (like [[exact]]'s min(struct)) — a per-partition sort on the
+    * uniformly-distributed hash key, no skew funnel.
     */
   def exactKeepBest(df: DataFrame, idCol: String, textCol: String,
       score: Column): DataFrame = {
-    // ONE corpus pass (r16): max_by the full payload by (score, -id) in a
-    // single map-side-combining aggregation — the two-agg + semi-join
-    // shape this replaces scanned the corpus three times (both slim
-    // branches + the join-back), which is 3x the IO at 100 TB. Same
-    // de-skew property: a giant dup group still contributes one combined
-    // row per map partition. The struct-ordered buffer plans as a
-    // SortAggregate (like [[exact]]'s min(struct)) — a per-partition
-    // sort on the uniformly-distributed hash key, no skew funnel.
     val payload = df.columns.toSeq
     val won = df.groupBy(xxhash64(col(s"`$textCol`")).as("__h"))
       .agg(max_by(
         struct(payload.map(c => col(s"`$c`")): _*),
-        struct(score, col(s"`$idCol`") * lit(-1L))).as("__w"))
+        keepBestKey(Some(score), col(s"`$idCol`"))).as("__w"))
     won.select(payload.map(c => col("__w").getField(c).as(c)): _*)
   }
 
@@ -177,75 +173,55 @@ object Dedup extends org.apache.spark.internal.Logging {
     * boilerplate paragraphs repeat across pages; only the globally-first
     * occurrence survives). Paragraphs = `sep`-delimited segments; identity =
     * xxhash64 of the lowercased whitespace-collapsed segment; first = least
-    * (idCol, position). Documents are rebuilt in original paragraph order;
-    * whitespace-only segments always survive (they carry layout, not
-    * content). Returns (idCol, textCol) with the deduped text.
-    *
-    * Scale shape: a map-side-combining groupBy over the 8-byte paragraph
-    * hash picks winners (one row per distinct hash per map partition
-    * shuffles), the winners semi-join back on (id, pos) — a uniformly
-    * distributed key — and one regroup by id reassembles. No stage keys on
-    * a hot paragraph hash, no driver-side state.
+    * (idCol, position), idCol integral. Documents are rebuilt in original
+    * paragraph order; whitespace-only segments always survive (they carry
+    * layout, not content); docs reduced to nothing drop out. Returns
+    * (idCol, textCol) with the deduped text. [[paragraphDedupKeepBest]]
+    * with no score: the same plan, the same ordering key.
     */
   def paragraphDedup(df: DataFrame, idCol: String, textCol: String,
-      sep: String = "\n"): DataFrame = {
-    val paras = df.select(col(idCol),
-        posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
-          .as(Seq("__pos", "__para")))
-    val norm = lower(regexp_replace(trim(col("__para")), "\\s+", " "))
-    val isBlank = length(norm) === 0
-    // First-occurrence via partial-aggregating groupBy, NOT a window: a
-    // window partitioned by the paragraph hash funnels every occurrence of a
-    // hot paragraph ("Home", cookie banners) into ONE sort task. The groupBy
-    // min(struct(id,pos)) combines map-side — one row per distinct hash per
-    // map partition shuffles — and the winners join back on (id, pos), a
-    // uniformly distributed key, so no stage in the plan keys on the hot
-    // hash at all. Blank segments (null hash) survive unconditionally.
-    val withH = paras.withColumn("__h",
-      when(isBlank, lit(null)).otherwise(xxhash64(norm)))
-    val firsts = withH.filter(col("__h").isNotNull)
-      .groupBy("__h")
-      .agg(min(struct(col(idCol).as("__fid"), col("__pos").as("__fpos"))).as("__f"))
-      .select(col("__f.__fid").as(idCol), col("__f.__fpos").as("__pos"))
-    val keptNonBlank = withH.filter(col("__h").isNotNull)
-      .join(firsts, Seq(idCol, "__pos"), "left_semi")
-    withH.filter(col("__h").isNull).unionByName(keptNonBlank)
-      .groupBy(col(idCol))
-      .agg(array_sort(collect_list(struct(col("__pos"), col("__para")))).as("__arr"))
-      .select(col(idCol),
-        concat_ws(sep, transform(col("__arr"), x => x.getField("__para"))).as(textCol))
-  }
+      sep: String = "\n"): DataFrame =
+    paragraphSurvivors(df, idCol, textCol, None, sep)
 
   /** Quality-aware cross-document paragraph dedup: of all occurrences of a
-    * normalized paragraph, the one in the highest-`scoreCol` document
-    * survives (ties → least (id, pos)) — the paragraph-level twin of
-    * [[exactKeepBest]], for pipelines that score documents before deduping
-    * and want boilerplate attributed to its best home rather than its
-    * earliest. Whitespace-only segments always survive; docs reduced to
-    * nothing drop out. Returns (idCol, textCol).
-    *
-    * Scale shape: identical to [[paragraphDedup]] — winners are picked by a
-    * map-side-combining `groupBy(hash).agg(min(struct(-score, id, pos)))`
-    * (one row per distinct hash per map partition shuffles), joined back on
-    * the uniformly distributed (id, pos) key; no stage keys on a hot
-    * paragraph hash.
+    * normalized paragraph, the first of `ORDER BY score DESC NULLS LAST,
+    * id, pos` survives ([[keepBestKey]]; a NaN score ranks first) — the
+    * paragraph-level twin of [[exactKeepBest]], for pipelines that score
+    * documents before deduping and want boilerplate attributed to its best
+    * home rather than its earliest. Whitespace-only segments always
+    * survive; docs reduced to nothing drop out. Returns (idCol, textCol).
     */
   def paragraphDedupKeepBest(df: DataFrame, idCol: String, textCol: String,
-      scoreCol: String, sep: String = "\n"): DataFrame = {
-    val paras = df.select(col(idCol), col(scoreCol).cast("double").as("__score"),
+      scoreCol: String, sep: String = "\n"): DataFrame =
+    paragraphSurvivors(df, idCol, textCol, Some(col(scoreCol).cast("double")), sep)
+
+  /** The body of [[paragraphDedup]] and [[paragraphDedupKeepBest]].
+    *
+    * Scale shape: winners are picked by a map-side-combining
+    * `groupBy(hash).agg(max_by((id, pos), keepBestKey))`, NOT a window: a
+    * window partitioned by the paragraph hash funnels every occurrence of
+    * a hot paragraph ("Home", cookie banners) into ONE sort task, while
+    * the partial aggregate shuffles one row per distinct hash per map
+    * partition. The winners semi-join back on (id, pos) — a uniformly
+    * distributed key — and one regroup by id reassembles, so no stage keys
+    * on a hot paragraph hash and there is no driver-side state.
+    */
+  private def paragraphSurvivors(df: DataFrame, idCol: String, textCol: String,
+      score: Option[Column], sep: String): DataFrame = {
+    val paras = df.select((col(idCol) +: score.map(_.as("__score")).toSeq :+
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
-          .as(Seq("__pos", "__para")))
+          .as(Seq("__pos", "__para"))): _*)
     val norm = lower(regexp_replace(trim(col("__para")), "\\s+", " "))
+    // blank segments get a null hash and survive unconditionally
     val withH = paras.withColumn("__h",
       when(length(norm) === 0, lit(null)).otherwise(xxhash64(norm)))
-    // min over (-score, id, pos): highest score wins, ties to least (id,pos)
-    val best = withH.filter(col("__h").isNotNull)
+    val winners = withH.filter(col("__h").isNotNull)
       .groupBy("__h")
-      .agg(min(struct((-col("__score")).as("__ns"),
-        col(idCol).as("__bid"), col("__pos").as("__bpos"))).as("__b"))
-      .select(col("__b.__bid").as(idCol), col("__b.__bpos").as("__pos"))
+      .agg(max_by(struct(col(idCol).as("__wid"), col("__pos").as("__wpos")),
+        keepBestKey(score.map(_ => col("__score")), col(idCol), col("__pos"))).as("__w"))
+      .select(col("__w.__wid").as(idCol), col("__w.__wpos").as("__pos"))
     val keptNonBlank = withH.filter(col("__h").isNotNull)
-      .join(best, Seq(idCol, "__pos"), "left_semi")
+      .join(winners, Seq(idCol, "__pos"), "left_semi")
     withH.filter(col("__h").isNull).unionByName(keptNonBlank)
       .groupBy(col(idCol))
       .agg(array_sort(collect_list(struct(col("__pos"), col("__para")))).as("__arr"))
@@ -612,10 +588,9 @@ object Dedup extends org.apache.spark.internal.Logging {
     * recall (unstamped/foreign tables pass; the caller owns the contract).
     *
     * Broadcast bound: the batch side ships `batch × bands` (band, bucket)
-    * keys to every executor. Below
-    * `spark.graft.dedup.broadcastKeyLimit` (default 4M keys ≈ 64 MB —
-    * sized like [[exactAgainstHistory]]'s fpp-bound residue) the keys ride
-    * a broadcast hint and the history scan stays map-side; PAST the limit
+    * keys to every executor. Below [[BroadcastKeyLimit]] (4M keys ≈ 64 MB
+    * — sized like [[exactAgainstHistory]]'s fpp-bound residue) the keys
+    * ride a broadcast hint and the history scan stays map-side; PAST it
     * the hints drop and the (band, bucket) semi-join shuffles instead —
     * the history side is still candidate-pruned, just not map-side, and
     * no multi-GB broadcast can OOM the driver/executors at FineWeb-sized
@@ -654,17 +629,17 @@ object Dedup extends org.apache.spark.internal.Logging {
       broadcastIfUnderBudget(matched, batchItems, bands), Seq(idCol), "left_anti")
   }
 
-  /** Broadcast hint iff `items × bands` fits the
-    * `spark.graft.dedup.broadcastKeyLimit` key budget (see
-    * [[minhashAgainstHistory]]'s broadcast-bound scaladoc); identity
-    * above it — the join shuffles, which is the survivable shape at scale.
+  /** The (band, bucket) key budget of the history probe's broadcasts (see
+    * [[minhashAgainstHistory]]'s broadcast-bound scaladoc). */
+  private val BroadcastKeyLimit = 4000000L
+
+  /** Broadcast hint iff `items × bands` fits [[BroadcastKeyLimit]];
+    * identity above it — the join shuffles, which is the survivable shape
+    * at scale.
     */
   private def broadcastIfUnderBudget(
-      d: DataFrame, items: Long, bands: Int): DataFrame = {
-    val keyBudget = d.sparkSession.conf
-      .get("spark.graft.dedup.broadcastKeyLimit", "4000000").toLong
-    if (items * bands.toLong <= keyBudget) broadcast(d) else d
-  }
+      d: DataFrame, items: Long, bands: Int): DataFrame =
+    if (items * bands.toLong <= BroadcastKeyLimit) broadcast(d) else d
 
   /** The probe core of [[minhashAgainstHistory]]: BATCH ids (column `id`)
     * whose signature overlaps something in `historySigs` at >= `threshold`.
@@ -770,19 +745,16 @@ object Dedup extends org.apache.spark.internal.Logging {
     // execution, where the shared signature exchange is planned as a
     // ReusedExchange (see [[starSigFrame]])
     val sigs = starSigFrame(df, idCol, textCol, shingleK, numHashes, bands)
-    val losers = verifiedStarEdges(sigs, threshold)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
+    df.join(starLoserIds(sigs, threshold).select(col("id").as(idCol)),
+      Seq(idCol), "left_anti")
   }
 
   /** MinHash near-dedup with full transitive closure: verified star edges
-    * feed GraphX connected components, and each component keeps its minimum
-    * id. Unlike the single-pass greedy in [[minhashDedup]], a chain A~B~C
-    * collapses to {A} even when A and C never share a bucket. CC is the
-    * reference algorithm for corpus-scale dedup (cf. the dedup pipelines in
-    * public LLM-data literature); GraphX's implementation is iterative
-    * Pregel — bounded by the component diameter, which is tiny for dup
-    * clusters.
+    * go through [[connectedComponentsOf]], and [[survivors]] keeps each
+    * component's minimum id. Unlike the single-pass greedy in
+    * [[minhashDedup]], a chain A~B~C collapses to {A} even when A and C
+    * never share a bucket. CC is the reference algorithm for corpus-scale
+    * dedup (cf. the dedup pipelines in public LLM-data literature).
     */
   def minhashDedupCC(
       df: DataFrame,
@@ -791,13 +763,9 @@ object Dedup extends org.apache.spark.internal.Logging {
       threshold: Double = 0.8,
       shingleK: Int = 5,
       numHashes: Int = 128,
-      bands: Int = 32): DataFrame = {
-    val components = componentsFor(df, idCol, textCol, threshold, shingleK, numHashes, bands)
-    // losers: vertices whose component representative (min id) is not itself
-    val losers = components.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      bands: Int = 32): DataFrame =
+    survivors(df, idCol,
+      componentsFor(df, idCol, textCol, threshold, shingleK, numHashes, bands), None)
 
   /** Signatures → star edges → GraphX components, with the signature frame
     * persisted ONLY across the eager Pregel phase. GraphX consumes the
@@ -828,9 +796,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     * than the corpus (only members of multi-document duplicate groups
     * appear), while GraphX Pregel costs ~1.5-2 s of fixed scheduling at
     * any size (graph build + per-iteration jobs over every partition).
-    * When the edge list fits the driver budget
-    * (`spark.graft.dedup.localCcEdgeLimit`, default 250k edges ≈ 4 MB of
-    * longs), it is collected from a call-scoped cache and solved with a
+    * When the edge list fits the driver budget ([[LocalCcEdgeLimit]],
+    * 250k edges ≈ 4 MB of longs; `localEdgeBudget` overrides it so a test
+    * can force either path), it is collected from a call-scoped cache and
+    * solved with a
     * path-compressing union-find; the result returns as a LOCAL RELATION
     * sized under the auto-broadcast threshold, so every downstream
     * component join broadcasts instead of shuffling. Over budget, the
@@ -842,11 +811,10 @@ object Dedup extends org.apache.spark.internal.Logging {
     * badly at 2M). Identical output either way — OpsSpec pins
     * local-vs-GraphX equality on a planted component fixture.
     */
-  private[ops] def connectedComponentsOf(verified: DataFrame): DataFrame = {
+  private[ops] def connectedComponentsOf(verified: DataFrame,
+      localEdgeBudget: Long = LocalCcEdgeLimit): DataFrame = {
     val spark = verified.sparkSession
     import spark.implicits._
-    val budget = spark.conf.getOption("spark.graft.dedup.localCcEdgeLimit")
-      .map(_.toLong).getOrElse(250000L)
     // scoped cache: the edge list is evaluated ONCE at full parallelism
     // (a limit+collect probe instead would executeTake in low-parallelism
     // waves — measured slower than GraphX); both the size probe and
@@ -858,7 +826,7 @@ object Dedup extends org.apache.spark.internal.Logging {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = pairs.count()
-      if (n <= budget) {
+      if (n <= localEdgeBudget) {
         val head = pairs.as[(Long, Long)].collect()
         // driver union-find, roots kept at the MIN id of each class
         // (uniting always links the larger root under the smaller), with
@@ -905,17 +873,16 @@ object Dedup extends org.apache.spark.internal.Logging {
     } finally { pairs.unpersist(blocking = false); () }
   }
 
+  /** The edge budget under which [[connectedComponentsOf]] solves on the
+    * driver. */
+  private val LocalCcEdgeLimit = 250000L
+
   /** [[minhashDedupCC]] with a quality-aware keep policy: each duplicate
-    * component keeps its HIGHEST-`score` member (ties → least id) instead of
-    * the least id. This is how production corpus dedup actually picks
-    * survivors — keep the longest / highest-quality copy of a page, not the
-    * one that happened to sort first.
-    *
-    * Scale shape: identical to [[minhashDedupCC]] plus an argmax over
-    * (component, id, score) triples expressed as two map-side-combining
-    * aggregations + a join (same de-skewed shape as [[exactKeepBest]]) —
-    * even a corpus-dominating duplicate component never funnels through a
-    * single window task.
+    * component keeps the first member of `ORDER BY score DESC NULLS LAST,
+    * id` ([[survivors]]; a NaN score ranks first) instead of the least id.
+    * This is how production corpus dedup actually picks survivors — keep
+    * the longest / highest-quality copy of a page, not the one that
+    * happened to sort first.
     */
   def minhashDedupCCKeepBest(
       df: DataFrame,
@@ -925,25 +892,59 @@ object Dedup extends org.apache.spark.internal.Logging {
       threshold: Double = 0.8,
       shingleK: Int = 5,
       numHashes: Int = 128,
-      bands: Int = 32): DataFrame = {
-    val components = componentsFor(df, idCol, textCol, threshold, shingleK, numHashes, bands)
-    // argmax in ONE aggregation (r16): max_by(id, (score, -id)) per
-    // component — highest score wins, ties to least id — replaces the
-    // two-agg + two-join chain that re-evaluated the scored frame three
-    // times (each evaluation re-scanning df for the score column).
-    // Losers then come from the GraphX-cached component frame, not
-    // another corpus scan. Map-side-combining like every argmax here: a
-    // corpus-dominating dup component contributes one combined row per
-    // map partition.
-    val scored = df.select(col(idCol).cast("long").as("id"), score.as("__s"))
-      .join(components, Seq("id"))
-    val winners = scored.groupBy("component")
-      .agg(max_by(col("id"), struct(col("__s"), col("id") * lit(-1L))).as("__win"))
-    val losers = components.join(winners, Seq("component"))
-      .filter(col("id") =!= col("__win"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
+      bands: Int = 32): DataFrame =
+    survivors(df, idCol,
+      componentsFor(df, idCol, textCol, threshold, shingleK, numHashes, bands), Some(score))
+
+  // -------------------------------------------------------------- survivors
+
+  /** The one keep-best ordering key: `max_by(row, keepBestKey(score, id,
+    * ...))` picks the first row of `ORDER BY score DESC NULLS LAST, id ASC,
+    * ...`. Spark's struct ordering ranks a null field lowest, so a null
+    * score loses to every real one; negated tie columns make the max the
+    * least id (then pos). Spark orders NaN above every float, so a NaN
+    * score ranks first. Tie columns must be integral. `None` orders by the
+    * tie columns alone (keep-first).
+    */
+  private[ops] def keepBestKey(score: Option[Column], ties: Column*): Column =
+    struct(score.toSeq ++ ties.map(_ * lit(-1L)): _*)
+
+  /** The one near-dup survivor step: the rows of `df` that win their
+    * duplicate component. `components` is `(id, component)` from
+    * [[connectedComponentsOf]]; rows outside it are singletons and always
+    * survive. `None` keeps each component's least id (its label);
+    * `Some(score)` keeps the first member of `ORDER BY score DESC NULLS
+    * LAST, id` ([[keepBestKey]]).
+    *
+    * Scale shape: the keep-best argmax is ONE map-side-combining
+    * aggregation over (component, id, score) — a corpus-dominating dup
+    * component contributes one combined row per map partition, never a
+    * window funnel — and the losers come from the component frame, not
+    * another corpus scan.
+    */
+  private[ops] def survivors(df: DataFrame, idCol: String, components: DataFrame,
+      keepBest: Option[Column]): DataFrame = {
+    val losers = keepBest match {
+      case None => components.filter(col("id") =!= col("component"))
+      case Some(score) =>
+        val winners = df.select(col(s"`$idCol`").cast("long").as("id"), score.as("__s"))
+          .join(components, Seq("id"))
+          .groupBy("component")
+          .agg(max_by(col("id"), keepBestKey(Some(col("__s")), col("id"))).as("__win"))
+        components.join(winners, Seq("component")).filter(col("id") =!= col("__win"))
+    }
+    df.join(losers.select(col("id").as(idCol)), Seq(idCol), "left_anti")
   }
+
+  /** Transitive-closure near-dedup over ANY verified `(id_a, id_b)` pair
+    * frame: [[connectedComponentsOf]] then [[survivors]]. The closure tail
+    * of every pair-producing flow (embedding LSH candidates, image and
+    * audio fingerprints, SemDeDup cells, brute-force exact pairs in gates);
+    * rows in no pair always survive.
+    */
+  def dedupCCFromPairs(df: DataFrame, idCol: String, pairs: DataFrame,
+      keepBest: Option[Column] = None): DataFrame =
+    survivors(df, idCol, connectedComponentsOf(pairs), keepBest)
 
   /** The `(id, sig, bands)` frame [[verifiedStarEdges]] consumes. The
     * post-UDF repartition is the no-persist materialization point: both
@@ -1052,11 +1053,24 @@ object Dedup extends org.apache.spark.internal.Logging {
   def simhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000,
-      skippedBuckets: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val shUdf = udf((t: String) => simhash64(t))
-    val hashes = df.select(col(idCol).as("id"), col(textCol).as("__t"))
+      skippedBuckets: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
+    fingerprintCandidates(df, idCol, textCol, udf((t: String) => simhash64(t)),
+      maxHamming, maxBucket, skippedBuckets)
+
+  /** The fingerprint front end of every Hamming-space near-dup flow
+    * (SimHash, image dHash, audio fingerprint): `(id, payload)` spread
+    * across the cluster for the CPU-bound `fingerprint` UDF, rows with no
+    * fingerprint (undecodable blobs) dropped, then [[hamming64Candidates]].
+    */
+  private[ops] def fingerprintCandidates(
+      df: DataFrame, idCol: String, payloadCol: String,
+      fingerprint: org.apache.spark.sql.expressions.UserDefinedFunction,
+      maxHamming: Int, maxBucket: Int,
+      skippedBuckets: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
+    val hashes = df.select(col(idCol).as("id"), col(s"`$payloadCol`").as("__p"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col("id"), shUdf(col("__t")).as("sh"))
+      .select(col("id"), fingerprint(col("__p")).as("sh"))
+      .filter(col("sh").isNotNull)
     hamming64Candidates(hashes, maxHamming, maxBucket, skippedBuckets)
   }
 

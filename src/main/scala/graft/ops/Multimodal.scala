@@ -384,28 +384,9 @@ object Multimodal {
   def nearDupImagePairs(
       df: DataFrame, idCol: String, binCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000,
-      skippedBuckets: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val hUdf = udf((b: Array[Byte]) => imageDHash(b))
-    val hashes = df.select(col(idCol).as("id"), col(s"`$binCol`").as("__b"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col("id"), hUdf(col("__b")).as("sh"))
-      .filter(col("sh").isNotNull)
-    Dedup.hamming64Candidates(hashes, maxHamming, maxBucket, skippedBuckets)
-  }
-
-  /** Shared transitive-closure survivor selection: drop every id whose
-    * connected component (over the verified pair edges) has a smaller
-    * member. Components are tiny; Pregel rounds bound by their diameter.
-    */
-  private def dropCcLosers(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    // shared adaptive CC kernel (r16): duplicate-graph-sized edge lists
-    // solve on the driver, past-budget ones through GraphX — see
-    // Dedup.connectedComponentsOf
-    val losers = Dedup.connectedComponentsOf(pairs)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      skippedBuckets: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
+    Dedup.fingerprintCandidates(df, idCol, binCol, udf((b: Array[Byte]) => imageDHash(b)),
+      maxHamming, maxBucket, skippedBuckets)
 
   /** 64-bit audio fingerprint over a REAL WAV decode (the Haitsma–Kalker
     * energy-difference family, collapsed to the time axis): decode 16-bit
@@ -473,28 +454,23 @@ object Multimodal {
   def nearDupAudioPairs(
       df: DataFrame, idCol: String, binCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000,
-      skippedBuckets: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val hUdf = udf((b: Array[Byte]) => audioFingerprint(b))
-    val hashes = df.select(col(idCol).as("id"), col(s"`$binCol`").as("__b"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col("id"), hUdf(col("__b")).as("sh"))
-      .filter(col("sh").isNotNull)
-    Dedup.hamming64Candidates(hashes, maxHamming, maxBucket, skippedBuckets)
-  }
+      skippedBuckets: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
+    Dedup.fingerprintCandidates(df, idCol, binCol, udf((b: Array[Byte]) => audioFingerprint(b)),
+      maxHamming, maxBucket, skippedBuckets)
 
   def dedupAudioNearDup(
       df: DataFrame, idCol: String, binCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
-    dropCcLosers(df, idCol, nearDupAudioPairs(df, idCol, binCol, maxHamming, maxBucket))
+    Dedup.dedupCCFromPairs(df, idCol, nearDupAudioPairs(df, idCol, binCol, maxHamming, maxBucket))
 
   /** Drop near-duplicate images, keeping each duplicate cluster's least id
-    * (transitive closure over verified pairs — the same GraphX CC shape as
-    * `Dedup.minhashDedupCC`; components are tiny, Pregel rounds are
-    * bounded by their diameter). Undecodable blobs are always KEPT —
-    * "could not decode" must never silently discard data.
+    * (transitive closure over verified pairs — [[Dedup.dedupCCFromPairs]],
+    * the closure and survivor step of every near-dup flow). Undecodable
+    * blobs are always KEPT — "could not decode" must never silently
+    * discard data.
     */
   def dedupImagesNearDup(
       df: DataFrame, idCol: String, binCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
-    dropCcLosers(df, idCol, nearDupImagePairs(df, idCol, binCol, maxHamming, maxBucket))
+    Dedup.dedupCCFromPairs(df, idCol, nearDupImagePairs(df, idCol, binCol, maxHamming, maxBucket))
 }

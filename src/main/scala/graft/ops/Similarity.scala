@@ -253,17 +253,17 @@ object Similarity {
     * published method's key property — and the trained quantizer can be
     * persisted and shared with IVF search ([[saveIvfIndex]]).
     *
-    * Survivors: least id per duplicate component, or the argmax of
-    * `keepBest` when given (keep the highest-quality copy). Returns the
-    * surviving subset of `corpus`, all columns.
+    * Survivors: least id per duplicate component, or with `keepBest` the
+    * first member of `ORDER BY score DESC NULLS LAST, id` (keep the
+    * highest-quality copy; a NaN score ranks first). Returns the surviving
+    * subset of `corpus`, all columns.
     *
     * Scale shape: the quantizer trains on a driver-side sample (tiny,
     * reusable); cell assignment is a NARROW map over closure-broadcast
     * centroids (no crossJoin, no shuffle); within-cell pairs run through
     * the same capped collect-per-bucket kernel as every other quadratic
-    * here (oversized cells counted + skipped); the closure is GraphX
-    * Pregel, bounded by component diameter; keep-best is two map-side
-    * partial aggs + a semi-join — never a window over a hot component.
+    * here (oversized cells counted + skipped); closure and survivors are
+    * [[Dedup.dedupCCFromPairs]], shared with every near-dup flow.
     */
   def semanticDedup(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -286,27 +286,9 @@ object Similarity {
         explode(nearestCidsUdf(ivf.centroids, 1)(col(s"`$vecCol`"))))
       .select(col(s"`$idCol`").cast("long").as("id"), col(s"`$vecCol`").as("v"),
         col("__bucket"))
-    val components = Dedup.connectedComponentsOf(
-      withinBucketPairs(celled, maxCell, skippedCells)
-        .filter(col("cos") >= minCosine))
-    keepBest match {
-      case None =>
-        val losers = components.filter(col("id") =!= col("component"))
-          .select(col("id").as(idCol))
-        corpus.join(losers, Seq(idCol), "left_anti")
-      case Some(score) =>
-        // argmax via partial agg: min over (-score, id) per component —
-        // one row per component per map partition shuffles
-        val scored = corpus.select(col(s"`$idCol`").cast("long").as("id"),
-          score.cast("double").as("__s"))
-        val winners = components.join(scored, "id")
-          .groupBy("component")
-          .agg(min(struct((-col("__s")).as("__neg"), col("id").as("__wid"))).as("__w"))
-          .select(col("__w.__wid").as("id"))
-        val losers = components.join(winners, Seq("id"), "left_anti")
-          .select(col("id").as(idCol))
-        corpus.join(losers, Seq(idCol), "left_anti")
-    }
+    Dedup.dedupCCFromPairs(corpus, idCol,
+      withinBucketPairs(celled, maxCell, skippedCells).filter(col("cos") >= minCosine),
+      keepBest)
   }
 
   /** Nearest-centroid topic-cell assignment: adds `outCol` (int cell id in
@@ -357,29 +339,16 @@ object Similarity {
   }
 
   /** Embedding near-dup FULL dedup with transitive closure: candidate edges
-    * above `minCosine` feed GraphX connected components, each cluster keeps
-    * its minimum id — the embedding analog of [[Dedup.minhashDedupCC]].
-    * A chain A~B~C collapses to {A} even when A and C share no bucket.
+    * above `minCosine` go through [[Dedup.dedupCCFromPairs]], each cluster
+    * keeps its minimum id — the embedding analog of
+    * [[Dedup.minhashDedupCC]]. A chain A~B~C collapses to {A} even when A
+    * and C share no bucket.
     */
   def embeddingDedupCC(
       corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, minCosine: Double, bits: Int = 10, maxBucket: Int = 1000): DataFrame =
-    embeddingDedupCCFromPairs(corpus, idCol,
+    Dedup.dedupCCFromPairs(corpus, idCol,
       embeddingNearDupCandidates(corpus, idCol, vecCol, dim, minCosine, bits, maxBucket))
-
-  /** The transitive-closure keep-min-id dedup over ANY caller-supplied
-    * `(id_a, id_b)` pair frame — the LSH candidates in production
-    * ([[embeddingDedupCC]]), the brute-force exact twin in gates. GraphX
-    * connected components, survivors = every row not dominated by a
-    * smaller id in its component (isolated rows always survive).
-    */
-  def embeddingDedupCCFromPairs(
-      corpus: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = Dedup.connectedComponentsOf(pairs)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    corpus.join(losers, Seq(idCol), "left_anti")
-  }
 
   /** IVF coarse-quantizer index: k-means centroids, built ONCE over a
     * corpus and reused across queries (the production pattern — centroids

@@ -171,8 +171,9 @@ object KtkSink {
     *     banded broadcast-pruned history probe of
     *     [[graft.ops.Dedup.minhashAgainstHistory]] — ONE narrow
     *     column-pruned scan of history signatures per batch, history text
-    *     never re-read, history never shuffled below the broadcast key
-    *     budget (`spark.graft.dedup.broadcastKeyLimit`);
+    *     never re-read, history never shuffled below the probe's fixed
+    *     broadcast key budget (4M (band, bucket) keys, sized by the
+    *     batch's row count);
     *  3. admitted rows land through [[commitBatch]] CARRYING their
     *     signature columns, so the commit that admits a document
     *     atomically extends the near-dup history — and the batch-id

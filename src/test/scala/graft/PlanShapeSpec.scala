@@ -185,7 +185,7 @@ class PlanShapeSpec extends SparkSpec {
     val plan = Dedup.paragraphDedup(docs, "id", "text")
       .queryExecution.executedPlan.toString
     plan should not include "Window"
-    plan should include("partial_min")
+    plan should include("partial_max_by")
     plan should include regex "(?i)leftsemi"
   }
 
@@ -196,7 +196,7 @@ class PlanShapeSpec extends SparkSpec {
     val plan = Dedup.paragraphDedupKeepBest(docs, "id", "text", "score")
       .queryExecution.executedPlan.toString
     plan should not include "Window"
-    plan should include("partial_min")
+    plan should include("partial_max_by")
     plan should include regex "(?i)leftsemi"
   }
 

@@ -25,4 +25,21 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
   }
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Jobs started while `f` runs, counted after the listener bus drained. */
+  def jobs[A](f: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

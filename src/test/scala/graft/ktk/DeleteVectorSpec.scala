@@ -322,6 +322,17 @@ class DeleteVectorSpec extends SparkSpec {
       .select("k", "_change_type", "_commit_version")
       .as[(Long, String, Long)].collect().sorted.toSeq
     feed shouldBe (from to n).map(k => (k, "delete", k + 1))
+    // a plain delete's fragment is disjoint from its parent's (the writer
+    // subtracts live tombstones), so feed planning reads only the new
+    // fragments: over 10 non-fold commits whose parents hold 39..48
+    // fragments — past Spark's 32-path parallel-listing threshold — it
+    // starts no job
+    folds.head should be > 50L
+    DatasetMetadata.invalidateCache(base, "ds")
+    val (wide, planJobs) = jobs(Ktk.readChangeFeed(spark, base, "ds", 40L, 50L))
+    planJobs shouldBe 0
+    wide.select("k", "_change_type", "_commit_version").as[(Long, String, Long)]
+      .collect().sorted.toSeq shouldBe (40L until 50L).map(k => (k, "delete", k + 1))
   }
 
   test("overlay keep-last reads compose with deletion vectors") {

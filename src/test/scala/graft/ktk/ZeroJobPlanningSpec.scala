@@ -1,11 +1,8 @@
 package graft.ktk
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.{PlanWalk, SparkSpec}
 import graft.core.Predicates
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -29,21 +26,6 @@ class ZeroJobPlanningSpec extends SparkSpec {
     Ktk.store(spark, b, "ds", df, partitionOn = Seq("p"), secondaryIndices = Seq("key"),
       zoneMapFor = Seq("z"), bloomFor = Seq("id"))
     b
-  }
-
-  /** Jobs started while `f` runs, counted after the listener bus drained. */
-  private def jobs[A](f: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = f
-      ListenerBusDrain(spark.sparkContext)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   private def labels(preds: Predicates, cold: Boolean): (Seq[String], Int) = {

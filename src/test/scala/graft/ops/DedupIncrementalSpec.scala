@@ -126,7 +126,7 @@ class DedupIncrementalSpec extends SparkSpec {
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // below budget (10 docs × 32 bands = 320 keys << 4M default): the
+      // below budget (10 docs × 32 bands = 320 keys << 4M): the
       // three key-sized sides (bandKeys, keptBuckets, matched) ride their
       // broadcast hints; the ONE sort-merge is the signature-verification
       // join against batchBanded, which is unhinted BY DESIGN (batch sigs
@@ -141,18 +141,17 @@ class DedupIncrementalSpec extends SparkSpec {
       countOf(underPlan, "BroadcastHashJoin") shouldBe 4
       countOf(underPlan, "SortMergeJoin") shouldBe 1
       under.select("doc_id").as[Long].collect().sorted.toSeq shouldBe (2000L until 2005L)
-      // above budget: hints drop, the (band, bucket) semi-join shuffles —
-      // the shape that survives a 10M-doc batch instead of OOMing on a
-      // multi-GB broadcast
-      conf.set("spark.graft.dedup.broadcastKeyLimit", "1")
-      val over = Dedup.minhashAgainstHistory(batch, "doc_id", "text", sigs, threshold = 0.6)
+      // above budget (a batch sized at 1M docs × 32 bands = 32M keys):
+      // hints drop, the (band, bucket) semi-join shuffles — the shape that
+      // survives a 10M-doc batch instead of OOMing on a multi-GB broadcast
+      val over = Dedup.minhashAgainstHistory(batch, "doc_id", "text", sigs, threshold = 0.6,
+        expectedBatchItems = 1000000L)
       val overPlan = over.queryExecution.executedPlan.toString
       countOf(overPlan, "BroadcastHashJoin") shouldBe 0
       countOf(overPlan, "SortMergeJoin") should be >= 4
       // decisions are identical either way — the budget moves bytes, not answers
       over.select("doc_id").as[Long].collect().sorted.toSeq shouldBe (2000L until 2005L)
     } finally {
-      conf.unset("spark.graft.dedup.broadcastKeyLimit")
       conf.set("spark.sql.adaptive.enabled", savedAqe)
       conf.set("spark.sql.autoBroadcastJoinThreshold", savedAuto)
     }

@@ -20,10 +20,13 @@ class DedupSpec extends SparkSpec {
   }
 
   test("exactKeepBest keeps the highest score per identical text, ties by min id") {
-    val df = Seq(
-      (0L, doc, 5.0), (3L, doc, 9.0),      // group keeps 3 (higher score)
-      (1L, nearDup, 2.0),                  // singleton survives
-      (2L, other, 1.0), (4L, other, 1.0)   // tie → min id 2
+    // first row of ORDER BY score DESC NULLS LAST, id: the null-scored
+    // copy 5 never beats a real score
+    val df = Seq[(Long, String, Option[Double])](
+      (0L, doc, Some(5.0)), (3L, doc, Some(9.0)), // group keeps 3 (higher score)
+      (5L, doc, None),
+      (1L, nearDup, Some(2.0)),                   // singleton survives
+      (2L, other, Some(1.0)), (4L, other, Some(1.0)) // tie → min id 2
     ).toDF("doc_id", "text", "score")
     val out = Dedup.exactKeepBest(df, "doc_id", "text", col("score"))
     out.select("doc_id").as[Long].collect().sorted.toSeq shouldBe Seq(1L, 2L, 3L)
@@ -53,9 +56,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhashDedupCCKeepBest keeps the highest-score member per component") {
-    val df = Seq(
-      (0L, doc, 1.0), (1L, nearDup, 7.0), (3L, doc, 3.0), // one component → 1
-      (2L, other, 0.5)                                    // untouched singleton
+    // the null-scored copy 5 joins the component and ranks last
+    val df = Seq[(Long, String, Option[Double])](
+      (0L, doc, Some(1.0)), (1L, nearDup, Some(7.0)), (3L, doc, Some(3.0)), // one component → 1
+      (5L, doc, None),
+      (2L, other, Some(0.5))                              // untouched singleton
     ).toDF("doc_id", "text", "score")
     val out = Dedup.minhashDedupCCKeepBest(df, "doc_id", "text", col("score"), threshold = 0.6)
     out.select("doc_id").as[Long].collect().sorted.toSeq shouldBe Seq(1L, 2L)
@@ -88,11 +93,8 @@ class DedupSpec extends SparkSpec {
     ).toDF("id_a", "id_b")
     val local = Dedup.connectedComponentsOf(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    spark.conf.set("spark.graft.dedup.localCcEdgeLimit", "1")
-    val viaGraphx =
-      try Dedup.connectedComponentsOf(edges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      finally spark.conf.unset("spark.graft.dedup.localCcEdgeLimit")
+    val viaGraphx = Dedup.connectedComponentsOf(edges, localEdgeBudget = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     local.toSeq shouldBe viaGraphx.toSeq
     local.toMap.apply(20L) shouldBe 4L // transitive min through 5
     local.toMap.apply(10L) shouldBe 10L // cycle keeps its min
@@ -597,8 +599,12 @@ class SimilaritySpec extends SparkSpec {
     out.select("vec_id").as[Long].collect().sorted.toSeq shouldBe
       Seq(10L, 20L, 30L, 40L)
     acc.value shouldBe 0L
-    // keep-best: highest score survives instead of least id
-    val score = when(col("vec_id") === 11L || col("vec_id") === 21L, 9.0).otherwise(1.0)
+    // keep-best: highest score survives instead of least id; the
+    // null-scored least ids 10 and 20 rank last (ORDER BY score DESC
+    // NULLS LAST, id)
+    val score = when(col("vec_id") === 11L || col("vec_id") === 21L, 9.0)
+      .when(col("vec_id") === 10L || col("vec_id") === 20L, lit(null))
+      .otherwise(1.0)
     val best = Similarity.semanticDedup(vecs, "vec_id", "embedding",
       dim = 4, minCosine = 0.999, nlist = 4, keepBest = Some(score))
     best.select("vec_id").as[Long].collect().sorted.toSeq shouldBe

@@ -66,16 +66,16 @@ class ParagraphDedupPropertySpec extends SparkSpec {
   }
 
   // keep-best reference: the surviving occurrence of each normalized
-  // paragraph is the one with the highest doc score, ties → least (id, pos)
+  // paragraph is the first of ORDER BY score DESC NULLS LAST, id, pos
   private def referenceKeepBest(
-      docs: Seq[(Long, String, Double)]): Map[Long, String] = {
-    case class Occ(id: Long, pos: Int, para: String, score: Double)
+      docs: Seq[(Long, String, Option[Double])]): Map[Long, String] = {
+    case class Occ(id: Long, pos: Int, para: String, score: Option[Double])
     val occs = docs.flatMap { case (id, text, score) =>
       text.split("\n", -1).zipWithIndex.map { case (p, i) => Occ(id, i, p, score) }
     }
     val winners = occs.filter(o => norm(o.para).nonEmpty)
       .groupBy(o => norm(o.para))
-      .map { case (_, os) => os.minBy(o => (-o.score, o.id, o.pos)) }
+      .map { case (_, os) => os.minBy(o => (o.score.isEmpty, -o.score.getOrElse(0.0), o.id, o.pos)) }
       .map(o => (o.id, o.pos)).toSet
     occs.filter(o => norm(o.para).isEmpty || winners((o.id, o.pos)))
       .groupBy(_.id)
@@ -83,10 +83,11 @@ class ParagraphDedupPropertySpec extends SparkSpec {
   }
 
   test("paragraphDedupKeepBest equals the argmax-score reference") {
-    val corpusGen = Gen.chooseNum(1, 12).flatMap(n => Gen.listOfN(n, docGen))
-      .map(_.zipWithIndex.map { case (t, i) =>
-        (i.toLong, t, (i % 3).toDouble) // scores collide → tiebreaks exercised
-      })
+    // scores collide → tiebreaks exercised; null scores must rank last
+    val scoreGen: Gen[Option[Double]] = Gen.frequency(
+      1 -> Gen.const(None), 3 -> Gen.chooseNum(0, 2).map(s => Some(s.toDouble)))
+    val corpusGen = Gen.chooseNum(1, 12).flatMap(n => Gen.listOfN(n, Gen.zip(docGen, scoreGen)))
+      .map(_.zipWithIndex.map { case ((t, s), i) => (i.toLong, t, s) })
     val prop = Prop.forAll(corpusGen) { corpus =>
       val df = corpus.toDF("id", "text", "score")
       val got = Dedup.paragraphDedupKeepBest(df, "id", "text", "score")
@@ -102,7 +103,7 @@ class ParagraphDedupPropertySpec extends SparkSpec {
     val corpus = (0L until n).map { i =>
       val text = if (i % 2 == 0) s"SHARED COOKIE BANNER\nunique paragraph $i"
       else s"unique paragraph $i"
-      (i, text, (i % 7).toDouble)
+      (i, text, Option((i % 7).toDouble))
     }
     val df = corpus.toDF("id", "text", "score").repartition(16)
     val got = Dedup.paragraphDedupKeepBest(df, "id", "text", "score")

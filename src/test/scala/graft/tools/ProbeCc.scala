@@ -25,13 +25,11 @@ object ProbeCc {
       edges.write.mode("overwrite").parquet("/tmp/cc_edges")
       val mat = spark.read.parquet("/tmp/cc_edges")
       for (rep <- 1 to 3) {
-        spark.conf.unset("spark.graft.dedup.localCcEdgeLimit")
         time(s"rep$rep local") {
-          Dedup.connectedComponentsOf(mat).groupBy().count().head() }
-        spark.conf.set("spark.graft.dedup.localCcEdgeLimit", "1")
+          Dedup.connectedComponentsOf(mat, localEdgeBudget = Long.MaxValue)
+            .groupBy().count().head() }
         time(s"rep$rep graphx") {
-          Dedup.connectedComponentsOf(mat).groupBy().count().head() }
-        spark.conf.unset("spark.graft.dedup.localCcEdgeLimit")
+          Dedup.connectedComponentsOf(mat, localEdgeBudget = 1).groupBy().count().head() }
       }
     }
     spark.stop()

@@ -39,18 +39,18 @@ object StressMinhashIncr {
       val batch = batchAt(mult)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = batch.count()
-      def run(label: String, budget: String): Long = {
-        spark.conf.set("spark.graft.dedup.broadcastKeyLimit", budget)
+      // the probe broadcasts iff expectedBatchItems × 32 bands fits its
+      // 4M-key budget: 1 item forces the broadcast path, 2^40 the shuffle
+      def run(label: String, sizedAs: Long): Long = {
         val t0 = System.nanoTime()
         val s = Dedup.minhashAgainstHistory(batch, "doc_id", "text", sigs,
-          threshold = 0.6).count()
+          threshold = 0.6, expectedBatchItems = sizedAs).count()
         println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.1f s, survivors=$s")
         s
       }
       println(s"batch x$mult = $n docs (keys = ${n * 32}):")
-      val b = run("broadcast (budget 4B keys)", "4000000000")
-      val sh = run("shuffle   (budget 1 key) ", "1")
-      spark.conf.unset("spark.graft.dedup.broadcastKeyLimit")
+      val b = run("broadcast (sized as 1 doc)", 1L)
+      val sh = run("shuffle (sized as 2^40)  ", 1L << 40)
       require(b == sh, s"paths disagree at x$mult: broadcast=$b shuffle=$sh")
       batch.unpersist()
     }
