@@ -728,22 +728,6 @@ object Ktk extends org.apache.spark.internal.Logging {
           e: java.util.Map.Entry[String, Set[String]]): Boolean = size() > 4096
     }
 
-  /** Labels with at least one deleted row — the file set that must pay the
-    * merge-on-read anti-join. Planning must NOT cost a Spark job per read:
-    * each fragment dir carries a `_labels.json` manifest (written with the
-    * fragment; underscore-prefixed, so parquet scans ignore it) read with
-    * one tiny FS get and cached forever (fragments are immutable).
-    * Fragments lacking the manifest (older writers) fall back to a scan of
-    * the fragment's label column.
-    */
-  /** Driver-side collection of the LIVE tombstones touching `labels`, as a
-    * per-label SORTED position array — the shippable form a DSv2 reader
-    * needs to apply deletion vectors per file (Delta ships per-file DV
-    * bitmaps the same way). Bounded by `maxRows`: the count runs first
-    * (one cheap job over the small fragment files), so an over-limit
-    * dataset fails with guidance BEFORE anything is materialized on the
-    * driver.
-    */
   /** Per-snapshot LRU for [[collectDeleteVectors]]: fragments are immutable
     * and keyed by the commit version, so repeated plannings of the same
     * DV-bearing snapshot (a dashboard's 50 SELECTs) pay the collection
@@ -756,6 +740,14 @@ object Ktk extends org.apache.spark.internal.Logging {
         size() > 8
     }
 
+  /** Driver-side collection of the LIVE tombstones touching `labels`, as a
+    * per-label SORTED position array — the shippable form a DSv2 reader
+    * needs to apply deletion vectors per file (Delta ships per-file DV
+    * bitmaps the same way). Bounded by `maxRows`: the count runs first
+    * (one cheap job over the small fragment files), so an over-limit
+    * dataset fails with guidance BEFORE anything is materialized on the
+    * driver.
+    */
   private[graft] def collectDeleteVectors(
       spark: SparkSession, base: String, md: DatasetMetadata,
       labels: Set[String], maxRows: Long): Map[String, Array[Long]] = {
@@ -785,6 +777,14 @@ object Ktk extends org.apache.spark.internal.Logging {
     out
   }
 
+  /** Labels with at least one deleted row — the file set that must pay the
+    * merge-on-read anti-join. Planning must NOT cost a Spark job per read:
+    * each fragment dir carries a `_labels.json` manifest (written with the
+    * fragment; underscore-prefixed, so parquet scans ignore it) read with
+    * one tiny FS get and cached forever (fragments are immutable).
+    * Fragments lacking the manifest (older writers) fall back to a scan of
+    * the fragment's label column.
+    */
   private[graft] def dirtyDeleteLabels(
       spark: SparkSession, base: String, md: DatasetMetadata): Set[String] =
     deleteFragmentLabels(spark, base, md, md.deleteFragments)
@@ -996,23 +996,48 @@ object Ktk extends org.apache.spark.internal.Logging {
     to - last
   }
 
-  /** The deletion-vector fragments to commit: `withNew` while it holds at
-    * most [[Sidecars.MaxFragments]]; past that bound the commit folds ALL
-    * fragments (old ∪ new) into ONE canonical fragment — a rewrite of
-    * O(live tombstones), no data movement — so a long run of small deletes
-    * cannot make every read union an unbounded fragment list. Rows for
-    * labels no longer referenced are dropped while folding.
+  /** The deletion-vector fragments a commit publishes — one rule for every
+    * writer: the parent's fragments pruned of the labels the commit
+    * `removed`, plus its own `fresh` fragment, folded at
+    * [[Sidecars.MaxFragments]].
+    *
+    *  - Nothing removed: the parent's fragments stand and none is read, so
+    *    an append stays O(batch).
+    *  - Labels removed: fragments stand when none of their live labels is
+    *    removed, and drop when all of them are (a rewrite materialized
+    *    those rows, or a scope dropped the files). Otherwise they
+    *    canonicalize into ONE fragment holding only the surviving labels'
+    *    rows, so no fragment keeps a dropped file's tombstones.
+    *  - Past the bound every fragment folds into ONE canonical fragment of
+    *    the `live` labels' rows — O(live tombstones), no data movement — so
+    *    a long run of small deletes cannot make every read union an
+    *    unbounded fragment list.
+    *
+    * Replaced fragments become unreferenced → [[garbageCollect]].
     */
-  private def fragmentsToCommit(
-      spark: SparkSession, base: String, md: DatasetMetadata,
-      withNew: Seq[String]): Seq[String] = {
-    if (withNew.size <= Sidecars.MaxFragments) return withNew
+  private def deletesAfter(
+      spark: SparkSession, base: String, parent: DatasetMetadata, live: Set[String],
+      removed: Set[String], fresh: Option[String]): Seq[String] = {
     import spark.implicits._
-    val dv = spark.read.schema(DvSchema)
-      .parquet(withNew.map(md.deletePath(base, _)): _*)
-    val live = dv.join(
-      broadcast(md.partitions.keys.toSeq.toDF("label")), Seq("label"), "left_semi")
-    writeDeleteFragment(spark, base, md.uuid, live).map(_._1).toSeq
+    def rewrite(frags: Seq[String], keep: Set[String]): Seq[String] =
+      writeDeleteFragment(spark, base, parent.uuid,
+        spark.read.schema(DvSchema).parquet(frags.map(parent.deletePath(base, _)): _*)
+          .join(broadcast(keep.toSeq.toDF("label")), Seq("label"), "left_semi")
+      ).map(_._1).toSeq
+    val frags = parent.deleteFragments
+    val kept =
+      if (frags.isEmpty || removed.isEmpty) frags
+      else {
+        // only vectors over LIVE files count: a fragment naming dead labels
+        // alone must not keep the dataset looking dirty (hasRowDeletes
+        // gates footer pushdown and keyed joins)
+        val dirty = dirtyDeleteLabels(spark, base, parent).intersect(parent.partitions.keySet)
+        if (dirty.subsetOf(removed)) Nil
+        else if (!dirty.exists(removed)) frags
+        else rewrite(frags, dirty -- removed)
+      }
+    val all = kept ++ fresh
+    if (all.size <= Sidecars.MaxFragments) all else rewrite(all, live)
   }
 
   /** Row-level DELETE (Delta/Iceberg merge-on-read): mark every live row
@@ -1056,10 +1081,10 @@ object Ktk extends org.apache.spark.internal.Logging {
         freshDeletePairs(spark, base, md, candidates, cond)) match {
       case None => (md, 0L)
       case Some((name, n)) =>
-        val md1 = md.copy(deletes = fragmentsToCommit(spark, base, md,
-          md.deleteFragments :+ name))
+        val md1 = md.copy(deletes =
+          deletesAfter(spark, base, md, md.partitions.keySet, Set.empty, Some(name)))
         (DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "DELETE"), n)
+          operation = "DELETE"), n)
     }
   }
 
@@ -1129,27 +1154,9 @@ object Ktk extends org.apache.spark.internal.Logging {
       val fragment: Option[(String, Long)] = writeDeleteFragment(spark, base, uuid,
         live.select(col("__label").as("label"), col("__pos").as("pos")))
       if (fragment.isEmpty) return (md, 0L)
-      val newFiles: Seq[(String, Long)] = ManifestCommitProtocol.collecting(spark) {
-        val writer = normalized.write.mode(SaveMode.Append)
-        (if (md.partitionKeys.nonEmpty) writer.partitionBy(md.partitionKeys: _*) else writer)
-          .parquet(tableDir)
-      }
-      val newLabels = newFiles.map(_._1).toSet
-      if (newLabels.exists(_.contains("__HIVE_DEFAULT_PARTITION__")))
-        throw new IllegalArgumentException("null values in partition columns are not allowed")
-      val nextSeq = nextMonotoneSeq(md)
-      val finalPartitions = md.partitions.keys.map(l => l -> md.sizeOf(l)).toMap ++ newFiles
-      val finalSeq = finalPartitions.keys.map { l =>
-        l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
-      }.toMap
-      val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions), newLabels)
-      val md1 = merged.copy(partitionSeq = finalSeq,
-        deletes = fragmentsToCommit(spark, base, md,
-          md.deleteFragments ++ fragment.map(_._1)),
-        metadata = md.metadata +
-          (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
-      (DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "UPDATE"), fragment.get._2)
+      val added = writeBatch(spark, tableDir, md.partitionKeys, normalized)
+      (commitSnapshot(spark, base, md, added, Set.empty, SeqRule.Append, "UPDATE",
+        fresh = fragment.map(_._1)), fragment.get._2)
     } finally live.unpersist()
   }
 
@@ -1192,22 +1199,9 @@ object Ktk extends org.apache.spark.internal.Logging {
     val schema = md.schema
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"merge key '$k' not in dataset schema"))
-    // additive evolution mirrors update(): new source columns append as
-    // nullable (old files read null); the upstream-ALTER-TABLE case of a
-    // CDC mirror. Registered sidecar columns must still arrive.
-    val evolvedSchema: StructType =
-      if (evolveSchema) {
-        val cand = SchemaUtil.normalizeSchema(source.schema, md.partitionKeys)
-        val absent = Sidecars.columns(md).filterNot(cand.fieldNames.contains).toSeq.sorted
-        require(absent.isEmpty,
-          s"evolveSchema merge must still carry the registered index/bloom/zone " +
-            s"column(s): ${absent.mkString(", ")}")
-        SchemaUtil.evolveSchemas(schema, cand)
-      } else {
-        SchemaUtil.validateCompatible(schema,
-          SchemaUtil.normalizeSchema(source.schema, md.partitionKeys))
-        schema
-      }
+    // additive evolution mirrors update(): the upstream-ALTER-TABLE case of
+    // a CDC mirror
+    val schemaOn = batchSchema(md, source, evolveSchema, "merge")
     val tableDir = md.tableDir(base)
     // CHECK constraints gate the batch before ANY side effect (even the
     // tombstone fragment) — a violating batch leaves nothing behind
@@ -1367,28 +1361,9 @@ object Ktk extends org.apache.spark.internal.Logging {
       }
 
     // 2. append the source as new files (the update() write path)
-    val newFiles: Seq[(String, Long)] = ManifestCommitProtocol.collecting(spark) {
-      val writer = normalized.write.mode(SaveMode.Append)
-      (if (md.partitionKeys.nonEmpty) writer.partitionBy(md.partitionKeys: _*) else writer)
-        .parquet(tableDir)
-    }
-    val newLabels = newFiles.map(_._1).toSet
-    if (newLabels.exists(_.contains("__HIVE_DEFAULT_PARTITION__")))
-      throw new IllegalArgumentException("null values in partition columns are not allowed")
-    val nextSeq = nextMonotoneSeq(md)
-    val finalPartitions = md.partitions.keys.map(l => l -> md.sizeOf(l)).toMap ++ newFiles
-    val finalSeq = finalPartitions.keys.map { l =>
-      l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
-    }.toMap
-    val merged = Sidecars.merge(spark, base, md,
-      md.copy(partitions = finalPartitions, schemaJson = evolvedSchema.json), newLabels)
-    val md1 = merged.copy(partitionSeq = finalSeq,
-      deletes = fragmentsToCommit(spark, base, md,
-        md.deleteFragments ++ fragment.map(_._1)),
-      metadata = md.metadata ++ extraMetadata +
-        (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
-    (DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "MERGE"),
+    val added = writeBatch(spark, tableDir, md.partitionKeys, normalized)
+    (commitSnapshot(spark, base, md, added, Set.empty, SeqRule.Append, "MERGE",
+      fresh = fragment.map(_._1), schema = schemaOn, metadata = extraMetadata),
       fragment.map(_._2).getOrElse(0L))
   }
 
@@ -1813,46 +1788,19 @@ object Ktk extends org.apache.spark.internal.Logging {
       maxCollectKeys = maxCollectKeys, evolveSchema = true)
   }
 
-  /** Fragment list to commit after a rewrite dropped `removed` labels
-    * (whose deleted rows were materialized away by [[rewriteGroupsStaged]]):
-    * untouched fragments stay; touched ones canonicalize into ONE fragment
-    * holding only surviving labels' rows; a fully-materialized dataset
-    * sheds the list entirely. Old fragments become unreferenced →
-    * [[garbageCollect]].
-    */
-  /** Partition-scope filter for the maintenance rewrites (`compact`,
-    * `materializeDeletes`, `clusterZOrder`): a condition over partition
-    * keys only, evaluated against label-path values.
+  /** Partition-scope filter of the maintenance rewrites (`compact`,
+    * `materializeDeletes`, `clusterZOrder`) and of delete scopes: a
+    * condition over partition keys only, evaluated against label-path
+    * values.
     */
   private def partitionScope(
       md: DatasetMetadata, scope: Predicates, op: String): String => Boolean =
     if (scope.isEmpty) _ => true
     else {
       scope.columns.foreach(c => require(md.partitionKeys.contains(c),
-        s"$op scope column '$c' must be a partition key"))
+        s"$op column '$c' must be a partition key"))
       l => scope.matchesValues(md.partitionValues(l))
     }
-
-  private def prunedDeleteFragments(
-      spark: SparkSession, base: String, md: DatasetMetadata,
-      removed: Set[String]): Seq[String] = {
-    if (md.deleteFragments.isEmpty) return Nil
-    // only vectors over LIVE files matter: fragments referencing labels
-    // earlier commits already removed are inert and must not keep a
-    // fully-materialized dataset looking dirty (hasRowDeletes gates footer
-    // pushdown and keyed joins)
-    val dirty = dirtyDeleteLabels(spark, base, md).intersect(md.partitions.keySet)
-    if (dirty.forall(removed.contains)) return Nil
-    if (!dirty.exists(removed.contains)) return md.deleteFragments
-    import spark.implicits._
-    // rewrite to exactly the surviving LIVE labels' rows (a semi-join on
-    // the survivors also sheds dead-label rows, unlike an anti-join on
-    // `removed`)
-    val live = (dirty -- removed).toSeq
-    val keep = deleteVectors(spark, base, md).get
-      .join(broadcast(live.toDF("label")), Seq("label"), "left_semi")
-    writeDeleteFragment(spark, base, md.uuid, keep).map(_._1).toSeq
-  }
 
   /** Apply one CDC batch (Debezium-style row images with an operation
     * column): rows where `opCol` = `deleteOp` tombstone their keys (a
@@ -1897,49 +1845,21 @@ object Ktk extends org.apache.spark.internal.Logging {
       uuid: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       scope: Predicates = Predicates.empty): DatasetMetadata = {
-    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = DatasetMetadata.load(spark, base, uuid)
     if (md.deleteFragments.isEmpty) return md
     // optional partition scope: fold tombstones only for matching
     // partitions' files — fragments covering out-of-scope files survive
-    val inScope = partitionScope(md, scope, "materialize")
-    val dirtyAll = dirtyDeleteLabels(spark, base, md).intersect(md.partitions.keySet)
-    if (dirtyAll.isEmpty) {
-      // fragments reference only labels later commits already removed
-      val md1 = md.copy(deletes = Nil)
-      return DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-        operation = "MATERIALIZE DELETES")
-    }
-    val dirty = dirtyAll.filter(inScope)
+    val inScope = partitionScope(md, scope, "materialize scope")
+    val labels = dirtyDeleteLabels(spark, base, md)
+    val dirtyAll = labels.intersect(md.partitions.keySet)
+    // with no live dirty file the fragments name only files earlier
+    // commits removed: handed in as `removed`, those labels make the one
+    // deletion-vector rule drop every fragment, and nothing is rewritten
+    val dirty = if (dirtyAll.isEmpty) labels else dirtyAll.filter(inScope)
     if (dirty.isEmpty) return md // nothing in scope; out-of-scope vectors stay
-    val bySeq: Map[Long, Seq[String]] =
-      dirty.toSeq.sorted.groupBy(md.seqOf)
-    val movedBySeq = rewriteGroupsStaged(spark, base, md, bySeq) { (data, labels) =>
-      val totalBytes = labels.map(md.sizeOf).sum
-      val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      val shaped =
-        if (md.partitionKeys.nonEmpty)
-          data.repartition(nOut, md.partitionKeys.map(c => col(s"`$c`")): _*)
-        else data.repartition(nOut)
-      val sortCols = recordedSortCols(md)
-      if (sortCols.isEmpty) shaped else shaped.sortWithinPartitions(sortCols: _*)
-    }
-    val newSeqOf = scala.collection.mutable.Map.empty[String, Long]
-    movedBySeq.foreach { case (seq, ls) => ls.foreach { case (l, _) => newSeqOf(l) = seq } }
-    val finalPartitions: Map[String, Long] =
-      md.partitions.keys.filterNot(dirty.contains)
-        .map(l => l -> md.sizeOf(l)).toMap ++ movedBySeq.flatMap(_._2)
-    val finalSeq = finalPartitions.keys.map { l =>
-      l -> newSeqOf.getOrElse(l, md.seqOf(l))
-    }.toMap
-    val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions),
-      newLabels = newSeqOf.keySet.toSet)
-    val md1 = merged.copy(partitionSeq = finalSeq,
-      // fragments covering only the rewritten files drop; with a scope,
-      // fragments for untouched dirty files must survive or their deleted
-      // rows would resurrect
-      deletes = prunedDeleteFragments(spark, base, md, dirty))
-    DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "MATERIALIZE DELETES")
+    val (added, seqs) = rewriteGroupsStaged(spark, base, md,
+      (dirty & dirtyAll).toSeq.sorted.groupBy(md.seqOf))(sizedLayout(md, targetFileBytes))
+    commitSnapshot(spark, base, md, added, dirty, SeqRule.Rewrite(seqs), "MATERIALIZE DELETES")
   }
 
   /** Additive schema evolution WITHOUT data — register new nullable
@@ -1997,15 +1917,8 @@ object Ktk extends org.apache.spark.internal.Logging {
       operation = "SET TBLPROPERTIES")
   }
 
-  // ---------------------------------------------------------------- update
+  // ----------------------------------------------------------- commit step
 
-  /** Incremental update in ONE metadata commit (≙ update_dataset_from_dataframes,
-    * io_components/update.py:23-57): append `newData` as new files, drop
-    * partitions matched by `deleteScope` (a predicate over partition-key
-    * columns), merge secondary indices incrementally, single blob put.
-    * Existing partition files are immutable — deletion is logical first
-    * (metadata), physical cleanup via [[garbageCollect]].
-    */
   /** Next commit sequence number: strictly greater than every seq EVER
     * assigned (high watermark), not merely than the currently referenced
     * ones — a delete scope that removes the newest labels must not let a
@@ -2017,6 +1930,160 @@ object Ktk extends org.apache.spark.internal.Logging {
     math.max(hwm, (0L +: md.partitions.keys.toSeq.map(md.seqOf)).max) + 1L
   }
 
+  /** How a commit's added labels get their sequence numbers. */
+  private[ktk] sealed trait SeqRule
+  private[ktk] object SeqRule {
+    /** New content: every added label takes [[nextMonotoneSeq]], which the
+      * commit records as the high watermark.
+      */
+    case object Append extends SeqRule
+    /** A rewrite of existing content: each added label inherits the seq of
+      * the group it replaced, so overlay keep-last order survives and the
+      * change feed sees no new rows.
+      */
+    final case class Rewrite(seqOf: Map[String, Long]) extends SeqRule
+  }
+
+  /** The one commit step of every data writer: the snapshot that follows
+    * `parent` once `added` (label → size) land and `removed` labels leave.
+    * Survivors keep their size and seq, added labels take theirs from
+    * `seq`; legacy inline zone maps migrate; every sidecar merges
+    * ([[Sidecars.merge]]); the deletion vectors follow [[deletesAfter]]
+    * with the writer's `fresh` fragment; `metadata` lays over the
+    * parent's; one versioned store publishes it all. `schema` derives the
+    * committed schema from the parent the commit lands on.
+    *
+    * A writer that re-shapes the snapshot hands in the re-shaped parent:
+    * [[clusterZOrder]] one with its zone columns registered,
+    * [[replaceTable]] one re-laid with no sidecars and its own keys and
+    * properties.
+    *
+    * `blindAppend`: the added files read nothing of the parent (Delta's
+    * AddFile-only commit), so a lost version race re-commits the SAME
+    * files on the reloaded parent — no batch rewrite, no orphan. The
+    * retries are bounded ([[appendCommitRetries]]); a concurrent change of
+    * partition keys (the files' directory layout) or of CHECK constraints
+    * (never checked against this batch), or the final lost race, surfaces
+    * as ConcurrentCommitException for the caller's [[withCommitRetries]],
+    * which re-runs the writer wholesale.
+    */
+  private[ktk] def commitSnapshot(
+      spark: SparkSession,
+      base: String,
+      parent: DatasetMetadata,
+      added: Map[String, Long],
+      removed: Set[String],
+      seq: SeqRule,
+      operation: String,
+      fresh: Option[String] = None,
+      schema: DatasetMetadata => StructType = _.schema,
+      metadata: Map[String, String] = Map.empty,
+      blindAppend: Boolean = false): DatasetMetadata = {
+    def attempt(p0: DatasetMetadata): DatasetMetadata = {
+      val p = Sidecars.migrateInlineZones(spark, base, p0)
+      val partitions =
+        p.partitions.keys.filterNot(removed).map(l => l -> p.sizeOf(l)).toMap ++ added
+      val (seqOf, hwm) = seq match {
+        case SeqRule.Append =>
+          val next = nextMonotoneSeq(p)
+          ((_: String) => next, Map(DatasetMetadata.SeqHwmKey -> next.toString))
+        case SeqRule.Rewrite(seqs) => (seqs, Map.empty[String, String])
+      }
+      // the batch's sidecar rows append as one more fragment — O(batch) —
+      // unless a removed label or a full dir makes the commit fold
+      val merged = Sidecars.merge(spark, base, p,
+        p.copy(partitions = partitions, schemaJson = schema(p).json), added.keySet)
+      val md = merged.copy(
+        partitionSeq = partitions.keys.map(l =>
+          l -> (if (added.contains(l)) seqOf(l) else p.seqOf(l))).toMap,
+        deletes = deletesAfter(spark, base, p, partitions.keySet, removed, fresh),
+        metadata = p.metadata ++ metadata ++ hwm)
+      DatasetMetadata.store(spark, base, md, parentMd = Some(p), operation = operation)
+    }
+    if (!blindAppend) return attempt(parent)
+    var p = parent
+    var tries = 0
+    while (true) {
+      try return attempt(p)
+      catch {
+        case e: ConcurrentCommitException =>
+          tries += 1
+          if (tries > appendCommitRetries(spark)) throw e
+          // FULL-JITTER backoff (uniform in [0, 25ms * tries]): N writers
+          // that collide once must NOT reclaim in lockstep — a
+          // deterministic sleep resynchronizes the losers and burns the
+          // retry budget under fan-in
+          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
+            .nextLong(25L * tries + 1))
+          val reloaded = DatasetMetadata.load(spark, base, parent.uuid)
+          if (reloaded.partitionKeys != parent.partitionKeys ||
+              constraints(reloaded) != constraints(parent)) throw e
+          p = reloaded
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Write one batch as new files of the table at `tableDir` and return
+    * their sizes by label, from the write job's own commit manifest
+    * ([[ManifestCommitProtocol]]) — NO directory listing, so the dir's
+    * unreferenced leftovers (compacted-away files awaiting gc, failed
+    * writes) can never be resurrected into a commit, concurrent writers
+    * never observe each other, and cost stays O(batch) at any historical
+    * file count. `sortBy` sorts within each task after the partition keys
+    * — see [[store]]: the dynamic-partition writer's own sort would
+    * replace the order otherwise. A null partition value fails the write
+    * (kartothek's partition_on null check; its files stay unreferenced for
+    * [[garbageCollect]]).
+    */
+  private def writeBatch(spark: SparkSession, tableDir: String, partitionKeys: Seq[String],
+      batch: DataFrame, sortBy: Seq[String] = Nil): Map[String, Long] = {
+    val sorted =
+      if (sortBy.isEmpty) batch
+      else batch.sortWithinPartitions((partitionKeys ++ sortBy).map(c => col(s"`$c`")): _*)
+    val files = ManifestCommitProtocol.collecting(spark) {
+      val writer = sorted.write.mode(SaveMode.Append)
+      (if (partitionKeys.nonEmpty) writer.partitionBy(partitionKeys: _*) else writer)
+        .parquet(tableDir)
+    }
+    if (files.exists(_._1.contains("__HIVE_DEFAULT_PARTITION__")))
+      throw new IllegalArgumentException("null values in partition columns are not allowed")
+    files.toMap
+  }
+
+  /** The schema a batch `df` commits under, derived from the parent it
+    * lands on, and checked against `md` at once — an incompatible batch
+    * fails before any file is written. `evolve` (Delta mergeSchema
+    * semantics) appends new columns as nullable: old files simply lack
+    * them and the explicit-schema read fills nulls. Registered sidecar
+    * columns must still arrive — their incremental merges scan the new
+    * files for exactly those columns.
+    */
+  private def batchSchema(md: DatasetMetadata, df: DataFrame, evolve: Boolean,
+      op: String): DatasetMetadata => StructType = {
+    val cand = SchemaUtil.normalizeSchema(df.schema, md.partitionKeys)
+    if (evolve) {
+      val absent = Sidecars.columns(md).filterNot(cand.fieldNames.contains).toSeq.sorted
+      require(absent.isEmpty,
+        s"evolveSchema $op must still carry the registered index/bloom/zone " +
+          s"column(s): ${absent.mkString(", ")}")
+    }
+    def on(p: DatasetMetadata): StructType =
+      if (evolve) SchemaUtil.evolveSchemas(p.schema, cand)
+      else { SchemaUtil.validateCompatible(p.schema, cand); p.schema }
+    on(md)
+    on
+  }
+
+  // ---------------------------------------------------------------- update
+
+  /** Incremental update in ONE metadata commit (≙ update_dataset_from_dataframes,
+    * io_components/update.py:23-57): append `newData` as new files, drop
+    * partitions matched by `deleteScope` (a predicate over partition-key
+    * columns), merge secondary indices incrementally, single blob put.
+    * Existing partition files are immutable — deletion is logical first
+    * (metadata), physical cleanup via [[garbageCollect]].
+    */
   def update(
       spark: SparkSession,
       base: String,
@@ -2030,8 +2097,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       requireAppendsInScope: Boolean = false,
       dynamicPartitionOverwrite: Boolean = false): DatasetMetadata = {
 
-    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
-    val tableDir = md.tableDir(base)
+    val md = DatasetMetadata.load(spark, base, uuid)
     if (dynamicPartitionOverwrite) {
       require(!replaceAll && deleteScope.isEmpty,
         "dynamicPartitionOverwrite derives its own scope from the batch")
@@ -2057,170 +2123,57 @@ object Ktk extends org.apache.spark.internal.Logging {
         require(deleteScope.isEmpty, "replaceAll and deleteScope are mutually exclusive")
         md.partitions.keySet
       } else if (deleteScope.isEmpty) Set.empty
-      else {
-        deleteScope.columns.foreach(c => require(md.partitionKeys.contains(c),
-          s"delete_scope column '$c' must be a partition key"))
-        md.partitions.keySet.filter(l => deleteScope.matchesValues(md.partitionValues(l)))
-      }
+      else md.partitions.keySet.filter(partitionScope(md, deleteScope, "delete_scope"))
 
-    // 2. append new files. New labels come from the write job's own commit
-    //    manifest (ManifestCommitProtocol) — NO directory listing. The dir
-    //    may hold unreferenced leftovers (compacted-away files awaiting gc,
-    //    failed writes); since we never list, they can never be resurrected
-    //    into the commit, and commit cost is O(batch) regardless of how many
-    //    historical files the dataset holds.
-    // additive evolution (Delta mergeSchema semantics): new columns append
-    // as nullable — old files simply lack them and the explicit-schema read
-    // fills nulls. Registered sidecar columns must still arrive: their
-    // incremental merges scan the new files for exactly those columns.
-    val evolvedSchema: StructType = newData match {
-      case Some(df) if evolveSchema =>
-        val cand = SchemaUtil.normalizeSchema(df.schema, md.partitionKeys)
-        val absent = Sidecars.columns(md).filterNot(cand.fieldNames.contains).toSeq.sorted
-        require(absent.isEmpty,
-          s"evolveSchema update must still carry the registered index/bloom/zone " +
-            s"column(s): ${absent.mkString(", ")}")
-        SchemaUtil.evolveSchemas(md.schema, cand)
-      case _ => md.schema
-    }
-    val newFiles: Seq[(String, Long)] = newData match {
-      case None => Nil
+    // 2. append new files; the schema check and CHECK constraints gate the
+    //    batch BEFORE any file lands
+    val schemaOn: DatasetMetadata => StructType =
+      newData.fold((_: DatasetMetadata).schema)(batchSchema(md, _, evolveSchema, "update"))
+    val added: Map[String, Long] = newData match {
+      case None => Map.empty
       case Some(df) =>
-        if (!evolveSchema)
-          SchemaUtil.validateCompatible(md.schema, SchemaUtil.normalizeSchema(df.schema, md.partitionKeys))
         val normalized = SchemaUtil.normalize(df, md.partitionKeys)
-        // CHECK constraints gate the batch BEFORE any file lands
         enforceConstraints(md, normalized)
-        // partition columns first — see store(): the dynamic-partition
-        // writer's own sort would destroy the secondary order otherwise
-        val sorted =
-          if (sortBy.nonEmpty)
-            normalized.sortWithinPartitions(
-              (md.partitionKeys ++ sortBy).map(c => col(s"`$c`")): _*)
-          else normalized
-        ManifestCommitProtocol.collecting(spark) {
-          val writer = sorted.write.mode(SaveMode.Append)
-          (if (md.partitionKeys.nonEmpty) writer.partitionBy(md.partitionKeys: _*) else writer)
-            .parquet(tableDir)
-        }
+        writeBatch(spark, md.tableDir(base), md.partitionKeys, normalized, sortBy)
     }
-    val newLabels = newFiles.map(_._1).toSet
-    if (newLabels.exists(_.contains("__HIVE_DEFAULT_PARTITION__")))
-      throw new IllegalArgumentException("null values in partition columns are not allowed")
     // REPLACE WHERE contract: every appended row must fall INSIDE the
     // partitions being replaced, or out-of-scope rows would silently
     // duplicate surviving files' content. O(newLabels) label parsing —
     // the check fails BEFORE the metadata commit, so nothing publishes
     // (the orphan files are unreferenced; gc reclaims them).
     if (requireAppendsInScope && !deleteScope.isEmpty) {
-      val outOfScope = newLabels.filterNot(l => deleteScope.matchesValues(md.partitionValues(l)))
+      val outOfScope = added.keySet.filterNot(l => deleteScope.matchesValues(md.partitionValues(l)))
       if (outOfScope.nonEmpty)
         throw new IllegalArgumentException(
           s"overwrite scope violation: ${outOfScope.size} appended file(s) land outside " +
             s"the replaced partitions (e.g. ${md.partitionValues(outOfScope.head)}); " +
             "the source rows must all match the REPLACE WHERE / PARTITION clause")
     }
-
-    // 3. commit tail, parameterized by the PARENT snapshot: drop scope,
-    //    incremental sidecar merges, snapshot assembly, versioned store.
-    //    Parameterized so a lost PURE-APPEND race retries the metadata
-    //    commit ONLY against the freshly reloaded parent — the batch's
-    //    data files are content-complete and parent-independent, so
-    //    re-running the whole update (the withCommitRetries shape) would
-    //    rewrite the batch and orphan the first attempt: O(batch) wasted
-    //    I/O per lost race, the dominant retry cost at scale. Deletes /
-    //    overwrites still re-run wholesale — their scope is derived FROM
-    //    the parent and must be re-decided, never mechanically replayed.
-    def commitTail(parent: DatasetMetadata, deletedNow: Set[String]): DatasetMetadata = {
-      val refs = parent.partitions.keySet
-      // dynamic partition overwrite: drop exactly the existing files whose
-      // partition tuple the batch re-wrote (derived from the appended labels
-      // — partition-count-sized, label parsing only, no extra job)
-      val dropped: Set[String] =
-        if (!effDynamic) deletedNow
-        else {
-          val touched = newLabels.map(parent.partitionValues)
-          refs.filter(l => touched.contains(parent.partitionValues(l)))
-        }
-      // schema re-derived against THIS parent (a concurrent commit may
-      // have evolved it since the batch was validated pre-write); an
-      // incompatibility found on retry fails loudly like first-attempt
-      val evolvedNow: StructType = newData match {
-        case Some(df) if evolveSchema =>
-          SchemaUtil.evolveSchemas(parent.schema,
-            SchemaUtil.normalizeSchema(df.schema, parent.partitionKeys))
-        case Some(df) if parent.version != md.version =>
-          SchemaUtil.validateCompatible(parent.schema,
-            SchemaUtil.normalizeSchema(df.schema, parent.partitionKeys))
-          parent.schema
-        case _ => evolvedSchema
+    // dynamic partition overwrite: drop exactly the existing files whose
+    // partition tuple the batch re-wrote (derived from the appended labels
+    // — partition-count-sized, label parsing only, no extra job)
+    val removed: Set[String] =
+      if (!effDynamic) deleted
+      else {
+        val touched = added.keySet.map(md.partitionValues)
+        md.partitions.keySet.filter(l => touched.contains(md.partitionValues(l)))
       }
-      val finalPartitions: Map[String, Long] =
-        refs.filterNot(dropped.contains).map(l => l -> parent.sizeOf(l)).toMap ++ newFiles
-      val nextSeq = nextMonotoneSeq(parent)
-      val finalSeq = finalPartitions.keys.map { l =>
-        l -> (if (newLabels.contains(l)) nextSeq else parent.seqOf(l))
-      }.toMap
-      // the batch's sidecar rows append as one more fragment — O(batch) —
-      // unless `dropped` or a full dir makes the commit fold (Sidecars.merge)
-      val merged = Sidecars.merge(spark, base, parent,
-        parent.copy(partitions = finalPartitions, schemaJson = evolvedNow.json), newLabels)
-      val sortMeta =
-        if (sortBy.isEmpty) Map.empty[String, String]
-        else Map(DatasetMetadata.SortByKey -> sortBy.mkString(","))
-      val md1 = merged.copy(partitionSeq = finalSeq,
-        // a full content replacement also sheds pending deletion vectors —
-        // every file they tombstone just left the referenced set
-        deletes = if (effReplaceAll) Nil else parent.deletes,
-        metadata = parent.metadata ++ extraMetadata ++ sortMeta +
-          (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
-      DatasetMetadata.store(spark, base, md1, parentMd = Some(parent),
-        operation =
-          if (effReplaceAll) "OVERWRITE"
-          else if (newData.isEmpty) "DELETE SCOPE" else "WRITE")
-    }
 
-    val pureAppend = !effReplaceAll && !effDynamic && deleteScope.isEmpty && newData.nonEmpty
-    if (!pureAppend) commitTail(md, deleted)
-    else {
-      // blind-append auto-resolution (the Delta AddFile-only rule): appends
-      // commute, so a lost claim re-commits the SAME files under the new
-      // parent. Bounded; the final failure still surfaces as
-      // ConcurrentCommitException for the caller's withCommitRetries.
-      var parent = md
-      var tries = 0
-      while (true) {
-        try return commitTail(parent, Set.empty)
-        catch {
-          case e: ConcurrentCommitException =>
-            tries += 1
-            if (tries > appendCommitRetries(spark)) throw e
-            // FULL-JITTER backoff (uniform in [0, 25ms * tries]): N writers
-            // that collide once must NOT reclaim in lockstep — a
-            // deterministic sleep resynchronizes the losers and burns the
-            // retry budget under fan-in (the 4x10 probe saw 3/40
-            // escalations to full re-runs before jitter)
-            Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-              .nextLong(25L * tries + 1))
-            val reloaded = DatasetMetadata.load(spark, base, uuid)
-            // a concurrent re-layout (REPLACE TABLE changing partition
-            // keys) invalidates the written files' directory layout — the
-            // fast path cannot resolve that; let the caller re-run wholesale
-            if (reloaded.partitionKeys != md.partitionKeys) throw e
-            // the batch was constraint-checked against the OLD set; if a
-            // concurrent commit changed the constraints, re-check (rare —
-            // one predicate pass over the batch) before re-committing
-            if (constraints(reloaded) != constraints(md))
-              newData.foreach(df => enforceConstraints(reloaded,
-                SchemaUtil.normalize(df, reloaded.partitionKeys)))
-            parent = reloaded
-        }
-      }
-      throw new IllegalStateException("unreachable")
-    }
+    // 3. one commit. Only a pure append is blind: deletes / overwrites
+    //    derive their scope FROM the parent, so a lost race re-runs them
+    //    wholesale, never mechanically replayed.
+    val sortMeta =
+      if (sortBy.isEmpty) Map.empty[String, String]
+      else Map(DatasetMetadata.SortByKey -> sortBy.mkString(","))
+    commitSnapshot(spark, base, md, added, removed, SeqRule.Append,
+      operation =
+        if (effReplaceAll) "OVERWRITE"
+        else if (newData.isEmpty) "DELETE SCOPE" else "WRITE",
+      schema = schemaOn, metadata = extraMetadata ++ sortMeta,
+      blindAppend = !effReplaceAll && !effDynamic && deleteScope.isEmpty && newData.nonEmpty)
   }
 
-  /** Fast-retry bound for lost pure-append commit races ([[update]]'s
+  /** Fast-retry bound for lost pure-append commit races ([[commitSnapshot]]'s
     * metadata-only re-commit loop), `spark.graft.append.commitRetries`
     * (default 8). Kept separate from the caller-level
     * [[withCommitRetries]] budget: the fast path is cheap (no data
@@ -2263,28 +2216,19 @@ object Ktk extends org.apache.spark.internal.Logging {
       partitionOn: Seq[String] = Nil,
       userMetadata: Map[String, String] = Map.empty): DatasetMetadata = {
     val md = DatasetMetadata.load(spark, base, uuid)
-    val tableDir = md.tableDir(base)
     partitionOn.foreach(c => require(df.columns.contains(c),
       s"partition_on column '$c' missing"))
-    val normalized = SchemaUtil.normalize(df, partitionOn)
-    val newFiles: Seq[(String, Long)] = ManifestCommitProtocol.collecting(spark) {
-      val writer = normalized.write.mode(SaveMode.Append)
-      (if (partitionOn.nonEmpty) writer.partitionBy(partitionOn: _*) else writer)
-        .parquet(tableDir)
-    }
-    if (newFiles.exists(_._1.contains("__HIVE_DEFAULT_PARTITION__")))
-      throw new IllegalArgumentException("null values in partition columns are not allowed")
-    val nextSeq = nextMonotoneSeq(md)
-    val md1 = Sidecars.without(md).copy(
-      partitionKeys = partitionOn,
-      schemaJson = SchemaUtil.normalizeSchema(df.schema, partitionOn).json,
-      partitions = newFiles.toMap,
-      partitionSeq = newFiles.map(_._1 -> nextSeq).toMap,
-      deletes = Nil,
-      metadata = userMetadata +
-        (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
-    DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "REPLACE TABLE")
+    val added = writeBatch(spark, md.tableDir(base), partitionOn,
+      SchemaUtil.normalize(df, partitionOn))
+    // the parent re-laid: no sidecars, the new keys, the caller's
+    // properties over the engine's version, timestamp and seq watermark.
+    // Every label leaves, and their deletion vectors with them.
+    val engineKeys = Set(DatasetMetadata.VersionKey, DatasetMetadata.CommitTsKey,
+      DatasetMetadata.SeqHwmKey)
+    val relaid = Sidecars.without(md).copy(partitionKeys = partitionOn,
+      metadata = userMetadata ++ md.metadata.filter { case (k, _) => engineKeys(k) })
+    commitSnapshot(spark, base, relaid, added, md.partitions.keySet, SeqRule.Append,
+      "REPLACE TABLE", schema = _ => SchemaUtil.normalizeSchema(df.schema, partitionOn))
   }
 
   /** Small-file compaction: rewrite undersized data files into
@@ -2308,7 +2252,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       extraMetadata: Map[String, String] = Map.empty,
       scope: Predicates = Predicates.empty): DatasetMetadata = {
 
-    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = DatasetMetadata.load(spark, base, uuid)
     def dirOf(label: String): String = {
       val i = label.lastIndexOf('/')
       if (i < 0) "" else label.substring(0, i)
@@ -2316,7 +2260,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     // optional partition scope (OPTIMIZE ... WHERE over partition keys): at
     // large scale maintenance targets the HOT partitions, not the table —
     // out-of-scope files are untouchable, label parsing only
-    val inScope = partitionScope(md, scope, "compact")
+    val inScope = partitionScope(md, scope, "compact scope")
     // compaction victims: small files sharing (partition dir, commit seq)
     // with at least one other small file — singletons gain nothing.
     // Sizes come from the catalog (sizeOf widens Jackson's narrowed
@@ -2330,48 +2274,33 @@ object Ktk extends org.apache.spark.internal.Logging {
       .toSeq.flatMap { case ((_, seq), fs) => fs.map { case (l, _) => seq -> l } }
       .groupBy(_._1).map { case (s, ls) => s -> ls.map(_._2).sorted }
     val victims = victimsBySeq.values.flatten.toSet
-    if (victims.isEmpty) {
-      // nothing to rewrite, but callers piggybacking metadata on the
-      // compaction commit (e.g. the streaming sink's maintenance counter)
-      // still need it persisted.
-      if (extraMetadata.isEmpty) return md
-      val md0 = md.copy(metadata = md.metadata ++ extraMetadata)
-      return DatasetMetadata.store(spark, base, md0, parentMd = Some(md),
-        operation = "COMPACT")
-    }
-
-    val movedBySeq = rewriteGroupsStaged(spark, base, md, victimsBySeq) { (data, labels) =>
-      val totalBytes = labels.map(md.sizeOf).sum
-      val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-      val shaped =
-        if (md.partitionKeys.nonEmpty)
-          data.repartition(nOut, md.partitionKeys.map(c => col(s"`$c`")): _*)
-        else data.repartition(nOut)
-      // preserve the recorded sort layout: merged files keep tight
-      // row-group stats and zone-map ranges
-      val sortCols = recordedSortCols(md)
-      if (sortCols.isEmpty) shaped else shaped.sortWithinPartitions(sortCols: _*)
-    }
-    val newSeqOf = scala.collection.mutable.Map.empty[String, Long]
-    movedBySeq.foreach { case (seq, ls) => ls.foreach { case (l, _) => newSeqOf(l) = seq } }
-
+    // nothing to rewrite: callers piggybacking metadata on the compaction
+    // commit (e.g. the streaming sink's maintenance counter) still need it
+    // persisted
+    if (victims.isEmpty && extraMetadata.isEmpty) return md
     // survivors keep their catalog sizes; moved files carry the size
     // captured during the staging walk — no table-dir relisting
-    val finalPartitions: Map[String, Long] =
-      md.partitions.keys.filterNot(victims.contains)
-        .map(l => l -> md.sizeOf(l)).toMap ++ movedBySeq.flatMap(_._2)
-    val finalSeq = finalPartitions.keys.map { l =>
-      l -> newSeqOf.getOrElse(l, md.seqOf(l))
-    }.toMap
+    val (added, seqs) =
+      rewriteGroupsStaged(spark, base, md, victimsBySeq)(sizedLayout(md, targetFileBytes))
+    commitSnapshot(spark, base, md, added, victims, SeqRule.Rewrite(seqs), "COMPACT",
+      metadata = extraMetadata)
+  }
 
-    val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions),
-      newLabels = newSeqOf.keySet.toSet)
-    val md1 = merged.copy(partitionSeq = finalSeq,
-      // victims' deleted rows were materialized away during the rewrite
-      deletes = prunedDeleteFragments(spark, base, md, victims),
-      metadata = md.metadata ++ extraMetadata)
-    DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "COMPACT")
+  /** The rewrite layout of [[compact]] and [[materializeDeletes]]: files of
+    * ~`targetFileBytes`, hash-partitioned on the partition keys and sorted
+    * on the recorded sort layout, so merged files keep tight row-group
+    * stats and zone-map ranges.
+    */
+  private def sizedLayout(md: DatasetMetadata, targetFileBytes: Long)(
+      data: DataFrame, labels: Seq[String]): DataFrame = {
+    val totalBytes = labels.map(md.sizeOf).sum
+    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+    val shaped =
+      if (md.partitionKeys.nonEmpty)
+        data.repartition(nOut, md.partitionKeys.map(c => col(s"`$c`")): _*)
+      else data.repartition(nOut)
+    val sortCols = recordedSortCols(md)
+    if (sortCols.isEmpty) shaped else shaped.sortWithinPartitions(sortCols: _*)
   }
 
   /** Sort columns recorded at write time (`graft.sort_by`), restricted to
@@ -2387,7 +2316,8 @@ object Ktk extends org.apache.spark.internal.Logging {
     else (md.partitionKeys ++ cols).map(c => col(s"`$c`"))
   }
 
-  /** Shared staged-rewrite machinery of [[compact]] and [[clusterZOrder]].
+  /** Shared staged-rewrite machinery of [[compact]], [[materializeDeletes]]
+    * and [[clusterZOrder]].
     *
     * Per-seq groups rewrite CONCURRENTLY, each into its own staging dir
     * under the dataset root (dot-prefixed: invisible to listings and
@@ -2406,17 +2336,19 @@ object Ktk extends org.apache.spark.internal.Logging {
     * on those could reap a LIVE concurrent (or merely >1h) op's staging
     * mid-run. File mtimes are reliable everywhere.
     *
-    * `shape(groupData, groupLabels)` decides the rewrite layout (hash
-    * repartition for compact, z-rank range repartition for clusterZOrder);
-    * returns (seq → moved (label, size)) per group, sizes captured during
-    * the staging walk so no table-dir relisting is ever needed.
+    * `shape(groupData, groupLabels)` decides the rewrite layout (sized
+    * hash repartition for compact and materializeDeletes, z-rank range
+    * repartition for clusterZOrder). Returns the moved files' sizes, as
+    * captured during the staging walk so no table-dir relisting is ever
+    * needed, and the seq each inherits from its group.
     */
   private def rewriteGroupsStaged(
       spark: SparkSession,
       base: String,
       md: DatasetMetadata,
       victimsBySeq: Map[Long, Seq[String]])(
-      shape: (DataFrame, Seq[String]) => DataFrame): Seq[(Long, Seq[(String, Long)])] = {
+      shape: (DataFrame, Seq[String]) => DataFrame): (Map[String, Long], Map[String, Long]) = {
+    if (victimsBySeq.isEmpty) return (Map.empty, Map.empty)
     val tableDir = md.tableDir(base)
     val fsys = DatasetMetadata.fs(spark, base)
     // rewrites MATERIALIZE row-level deletes: groups holding a
@@ -2464,7 +2396,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    try Await.result(Future.sequence(victimsBySeq.toSeq.sortBy(_._1).map {
+    val moved = try Await.result(Future.sequence(victimsBySeq.toSeq.sortBy(_._1).map {
       case (seq, labels) => Future {
         // liveness signal for foreign ops' stale-staging checks
         try fsys.setTimes(heartbeat, System.currentTimeMillis(), -1)
@@ -2500,6 +2432,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       }
     }), Duration.Inf)
     finally { pool.shutdown(); fsys.delete(stagingRoot, true); () }
+    (moved.flatMap(_._2).toMap, moved.flatMap { case (seq, fs) => fs.map(_._1 -> seq) }.toMap)
   }
 
   /** Z-ORDER layout rewrite — the Delta/Iceberg `OPTIMIZE ZORDER BY`
@@ -2529,7 +2462,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       columns: Seq[String],
       targetFileBytes: Long = 128L * 1024 * 1024,
       scope: Predicates = Predicates.empty): DatasetMetadata = {
-    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = DatasetMetadata.load(spark, base, uuid)
     require(columns.nonEmpty && columns.size <= 8,
       s"z-order takes 1..8 columns, got ${columns.size}")
     val schema = md.schema
@@ -2546,7 +2479,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     // the matching partitions' files; quantile boundaries are computed
     // over the scoped set (zone pruning is per-file min/max, so scoped
     // boundaries only affect balance within the rewritten files)
-    val inScope = partitionScope(md, scope, "z-order")
+    val inScope = partitionScope(md, scope, "z-order scope")
     val allLabels = md.partitions.keys.toSeq.filter(inScope).sorted
     if (allLabels.isEmpty) return md
     val untouched = md.partitions.keys.toSeq.filterNot(inScope).sorted
@@ -2567,7 +2500,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     val bySeq: Map[Long, Seq[String]] =
       allLabels.groupBy(md.seqOf).map { case (s, ls) => s -> ls.sorted }
     val zc = "__graft_zrank"
-    val movedBySeq = rewriteGroupsStaged(spark, base, md, bySeq) { (data, labels) =>
+    val (added, seqs) = rewriteGroupsStaged(spark, base, md, bySeq) { (data, labels) =>
       val totalBytes = labels.map(md.sizeOf).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
       val ranked = data.withColumn(zc,
@@ -2579,33 +2512,19 @@ object Ktk extends org.apache.spark.internal.Logging {
         .sortWithinPartitions(parts: _*)
         .drop(zc)
     }
-    val newSeqOf = scala.collection.mutable.Map.empty[String, Long]
-    movedBySeq.foreach { case (seq, ls) => ls.foreach { case (l, _) => newSeqOf(l) = seq } }
-    val finalPartitions: Map[String, Long] =
-      untouched.map(l => l -> md.sizeOf(l)).toMap ++ movedBySeq.flatMap(_._2)
-    val finalSeq = finalPartitions.keys.map(l =>
-      l -> newSeqOf.getOrElse(l, md.seqOf(l))).toMap
 
     // zone maps over the clustered columns are the POINT of the layout —
-    // register any that are missing, then merge sidecars over the new
-    // files (out-of-scope files survive with their existing entries).
+    // register any that are missing; the commit merges sidecars over the
+    // new files (out-of-scope files survive with their existing entries).
     // Under a SCOPE, a brand-new zone column may only register if the
     // rewrite covers every file: zone pruning treats the sidecar as
     // TOTAL coverage, so a partial sidecar would silently drop every
     // out-of-scope file from predicate reads. Already-registered columns
-    // merge incrementally (untouched labels keep their rows).
-    val zones = Sidecars.Zone.registry(md)
-    val registrable = if (untouched.isEmpty) columns.filterNot(zones.contains) else Nil
-    val mdZ = Sidecars.Zone.withRegistry(md,
-      zones ++ registrable.map(c => c -> newSidecarName(c)))
-    val merged = Sidecars.merge(spark, base, md, mdZ.copy(partitions = finalPartitions),
-      newLabels = newSeqOf.keySet.toSet)
-    val md1 = merged.copy(partitionSeq = finalSeq,
-      // the rewritten files had their deletion vectors applied; fragments
-      // covering only them drop, fragments for untouched files remain
-      deletes = prunedDeleteFragments(spark, base, md, allLabels.toSet))
-    DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "ZORDER")
+    // (legacy inline ones included) merge incrementally.
+    val registrable = if (untouched.isEmpty) columns.filterNot(md.zoneColumns) else Nil
+    val withZones = Sidecars.Zone.withRegistry(md,
+      Sidecars.Zone.registry(md) ++ registrable.map(c => c -> newSidecarName(c)))
+    commitSnapshot(spark, base, withZones, added, allLabels.toSet, SeqRule.Rewrite(seqs), "ZORDER")
   }
 
   // ------------------------------------------------------- two-phase write
@@ -2662,24 +2581,11 @@ object Ktk extends org.apache.spark.internal.Logging {
       df: DataFrame,
       sortBy: Seq[String] = Nil): Seq[String] = {
     val md = DatasetMetadata.load(spark, base, uuid)
-    val tableDir = md.tableDir(base)
     SchemaUtil.validateCompatible(md.schema, SchemaUtil.normalizeSchema(df.schema, md.partitionKeys))
     val normalized = SchemaUtil.normalize(df, md.partitionKeys)
-    val sorted =
-      if (sortBy.nonEmpty) normalized.sortWithinPartitions(sortBy.map(c => col(s"`$c`")): _*)
-      else normalized
-    // labels come from the write job's commit manifest — no directory
-    // listing, so concurrent writePartition jobs never observe each other
-    // and cost stays O(batch) at any historical file count
-    val newFiles = ManifestCommitProtocol.collecting(spark) {
-      val writer = sorted.write.mode(SaveMode.Append)
-      (if (md.partitionKeys.nonEmpty) writer.partitionBy(md.partitionKeys: _*) else writer)
-        .parquet(tableDir)
-    }
-    val newLabels = newFiles.map(_._1).sorted
-    if (newLabels.exists(_.contains("__HIVE_DEFAULT_PARTITION__")))
-      throw new IllegalArgumentException("null values in partition columns are not allowed")
-    newLabels
+    // CHECK constraints gate the batch BEFORE any file lands
+    enforceConstraints(md, normalized)
+    writeBatch(spark, md.tableDir(base), md.partitionKeys, normalized, sortBy).keys.toSeq.sorted
   }
 
   /** Phase 3 (≙ commit_dataset, io/eager.py:433-527): register the labels
@@ -2693,7 +2599,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       uuid: String,
       newLabels: Seq[String],
       deleteScope: Predicates = Predicates.empty): DatasetMetadata = {
-    val md = Sidecars.migrateInlineZones(spark, base, DatasetMetadata.load(spark, base, uuid))
+    val md = DatasetMetadata.load(spark, base, uuid)
     val tableDir = md.tableDir(base)
     // validate + size ONLY the labels being registered — O(newLabels)
     // point lookups, never a recursive listing of the table dir
@@ -2709,27 +2615,13 @@ object Ktk extends org.apache.spark.internal.Logging {
 
     val deleted: Set[String] =
       if (deleteScope.isEmpty) Set.empty
-      else {
-        deleteScope.columns.foreach(c => require(md.partitionKeys.contains(c),
-          s"delete_scope column '$c' must be a partition key"))
-        md.partitions.keySet.filter(l => deleteScope.matchesValues(md.partitionValues(l)))
-      }
-    val keepOld = md.partitions.keySet -- deleted
-    val finalPartitions: Map[String, Long] =
-      keepOld.map(l => l -> md.sizeOf(l)).toMap ++ newSizes
-    val nextSeq = nextMonotoneSeq(md)
-    val finalSeq = finalPartitions.keys.map { l =>
-      l -> (if (newLabels.contains(l)) nextSeq else md.seqOf(l))
-    }.toMap
+      else md.partitions.keySet.filter(partitionScope(md, deleteScope, "delete_scope"))
     // sidecars merge exactly like [[update]]: the first commit after
-    // [[createEmpty]] finds no sidecar file and builds from its labels
-    val merged = Sidecars.merge(spark, base, md, md.copy(partitions = finalPartitions),
-      newLabels = newLabels.toSet)
-    val md1 = merged.copy(partitionSeq = finalSeq,
-      metadata = md.metadata + (DatasetMetadata.SeqHwmKey -> nextSeq.toString))
-
-    DatasetMetadata.store(spark, base, md1, parentMd = Some(md),
-      operation = "COMMIT PARTITIONS")
+    // [[createEmpty]] finds no sidecar file and builds from its labels.
+    // Without a delete scope the commit is a pure append, blind to the
+    // parent like [[update]]'s.
+    commitSnapshot(spark, base, md, newSizes, deleted, SeqRule.Append, "COMMIT PARTITIONS",
+      blindAppend = deleteScope.isEmpty)
   }
 
   /** Register + build a secondary index on an EXISTING dataset

@@ -30,7 +30,7 @@ private[graft] object Sidecars {
   /** The one fragment bound, fixed: a sidecar dir holds at most this many
     * part files and a snapshot at most this many deletion-vector fragments.
     * The commit that would pass it folds them, inside that same commit
-    * ([[Kind.merge]], `Ktk.fragmentsToCommit`) — the LSM / Delta-checkpoint
+    * ([[Kind.merge]], `Ktk.deletesAfter`) — the LSM / Delta-checkpoint
     * rule that keeps probe fan-in flat however long an append run lasts.
     */
   val MaxFragments = 64

@@ -51,6 +51,30 @@ class ConstraintSpec extends SparkSpec {
       .select("v").as[Double].head() shouldBe -9.0
   }
 
+  test("the two-phase write is gated: a violating writePartition leaves no file") {
+    val base = tmpDir("chk")
+    Ktk.createEmpty(spark, base, "tp", kv.schema, partitionOn = Seq("p"))
+    Ktk.addCheckConstraint(spark, base, "tp", "v_pos", "v > 0.0")
+    val tableDir = java.nio.file.Paths.get(DatasetMetadata.load(spark, base, "tp").tableDir(base))
+    def files: Seq[String] =
+      if (!java.nio.file.Files.exists(tableDir)) Nil
+      else {
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(tableDir)
+        try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(_.toString).toList.sorted
+        finally walk.close()
+      }
+    val before = files
+    intercept[IllegalArgumentException] {
+      Ktk.writePartition(spark, base, "tp", Seq((3L, "a", -1.0), (4L, "a", 5.0)).toDF("k", "p", "v"))
+    }
+    files shouldBe before
+    // a valid batch writes and commits
+    Ktk.commit(spark, base, "tp", Ktk.writePartition(spark, base, "tp", kv))
+    Ktk.readTable(spark, base, "tp").count() shouldBe 2
+  }
+
   test("constraints travel with versions (time-travel metadata)") {
     val base = tmpDir("chk")
     Ktk.store(spark, base, "ds", kv, partitionOn = Seq("p")) // v1

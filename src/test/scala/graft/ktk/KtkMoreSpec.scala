@@ -118,33 +118,40 @@ class KtkMoreSpec extends SparkSpec {
   }
 
   test("legacy inline zone maps still prune, and migrate to sidecar on update") {
-    val base = tmpDir("zonesleg")
-    val df = (0 until 90).map(i => (i / 30, i.toLong, i * 2.0)).toDF("p", "k", "x")
-    val md0 = Ktk.store(spark, base, "zl", df, partitionOn = Seq("p"), zoneMapFor = Seq("k"))
-    // forge a PRE-SIDECAR blob: ranges inline, no registry, no sidecar dir
-    val inline = Ktk.zoneMapOf(spark, base, md0, "k")
-    inline should not be empty
-    DatasetMetadata.store(spark, base,
-      md0.copy(zoneMaps = Map("k" -> inline), zones = Map.empty))
-    DatasetMetadata.fs(spark, base)
-      .delete(new org.apache.hadoop.fs.Path(s"$base/zl/zones"), true)
-    // legacy read path: inline ranges prune without a sidecar
-    val mdLegacy = DatasetMetadata.load(spark, base, "zl")
-    mdLegacy.inlineZoneMaps.keySet shouldBe Set("k")
-    Ktk.queryLabels(spark, base, mdLegacy,
-        graft.core.Predicates.of(Seq(("k", ">=", 75L))))
-      .forall(_.startsWith("p=2/")) shouldBe true
-    // first mutating op migrates inline → sidecar; pruning still exact
-    val md2 = Ktk.update(spark, base, "zl",
-      Some(Seq((3, 200L, 1.0)).toDF("p", "k", "x")))
-    md2.inlineZoneMaps shouldBe empty
-    md2.zoneRegistry.keySet shouldBe Set("k")
-    Ktk.zoneMapOf(spark, base, md2, "k").size shouldBe md2.partitions.size
-    val labels = Ktk.queryLabels(spark, base, md2,
-      graft.core.Predicates.of(Seq(("k", ">=", 150L))))
-    labels.forall(_.startsWith("p=3/")) shouldBe true
-    Ktk.readTable(spark, base, "zl",
-      predicates = graft.core.Predicates.of(Seq(("k", ">=", 75L)))).count() shouldBe 16
+    // every writer migrates inside the commit step: update and merge alike
+    val writers: Seq[(String, (String, org.apache.spark.sql.DataFrame) => DatasetMetadata)] = Seq(
+      "update" -> ((base, batch) => Ktk.update(spark, base, "zl", Some(batch))),
+      "merge" -> ((base, batch) => Ktk.merge(spark, base, "zl", batch, keys = Seq("k"))._1))
+    writers.foreach { case (name, write) =>
+      withClue(s"$name: ") {
+        val base = tmpDir("zonesleg")
+        val df = (0 until 90).map(i => (i / 30, i.toLong, i * 2.0)).toDF("p", "k", "x")
+        val md0 = Ktk.store(spark, base, "zl", df, partitionOn = Seq("p"), zoneMapFor = Seq("k"))
+        // forge a PRE-SIDECAR blob: ranges inline, no registry, no sidecar dir
+        val inline = Ktk.zoneMapOf(spark, base, md0, "k")
+        inline should not be empty
+        DatasetMetadata.store(spark, base,
+          md0.copy(zoneMaps = Map("k" -> inline), zones = Map.empty))
+        DatasetMetadata.fs(spark, base)
+          .delete(new org.apache.hadoop.fs.Path(s"$base/zl/zones"), true)
+        // legacy read path: inline ranges prune without a sidecar
+        val mdLegacy = DatasetMetadata.load(spark, base, "zl")
+        mdLegacy.inlineZoneMaps.keySet shouldBe Set("k")
+        Ktk.queryLabels(spark, base, mdLegacy,
+            graft.core.Predicates.of(Seq(("k", ">=", 75L))))
+          .forall(_.startsWith("p=2/")) shouldBe true
+        // first mutating op migrates inline → sidecar; pruning still exact
+        val md2 = write(base, Seq((3, 200L, 1.0)).toDF("p", "k", "x"))
+        md2.inlineZoneMaps shouldBe empty
+        md2.zoneRegistry.keySet shouldBe Set("k")
+        Ktk.zoneMapOf(spark, base, md2, "k").size shouldBe md2.partitions.size
+        val labels = Ktk.queryLabels(spark, base, md2,
+          graft.core.Predicates.of(Seq(("k", ">=", 150L))))
+        labels.forall(_.startsWith("p=3/")) shouldBe true
+        Ktk.readTable(spark, base, "zl",
+          predicates = graft.core.Predicates.of(Seq(("k", ">=", 75L)))).count() shouldBe 16
+      }
+    }
   }
 
   test("csv roundtrip preserves content with explicit schema") {

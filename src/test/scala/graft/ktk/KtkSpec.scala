@@ -172,6 +172,25 @@ class KtkSpec extends SparkSpec {
       Ktk.store(spark, base, "bad", bad, partitionOn = Seq("p"))
   }
 
+  test("two-phase writePartition(sortBy) keeps the order inside each file of a partitioned dataset") {
+    import org.apache.spark.sql.expressions.Window
+    val base = tmpDir("tpsort")
+    val rows = spark.range(0, 3000).selectExpr(
+      "id % 7 AS p", "(id * 2654435761) % 100000 AS k", "id AS v")
+    Ktk.createEmpty(spark, base, "srt", rows.schema, partitionOn = Seq("p"))
+    val labels = Ktk.writePartition(spark, base, "srt", rows.repartition(3), sortBy = Seq("k"))
+    val md = Ktk.commit(spark, base, "srt", labels)
+    // every written file is sorted on k
+    val tableDir = md.tableDir(base)
+    val scanned = spark.read.option("basePath", tableDir)
+      .parquet(labels.map(l => s"$tableDir/$l"): _*)
+      .select(col("k"), col("_metadata.file_path").as("f"),
+        col("_metadata.row_index").as("i"))
+    val w = Window.partitionBy("f").orderBy("i")
+    scanned.withColumn("prev", lag("k", 1).over(w))
+      .filter(col("prev") > col("k")).count() shouldBe 0
+  }
+
   test("update: append + delete_scope in one commit; index maintained") {
     val base = tmpDir("ktk")
     Ktk.store(spark, base, "ds", sample, partitionOn = Seq("p"), secondaryIndices = Seq("tag"))

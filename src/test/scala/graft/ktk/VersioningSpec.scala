@@ -472,11 +472,14 @@ class VersioningSpec extends SparkSpec {
     import scala.concurrent.duration._
     try {
       spark.conf.set("spark.graft.append.commitRetries", "40") // 4-way fan-in
+      // three update writers and one two-phase writer: a commit without a
+      // delete scope is a pure append too
       val futures = (0 until 4).map { t =>
         Future {
           (0 until 3).foreach { i =>
-            Ktk.update(spark, base, "ds",
-              Some(Seq((200L + t * 10 + i, s"t$t-$i")).toDF("k", "v")))
+            val batch = Seq((200L + t * 10 + i, s"t$t-$i")).toDF("k", "v")
+            if (t < 3) Ktk.update(spark, base, "ds", Some(batch))
+            else Ktk.commit(spark, base, "ds", Ktk.writePartition(spark, base, "ds", batch))
           }
         }
       }
