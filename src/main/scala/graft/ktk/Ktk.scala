@@ -534,7 +534,7 @@ object Ktk extends org.apache.spark.internal.Logging {
         // deletion vectors touch pay the (label, pos) anti-join — clean
         // files (the overwhelming majority after routine maintenance) scan
         // exactly as if no delete had ever happened
-        val dirtyL = labels.filter(dirtyDeleteLabels(spark, base, md).contains)
+        val dirtyL = labels.filter(DeleteVectors.labels(spark, base, md).contains)
         val cleanL = labels.filterNot(dirtyL.toSet)
         val needPos = withOverlayOrder || dirtyL.nonEmpty
         // planned from the snapshot: recorded sizes, explicit schema
@@ -551,11 +551,7 @@ object Ktk extends org.apache.spark.internal.Logging {
         val undeleted: DataFrame =
           if (dirtyL.isEmpty) scanOf(labels)
           else {
-            val dv = deleteVectors(spark, base, md).get
-              .select(col("label").as("__dvl"), col("pos").as("__dvp"))
-            val cleaned = scanOf(dirtyL).join(dv,
-              col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
-              "left_anti")
+            val cleaned = DeleteVectors.dropDeleted(spark, base, md, dirtyL.toSet, scanOf(dirtyL))
             if (cleanL.isEmpty) cleaned else scanOf(cleanL).unionByName(cleaned)
           }
         if (withOverlayOrder) {
@@ -697,136 +693,6 @@ object Ktk extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------- row-level deletes (DV)
 
-  private val DvSchema = StructType(Seq(
-    StructField("label", StringType, nullable = false),
-    StructField("pos", LongType, nullable = false)))
-
-  private def newDeleteFragmentName(): String =
-    s"dv.${java.util.UUID.randomUUID.toString.replace("-", "").take(8)}.parquet"
-
-  /** The union of a dataset's deletion-vector fragments as `(label, pos)`
-    * rows — a row of the table is DELETED iff any fragment lists its
-    * (file label, `_metadata.row_index`) pair. None when the dataset has
-    * no row-level deletes (the overwhelmingly common case — reads then pay
-    * nothing at all).
-    */
-  private[graft] def deleteVectors(
-      spark: SparkSession, base: String, md: DatasetMetadata): Option[DataFrame] = {
-    val frags = md.deleteFragments
-    if (frags.isEmpty) None
-    else Some(spark.read.schema(DvSchema)
-      .parquet(frags.map(md.deletePath(base, _)): _*))
-  }
-
-  /** Per-fragment affected-label cache: fragments are immutable and
-    * nonce-named, so a fragment's label set never changes — one entry per
-    * fragment ever read by this JVM, LRU-bounded.
-    */
-  private val fragLabelCache: java.util.LinkedHashMap[String, Set[String]] =
-    new java.util.LinkedHashMap[String, Set[String]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Set[String]]): Boolean = size() > 4096
-    }
-
-  /** Per-snapshot LRU for [[collectDeleteVectors]]: fragments are immutable
-    * and keyed by the commit version, so repeated plannings of the same
-    * DV-bearing snapshot (a dashboard's 50 SELECTs) pay the collection
-    * jobs ONCE, not per query.
-    */
-  private val dvCollectCache: java.util.LinkedHashMap[(String, String, Long, Set[String]), Map[String, Array[Long]]] =
-    new java.util.LinkedHashMap[(String, String, Long, Set[String]), Map[String, Array[Long]]](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Long, Set[String]), Map[String, Array[Long]]]): Boolean =
-        size() > 8
-    }
-
-  /** Driver-side collection of the LIVE tombstones touching `labels`, as a
-    * per-label SORTED position array — the shippable form a DSv2 reader
-    * needs to apply deletion vectors per file (Delta ships per-file DV
-    * bitmaps the same way). Bounded by `maxRows`: the count runs first
-    * (one cheap job over the small fragment files), so an over-limit
-    * dataset fails with guidance BEFORE anything is materialized on the
-    * driver.
-    */
-  private[graft] def collectDeleteVectors(
-      spark: SparkSession, base: String, md: DatasetMetadata,
-      labels: Set[String], maxRows: Long): Map[String, Array[Long]] = {
-    import spark.implicits._
-    val key = (base, md.uuid, md.version, labels)
-    dvCollectCache.synchronized(Option(dvCollectCache.get(key))) match {
-      case Some(hit) => return hit
-      case None      => ()
-    }
-    val dvAll = deleteVectors(spark, base, md).getOrElse(return Map.empty)
-    val dv = dvAll
-      .join(broadcast(labels.toSeq.toDF("label")), Seq("label"), "left_semi")
-    // count-first: an over-limit dataset fails BEFORE anything
-    // materializes on the driver (one cheap job over the small fragments)
-    val total = dv.count()
-    if (total > maxRows)
-      throw new IllegalStateException(
-        s"dataset '${md.uuid}' has $total pending row-level deletes (limit $maxRows " +
-          "for the DSv2 scan path). Materialize them first with " +
-          "Ktk.materializeDeletes / Ktk.compact, read via Ktk.readTable, or raise " +
-          ".option(\"maxDvScanRows\", n)")
-    val out = dv.groupBy("label").agg(collect_set("pos").as("ps"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[Long](1).toArray.sorted)
-      .toMap
-    dvCollectCache.synchronized(dvCollectCache.put(key, out))
-    out
-  }
-
-  /** Labels with at least one deleted row — the file set that must pay the
-    * merge-on-read anti-join. Planning must NOT cost a Spark job per read:
-    * each fragment dir carries a `_labels.json` manifest (written with the
-    * fragment; underscore-prefixed, so parquet scans ignore it) read with
-    * one tiny FS get and cached forever (fragments are immutable).
-    * Fragments lacking the manifest (older writers) fall back to a scan of
-    * the fragment's label column.
-    */
-  private[graft] def dirtyDeleteLabels(
-      spark: SparkSession, base: String, md: DatasetMetadata): Set[String] =
-    deleteFragmentLabels(spark, base, md, md.deleteFragments)
-
-  /** The labels `frags` (deletion-vector fragments of `md`'s dataset)
-    * touch, from each fragment's `_labels.json` manifest through a per-path
-    * cache — no Spark job. A fragment written before manifests existed
-    * pays one distinct-label job, once.
-    */
-  private def deleteFragmentLabels(spark: SparkSession, base: String, md: DatasetMetadata,
-      frags: Seq[String]): Set[String] = {
-    if (frags.isEmpty) return Set.empty
-    val fsys = DatasetMetadata.fs(spark, base)
-    frags.flatMap { name =>
-      val key = md.deletePath(base, name)
-      val cached = fragLabelCache.synchronized(Option(fragLabelCache.get(key)))
-      cached.getOrElse {
-        val manifest = new Path(s"$key/$DvLabelsManifest")
-        val labels: Set[String] =
-          try {
-            val in = fsys.open(manifest)
-            val bytes = try in.readAllBytes() finally in.close()
-            parseJsonStringArray(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-          } catch {
-            case _: java.io.FileNotFoundException =>
-              spark.read.schema(DvSchema).parquet(key)
-                .select("label").distinct().collect().map(_.getString(0)).toSet
-          }
-        fragLabelCache.synchronized(fragLabelCache.put(key, labels))
-        labels
-      }
-    }.toSet
-  }
-
-  private val DvLabelsManifest = "_labels.json"
-
-  private def parseJsonStringArray(s: String): Set[String] = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m.readValue(s, classOf[Array[String]]).toSet
-  }
-
   /** The (label, pos) pairs of live rows in `candidates` matching `cond`,
     * minus pairs an existing fragment already deletes — fragments stay
     * DISJOINT, so re-running the same DELETE finds nothing and deleted-row
@@ -835,53 +701,12 @@ object Ktk extends org.apache.spark.internal.Logging {
   private def freshDeletePairs(
       spark: SparkSession, base: String, md: DatasetMetadata,
       candidates: Seq[String], cond: org.apache.spark.sql.Column): DataFrame = {
-    val tableDir = md.tableDir(base)
     val hits = SnapshotScan(spark, base, md, candidates)
       .filter(cond)
       .select(
-        labelCol(spark, tableDir).as("label"),
+        labelCol(spark, md.tableDir(base)).as("label"),
         col("_metadata.row_index").as("pos"))
-    deleteVectors(spark, base, md) match {
-      case None     => hits
-      case Some(dv) => hits.join(dv, Seq("label", "pos"), "left_anti")
-    }
-  }
-
-  /** Write `pairs` as one immutable DV fragment and return its name, or
-    * None when `pairs` is empty (no rows matched — callers skip the
-    * commit). Files bounded by the cluster parallelism without a shuffle
-    * (a DV row is ~30 bytes; even a mass delete stays small next to the
-    * data it tombstones).
-    */
-  private def writeDeleteFragment(
-      spark: SparkSession, base: String, uuid: String, pairs: DataFrame): Option[(String, Long)] = {
-    val name = newDeleteFragmentName()
-    val dir = s"$base/$uuid/${DatasetMetadata.DeletesDirName}"
-    atomicSidecarWrite(spark, dir, name) { tmp =>
-      pairs.coalesce(spark.sparkContext.defaultParallelism)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
-    // one job gives row count AND the affected-label manifest, written
-    // INSIDE the fragment dir under an underscore name (parquet scans
-    // ignore it) BEFORE the metadata commit references the fragment —
-    // read planning then learns the dirty file set with one FS get
-    // instead of a Spark job per table read
-    val fin = s"$dir/$name"
-    val perLabel = spark.read.schema(DvSchema).parquet(fin)
-      .groupBy("label").count().collect()
-    val n = perLabel.map(_.getLong(1)).sum
-    if (n == 0L) {
-      DatasetMetadata.fs(spark, base).delete(new Path(fin), true)
-      None
-    } else {
-      val labels = perLabel.map(_.getString(0))
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val fsys = DatasetMetadata.fs(spark, base)
-      val out = fsys.create(new Path(s"$fin/$DvLabelsManifest"), true)
-      try out.write(m.writeValueAsBytes(labels)) finally out.close()
-      fragLabelCache.synchronized(fragLabelCache.put(fin, labels.toSet))
-      Some(name -> n)
-    }
+    DeleteVectors.dropDeleted(spark, base, md, candidates.toSet, hits, "label", "pos")
   }
 
   /** Last-consumed version recorded in a consumer checkpoint; 0 when the
@@ -1020,9 +845,9 @@ object Ktk extends org.apache.spark.internal.Logging {
       removed: Set[String], fresh: Option[String]): Seq[String] = {
     import spark.implicits._
     def rewrite(frags: Seq[String], keep: Set[String]): Seq[String] =
-      writeDeleteFragment(spark, base, parent.uuid,
-        spark.read.schema(DvSchema).parquet(frags.map(parent.deletePath(base, _)): _*)
-          .join(broadcast(keep.toSeq.toDF("label")), Seq("label"), "left_semi")
+      DeleteVectors.read(spark, base, parent.copy(deletes = frags), keep).flatMap(dv =>
+        DeleteVectors.write(spark, base, parent.uuid,
+          dv.join(broadcast(keep.toSeq.toDF("label")), Seq("label"), "left_semi"))
       ).map(_._1).toSeq
     val frags = parent.deleteFragments
     val kept =
@@ -1031,7 +856,7 @@ object Ktk extends org.apache.spark.internal.Logging {
         // only vectors over LIVE files count: a fragment naming dead labels
         // alone must not keep the dataset looking dirty (hasRowDeletes
         // gates footer pushdown and keyed joins)
-        val dirty = dirtyDeleteLabels(spark, base, parent).intersect(parent.partitions.keySet)
+        val dirty = DeleteVectors.labels(spark, base, parent).intersect(parent.partitions.keySet)
         if (dirty.subsetOf(removed)) Nil
         else if (!dirty.exists(removed)) frags
         else rewrite(frags, dirty -- removed)
@@ -1077,7 +902,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       else queryLabels(spark, base, md, predicates)
     if (candidates.isEmpty) return (md, 0L)
     val cond = filterQuery.map(expr).getOrElse(predicates.toColumn)
-    writeDeleteFragment(spark, base, uuid,
+    DeleteVectors.write(spark, base, uuid,
         freshDeletePairs(spark, base, md, candidates, cond)) match {
       case None => (md, 0L)
       case Some((name, n)) =>
@@ -1135,13 +960,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       .withColumn("__label",
         labelCol(spark, tableDir))
       .withColumn("__pos", col("_metadata.row_index"))
-    val live = (deleteVectors(spark, base, md) match {
-      case None => matched
-      case Some(dv) =>
-        val d = dv.select(col("label").as("__dvl"), col("pos").as("__dvp"))
-        matched.join(d,
-          col("__label") === col("__dvl") && col("__pos") === col("__dvp"), "left_anti")
-    }).select((schema.fieldNames.toSeq ++ Seq("__label", "__pos")).map(c => col(s"`$c`")): _*)
+    val live = DeleteVectors.dropDeleted(spark, base, md, candidates.toSet, matched).select((schema.fieldNames.toSeq ++ Seq("__label", "__pos")).map(c => col(s"`$c`")): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val updated = live.select(schema.fields.toSeq.map { f =>
@@ -1151,7 +970,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       val normalized = SchemaUtil.normalize(updated, md.partitionKeys)
       // constraints gate the batch before ANY side effect
       enforceConstraints(md, normalized)
-      val fragment: Option[(String, Long)] = writeDeleteFragment(spark, base, uuid,
+      val fragment: Option[(String, Long)] = DeleteVectors.write(spark, base, uuid,
         live.select(col("__label").as("label"), col("__pos").as("pos")))
       if (fragment.isEmpty) return (md, 0L)
       val added = writeBatch(spark, tableDir, md.partitionKeys, normalized)
@@ -1352,11 +1171,8 @@ object Ktk extends org.apache.spark.internal.Logging {
             .select(
               labelCol(spark, tableDir).as("label"),
               col("_metadata.row_index").as("pos"))
-          val fresh = deleteVectors(spark, base, md) match {
-            case None     => hits
-            case Some(dv) => hits.join(dv, Seq("label", "pos"), "left_anti")
-          }
-          writeDeleteFragment(spark, base, uuid, fresh)
+          DeleteVectors.write(spark, base, uuid,
+            DeleteVectors.dropDeleted(spark, base, md, candidates.toSet, hits, "label", "pos"))
         }
       }
 
@@ -1423,10 +1239,6 @@ object Ktk extends org.apache.spark.internal.Logging {
     def hwmOf(md: DatasetMetadata): Long = math.max(
       md.metadata.get(DatasetMetadata.SeqHwmKey).map(_.toLong).getOrElse(0L),
       (0L +: md.partitions.keys.toSeq.map(md.seqOf)).max)
-    def readFrags(frags: Seq[String]): DataFrame =
-      spark.read.schema(DvSchema)
-        .parquet(frags.map(n =>
-          s"$base/$uuid/${DatasetMetadata.DeletesDirName}/$n"): _*)
 
     def planOf(v: Long, mdP: DatasetMetadata, mdV: DatasetMetadata): CdfVersionPlan = {
       // bootstrap: the initial commit's labels legitimately carry seq 0 —
@@ -1440,23 +1252,19 @@ object Ktk extends org.apache.spark.internal.Logging {
       // that keeps all its parent's fragments adds disjoint pairs. Only a
       // commit that dropped one (a fold or a pruned rewrite) can re-list
       // old tombstones in its "new" fragment, so only there are the pairs
-      // already dead at the parent anti-joined away — reading every parent
-      // fragment per commit would cost a parallel-listing job past 32.
-      val newFrags = mdV.deleteFragments.filterNot(mdP.deleteFragments.toSet)
+      // already dead at the parent anti-joined away.
+      val newFrags = mdV.copy(deletes = mdV.deleteFragments.filterNot(mdP.deleteFragments.toSet))
       val droppedParentFrag = !mdP.deleteFragments.forall(mdV.deleteFragments.toSet)
-      val dv = Option.when(newFrags.nonEmpty) {
-        val dvNew = readFrags(newFrags)
+      // the manifests' labels, no job: a fold commit's manifest may name
+      // labels of old tombstones too, which the (label, pos) join drops
+      val hit = DeleteVectors.labels(spark, base, newFrags).filter(mdP.partitions.keySet.contains)
+      val dv = DeleteVectors.read(spark, base, newFrags, hit).map { dvNew =>
         val fresh =
           if (!droppedParentFrag) dvNew
-          else dvNew.join(readFrags(mdP.deleteFragments), Seq("label", "pos"), "left_anti")
-        val dv = fresh.select(col("label").as("__dvl"), col("pos").as("__dvp"))
-        // the manifests' labels, no job: a fold commit's manifest may name
-        // labels of old tombstones too, which the (label, pos) join drops
-        val files = SnapshotScan.sized(mdP,
-          deleteFragmentLabels(spark, base, mdV, newFrags)
-            .filter(mdP.partitions.keySet.contains).toSeq.sorted)
-        (dv, files)
-      }.filter(_._2.nonEmpty)
+          else DeleteVectors.dropDeleted(spark, base, mdP, hit, dvNew, "label", "pos")
+        (fresh.select(col("label").as("__dvl"), col("pos").as("__dvp")),
+          SnapshotScan.sized(mdP, hit.toSeq.sorted))
+      }
       CdfVersionPlan(v,
         freshAdds = SnapshotScan.sized(mdV, added.filter(l => mdV.seqOf(l) > hwm).toSeq.sorted),
         dv = dv,
@@ -1516,16 +1324,8 @@ object Ktk extends org.apache.spark.internal.Logging {
       val scopeDeletes: Option[DataFrame] =
         if (plan.gone.isEmpty) None
         else {
-          val raw = scanLabels(plan.gone, withPos = true)
-          val live =
-            if (plan.parentFrags.isEmpty) raw
-            else {
-              val dv = readFrags(plan.parentFrags)
-                .select(col("label").as("__dvl"), col("pos").as("__dvp"))
-              raw.join(dv,
-                col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
-                "left_anti")
-            }
+          val live = DeleteVectors.dropDeleted(spark, base, cur.copy(deletes = plan.parentFrags),
+            plan.gone.map(_._1).toSet, scanLabels(plan.gone, withPos = true))
           Some(project(live, "delete", v))
         }
       Seq(inserts, dvDeletes, scopeDeletes).flatten
@@ -1850,7 +1650,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     // optional partition scope: fold tombstones only for matching
     // partitions' files — fragments covering out-of-scope files survive
     val inScope = partitionScope(md, scope, "materialize scope")
-    val labels = dirtyDeleteLabels(spark, base, md)
+    val labels = DeleteVectors.labels(spark, base, md)
     val dirtyAll = labels.intersect(md.partitions.keySet)
     // with no live dirty file the fragments name only files earlier
     // commits removed: handed in as `removed`, those labels make the one
@@ -2356,20 +2156,13 @@ object Ktk extends org.apache.spark.internal.Logging {
     // so deleted rows never travel into the rewritten files (resurrection
     // would corrupt the dataset — the caller drops the labels from the
     // fragment list). Clean groups pay nothing.
-    val dvDirty: Set[String] = dirtyDeleteLabels(spark, base, md)
+    val dvDirty: Set[String] = DeleteVectors.labels(spark, base, md)
     def applyDeletes(raw: DataFrame, labels: Seq[String]): DataFrame =
       if (!labels.exists(dvDirty.contains)) raw
-      else {
-        val dv = deleteVectors(spark, base, md).get
-          .select(col("label").as("__dvl"), col("pos").as("__dvp"))
-        raw
-          .withColumn("__label",
-            labelCol(spark, tableDir))
-          .withColumn("__pos", col("_metadata.row_index"))
-          .join(dv, col("__label") === col("__dvl") && col("__pos") === col("__dvp"),
-            "left_anti")
-          .drop("__label", "__pos")
-      }
+      else DeleteVectors.dropDeleted(spark, base, md, labels.toSet,
+          raw.withColumn("__label", labelCol(spark, tableDir))
+            .withColumn("__pos", col("_metadata.row_index")))
+        .drop("__label", "__pos")
     val stagingRoot = new Path(s"$base/${md.uuid}/" +
       s".compacting-${java.util.UUID.randomUUID.toString.take(8)}")
     val dsRoot = new Path(s"$base/${md.uuid}")

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.{PredLiteral, PredOp, Predicates}
-import graft.ktk.{DatasetMetadata, Ktk, Sidecars, SnapshotScan}
+import graft.ktk.{DatasetMetadata, DeleteVectors, Ktk, Sidecars, SnapshotScan}
 
 /** DataSource V2 connector: `spark.read.format("graft").option("uuid", u)
   * .load(base)` — the optional Catalyst-integrated surface from SURVEY §4.
@@ -561,7 +561,7 @@ final class GraftScanBuilder(base: String, md: DatasetMetadata, options: CaseIns
     // falls back to the combined single-exec GraftDvScan.
     val dvSide = Option(options.get(GraftDvSplitRule.DvSideOption))
     val dirtyAll: Set[String] =
-      if (hasRowDeletes) Ktk.dirtyDeleteLabels(spark, base, md) else Set.empty
+      if (hasRowDeletes) DeleteVectors.labels(spark, base, md) else Set.empty
     // qualified table root, "/"-terminated: the DV scans relativize their
     // planned file paths against EXACTLY this prefix to recover the label
     // that keys the broadcast tombstone map (loud on mismatch — see
@@ -598,7 +598,7 @@ final class GraftScanBuilder(base: String, md: DatasetMetadata, options: CaseIns
         dataSchema, StructType(readDataSchema.fields :+ rowIdx), readPartitionSchema,
         dataFilters, options, None, Nil, Nil)
       val maxRows = options.getLong("maxDvScanRows", 10L * 1000 * 1000)
-      val dv = Ktk.collectDeleteVectors(spark, base, md, dirtyL.toSet, maxRows)
+      val dv = DeleteVectors.collect(spark, base, md, dirtyL.toSet, maxRows)
       (dirtyScan, spark.sparkContext.broadcast(dv))
     }
     if (dvSide.contains("dirty")) {

@@ -309,18 +309,15 @@ object GraftDvSplitRule
 
   /** Fire once (the dvside guard), only for batch graft relations whose
     * snapshot has fragments touching at least one LIVE file. The label
-    * probe is metadata-cached ([[graft.ktk.Ktk.dirtyDeleteLabels]]) —
+    * probe is metadata-cached ([[graft.ktk.DeleteVectors.labels]]) —
     * O(fragments) small manifest reads, once per fragment per JVM.
     */
   private def splittable(r: DataSourceV2Relation): Boolean = r.table match {
     case t: GraftTable =>
       !r.options.containsKey(DvSideOption) &&
         !r.options.getBoolean("keyed", false) &&
-        // .option("dvsplit", "off"): escape hatch back to the combined
-        // single-exec GraftDvScan (also how the stress probe A/Bs the tax)
-        !"off".equalsIgnoreCase(r.options.getOrDefault("dvsplit", "on")) &&
         t.datasetMetadata.deleteFragments.nonEmpty &&
-        graft.ktk.Ktk.dirtyDeleteLabels(
+        graft.ktk.DeleteVectors.labels(
           org.apache.spark.sql.SparkSession.active, t.basePath, t.datasetMetadata)
           .exists(t.datasetMetadata.partitions.contains)
     case _ => false

@@ -42,9 +42,13 @@ class DeleteVectorSpec extends SparkSpec {
   test("deleteRows: filterQuery takes arbitrary SQL expressions") {
     val base = tmpDir("dv")
     Ktk.store(spark, base, "ds", kv, partitionOn = Seq("p"))
-    val (_, n) = Ktk.deleteRows(spark, base, "ds",
+    val (md1, n) = Ktk.deleteRows(spark, base, "ds",
       filterQuery = Some("k % 2 = 0 AND v < 55"))
     n shouldBe 2L // k=2 (v=20), k=4 (v=40)
+    // a fragment without its `_labels.json` manifest (written before
+    // manifests existed) finds its labels from its own rows
+    DatasetMetadata.fs(spark, base).delete(
+      new Path(md1.deletePath(base, md1.deleteFragments.head), "_labels.json"), false) shouldBe true
     Ktk.readTable(spark, base, "ds").select("k").as[Long].collect().sorted.toSeq shouldBe
       Seq(1L, 3L, 5L, 6L)
   }
@@ -151,11 +155,35 @@ class DeleteVectorSpec extends SparkSpec {
   test("scoped materializeDeletes folds only in-scope vectors; others stay applied") {
     val base = tmpDir("dv")
     Ktk.store(spark, base, "ds", kv, partitionOn = Seq("p"))
-    // tombstones in BOTH partitions (one row each, neither fully deleted)
+    // tombstones in BOTH partitions (neither fully deleted): one fragment
+    // names both, a second names only p=a
     Ktk.deleteRows(spark, base, "ds",
       predicates = Predicates.of(Seq(("k", "in", Seq(1L, 4L)))))
-    DatasetMetadata.load(spark, base, "ds").deleteFragments should not be empty
+    Ktk.deleteRows(spark, base, "ds",
+      predicates = Predicates.of(Seq(("k", "==", 2L))))
+    val md0 = DatasetMetadata.load(spark, base, "ds")
+    md0.deleteFragments should have size 2
+    // a read of p=b plans exactly the part files of the fragments whose
+    // manifest names p=b's label
+    val fsys = DatasetMetadata.fs(spark, base)
+    val labelB = md0.partitions.keys.filter(_.startsWith("p=b")).toSet
+    def dvFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.inputFiles.filter(_.contains(s"/${DatasetMetadata.DeletesDirName}/"))
+        .map(f => new Path(f).toUri.getPath).toSet
+    val namingB = md0.deleteFragments.filter { f =>
+      val in = fsys.open(new Path(md0.deletePath(base, f), "_labels.json"))
+      val names = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      labelB.exists(l => names.contains("\"" + l + "\""))
+    }
+    namingB should have size 1
+    val partsB = fsys.listStatus(new Path(md0.deletePath(base, namingB.head)))
+      .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .map(p => fsys.makeQualified(p).toUri.getPath).toSet
+    partsB should not be empty
+    dvFiles(Ktk.readTable(spark, base, "ds",
+      predicates = Predicates.of(Seq(("p", "==", "b"))))) shouldBe partsB
     val before = Ktk.readTable(spark, base, "ds").select("k").as[Long].collect().sorted
+    before.toSeq shouldBe Seq(3L, 5L, 6L)
     val md1 = Ktk.materializeDeletes(spark, base, "ds",
       scope = Predicates.of(Seq(("p", "==", "a"))))
     // p=a's rows are physically gone; p=b's fragments survive and still apply
@@ -307,7 +335,16 @@ class DeleteVectorSpec extends SparkSpec {
     // instead of growing — reads never union an unbounded fragment set
     val folds = (1L to n).flatMap { k =>
       val before = DatasetMetadata.load(spark, base, "ds").deleteFragments.size
-      val (md, _) = Ktk.deleteRows(spark, base, "ds", predicates = Predicates.of(Seq(("k", "==", k))))
+      val ((md, _), deleteJobs) =
+        jobs(Ktk.deleteRows(spark, base, "ds", predicates = Predicates.of(Seq(("k", "==", k)))))
+      if (before == 40) {
+        // past Spark's 32-path parallel-listing threshold: fragments plan
+        // from their own listing, so a delete commit starts a pinned
+        // number of jobs and planning a read of the dirty label none
+        deleteJobs shouldBe 2
+        jobs(Ktk.readTable(spark, base, "ds",
+          predicates = Predicates.of(Seq(("p", "==", "a")))))._2 shouldBe 0
+      }
       md.deleteFragments.size should be <= Sidecars.MaxFragments
       Option.when(md.deleteFragments.size <= before)(md.version)
     }

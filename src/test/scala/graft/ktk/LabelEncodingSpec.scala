@@ -53,9 +53,17 @@ class LabelEncodingSpec extends SparkSpec {
     // connector path (GraftDvScan labels from SparkPath)
     val conn = spark.read.format("graft").option("uuid", "ds").load(base)
     conn.count() shouldBe values.size.toLong
-    // the combined fallback scan too (extensions' union split bypassed)
-    spark.read.format("graft").option("uuid", "ds").option("dvsplit", "off")
-      .load(base).count() shouldBe values.size.toLong
+    // the combined fallback scan too: with the union split rule excluded
+    // the read plans as in a session without GraftExtensions
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, graft.sources.GraftDvSplitRule.ruleName)
+    try {
+      val combined = spark.read.format("graft").option("uuid", "ds").load(base)
+      combined.queryExecution.sparkPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+      }.map(_.getClass.getSimpleName) shouldBe Seq("GraftDvScan")
+      combined.count() shouldBe values.size.toLong
+    } finally spark.conf.unset(excluded)
   }
 
   test("updateRows and merge key their tombstones correctly on encodable labels") {

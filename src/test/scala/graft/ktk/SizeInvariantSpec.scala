@@ -63,7 +63,7 @@ class SizeInvariantSpec extends SparkSpec {
         added shouldBe empty
         afterHwm shouldBe before.metadata.get(DatasetMetadata.SeqHwmKey)
     }
-    (Ktk.dirtyDeleteLabels(spark, base, after) & dropped) shouldBe empty
+    (DeleteVectors.labels(spark, base, after) & dropped) shouldBe empty
   }
 
   test("every entry point records each referenced label's true size") {

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 
 /** Randomized equivalence: after EVERY commit of a random
   * store/append/delete/merge history, the connector read (which plans the
-  * GraftDvSplitRule union while tombstones pend) must return exactly what
-  * `Ktk.readTable` returns — same rows, any DV state, with and without
-  * filters/projections. Seeded RNG keeps failures reproducible.
+  * GraftDvSplitRule union while tombstones pend) and `Ktk.readTable` must
+  * both return exactly the rows of a plain-Scala model of the history —
+  * same rows, any DV state, with and without filters/projections. Both
+  * paths apply tombstones through the same fragment reader, so the model
+  * is the independent check. Seeded RNG keeps failures reproducible.
   */
 class DvSplitEquivalenceSpec extends SparkSpec {
   import spark.implicits._
@@ -22,20 +24,23 @@ class DvSplitEquivalenceSpec extends SparkSpec {
     def rows(n: Int, tag: Int): Seq[(Long, Long, Double)] =
       (0 until n).map(_ => (rnd.nextInt(400).toLong, rnd.nextInt(4).toLong, tag * 1.0))
 
-    Ktk.store(spark, base, uuid,
-      rows(200, 0).toDF("k", "p", "v"), partitionOn = Seq("p"))
+    // the model: the live rows as a multiset (a sorted Seq)
+    var model: Seq[(Long, Long, Double)] = rows(200, 0)
+    Ktk.store(spark, base, uuid, model.toDF("k", "p", "v"), partitionOn = Seq("p"))
 
     def connector = spark.read.format("graft").option("uuid", uuid).load(base)
     def canon(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
       df.select("k", "p", "v").as[(Long, Long, Double)].collect().sorted.toSeq
 
     def check(step: String): Unit = withClue(s"[$step] ") {
-      val expected = canon(Ktk.readTable(spark, base, uuid))
+      val expected = model.sorted
+      canon(Ktk.readTable(spark, base, uuid)) shouldBe expected
       canon(connector) shouldBe expected
       // filter + projection push through both union branches
       val f = col("p") === 1L && col("v") >= 0.0
-      canon(connector.filter(f)) shouldBe
-        canon(Ktk.readTable(spark, base, uuid).filter(f))
+      val expectedF = expected.filter(_._2 == 1L)
+      canon(connector.filter(f)) shouldBe expectedF
+      canon(Ktk.readTable(spark, base, uuid).filter(f)) shouldBe expectedF
       connector.filter(col("k") < 50).agg(count(lit(1))).head.getLong(0) shouldBe
         expected.count(_._1 < 50)
     }
@@ -43,15 +48,19 @@ class DvSplitEquivalenceSpec extends SparkSpec {
     (1 to 12).foreach { i =>
       rnd.nextInt(3) match {
         case 0 => // append
-          Ktk.update(spark, base, uuid, Some(rows(40, i).toDF("k", "p", "v")))
+          val batch = rows(40, i)
+          Ktk.update(spark, base, uuid, Some(batch.toDF("k", "p", "v")))
+          model ++= batch
         case 1 => // row-level delete (may be a no-op predicate — fine)
-          val cut = rnd.nextInt(400)
+          val cut = rnd.nextInt(400).toLong
           Ktk.deleteRows(spark, base, uuid,
-            predicates = Predicates.of(Seq(("k", "==", cut.toLong))))
+            predicates = Predicates.of(Seq(("k", "==", cut))))
+          model = model.filterNot(_._1 == cut)
         case 2 => // keyed merge (tombstone + append in one commit)
-          Ktk.merge(spark, base, uuid,
-            rows(30, 100 + i).toDF("k", "p", "v").dropDuplicates("k"),
-            keys = Seq("k"))
+          val src = rows(30, 100 + i).distinctBy(_._1)
+          Ktk.merge(spark, base, uuid, src.toDF("k", "p", "v"), keys = Seq("k"))
+          val keys = src.map(_._1).toSet
+          model = model.filterNot(r => keys(r._1)) ++ src
       }
       check(s"step $i")
     }
