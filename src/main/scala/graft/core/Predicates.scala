@@ -35,7 +35,7 @@ object PredOp {
 object PredLiteral {
   /** Precomputed lookup structure for large IN lists vs String candidates. */
   final case class InLookup(
-      strings: Set[String], numeric: Set[Double],
+      strings: Set[String], numeric: Set[Long],
       nonConvStrs: Set[String], allNonStrStrs: Set[String], hasNull: Boolean)
 }
 
@@ -46,9 +46,10 @@ final case class PredLiteral(col: String, op: PredOp, value: Any) {
     * (the label-matching hot path — merge pushes collected-key IN lists of
     * up to 10k values through `queryLabels`, and a linear `exists` per
     * label is O(labels x values)). Mirrors `compare`'s (String, y) branch
-    * EXACTLY: numeric double-compare when both sides convert, string
-    * fallback against y.toString otherwise. None for small lists (linear
-    * wins) and non-IN ops.
+    * EXACTLY: numeric double-compare when both sides convert (doubles
+    * hashed by [[Predicates.doubleKey]]), string fallback against
+    * y.toString otherwise, strings in their Spark form. None for small
+    * lists (linear wins) and non-IN ops.
     */
   @transient private[core] lazy val inLookup: Option[PredLiteral.InLookup] =
     if (op != In) None
@@ -66,10 +67,10 @@ final case class PredLiteral(col: String, op: PredOp, value: Any) {
           catch { case _: NumberFormatException => false }
         }
         Some(PredLiteral.InLookup(
-          strings = strs.map(_.asInstanceOf[String]).toSet,
-          numeric = conv.map(Predicates.toDouble).toSet,
-          nonConvStrs = nonConv.map(_.toString).toSet,
-          allNonStrStrs = nonStrs.map(_.toString).toSet,
+          strings = strs.map(x => Predicates.sparkForm(x.asInstanceOf[String])).toSet,
+          numeric = conv.map(x => Predicates.doubleKey(Predicates.toDouble(x))).toSet,
+          nonConvStrs = nonConv.map(x => Predicates.sparkForm(x.toString)).toSet,
+          allNonStrStrs = nonStrs.map(x => Predicates.sparkForm(x.toString)).toSet,
           hasNull = hasNull))
       case _ => None
     }
@@ -249,15 +250,16 @@ object Predicates {
       case Ge => v != null && compare(v, l.value) >= 0
       case In => (v, l.inLookup) match {
         case (null, Some(look)) => look.hasNull
-        case (s: String, Some(look)) =>
+        case (s0: String, Some(look)) =>
           // String-typed values: exact string equality (compare's first
           // branch). Non-String values: numeric when both sides convert,
           // else candidate vs value.toString — the try in compare covers
           // BOTH conversions, so an unparseable candidate string-compares
           // against every non-String value
+          val s = sparkForm(s0)
           look.strings.contains(s) || {
             val parsed =
-              try Some(s.toDouble) catch { case _: NumberFormatException => None }
+              try Some(doubleKey(s.toDouble)) catch { case _: NumberFormatException => None }
             parsed match {
               case Some(d) => look.numeric.contains(d) || look.nonConvStrs.contains(s)
               case None    => look.allNonStrStrs.contains(s)
@@ -270,25 +272,55 @@ object Predicates {
     }
   }
 
-  /** Loose cross-numeric-type comparison for driver-side partition values
-    * (decoded from strings) vs predicate values.
+  /** The one driver-side pruning order, Spark's: strings by code point
+    * (= UTF8_BINARY byte order), numbers as doubles with -0.0 equal to 0.0
+    * and NaN greatest. Partition values decoded from paths are strings; one
+    * compares numerically against a non-string literal when both sides
+    * parse, and by code point against its `toString` otherwise.
     */
   private[graft] def compare(a: Any, b: Any): Int = (a, b) match {
-    case (x: String, y: String) => x.compareTo(y)
+    case (x: String, y: String) => compareStrings(x, y)
     case (x, y: String) =>
-      // stringified stats (zone-map mn/mx) vs a typed literal: numeric when
-      // both sides parse — "701" must sit inside ["526","1044"], which a
-      // lexicographic compare gets wrong across digit widths
-      try java.lang.Double.compare(toDouble(x), y.toDouble)
-      catch { case _: NumberFormatException => x.toString.compareTo(y) }
+      try compareDoubles(toDouble(x), y.toDouble)
+      catch { case _: NumberFormatException => compareStrings(x.toString, y) }
     case (x: String, y) =>
-      // partition values decoded from paths are strings; try numeric compare
-      try java.lang.Double.compare(x.toDouble, toDouble(y))
-      catch { case _: NumberFormatException => x.compareTo(y.toString) }
-    case (x, y) => java.lang.Double.compare(toDouble(x), toDouble(y))
+      try compareDoubles(x.toDouble, toDouble(y))
+      catch { case _: NumberFormatException => compareStrings(x, y.toString) }
+    case (x, y) => compareDoubles(toDouble(x), toDouble(y))
   }
 
-  private[core] def toDouble(v: Any): Double = v match {
+  /** Spark's double order (`SQLOrderingUtil.compareDoubles`). */
+  private def compareDoubles(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** A hash key equal exactly where [[compareDoubles]] says 0: -0.0 folds
+    * into 0.0 and every NaN into one.
+    */
+  private[core] def doubleKey(d: Double): Long =
+    java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+
+  /** Code-point order of the strings' Spark forms. A UTF-16 unit ranks by
+    * the code points it can start: surrogates (only in pairs, for code
+    * points above U+FFFF) above U+E000–U+FFFF.
+    */
+  private def compareStrings(a: String, b: String): Int = {
+    def rank(c: Char): Int = if (c >= '\uE000') c - 0x800 else if (c >= '\uD800') c + 0x2000 else c
+    val (x, y) = (sparkForm(a), sparkForm(b))
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n && x.charAt(i) == y.charAt(i)) i += 1
+    if (i < n) rank(x.charAt(i)) - rank(y.charAt(i)) else x.length - y.length
+  }
+
+  /** `s` as Spark stores it: UTF-8 encoding turns an unpaired surrogate
+    * into '?'.
+    */
+  private[core] def sparkForm(s: String): String =
+    if (!s.exists(Character.isSurrogate)) s
+    else new String(s.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+  private[graft] def toDouble(v: Any): Double = v match {
     case n: Number => n.doubleValue()
     case b: Boolean => if (b) 1d else 0d
     case d: java.sql.Date => d.getTime.toDouble

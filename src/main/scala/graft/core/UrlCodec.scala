@@ -22,15 +22,24 @@ object UrlCodec {
     sb.toString
   }
 
+  /** Inverse of [[quote]]; also decodes the unescaped non-ASCII characters
+    * Spark's own partition writer leaves in a path (their UTF-8 bytes go
+    * through as they are).
+    */
   def unquote(s: String): String = {
     val out = new java.io.ByteArrayOutputStream(s.length)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length + 1 && i + 2 < s.length) {
+      if (c == '%' && i + 2 < s.length) {
         out.write(Integer.parseInt(s.substring(i + 1, i + 3), 16))
         i += 3
-      } else { out.write(c.toInt); i += 1 }
+      } else if (c < 128) { out.write(c.toInt); i += 1 }
+      else {
+        val n = Character.charCount(s.codePointAt(i))
+        out.write(s.substring(i, i + n).getBytes("UTF-8"))
+        i += n
+      }
     }
     new String(out.toByteArray, "UTF-8")
   }

@@ -384,97 +384,6 @@ object Ktk extends org.apache.spark.internal.Logging {
     all.filter(surviving.contains)
   }
 
-  /** STRING-key merge-envelope pruning, exact by construction: every
-    * comparison runs under Spark's UTF8-binary string order — the same
-    * order the envelope's `min`/`max` were computed in — never the
-    * driver-side UTF-16 comparator or the legacy inline-zone coercions
-    * (both diverge from UTF8-binary, see the merge envelope comment).
-    *
-    *  - partition values: decoded label values compared as UTF-8 BYTES on
-    *    the driver (byte-identical to Spark's order);
-    *  - secondary index: the range evaluates INSIDE the index scan with
-    *    Spark expressions; labels the index does not mention AT ALL are
-    *    KEPT (keep-on-absence, like the bloom layer in queryLabels);
-    *  - zone sidecar: Spark-side `mn <= hi && mx >= lo` over the sidecar
-    *    table (stats present-but-null ⇒ all-null file ⇒ no `=` match ⇒
-    *    dropped; label absent from the sidecar ⇒ KEPT);
-    *  - legacy INLINE zone maps and blooms: fenced off — no pruning.
-    *
-    * Soundness: a batch key s with lo ≤ s ≤ hi (UTF8 order, by min/max
-    * construction) that exists in a file implies the file's partition
-    * value equals s's (kept), its index rows contain s (kept), and its
-    * zone [mn, mx] straddles s (kept) — pruning can only drop files that
-    * hold NO batch key; the residual semi join stays exact regardless.
-    */
-  private[graft] def stringEnvelopeCandidates(
-      spark: SparkSession, base: String, md: DatasetMetadata,
-      candidates: Seq[String], bounds: Seq[(String, String, String)]): Seq[String] = {
-    val partCols = md.partitionKeys.toSet
-    bounds.foldLeft(candidates) { case (labels0, (k, lo, hi)) =>
-      var cur = labels0
-      if (partCols(k) && cur.nonEmpty)
-        cur = cur.filter { lbl =>
-          md.partitionValues(lbl).get(k)
-            .forall(v => utf8Leq(lo, v) && utf8Leq(v, hi))
-        }
-      // both sidecar passes are KEEP-ON-ABSENCE (the bloom layer's
-      // convention in queryLabels): a committed label with no row in the
-      // index/zone sidecar stays a candidate rather than being pruned —
-      // intersecting would let any commit path that skips a sidecar append
-      // make merge silently skip tombstoning matched rows. ONE sidecar scan
-      // answers both questions: emit (label, hit) rows, restrict to the
-      // (small, broadcast) candidate list, and take max(hit) per label —
-      // keep a candidate iff it has a matching row OR no rows at all.
-      // Driver transfer is O(candidates), the scan runs once.
-      def keepMatchingOrUncovered(perLabelHits: DataFrame): Unit = {
-        import spark.implicits._
-        val candDf = broadcast(spark.createDataset(cur).toDF("label"))
-        val verdict = perLabelHits.join(candDf, Seq("label"))
-          .groupBy("label").agg(max(col("hit")).as("any_hit"))
-          .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-        cur = cur.filter(l => verdict.getOrElse(l, true))
-      }
-      if (md.indices.contains(k) && cur.nonEmpty)
-        keepMatchingOrUncovered(
-          // hit is evaluated BEFORE the explode (null values cannot equal a
-          // non-null key → coalesce to false, never null)
-          loadIndex(spark, base, md, k).select(
-            explode(col("partitions")).as("label"),
-            coalesce(col("value") >= lit(lo) && col("value") <= lit(hi),
-              lit(false)).as("hit")))
-      if (md.zoneRegistry.contains(k) && cur.nonEmpty) {
-        val sidecar = new Path(md.zonePath(base, k))
-        if (DatasetMetadata.fs(spark, base).exists(sidecar))
-          keepMatchingOrUncovered(
-            // null stats = all-null column in that file: present in the
-            // sidecar but never matching ⇒ dropped, as before
-            SidecarRows.frame(spark, sidecar).select(
-              col("label"),
-              coalesce(col("mn").isNotNull && col("mx").isNotNull &&
-                col("mn") <= lit(hi) && col("mx") >= lit(lo),
-                lit(false)).as("hit")))
-      }
-      cur
-    }
-  }
-
-  /** `a <= b` under UTF-8 unsigned-byte order — byte-identical to Spark's
-    * default (UTF8_BINARY) string comparison, property-tested against
-    * `UTF8String.compareTo` in MergePruneSpec. The ONLY driver-side string
-    * comparator the string envelope is allowed to touch.
-    */
-  private[graft] def utf8Leq(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length <= y.length
-  }
-
   // ---------------------------------------------------------------- read
 
   /** Read a dataset as one DataFrame with DNF predicate pushdown:
@@ -1041,38 +950,18 @@ object Ktk extends org.apache.spark.internal.Logging {
       if (rows.size <= maxCollectKeys) Some(rows) else None
     }
     // large source (distinct keys exceed maxCollectKeys): ONE map-side
-    // min/max agg over the batch keys gives a per-column RANGE envelope.
-    // The Ge/Le conjunction still prunes through partition values, the
-    // secondary index (its lookup evaluates the range with SPARK
-    // expressions over the index table, so it stays exact) and zone
-    // maps; bloom is the only IN/Eq-gated layer that passes ranges
-    // through. So a time- or id-clustered wide-key CDC batch
-    // scans only the files whose stats intersect the batch envelope, not
-    // the whole table; the residual semi join keeps the result exact.
-    // Only types whose Spark min/max ORDER provably agrees with the
-    // pruning comparator's order contribute bounds. Numerics are safe:
-    // `Predicates.toDouble` is MONOTONE, so a strict less-than in double
-    // implies a true less-than — pruning never drops a file wrongly (it
-    // can only keep extra near 2^53, the conservative direction).
-    // Date/Timestamp compare chronologically on both sides (the existing
-    // user-predicate path). STRING bounds take a DEDICATED pruning pass
-    // ([[stringEnvelopeCandidates]]) that evaluates ONLY under Spark's
-    // UTF8-binary order — the general driver-side comparator is Java
-    // String.compareTo (UTF-16 code units), which diverges on
-    // supplementary characters (emoji in text keys), and the legacy
-    // inline-zone comparator additionally coerces numeric-parseable
-    // strings per PAIR (non-transitive); an envelope that is not an
-    // interval under the pruning order could drop a file holding a
-    // matching key and its row would silently survive the merge. So
-    // string envelopes probe partition values as UTF-8 BYTES on the
-    // driver (byte-identical to Spark's order), and the index/zone
-    // sidecars with Spark expressions only; legacy inline zone maps are
-    // fenced off from string bounds entirely. This matters because LLM
-    // pipelines key on STRING doc ids — the flagship use case must not
-    // fall back to a full candidate scan.
-    // Arrays/binary/structs contribute no bounds. A null min
-    // means the column held ONLY nulls, which matches nothing (MERGE ON
-    // `=` is null-rejecting).
+    // min/max agg over the batch keys gives a per-column RANGE envelope,
+    // a Ge/Le conjunction that prunes through queryLabels (partition
+    // values, secondary index, zone maps; bloom passes ranges through),
+    // so a time- or id-clustered wide-key CDC batch scans only the files
+    // whose stats intersect it; the residual semi join keeps the result
+    // exact. Spark computed the envelope in Spark's order, and pruning
+    // compares in that same order (`Predicates.compare`: strings by code
+    // point, doubles with -0.0 = 0.0), so a file holding a batch key is
+    // never dropped. Strings, numerics, dates and timestamps contribute
+    // bounds; arrays/binary/structs none. A null min means the column
+    // held ONLY nulls, which matches nothing (MERGE ON `=` is
+    // null-rejecting).
     lazy val keyBounds: Seq[(String, Any, Any)] = {
       val aggExprs = keys.flatMap(k =>
         Seq(min(col(s"`$k`")).as(s"__lo_$k"), max(col(s"`$k`")).as(s"__hi_$k")))
@@ -1080,25 +969,9 @@ object Ktk extends org.apache.spark.internal.Logging {
       keys.zipWithIndex.map { case (k, i) => (k, row.get(2 * i), row.get(2 * i + 1)) }
     }
     def comparableBound(v: Any): Boolean = v match {
-      case _: Number | _: Boolean => true
+      case _: String | _: Number | _: Boolean => true
       case _: java.sql.Date | _: java.sql.Timestamp => true
       case _ => false
-    }
-    // Spark equality (the residual semi join) treats -0.0 = 0.0, but the
-    // driver-side pruning comparator is Double.compare, which orders
-    // -0.0 < 0.0. Widen float/double bounds at the signed-zero boundary
-    // so an envelope of [0.0, x] also admits files whose only matching
-    // key is -0.0 (and vice versa) — otherwise the matched row survives
-    // un-tombstoned and the merge inserts a duplicate key.
-    def widenLo(v: Any): Any = v match {
-      case d: java.lang.Double if d.doubleValue == 0.0 => java.lang.Double.valueOf(-0.0)
-      case f: java.lang.Float if f.floatValue == 0.0f => java.lang.Float.valueOf(-0.0f)
-      case other => other
-    }
-    def widenHi(v: Any): Any = v match {
-      case d: java.lang.Double if d.doubleValue == 0.0 => java.lang.Double.valueOf(0.0)
-      case f: java.lang.Float if f.floatValue == 0.0f => java.lang.Float.valueOf(0.0f)
-      case other => other
     }
     val fragment: Option[(String, Long)] =
       if (md.partitions.isEmpty) None
@@ -1126,18 +999,12 @@ object Ktk extends org.apache.spark.internal.Logging {
             else {
               val rangeLits = keyBounds.flatMap {
                 case (k, lo, hi) if comparableBound(lo) && comparableBound(hi) =>
-                  Seq(PredLiteral(k, graft.core.PredOp.Ge, widenLo(lo)),
-                    PredLiteral(k, graft.core.PredOp.Le, widenHi(hi)))
+                  Seq(PredLiteral(k, graft.core.PredOp.Ge, lo),
+                    PredLiteral(k, graft.core.PredOp.Le, hi))
                 case _ => Nil
               }
-              val stringBounds = keyBounds.collect {
-                case (k, lo: String, hi: String) => (k, lo, hi)
-              }
-              val cands0 =
-                if (rangeLits.isEmpty) md.partitions.keys.toSeq.sorted
-                else queryLabels(spark, base, md, Predicates(Seq(rangeLits)))
-              if (stringBounds.isEmpty) cands0
-              else stringEnvelopeCandidates(spark, base, md, cands0, stringBounds)
+              if (rangeLits.isEmpty) md.partitions.keys.toSeq.sorted
+              else queryLabels(spark, base, md, Predicates(Seq(rangeLits)))
             }
         }
         lastMergeCandidates.set(candidates.size)
@@ -1153,13 +1020,8 @@ object Ktk extends org.apache.spark.internal.Logging {
                 s.filter(col(s"`$k`").isin(vs: _*))
               }
             case None =>
-              // string bounds push too: Spark evaluates `>=`/`<=` on
-              // strings under the same UTF8-binary order min/max used,
-              // and parquet row-group stats prune binary-exact
               keyBounds.foldLeft(scan0) {
                 case (s, (k, lo, hi)) if comparableBound(lo) && comparableBound(hi) =>
-                  s.filter(col(s"`$k`") >= lit(lo) && col(s"`$k`") <= lit(hi))
-                case (s, (k, lo: String, hi: String)) =>
                   s.filter(col(s"`$k`") >= lit(lo) && col(s"`$k`") <= lit(hi))
                 case (s, _) => s
               }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, OptimizeIn}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, StructType, TimestampType}
 
 import graft.core.{PredLiteral, PredOp, Predicates}
 
@@ -390,7 +390,7 @@ private[graft] object Sidecars {
     /** The ranges decide on the driver: one [[checkFn]] pass over the rows. */
     protected def matching(spark: SparkSession, base: String, md: DatasetMetadata, p: Path,
         l: PredLiteral): Option[Set[String]] = {
-      val check = checkFn(l)
+      val check = checkFn(l, md.schema(l.col).dataType)
       val labels = Set.newBuilder[String]
       SidecarRows.scan(spark, base, md.uuid, p) { schema =>
         val Seq(lb, mn, mx) = Seq("label", "mn", "mx").map(schema.fieldIndex)
@@ -409,7 +409,7 @@ private[graft] object Sidecars {
       if (registry(md).contains(l.col)) super.probe(spark, base, md, l)
       else {
         val zm = md.inlineZoneMaps(l.col)
-        val check = checkFn(l)
+        val check = checkFn(l, md.schema(l.col).dataType)
         Some(md.partitions.keySet.filter { lbl =>
           zm.get(lbl) match {
             case None                 => true
@@ -419,27 +419,30 @@ private[graft] object Sidecars {
         })
       }
 
-    /** Date/timestamp strings (the rendered form of `cast(ts as string)`)
-      * become epoch millis so they compare numerically with date literals.
+    /** The key under which a zone column of type `dt` orders `mn`, `mx`
+      * and the literal — its own type's order, as Spark compares them:
+      * strings as strings (by code point, no date or number parsing),
+      * numerics as doubles, dates and timestamps as epoch millis (from
+      * the `cast(_ as string)` rendering). None for any other type, and a
+      * key that cannot be formed throws: both keep the file.
       */
-    private def zoneValue(x: Any): Any = x match {
-      case s: String =>
-        try java.sql.Timestamp.valueOf(s).getTime
-        catch {
-          case _: Exception =>
-            try java.sql.Date.valueOf(s).getTime catch { case _: Exception => s }
-        }
-      case d: java.sql.Date => d.getTime
-      case t: java.sql.Timestamp => t.getTime
-      case other => other
+    private def zoneKey(dt: DataType): Option[Any => Any] = dt match {
+      case StringType => Some { case s: String => s }
+      case _: NumericType => Some(Predicates.toDouble)
+      case DateType | TimestampType => Some {
+        case s: String =>
+          try java.sql.Timestamp.valueOf(s).getTime
+          catch { case _: IllegalArgumentException => java.sql.Date.valueOf(s).getTime }
+        case d: java.util.Date => d.getTime
+        case other => Predicates.toDouble(other)
+      }
+      case _ => None
     }
-
-    private def cmp(a: Any, b: Any): Int = Predicates.compare(zoneValue(a), zoneValue(b))
 
     /** May rows in [mn, mx] satisfy the literal? CONSERVATIVE: any
       * comparison failure keeps the file.
       */
-    private def mayMatch(l: PredLiteral, mn: String, mx: String): Boolean = {
+    private def mayMatch(l: PredLiteral, cmp: (Any, Any) => Int, mn: String, mx: String): Boolean = {
       import PredOp._
       try l.op match {
         case Eq => cmp(l.value, mn) >= 0 && cmp(l.value, mx) <= 0
@@ -453,27 +456,34 @@ private[graft] object Sidecars {
       } catch { case _: Exception => true }
     }
 
-    /** Range check for one literal. Large IN lists: sort once, binary-search per file — O(files·log
-      * keys), not O(files·keys).
+    /** Range check for one literal on a zone column of type `dt`. Large IN
+      * lists: sort once, binary-search per file — O(files·log keys), not
+      * O(files·keys).
       */
-    private[ktk] def checkFn(l: PredLiteral): (String, String) => Boolean = l.op match {
-      case PredOp.In =>
-        val sorted =
-          try l.value.asInstanceOf[Seq[Any]].filter(_ != null)
-            .sortWith(cmp(_, _) < 0).toIndexedSeq
-          catch { case _: Exception => null }
-        if (sorted == null) (mn, mx) => mayMatch(l, mn, mx)
-        else (mn, mx) => try {
-          // least value >= mn, then test <= mx
-          var lo = 0; var hi = sorted.size
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (cmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
+    private[ktk] def checkFn(l: PredLiteral, dt: DataType): (String, String) => Boolean =
+      zoneKey(dt) match {
+        case None => (_, _) => true
+        case Some(key) =>
+          val cmp = (a: Any, b: Any) => Predicates.compare(key(a), key(b))
+          l.op match {
+            case PredOp.In =>
+              val sorted =
+                try l.value.asInstanceOf[Seq[Any]].filter(_ != null)
+                  .sortWith(cmp(_, _) < 0).toIndexedSeq
+                catch { case _: Exception => null }
+              if (sorted == null) (mn, mx) => mayMatch(l, cmp, mn, mx)
+              else (mn, mx) => try {
+                // least value >= mn, then test <= mx
+                var lo = 0; var hi = sorted.size
+                while (lo < hi) {
+                  val mid = (lo + hi) >>> 1
+                  if (cmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
+                }
+                lo < sorted.size && cmp(sorted(lo), mx) <= 0
+              } catch { case _: Exception => true }
+            case _ => (mn, mx) => mayMatch(l, cmp, mn, mx)
           }
-          lo < sorted.size && cmp(sorted(lo), mx) <= 0
-        } catch { case _: Exception => true }
-      case _ => (mn, mx) => mayMatch(l, mn, mx)
-    }
+      }
   }
 
   val kinds: Seq[Kind] = Seq(Index, Bloom, Zone)

@@ -15,9 +15,8 @@ class MergePruneSpec extends SparkSpec {
   import spark.implicits._
 
   // 4 partitions (p=a..d) x 4 files each, k RANGE-partitioned so each
-  // file's zone map covers a disjoint k interval (tight pruning; string
-  // partition values never contribute range-envelope bounds, so the
-  // uncollectable tests must prune through k's zones)
+  // file's zone map covers a disjoint k interval (tight pruning through
+  // k's zones, on top of the p envelope's partition pruning)
   private def seed(base: String): DatasetMetadata = {
     val df = (0 until 1600).map { i =>
       (i.toLong, ("abcd" (i / 400)).toString, i * 1.0)
@@ -92,16 +91,16 @@ class MergePruneSpec extends SparkSpec {
   test("range envelope admits a -0.0 key against a [0.0, ..] batch (signed-zero widening)") {
     val base = tmpDir("mprune")
     // one file holds ONLY negative keys ending at -0.0 (its zone max);
-    // the driver comparator orders -0.0 < 0.0, but the merge's semi join
-    // uses Spark equality where -0.0 = 0.0 — without widening, the
-    // envelope [0.0, 19.0] would prune this file, the -0.0 row would
-    // survive un-tombstoned, and the merge would insert a duplicate key
+    // the merge's semi join uses Spark equality where -0.0 = 0.0, so the
+    // pruning order must too — otherwise the envelope [0.0, 19.0] would
+    // prune this file, the -0.0 row would survive un-tombstoned, and the
+    // merge would insert a duplicate key
     val df = ((-3 to 0).map(i => (if (i == 0) -0.0 else i.toDouble, "neg", 1.0)) ++
       (1 to 30).map(i => (i.toDouble, "pos", 1.0))).toDF("k", "p", "v")
     Ktk.store(spark, base, "ds", df, partitionOn = Seq("p"),
       sortBy = Seq("k"), zoneMapFor = Seq("k"))
     // 20 distinct keys > maxCollectKeys=5 forces the envelope path;
-    // lo = 0.0 must widen to -0.0 so the neg file stays a candidate
+    // lo = 0.0 must admit the neg file's max -0.0
     val batch = (0 until 20).map(i => (i.toDouble, "pos", -9.0)).toDF("k", "p", "v")
     Ktk.merge(spark, base, "ds", batch, keys = Seq("k"), maxCollectKeys = 5)
     val zero = Ktk.readTable(spark, base, "ds")
@@ -112,20 +111,23 @@ class MergePruneSpec extends SparkSpec {
 
   test("STRING-keyed uncollectable batch prunes through partition values + zone maps") {
     // LLM pipelines key on string doc ids — the flagship case must not
-    // fall back to a full candidate scan. The dedicated string pass
-    // compares UTF-8 bytes / Spark expressions only (never the UTF-16
-    // driver comparator or the legacy inline-zone coercions).
+    // fall back to a full candidate scan. The string envelope prunes
+    // through queryLabels like a numeric one: the index and zone probes
+    // answer on the driver, so they add no Spark job to the merge.
     val base = tmpDir("mprune")
     val df = (0 until 1600).map { i =>
       (f"doc$i%06d", ("abcd" (i / 400)).toString, i * 1.0)
     }.toDF("sk", "p", "v")
     Ktk.store(spark, base, "ds",
       df.repartitionByRange(8, col("sk")).sortWithinPartitions("sk"),
-      partitionOn = Seq("p"), sortBy = Seq("sk"), zoneMapFor = Seq("sk"))
+      partitionOn = Seq("p"), sortBy = Seq("sk"), zoneMapFor = Seq("sk"),
+      secondaryIndices = Seq("sk"))
     val total = DatasetMetadata.load(spark, base, "ds").partitions.size
     // 20 distinct keys > maxCollectKeys=5, clustered in p=b
     val batch = (400 until 420).map(i => (f"doc$i%06d", "b", -7.0)).toDF("sk", "p", "v")
-    Ktk.merge(spark, base, "ds", batch, keys = Seq("sk", "p"), maxCollectKeys = 5)
+    val (_, mergeJobs) =
+      jobs(Ktk.merge(spark, base, "ds", batch, keys = Seq("sk", "p"), maxCollectKeys = 5))
+    mergeJobs shouldBe 12
     val candidates = Ktk.lastMergeCandidates.get()
     candidates should be >= 1
     candidates should be < total
@@ -159,7 +161,7 @@ class MergePruneSpec extends SparkSpec {
       .count() shouldBe 10L
   }
 
-  test("utf8Leq agrees with Spark's UTF8String order on arbitrary strings") {
+  test("Predicates.compare agrees with Spark's UTF8String order on arbitrary strings") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import org.apache.spark.unsafe.types.UTF8String
     // strings drawn to stress the divergence zones: BMP high code points,
@@ -171,11 +173,13 @@ class MergePruneSpec extends SparkSpec {
       Gen.const(""))
     val str: Gen[String] = Gen.listOfN(3, unit).map(_.mkString)
     val prop = Prop.forAll(str, str) { (a, b) =>
-      Ktk.utf8Leq(a, b) ==
-        (UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) <= 0)
+      Integer.signum(graft.core.Predicates.compare(a, b)) ==
+        Integer.signum(UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
     assert(res.passed, res.status.toString)
+    // and numbers in Spark's double order: -0.0 equals 0.0
+    graft.core.Predicates.compare(-0.0, 0.0) shouldBe 0
   }
 
   test("uncollectable envelope prunes through a secondary index on a numeric key, exactly") {
@@ -194,30 +198,5 @@ class MergePruneSpec extends SparkSpec {
     Ktk.readTable(spark, base, "ds")
       .filter(org.apache.spark.sql.functions.col("v") === -5.0)
       .count() shouldBe 20L
-  }
-
-  test("string-envelope sidecar passes KEEP labels the sidecars never mention") {
-    // the index/zone passes must be conservative like the bloom layer: a
-    // committed label with NO row in the sidecar stays a merge candidate —
-    // intersecting would let a sidecar gap make merge skip tombstoning
-    // matched rows (silent duplicate keys)
-    val base = tmpDir("mprune")
-    val df = (0 until 100).map(i => (f"s$i%03d", i * 1.0)).toDF("s", "v")
-    Ktk.store(spark, base, "ds",
-      df.repartitionByRange(4, col("s")).sortWithinPartitions("s"),
-      sortBy = Seq("s"), zoneMapFor = Seq("s"), secondaryIndices = Seq("s"))
-    val md = DatasetMetadata.load(spark, base, "ds")
-    val labels = md.partitions.keys.toSeq.sorted
-    labels.size should be >= 4
-    val phantom = "not-in-any-sidecar.parquet"
-    // a range covering only the lowest keys: real labels prune, the
-    // sidecar-less phantom survives both passes
-    val got = Ktk.stringEnvelopeCandidates(spark, base, md,
-      labels :+ phantom, Seq(("s", "s000", "s004")))
-    got should contain(phantom)
-    got.size should be < labels.size + 1
-    // a range matching NO committed key keeps exactly the phantom
-    Ktk.stringEnvelopeCandidates(spark, base, md,
-      labels :+ phantom, Seq(("s", "zzz", "zzzz"))) shouldBe Seq(phantom)
   }
 }

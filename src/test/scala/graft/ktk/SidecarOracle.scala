@@ -5,11 +5,14 @@ import scala.util.{Failure, Success, Try}
 import graft.core.{PredLiteral, Predicates}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** The distributed index and zone-map probes the driver-side probes
   * replaced, kept as test oracles: `read.parquet → filter(toColumn) →
   * explode → distinct` for the index, the [[Sidecars.Zone.checkFn]] UDF
-  * filter for zone maps.
+  * filter for zone maps, typed by the zone column's `dt` as the probe
+  * types it (so the zone oracle pins the driver-side row read, not the
+  * range check itself).
   *
   * The batched forms answer many literals of one column from one scan: each
   * literal's filter expression becomes a column evaluated on every sidecar
@@ -26,8 +29,8 @@ object SidecarOracle {
       .distinct()
       .collect().map(_.getString(0)).toSet
 
-  def zone(spark: SparkSession, path: String, l: PredLiteral): Set[String] = {
-    val check = Sidecars.Zone.checkFn(l)
+  def zone(spark: SparkSession, path: String, dt: DataType, l: PredLiteral): Set[String] = {
+    val check = Sidecars.Zone.checkFn(l, dt)
     val may = udf { (mn: String, mx: String) => mn != null && mx != null && check(mn, mx) }
     spark.read.parquet(path).filter(may(col("mn"), col("mx")))
       .select(col("label")).collect().map(_.getString(0)).toSet
@@ -44,10 +47,11 @@ object SidecarOracle {
     }
 
   /** [[zone]] for every literal of `ls` (all on one column) from one scan. */
-  def zone(spark: SparkSession, path: String, ls: Seq[PredLiteral]): Seq[Try[Set[String]]] =
-    batched(ls, zone(spark, path, _: PredLiteral)) {
+  def zone(spark: SparkSession, path: String, dt: DataType,
+      ls: Seq[PredLiteral]): Seq[Try[Set[String]]] =
+    batched(ls, zone(spark, path, dt, _: PredLiteral)) {
       val mays = ls.map { l =>
-        val check = Sidecars.Zone.checkFn(l)
+        val check = Sidecars.Zone.checkFn(l, dt)
         udf { (mn: String, mx: String) => mn != null && mx != null && check(mn, mx) }
           .apply(col("mn"), col("mx"))
       }

@@ -95,7 +95,7 @@ class SidecarProbeParitySpec extends SparkSpec {
       val all = md.partitions.keySet
       val outcomes = groups(c, vals, big).flatMap { ls =>
         val index = SidecarOracle.index(spark, md.indexPath(base, c), ls)
-        val zone = SidecarOracle.zone(spark, md.zonePath(base, c), ls)
+        val zone = SidecarOracle.zone(spark, md.zonePath(base, c), md.schema(c).dataType, ls)
         ls.indices.flatMap { i =>
           val l = ls(i)
           Seq(same(s"index $l", index(i), Sidecars.Index.probe(spark, base, md, l)),

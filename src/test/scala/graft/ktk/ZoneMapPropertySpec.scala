@@ -7,23 +7,33 @@ import org.apache.spark.sql.functions._
 /** Property net for zone-map pruning: for MANY random predicates over
   * mixed types (double, timestamp, string; with nulls), a zone-mapped
   * dataset read must return exactly the rows of the raw DataFrame filter —
-  * pruning may only skip files, never rows.
+  * pruning may only skip files, never rows. The strings include values
+  * where other orders part from Spark's: a high-BMP and a supplementary
+  * character (UTF-16 code units order them the other way round), and
+  * date-like and numeric-like strings (no date or number parsing may
+  * reorder a string column); the string partition column `q` draws from
+  * the same alphabet.
   */
 class ZoneMapPropertySpec extends SparkSpec {
   import spark.implicits._
 
+  private val odd = Seq("\uFF61", new String(Character.toChars(0x10000)), "1999-12-31", "2000", "701")
+  private val qs = odd ++ Seq("w001", "w017", "w033")
+
   private lazy val (base, raw) = {
     val b = tmpDir("zmprop")
     val rnd = new scala.util.Random(7)
+    val rndOdd = new scala.util.Random(23)
     val rows = (0 until 300).map { i =>
       val x = if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(200) - 100 + rnd.nextDouble())
       val t = if (rnd.nextInt(12) == 0) None
         else Some(java.sql.Timestamp.valueOf(
           f"2021-${1 + rnd.nextInt(12)}%02d-${1 + rnd.nextInt(28)}%02d ${rnd.nextInt(24)}%02d:00:00"))
       val s = if (rnd.nextInt(15) == 0) None else Some(f"w${rnd.nextInt(40)}%03d")
-      (i.toLong, i % 4, x, t, s)
-    }.toDF("id", "p", "x", "t", "s")
-    Ktk.store(spark, b, "zp", rows, partitionOn = Seq("p"),
+      val s1 = if (rndOdd.nextInt(4) == 0) s.map(_ => odd(rndOdd.nextInt(odd.size))) else s
+      (i.toLong, i % 4, x, t, s1, qs(rndOdd.nextInt(qs.size)))
+    }.toDF("id", "p", "x", "t", "s", "q")
+    Ktk.store(spark, b, "zp", rows, partitionOn = Seq("p", "q"),
       sortBy = Seq("x"), zoneMapFor = Seq("x", "t", "s"))
     (b, rows)
   }
@@ -57,6 +67,15 @@ class ZoneMapPropertySpec extends SparkSpec {
     val bigIn = Seq.fill(300)((rnd2.nextInt(260) - 130).toDouble).distinct
     check(Predicates.of(Seq(("x", "in", bigIn))), "x-in-large")
     check(Predicates.of(Seq(("s", "in", (0 until 200).map(i => f"w${i * 3}%03d")))), "s-in-large")
+  }
+
+  test("strings where UTF-16, date or number order would differ match the raw filter") {
+    val ops = Seq("==", "!=", "<", "<=", ">", ">=")
+    for (v <- odd; op <- ops) check(Predicates.of(Seq(("s", op, v))), "s-odd")
+    for (v <- qs; op <- ops) check(Predicates.of(Seq(("q", op, v))), "q-range")
+    check(Predicates.of(Seq(("s", "in", odd))), "s-in-odd")
+    check(Predicates.of(Seq(("s", ">=", "2000"), ("s", "<=", odd.head))), "s-between")
+    check(Predicates.of(Seq(("q", ">", "701"), ("q", "<", odd(1)))), "q-between")
   }
 
   test("random conjunctions and disjunctions match the raw filter") {
