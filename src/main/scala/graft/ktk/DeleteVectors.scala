@@ -1,7 +1,7 @@
 package graft.ktk
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -114,27 +114,36 @@ private[graft] object DeleteVectors {
     * callers skip the commit). Files bounded by the cluster parallelism
     * without a shuffle (a DV row is ~30 bytes; even a mass delete stays
     * small next to the data it tombstones). The count and the label
-    * manifest are observed on the write itself; the manifest lands inside
-    * the fragment dir BEFORE the metadata commit references the fragment.
+    * manifest come from the write's own tasks (accumulators fed in its
+    * final stage, labels deduplicated per task — no extra job); the
+    * manifest lands inside the fragment dir BEFORE the metadata commit
+    * references the fragment.
     */
   def write(spark: SparkSession, base: String, uuid: String,
       pairs: DataFrame): Option[(String, Long)] = {
     val name = newName()
-    val stats = Observation()
+    val rows = spark.sparkContext.longAccumulator
+    val touched = spark.sparkContext.collectionAccumulator[String]
+    val li = pairs.schema.fieldIndex("label")
     Ktk.atomicSidecarWrite(spark, dir(base, uuid), name) { tmp =>
-      pairs.observe(stats, count(lit(1)).as("n"), collect_set("label").as("labels"))
-        .coalesce(spark.sparkContext.defaultParallelism)
+      pairs.coalesce(spark.sparkContext.defaultParallelism)
+        .mapPartitions { it =>
+          val seen = scala.collection.mutable.HashSet.empty[String]
+          it.map { r => rows.add(1); seen += r.getString(li); r } ++ {
+            seen.foreach(touched.add); Iterator.empty
+          }
+        }(Encoders.row(pairs.schema))
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    val observed = stats.get
-    val n = observed("n").asInstanceOf[Long]
+    val n = rows.value.longValue
     val path = new Path(s"${dir(base, uuid)}/$name")
     val fsys = DatasetMetadata.fs(spark, base)
     if (n == 0L) {
       fsys.delete(path, true)
       None
     } else {
-      val labels = observed("labels").asInstanceOf[scala.collection.Seq[String]].toArray
+      import scala.jdk.CollectionConverters._
+      val labels = touched.value.asScala.distinct.toArray
       val out = fsys.create(new Path(path, LabelsManifest), true)
       try out.write(new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsBytes(labels))
       finally out.close()

@@ -366,11 +366,15 @@ object Ktk extends org.apache.spark.internal.Logging {
     // on the driver from the part-file cache, blooms tested on executors
     val probes =
       scala.collection.mutable.Map.empty[(Sidecars.Kind, PredLiteral), Option[Set[String]]]
+    lazy val schema = md.schema
     val surviving = predicates.splitPerConjunction(partCols).zip(predicates.disjunction).flatMap {
       case ((partLits, _), conj) =>
-        // 1. partition-key pruning from decoded labels (PartitionIndex)
+        // 1. partition-key pruning from decoded labels (PartitionIndex),
+        // each literal compared in its column's type
+        val checks = partLits.map(l => l.col -> Sidecars.Zone.valueCheck(l, schema(l.col).dataType))
         val afterPart = all.filter { label =>
-          Predicates(Seq(partLits)).matchesValues(md.partitionValues(label))
+          val values = md.partitionValues(label)
+          checks.forall { case (c, check) => values.get(c).forall(check) }
         }
         // 2. sidecar pruning (index, bloom, zone): intersect the label sets
         // each kind's probe returns; None (no sidecar file) keeps all
@@ -2388,10 +2392,11 @@ object Ktk extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------------- versioning
 
-  /** All commit versions still materialized as snapshots (ascending).
-    * Every commit writes an immutable `_versions/v<n>.json` snapshot next
-    * to the latest-pointer blob; [[garbageCollect]] prunes them by its
-    * retention setting.
+  /** All commit versions still listed under `_versions/` (ascending).
+    * Every commit writes one immutable record there: v1 and every
+    * [[DatasetMetadata.CheckpointEvery]]-th commit a full `v<n>.json`
+    * snapshot, the rest an O(delta) `v<n>.delta.json` over their parent;
+    * [[garbageCollect]] prunes them by its retention setting.
     */
   def listVersions(spark: SparkSession, base: String, uuid: String): Seq[Long] =
     DatasetMetadata.listVersions(spark, base, uuid)
@@ -2500,7 +2505,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     * block locations, so the copy buys nothing. On object stores this
     * trades the flat prefix LIST for one LIST per directory; the big
     * walks (fsck/gc/salvage) recurse DISTRIBUTED per first-level
-    * directory (see [[listTableFilesCore]]), so each task issues its
+    * directory (see [[listTableFiles]]), so each task issues its
     * directory fan-out in requests, not its file count.
     */
   private[graft] def walkFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path)(
@@ -2514,132 +2519,67 @@ object Ktk extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Recursively list the DATA files under `table/` as table-relative
-    * paths (labels), skipping `_`/`.` names. Small trees list on the
-    * driver; past [[ParallelListThreshold]] first-level directories the
-    * per-directory recursions run as a Spark job (the InMemoryFileIndex
-    * parallel-discovery pattern) — a 100 TB table's maintenance pass
-    * (gc, fsck) must not serialize a million object-store LIST calls
-    * through the driver.
+  /** Past this many first-level directories under `table/`,
+    * [[listTableFiles]] walks them in a Spark job.
     */
   private[graft] val ParallelListThreshold = 32
 
-  /** Core listing shared by [[listTableFiles]] and [[listTableFilesDS]]:
-    * top-level files always list on the driver; subdirectory recursion is
-    * either a driver walk (≤ threshold first-level dirs) or an RDD of
-    * per-directory recursions (Right) that callers can keep distributed.
+  /** A data file's name: the `_`/`.` filter applies to LEAF FILE NAMES
+    * ONLY — a partition COLUMN may legally start with '_' (UrlCodec keeps
+    * it), so directories always recurse.
     */
-  /** Past this many TOP-LEVEL files the driver stops retaining their
-    * labels and the flat remainder re-lists inside the Spark job: an
-    * UNPARTITIONED table accumulates every file in `table/` itself, where
-    * the directory-count trigger above never fires — without this cap a
-    * million-file flat table would funnel a million labels through the
-    * driver on every maintenance pass. The root statuses still STREAM
-    * through the driver once (listStatusIterator, O(1) retained) to
-    * discover subdirectories; only label RETENTION is capped.
-    */
-  private[graft] val FlatListThreshold = 100000
+  private[graft] def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val name = st.getPath.getName
+    st.isFile && !name.startsWith("_") && !name.startsWith(".")
+  }
 
-  private def listTableFilesCore(
+  /** Recursively list the DATA files under `table/` (the qualified
+    * `tableRoot`) as table-relative paths (labels) — the one listing fsck,
+    * gc and salvage diff against the labels the commit log references.
+    * Top-level files list on the driver; so do the first-level directories'
+    * walks up to `threshold` of them, and past it those walks run as one
+    * Spark job (the InMemoryFileIndex parallel-discovery pattern) whose
+    * labels collect to the driver — a wide table's maintenance pass must
+    * not serialize a million object-store LIST calls through the driver.
+    */
+  private[graft] def listTableFiles(
       spark: SparkSession, fsys: org.apache.hadoop.fs.FileSystem,
-      tableRoot: Path, threshold: Int,
-      flatThreshold: Int = FlatListThreshold)
-      : (Seq[String], Either[Seq[String], org.apache.spark.rdd.RDD[String]]) = {
-    if (!fsys.exists(tableRoot)) return (Nil, Left(Nil))
-    // the `_`/`.` filter applies to LEAF FILE NAMES ONLY (matching the
-    // old recursive walk): a partition COLUMN may legally start with '_'
-    // (UrlCodec keeps it), so directories always recurse
-    def keep(name: String): Boolean = !name.startsWith("_") && !name.startsWith(".")
+      tableRoot: Path, threshold: Int = ParallelListThreshold): Seq[String] = {
+    if (!fsys.exists(tableRoot)) return Nil
     // relativize against the EXACT qualified root, never a path pattern: a
     // component under the root that happens to be named like the root dir
     // must not shift the label, because gc deletes by label difference and a
     // wrong label is a wrong delete
     val prefix = tableRoot.toString + "/"
-    def rel(p: String): String = stripLabelPrefix(p, prefix)
-    // stream the root listing: retain dir paths + at most flatThreshold
-    // top-level labels; a flat overflow re-lists the root distributed
-    val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val topKept = scala.collection.mutable.ArrayBuffer.empty[String]
-    var topOverflow = false
+    // stream the root listing: only directory paths and labels are kept
+    val dirs = Seq.newBuilder[String]
+    val labels = Seq.newBuilder[String]
     val rootIt = fsys.listStatusIterator(tableRoot)
     while (rootIt.hasNext) {
       val st = rootIt.next()
-      if (st.isDirectory) dirs += st.getPath
-      else if (st.isFile && keep(st.getPath.getName)) {
-        if (topKept.size < flatThreshold) topKept += rel(st.getPath.toString)
-        else topOverflow = true
-      }
+      if (st.isDirectory) dirs += st.getPath.toString
+      else if (isDataFile(st)) labels += stripLabelPrefix(st.getPath.toString, prefix)
     }
-    val topFiles = if (topOverflow) Nil else topKept.toSeq
-    val subFiles: Either[Seq[String], org.apache.spark.rdd.RDD[String]] =
-      if (!topOverflow && dirs.length <= threshold) {
-        Left(dirs.toSeq.flatMap { d =>
-          val out = Seq.newBuilder[String]
-          walkFiles(fsys, d) { st =>
-            if (keep(st.getPath.getName)) out += rel(st.getPath.toString)
-          }
-          out.result()
-        })
-      } else {
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
-        // work item = (path, recurse): subdirectories walk recursively; on
-        // flat overflow the ROOT re-lists its own files only (its subdirs
-        // are already separate items)
-        val items: Seq[(String, Boolean)] =
-          dirs.map(_.toString -> true).toSeq ++
-            (if (topOverflow) Seq(tableRoot.toString -> false) else Nil)
-        Right(spark.sparkContext.parallelize(items, math.min(64, items.size))
-          .flatMap { case (ds, recurse) =>
-            val p = new Path(ds)
-            val f = p.getFileSystem(conf.value)
-            val out = Seq.newBuilder[String]
-            def emit(st: org.apache.hadoop.fs.FileStatus): Unit = {
-              val name = st.getPath.getName
-              if (!name.startsWith("_") && !name.startsWith("."))
-                out += stripLabelPrefix(st.getPath.toString, prefix)
-            }
-            if (recurse) walkFiles(f, p)(emit)
-            else {
-              val it = f.listStatusIterator(p)
-              while (it.hasNext) {
-                val st = it.next()
-                if (st.isFile) emit(st)
-              }
-            }
-            out.result()
-          })
-      }
-    (topFiles, subFiles)
+    val sub = dirs.result()
+    if (sub.length <= threshold) sub.foreach(d => labels ++= walkLabels(fsys, d, prefix))
+    else {
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf())
+      labels ++= spark.sparkContext.parallelize(sub, math.min(64, sub.length))
+        .flatMap(d => walkLabels(new Path(d).getFileSystem(conf.value), d, prefix))
+        .collect()
+    }
+    labels.result()
   }
 
-  private[graft] def listTableFiles(
-      spark: SparkSession, fsys: org.apache.hadoop.fs.FileSystem,
-      tableRoot: Path, threshold: Int = ParallelListThreshold,
-      flatThreshold: Int = FlatListThreshold): Seq[String] =
-    listTableFilesCore(spark, fsys, tableRoot, threshold, flatThreshold) match {
-      case (top, Left(sub))  => top ++ sub
-      case (top, Right(rdd)) => top ++ rdd.collect()
+  /** The labels (paths past `prefix`) of the data files under `dir`. */
+  private[graft] def walkLabels(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      prefix: String): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    walkFiles(fs, new Path(dir)) { st =>
+      if (isDataFile(st)) out += stripLabelPrefix(st.getPath.toString, prefix)
     }
-
-  /** The listing as a Dataset of labels that STAYS DISTRIBUTED when the
-    * parallel branch fires — the input side of [[fsck]]/[[salvage]]'s
-    * anti-join diff, which at 100 TB metadata sizes must not funnel a
-    * million label strings through a driver Set.
-    */
-  private[graft] def listTableFilesDS(
-      spark: SparkSession, fsys: org.apache.hadoop.fs.FileSystem,
-      tableRoot: Path, threshold: Int = ParallelListThreshold,
-      flatThreshold: Int = FlatListThreshold)
-      : org.apache.spark.sql.Dataset[String] = {
-    import spark.implicits._
-    listTableFilesCore(spark, fsys, tableRoot, threshold, flatThreshold) match {
-      case (top, Left(sub))  => (top ++ sub).toDS()
-      case (top, Right(rdd)) =>
-        val topDs =
-          if (top.isEmpty) spark.emptyDataset[String] else top.toDS()
-        topDs.union(spark.createDataset(rdd))
-    }
+    out.result()
   }
 
   /** Exact-prefix label relativization, loud on mismatch: the caller hands
@@ -2656,19 +2596,6 @@ object Ktk extends org.apache.spark.internal.Logging {
         s"listed file '$norm' is not under the qualified table root '$prefix' — " +
           "refusing to guess its table-relative label")
     norm.substring(prefix.length)
-  }
-
-  /** Ship the referenced labels to executors for gc's bounded report,
-    * whose present-vs-referenced diff stays a DataFrame anti-join so no
-    * orphan name lands on the driver. ONE `parallelize` call over bounded
-    * slices.
-    */
-  private def parallelizeLabels(
-      spark: SparkSession, labels: Seq[String]): org.apache.spark.rdd.RDD[String] = {
-    val slices = labels.grouped(100000).toSeq
-    spark.sparkContext
-      .parallelize(slices, math.max(1, math.min(64, slices.size)))
-      .flatMap(_.iterator)
   }
 
   /** Integrity audit (the FSCK verb of operational table formats),
@@ -2868,11 +2795,11 @@ object Ktk extends org.apache.spark.internal.Logging {
 
   /** [[salvage]] with a BOUNDED returned report (count + at most
     * `reportLimit` `(kind, path)` references + truncation marker) — the
-    * form the `salvage_report` SQL procedure uses. Unlike gc's orphan
-    * reap, salvage's intrinsic driver floor is the CURRENT snapshot (the
-    * repair commit rewrites it, so it is resident either way); the bound
-    * here is about not RETURNING a million-reference damage report
-    * through the caller, not about the repair's own memory.
+    * form the `salvage_report` SQL procedure uses. Salvage's intrinsic
+    * driver floor is the CURRENT snapshot (the repair commit rewrites it,
+    * so it is resident either way); the bound here is about not RETURNING
+    * a million-reference damage report through the caller, not about the
+    * repair's own memory.
     */
   def salvageReport(spark: SparkSession, base: String, uuid: String,
       acceptResurrection: Boolean = false,
@@ -2910,12 +2837,8 @@ object Ktk extends org.apache.spark.internal.Logging {
     compact(spark, base, uuid, smallFileBytes, targetFileBytes, scope = scope)
     var md = materializeDeletes(spark, base, uuid, targetFileBytes, scope = scope)
     if (gcRetainVersions >= 0) {
-      // the report form, not the Seq API: optimize discards the names, so
-      // a scheduler-driven pass after a compaction storm must not build a
-      // million-path Seq on the driver just to throw it away
-      garbageCollectReport(spark, base, uuid, gcRetainVersions,
-        consumerCheckpoints = consumerCheckpoints,
-        reportLimit = DefaultMaintenanceReportLimit)
+      garbageCollect(spark, base, uuid, gcRetainVersions,
+        consumerCheckpoints = consumerCheckpoints)
       md = DatasetMetadata.load(spark, base, uuid)
     }
     md
@@ -2937,7 +2860,10 @@ object Ktk extends org.apache.spark.internal.Logging {
     * snapshot held at a time); the driver holds the retained versions'
     * labels, never their snapshots all at once. Each retained version's
     * own record is read from storage, so a retained version stranded by
-    * a vacuumed record fails gc even when this JVM still caches it.
+    * a vacuumed record fails gc even when this JVM still caches it. One
+    * listing of `table/` ([[listTableFiles]]) is diffed against those
+    * labels on the driver; the garbage is held as path strings and
+    * deleted in one step, distributed past a handful of paths.
     *
     * `sidecarGraceMs` (Delta-VACUUM-style retention): an unreferenced
     * sidecar dir YOUNGER than this is skipped, because every commit has a
@@ -2963,45 +2889,7 @@ object Ktk extends org.apache.spark.internal.Logging {
       sidecarGraceMs: Long = 15L * 60 * 1000,
       dryRun: Boolean = false,
       retainLastMs: Long = -1L,
-      consumerCheckpoints: Seq[String] = Nil): Seq[String] =
-    gcCore(spark, base, uuid, retainVersions, sidecarGraceMs, dryRun,
-      retainLastMs, consumerCheckpoints, reportLimit = -1)
-      .reclaimed
-
-  /** [[garbageCollect]] with a BOUNDED driver-side report — the form an
-    * operator (or the `gc_report` SQL procedure) should use on incident
-    * scale: a pathological million-orphan reap must not return a 100 MB
-    * `Seq` through the driver. `reclaimedCount` is always the full count;
-    * `reclaimed` holds at most `reportLimit` paths (label-sorted for the
-    * data-file portion, so the sample is deterministic) and `truncated`
-    * says whether anything was dropped. Under a bound the orphan names
-    * never materialize on the driver at all: the present-vs-referenced
-    * diff stays a DataFrame end to end — counted distributed, sampled via
-    * `limit`, and DELETED via `foreachPartition` (the referenced set ships
-    * to executors instead of the listing collecting to the driver).
-    */
-  def garbageCollectReport(spark: SparkSession, base: String, uuid: String,
-      retainVersions: Int = 0,
-      sidecarGraceMs: Long = 15L * 60 * 1000,
-      dryRun: Boolean = false,
-      retainLastMs: Long = -1L,
-      consumerCheckpoints: Seq[String] = Nil,
-      reportLimit: Int = DefaultMaintenanceReportLimit): GcReport = {
-    require(reportLimit >= 0, s"reportLimit must be >= 0, got $reportLimit " +
-      "(use garbageCollect for the unbounded Seq-returning form)")
-    gcCore(spark, base, uuid, retainVersions, sidecarGraceMs, dryRun,
-      retainLastMs, consumerCheckpoints, reportLimit)
-  }
-
-  private def gcCore(spark: SparkSession, base: String, uuid: String,
-      retainVersions: Int,
-      sidecarGraceMs: Long,
-      dryRun: Boolean,
-      retainLastMs: Long,
-      consumerCheckpoints: Seq[String],
-      reportLimit: Int): GcReport = {
-    import spark.implicits._
-    val bounded = reportLimit >= 0
+      consumerCheckpoints: Seq[String] = Nil): Seq[String] = {
     val fs = DatasetMetadata.fs(spark, base)
     val tableRoot = fs.makeQualified(new Path(s"$base/$uuid/table"))
     // the pointer before the listing: every published version is listed
@@ -3059,13 +2947,6 @@ object Ktk extends org.apache.spark.internal.Logging {
       math.min(kf, floor)
     }
     val (keptVersions, prunedVersions) = allVersions.partition(_ >= keepFrom)
-    val deleted = Seq.newBuilder[String]
-    var total = 0L
-    def record(p: String): Unit = {
-      total += 1
-      if (!bounded || total <= reportLimit) { deleted += p; () }
-    }
-    val prefix = tableRoot.toString + "/"
     // referenced labels + per-dir valid sidecar / fragment names of every
     // retained version, from one walk of the commit log. The walk reads
     // each retained record from storage: a retained version stranded by a
@@ -3095,66 +2976,13 @@ object Ktk extends org.apache.spark.internal.Logging {
         DatasetMetadata.materializeCheckpoint(spark, base, uuid, v, md)
       pin(md)
     }
-    if (fs.exists(tableRoot)) {
-      if (!bounded) {
-        // parallel-capable listing (listTableFiles): a wide table's
-        // listing distributes like the deletes below already do
-        val toDeleteRels: Seq[String] =
-          listTableFiles(spark, fs, tableRoot).filterNot(referenced.contains)
-        if (toDeleteRels.nonEmpty) {
-          val toDelete = toDeleteRels.map(rel => new Path(prefix + rel))
-          // distribute the deletes: after heavy compaction/streaming
-          // churn the orphan count is O(#historical files), and
-          // sequential driver-side deletes against an object store
-          // dominate the maintenance pass
-          if (dryRun)
-            toDelete.foreach(p => record(p.toString))
-          else if (toDelete.size <= 16)
-            toDelete.foreach { p => fs.delete(p, false); record(p.toString) }
-          else {
-            val serializableConf = new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf())
-            val paths = toDelete.map(_.toString)
-            spark.sparkContext.parallelize(paths, math.min(32, 1 + paths.size / 64))
-              .foreachPartition { ps =>
-                val conf = serializableConf.value
-                ps.foreach { s =>
-                  val p = new Path(s)
-                  p.getFileSystem(conf).delete(p, false); ()
-                }
-              }
-            paths.foreach(record)
-          }
-        }
-      } else {
-        // BOUNDED: present-vs-referenced stays a DataFrame end to end —
-        // counted distributed, sampled with a sorted limit (deterministic
-        // report), deleted via foreachPartition; only reportLimit names
-        // ever reach the driver no matter how many orphans exist
-        val orphans = listTableFilesDS(spark, fs, tableRoot).toDF("label")
-          .join(parallelizeLabels(spark, referenced.toSeq).toDF("label"), Seq("label"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val n = orphans.count()
-          val sample: Array[String] =
-            if (reportLimit == 0 || n == 0) Array.empty
-            else orphans.orderBy("label").as[String].limit(reportLimit).collect()
-          total += n
-          sample.foreach(rel => deleted += (prefix + rel))
-          if (!dryRun && n > 0) {
-            val serializableConf = new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf())
-            orphans.as[String].foreachPartition { (ps: Iterator[String]) =>
-              val conf = serializableConf.value
-              ps.foreach { rel =>
-                val p = new Path(prefix + rel)
-                p.getFileSystem(conf).delete(p, false); ()
-              }
-            }
-          }
-        } finally { orphans.unpersist(blocking = false); () }
-      }
-    }
+    // the garbage, as strings: data files no retained version references
+    // (sorted by label, so a bounded report's sample is deterministic),
+    // then sidecar dirs, then pruned commit records
+    val garbage = Seq.newBuilder[String]
+    val prefix = tableRoot.toString + "/"
+    garbage ++= listTableFiles(spark, fs, tableRoot).filterNot(referenced.contains)
+      .sorted.map(prefix + _)
     // index / bloom / zone sidecar files referenced by NO retained version's
     // registry — retained snapshots pin their version-addressed sidecars
     // exactly like their data files, so time travel keeps full pruning
@@ -3170,29 +2998,63 @@ object Ktk extends org.apache.spark.internal.Logging {
             val newest = (st.getModificationTime +:
               (try fs.listStatus(st.getPath).toSeq.map(_.getModificationTime)
                catch { case _: java.io.IOException => Nil })).max
-            if (newest < now - sidecarGraceMs) {
-              if (!dryRun) fs.delete(st.getPath, true)
-              record(st.getPath.toString)
-            }
+            if (newest < now - sidecarGraceMs) garbage += st.getPath.toString
           }
         }
       }
     }
-    // commit records older than the retention window — history beyond
-    // `retainVersions` stops being time-travelable here, by design (the
-    // oldest retained version was checkpointed during the walk above)
+    // commit records older than the retention window, as the one
+    // `_versions` listing found them — history beyond `retainVersions`
+    // stops being time-travelable here, by design (the oldest retained
+    // version was checkpointed during the walk above)
     prunedVersions.foreach { v =>
-      Seq(DatasetMetadata.versionKey(base, uuid, v),
-          DatasetMetadata.versionDeltaKey(base, uuid, v)).foreach { k =>
-        val p = new Path(k)
-        if (dryRun) { if (fs.exists(p)) record(p.toString) }
-        else if (fs.delete(p, false)) record(p.toString)
+      if (log.full(v)) garbage += new Path(DatasetMetadata.versionKey(base, uuid, v)).toString
+      if (log.delta(v)) garbage += new Path(DatasetMetadata.versionDeltaKey(base, uuid, v)).toString
+    }
+    val reclaimed = garbage.result()
+    if (!dryRun) {
+      // distribute the deletes past a handful: after heavy
+      // compaction/streaming churn the orphan count is O(#historical
+      // files), and sequential driver-side deletes against an object store
+      // dominate the maintenance pass
+      if (reclaimed.size <= 16) reclaimed.foreach(p => fs.delete(new Path(p), true))
+      else {
+        val conf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sessionState.newHadoopConf())
+        spark.sparkContext.parallelize(reclaimed, math.min(32, 1 + reclaimed.size / 64))
+          .foreach { s =>
+            val p = new Path(s)
+            p.getFileSystem(conf.value).delete(p, true); ()
+          }
       }
       // a post-gc loadVersion of a pruned commit must fail loudly, not
       // answer from this JVM's snapshot cache
-      if (!dryRun) DatasetMetadata.uncacheVersion(base, uuid, v)
+      prunedVersions.foreach(DatasetMetadata.uncacheVersion(base, uuid, _))
     }
-    GcReport(total, bounded && total > reportLimit, deleted.result())
+    reclaimed
+  }
+
+  /** [[garbageCollect]] with a BOUNDED returned report — the form an
+    * operator (or the `gc_report` SQL procedure) should use on incident
+    * scale: a pathological million-orphan reap must not return a 100 MB
+    * `Seq` through the caller. The same run as [[garbageCollect]] (which
+    * holds the garbage on the driver as strings); `reclaimedCount` is the
+    * full count, `reclaimed` its first `reportLimit` paths (data files in
+    * label order, then sidecar dirs, then pruned records) and `truncated`
+    * says whether anything was dropped.
+    */
+  def garbageCollectReport(spark: SparkSession, base: String, uuid: String,
+      retainVersions: Int = 0,
+      sidecarGraceMs: Long = 15L * 60 * 1000,
+      dryRun: Boolean = false,
+      retainLastMs: Long = -1L,
+      consumerCheckpoints: Seq[String] = Nil,
+      reportLimit: Int = DefaultMaintenanceReportLimit): GcReport = {
+    require(reportLimit >= 0, s"reportLimit must be >= 0, got $reportLimit " +
+      "(use garbageCollect for the unbounded Seq-returning form)")
+    val all = garbageCollect(spark, base, uuid, retainVersions, sidecarGraceMs, dryRun,
+      retainLastMs, consumerCheckpoints)
+    GcReport(all.size.toLong, all.size > reportLimit, all.take(reportLimit))
   }
 
   /** Copy a dataset to a new uuid (≙ copy_dataset + modify_uuid,

@@ -439,50 +439,65 @@ private[graft] object Sidecars {
       case _ => None
     }
 
-    /** May rows in [mn, mx] satisfy the literal? CONSERVATIVE: any
+    /** May rows in [mn, mx] satisfy the literal, whose value (the sorted
+      * values, for IN) is already keyed as `lit`? CONSERVATIVE: any
       * comparison failure keeps the file.
       */
-    private def mayMatch(l: PredLiteral, cmp: (Any, Any) => Int, mn: String, mx: String): Boolean = {
+    private def mayMatch(op: PredOp, lit: IndexedSeq[Any], key: Any => Any)(
+        mn0: String, mx0: String): Boolean = {
       import PredOp._
-      try l.op match {
-        case Eq => cmp(l.value, mn) >= 0 && cmp(l.value, mx) <= 0
-        case Ne => !(cmp(mn, mx) == 0 && cmp(l.value, mn) == 0)
-        case Lt => cmp(mn, l.value) < 0
-        case Le => cmp(mn, l.value) <= 0
-        case Gt => cmp(mx, l.value) > 0
-        case Ge => cmp(mx, l.value) >= 0
-        case In => l.value.asInstanceOf[Seq[Any]]
-          .exists(v => v != null && cmp(v, mn) >= 0 && cmp(v, mx) <= 0)
+      val cmp = Predicates.compare _
+      try {
+        val (mn, mx) = (key(mn0), key(mx0))
+        op match {
+          case Eq => cmp(lit(0), mn) >= 0 && cmp(lit(0), mx) <= 0
+          case Ne => !(cmp(mn, mx) == 0 && cmp(lit(0), mn) == 0)
+          case Lt => cmp(mn, lit(0)) < 0
+          case Le => cmp(mn, lit(0)) <= 0
+          case Gt => cmp(mx, lit(0)) > 0
+          case Ge => cmp(mx, lit(0)) >= 0
+          case In =>
+            // least value >= mn, then test <= mx: O(log keys) per file
+            var lo = 0; var hi = lit.size
+            while (lo < hi) {
+              val mid = (lo + hi) >>> 1
+              if (cmp(lit(mid), mn) < 0) lo = mid + 1 else hi = mid
+            }
+            lo < lit.size && cmp(lit(lo), mx) <= 0
+        }
       } catch { case _: Exception => true }
     }
 
-    /** Range check for one literal on a zone column of type `dt`. Large IN
-      * lists: sort once, binary-search per file — O(files·log keys), not
-      * O(files·keys).
+    /** Range check for one literal on a zone column of type `dt`. The
+      * literal converts to the column's key once (an IN list is sorted
+      * once); a literal that does not convert keeps every file.
       */
     private[ktk] def checkFn(l: PredLiteral, dt: DataType): (String, String) => Boolean =
       zoneKey(dt) match {
         case None => (_, _) => true
         case Some(key) =>
-          val cmp = (a: Any, b: Any) => Predicates.compare(key(a), key(b))
-          l.op match {
-            case PredOp.In =>
-              val sorted =
-                try l.value.asInstanceOf[Seq[Any]].filter(_ != null)
-                  .sortWith(cmp(_, _) < 0).toIndexedSeq
-                catch { case _: Exception => null }
-              if (sorted == null) (mn, mx) => mayMatch(l, cmp, mn, mx)
-              else (mn, mx) => try {
-                // least value >= mn, then test <= mx
-                var lo = 0; var hi = sorted.size
-                while (lo < hi) {
-                  val mid = (lo + hi) >>> 1
-                  if (cmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
-                }
-                lo < sorted.size && cmp(sorted(lo), mx) <= 0
-              } catch { case _: Exception => true }
-            case _ => (mn, mx) => mayMatch(l, cmp, mn, mx)
-          }
+          try {
+            val lit = l.op match {
+              case PredOp.In => l.value.asInstanceOf[Seq[Any]].filter(_ != null)
+                .map(key).sortWith(Predicates.compare(_, _) < 0).toIndexedSeq
+              case _ => IndexedSeq(key(l.value))
+            }
+            mayMatch(l.op, lit, key)
+          } catch { case _: Exception => (_, _) => true }
+      }
+
+    /** A partition value against `l` in its column's type `dt`: the
+      * one-point range [v, v] through [[checkFn]], so a literal compares
+      * as Spark's filter does ("25" > "3" on an int column) and one that
+      * does not convert keeps the file for the residual filter. Null
+      * values and literals, and types without a zone key, keep
+      * [[Predicates.evalLiteral]]'s rule.
+      */
+    private[ktk] def valueCheck(l: PredLiteral, dt: DataType): String => Boolean =
+      if (l.value == null || zoneKey(dt).isEmpty) v => Predicates.evalLiteral(l, v)
+      else {
+        val check = checkFn(l, dt)
+        v => if (v == null) Predicates.evalLiteral(l, v) else check(v, v)
       }
   }
 

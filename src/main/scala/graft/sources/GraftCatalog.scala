@@ -423,8 +423,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with StagingTableC
     },
     // BOUNDED gc report: the full reclaimed count rides on every row and
     // at most report_limit reclaimed paths list — a million-orphan reap
-    // stays a DataFrame end to end (counted + deleted distributed) instead
-    // of returning a 100 MB row set through the driver
+    // returns report_limit rows, not a 100 MB row set
     "gc_report" -> proc("gc_report",
       Array(stringParam("table"),
         ProcedureParameter.in("retain_versions", IntegerType).defaultValue("0").build(),

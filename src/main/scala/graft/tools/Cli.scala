@@ -126,8 +126,8 @@ object Cli {
     case "cleanup" =>
       val dry = args.length > 3 && args(3) == "--dry-run"
       // bounded report form, like salvage: counts always full, listing
-      // capped — a million-orphan reap stays a distributed job, not a
-      // million terminal lines
+      // capped — a million-orphan reap prints a count, not a million
+      // terminal lines
       val rep = Ktk.garbageCollectReport(spark, args(1), args(2), dryRun = dry)
       rep.reclaimed.foreach(k =>
         println(s"${if (dry) "would delete" else "deleted"} $k"))

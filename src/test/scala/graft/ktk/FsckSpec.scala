@@ -103,7 +103,7 @@ class FsckSpec extends SparkSpec {
     Ktk.fsck(spark, base, "ds").count() shouldBe 0L
   }
 
-  test("distributed referenced-vs-present diff returns exactly the driver diff") {
+  test("referenced-vs-present diff attributes a missing file to its newest version") {
     // a vanished referenced file + a planted orphan over a five-version
     // history: the missing file is attributed to the newest version that
     // references it, and salvage reports the same loss
@@ -157,10 +157,10 @@ class FsckSpec extends SparkSpec {
     onDriver.toSet shouldBe md.partitions.keySet
   }
 
-  test("FLAT (unpartitioned) tables past the top-level cap list distributed") {
+  test("a flat table lists exactly its labels and audits clean") {
     val base = tmpDir("fsck")
-    // unpartitioned: every file sits in table/ itself, where the
-    // directory-count trigger never fires — the flat cap must kick in
+    // unpartitioned: every file sits in table/ itself, with no first-level
+    // directory to walk
     Ktk.store(spark, base, "flat",
       (0 until 30).map(i => (i.toLong, i * 1.0)).toDF("k", "v")
         .repartition(12))
@@ -168,14 +168,8 @@ class FsckSpec extends SparkSpec {
     val fs = DatasetMetadata.fs(spark, base)
     val root = fs.makeQualified(new Path(md.tableDir(base)))
     val onDriver = Ktk.listTableFiles(spark, fs, root).sorted
-    val overflow = Ktk.listTableFiles(spark, fs, root, flatThreshold = 3).sorted
-    overflow shouldBe onDriver
-    overflow.toSet shouldBe md.partitions.keySet
-    // the DS variant stays distributed and identical too
-    import spark.implicits._
-    Ktk.listTableFilesDS(spark, fs, root, flatThreshold = 3)
-      .collect().sorted.toSeq shouldBe onDriver
-    // fsck still audits clean through the overflow path
+    onDriver.toSet shouldBe md.partitions.keySet
+    Ktk.listTableFiles(spark, fs, root, threshold = 0).sorted shouldBe onDriver
     Ktk.fsck(spark, base, "flat").count() shouldBe 0L
   }
 

@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.Path
   * a retained replay chain is severed — cold or warm cache. gc deletes
   * files, so these are data-safety gates.
   */
-class GcDistributedSpec extends SparkSpec {
+class GcSpec extends SparkSpec {
   import spark.implicits._
 
   /** history: v1 store (partitioned) → v2 update (adds files + replaces)
@@ -55,7 +55,7 @@ class GcDistributedSpec extends SparkSpec {
     "/ds/_versions/v00000001.json", "/ds/_versions/v00000002.delta.json",
     s"/ds/${Sidecars.Index.dir}/dead_idx.parquet", "/ds/table/p=a/stray.parquet")
 
-  test("dry-run reports are identical in driver and distributed modes") {
+  test("dry-run reports exactly the seeded garbage and deletes nothing") {
     val base = tmpDir("gcdist")
     seed(base)
     rel(base, Ktk.garbageCollect(spark, base, "ds", retainVersions = 1,
@@ -64,7 +64,7 @@ class GcDistributedSpec extends SparkSpec {
     Ktk.listVersions(spark, base, "ds") shouldBe Seq(1L, 2L, 3L, 4L)
   }
 
-  test("distributed gc reclaims exactly what driver gc would, and reads survive") {
+  test("gc reclaims exactly the seeded garbage, and reads survive") {
     val base = tmpDir("gcdst")
     seed(base)
     rel(base, Ktk.garbageCollect(spark, base, "ds",
@@ -82,7 +82,7 @@ class GcDistributedSpec extends SparkSpec {
     Ktk.fsck(spark, base, "ds").count() shouldBe 0L
   }
 
-  test("multibyte UTF-8 partition values keep mode parity (fsck and gc)") {
+  test("multibyte UTF-8 partition values round-trip through fsck and gc") {
     // the exact coordinate surface the r11 resurrection bug lived on:
     // labels containing multibyte values must round-trip exactly through
     // the record walk
@@ -109,7 +109,7 @@ class GcDistributedSpec extends SparkSpec {
       "/ds/table/p=caf%C3%A9/späti.parquet")
   }
 
-  test("garbageCollectReport parity with garbageCollect in both diff modes") {
+  test("garbageCollectReport lists exactly what garbageCollect returns") {
     val base = tmpDir("gcrep")
     seed(base)
     val plan = Ktk.garbageCollect(spark, base, "ds", retainVersions = 1,
@@ -153,7 +153,7 @@ class GcDistributedSpec extends SparkSpec {
     sRep.dropped shouldBe sFull.take(1)
   }
 
-  test("fsck caps orphan rows identically in both modes, count on overflow") {
+  test("fsck caps orphan rows, count on overflow") {
     val base = tmpDir("gcorphcap")
     seed(base)
     val fs = DatasetMetadata.fs(spark, base)
@@ -210,7 +210,7 @@ class GcDistributedSpec extends SparkSpec {
       .as[(Long, String, Long)].collect().toSeq shouldBe Seq((1L, "insert", 1L))
   }
 
-  test("non-positive orphanLimit fails loudly in both modes, naming the key") {
+  test("non-positive orphanLimit fails loudly, naming the key") {
     // a zero/negative cap would silently preview nothing — reject up front
     val base = tmpDir("gcorphneg")
     seed(base)
@@ -225,7 +225,7 @@ class GcDistributedSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.fsck.orphanLimit")
   }
 
-  test("distributed gc refuses when a retained chain is broken") {
+  test("gc refuses when a retained chain is broken") {
     val base = tmpDir("gcbrk")
     seed(base)
     val fs = DatasetMetadata.fs(spark, base)

@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
   * character (UTF-16 code units order them the other way round), and
   * date-like and numeric-like strings (no date or number parsing may
   * reorder a string column); the string partition column `q` draws from
-  * the same alphabet.
+  * the same alphabet, and the int partition column `p` holds values whose
+  * string order differs from their numeric one (3 < 25 < 100).
   */
 class ZoneMapPropertySpec extends SparkSpec {
   import spark.implicits._
 
   private val odd = Seq("\uFF61", new String(Character.toChars(0x10000)), "1999-12-31", "2000", "701")
   private val qs = odd ++ Seq("w001", "w017", "w033")
+  private val ps = Seq(0, 3, 25, 100)
 
   private lazy val (base, raw) = {
     val b = tmpDir("zmprop")
@@ -31,7 +33,7 @@ class ZoneMapPropertySpec extends SparkSpec {
           f"2021-${1 + rnd.nextInt(12)}%02d-${1 + rnd.nextInt(28)}%02d ${rnd.nextInt(24)}%02d:00:00"))
       val s = if (rnd.nextInt(15) == 0) None else Some(f"w${rnd.nextInt(40)}%03d")
       val s1 = if (rndOdd.nextInt(4) == 0) s.map(_ => odd(rndOdd.nextInt(odd.size))) else s
-      (i.toLong, i % 4, x, t, s1, qs(rndOdd.nextInt(qs.size)))
+      (i.toLong, ps(i % 4), x, t, s1, qs(rndOdd.nextInt(qs.size)))
     }.toDF("id", "p", "x", "t", "s", "q")
     Ktk.store(spark, b, "zp", rows, partitionOn = Seq("p", "q"),
       sortBy = Seq("x"), zoneMapFor = Seq("x", "t", "s"))
@@ -43,6 +45,19 @@ class ZoneMapPropertySpec extends SparkSpec {
       .select("id").as[Long].collect().sorted.toSeq
     val want = raw.filter(preds.toColumn).select("id").as[Long].collect().sorted.toSeq
     withClue(s"$tag / $preds: ") { got shouldBe want }
+  }
+
+  /** [[check]] where the raw filter may throw (an ANSI cast of the
+    * literal): the read must then throw too.
+    */
+  private def checkOrBothThrow(preds: Predicates, tag: String): Unit = {
+    def ids(df: => org.apache.spark.sql.DataFrame): Either[String, Seq[Long]] =
+      try Right(df.select("id").as[Long].collect().sorted.toSeq)
+      catch { case e: Exception => Left(e.getClass.getSimpleName) }
+    val want = ids(raw.filter(preds.toColumn))
+    val got = ids(Ktk.readTable(spark, base, "zp", predicates = preds))
+    withClue(s"$tag / $preds: want $want, got $got: ") { got.isLeft shouldBe want.isLeft }
+    if (want.isRight) withClue(s"$tag / $preds: ") { got shouldBe want }
   }
 
   test("random single literals over every op and type match the raw filter") {
@@ -76,6 +91,16 @@ class ZoneMapPropertySpec extends SparkSpec {
     check(Predicates.of(Seq(("s", "in", odd))), "s-in-odd")
     check(Predicates.of(Seq(("s", ">=", "2000"), ("s", "<=", odd.head))), "s-between")
     check(Predicates.of(Seq(("q", ">", "701"), ("q", "<", odd(1)))), "q-between")
+  }
+
+  test("string literals on an int partition column compare as the column's type") {
+    raw.select("p").distinct().count() shouldBe ps.size
+    for ((op, v) <- Seq((">", "3"), ("==", "25"), ("<", "25"), (">=", "100"),
+        ("!=", "3"), ("in", Seq("3", "25")), ("in", Seq("100", null))))
+      checkOrBothThrow(Predicates.of(Seq(("p", op, v))), "p-string")
+    for (op <- Seq("==", "!=", ">", "in"))
+      checkOrBothThrow(Predicates.of(Seq(("p", op, if (op == "in") Seq("abc") else "abc"))),
+        "p-non-numeric")
   }
 
   test("random conjunctions and disjunctions match the raw filter") {

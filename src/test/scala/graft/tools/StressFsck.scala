@@ -180,11 +180,11 @@ object StressFsck {
     require(DatasetMetadata.load(spark, base, "ds").version == v0, "dryRun committed!")
 
     // ---- million-orphan reap through the BOUNDED report path ----
-    // the r12 "what's wrong" #1: the Seq-returning gc API is O(orphans)
-    // on the driver by contract; garbageCollectReport must keep the
-    // driver at reportLimit names no matter how many orphans exist —
-    // counted distributed, sampled via sorted limit, deleted via
-    // foreachPartition. ~1M planted orphans, retained heap pinned.
+    // gc diffs one listing against the referenced labels on the driver and
+    // holds the garbage there as strings while it runs (the peak heap);
+    // garbageCollectReport must RETURN at most reportLimit names and leave
+    // nothing behind once it returns, however many orphans exist. ~1M
+    // planted orphans, retained heap pinned.
     val oDirs = 500; val oPer = 2000
     val orphanLabels: Seq[(Int, Int)] =
       for (d <- 0 until oDirs; f <- 0 until oPer) yield (d, f)
@@ -207,10 +207,11 @@ object StressFsck {
       Ktk.garbageCollectReport(spark, base, "ds", retainVersions = 25,
         sidecarGraceMs = 0, dryRun = true, reportLimit = 1000)
     }
+    val p5 = peakHeapMb()
     val h5 = retainedHeapMb()
     println(f"gc_report dry-run: $tDryRep%.1f s, count ${dryRep.reclaimedCount}, " +
       s"listed ${dryRep.reclaimed.size}, truncated ${dryRep.truncated}, " +
-      s"retained heap $h4 -> $h5 MB (delta ${h5 - h4})")
+      s"retained heap $h4 -> $h5 MB (delta ${h5 - h4}), peak $p5 MB")
     require(dryRep.reclaimedCount == nOrphans,
       s"expected $nOrphans orphans, counted ${dryRep.reclaimedCount}")
     require(dryRep.reclaimed.size == 1000 && dryRep.truncated,
@@ -236,13 +237,17 @@ object StressFsck {
     require(h9 - h8 < 300,
       s"capped fsck retained ${h9 - h8} MB — orphan rows leaking to the driver?")
 
-    // the real bounded run reclaims all of them without ever returning
-    // (or holding) the million names, and the table audits clean after
+    // the real bounded run reclaims all of them without returning the
+    // million names, and the table audits clean after
+    val h6 = retainedHeapMb(); resetPeaks()
     val (realRep, tRealRep) = time {
       Ktk.garbageCollectReport(spark, base, "ds", retainVersions = 25,
         sidecarGraceMs = 0, reportLimit = 1000)
     }
-    println(f"gc_report real run: $tRealRep%.1f s, count ${realRep.reclaimedCount}")
+    val p7 = peakHeapMb()
+    val h7 = retainedHeapMb()
+    println(f"gc_report real run: $tRealRep%.1f s, count ${realRep.reclaimedCount}, " +
+      s"retained heap $h6 -> $h7 MB (delta ${h7 - h6}), peak $p7 MB")
     require(realRep.reclaimedCount == nOrphans, s"real reap: ${realRep.reclaimedCount}")
     val (postRows, tPost) = time { Ktk.fsck(spark, base, "ds").collect() }
     val postKinds = postRows.map(_.getString(0)).toSet
