@@ -86,16 +86,21 @@ final case class PredLiteral(col: String, op: PredOp, value: Any) {
     case _ => ()
   }
 
+  /** The literal as a Catalyst filter. Values bind by reference
+    * ([[ParamLiteral]]), so reads that differ only in values share one
+    * compiled class.
+    */
   def toColumn: Column = {
     check()
     val c = col_(col)
+    val v = ParamLiteral.column _
     op match {
-      case Eq => if (value == null) c.isNull else c === lit(value)
-      case Ne => if (value == null) c.isNotNull else c =!= lit(value)
-      case Lt => c < lit(value)
-      case Le => c <= lit(value)
-      case Gt => c > lit(value)
-      case Ge => c >= lit(value)
+      case Eq => if (value == null) c.isNull else c === v(value)
+      case Ne => if (value == null) c.isNotNull else c =!= v(value)
+      case Lt => c < v(value)
+      case Le => c <= v(value)
+      case Gt => c > v(value)
+      case Ge => c >= v(value)
       case In =>
         val vs = value.asInstanceOf[Seq[Any]]
         if (vs == null || vs.isEmpty) lit(false)
@@ -103,7 +108,7 @@ final case class PredLiteral(col: String, op: PredOp, value: Any) {
           val (nulls, nonNull) = vs.partition(_ == null)
           val base =
             if (nonNull.isEmpty) lit(false)
-            else c.isin(nonNull: _*)
+            else c.isin(nonNull.map(v): _*)
           if (nulls.nonEmpty) base || c.isNull else base
         }
     }

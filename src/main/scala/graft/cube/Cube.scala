@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Predicates
+import graft.core.{ParamLiteral, Predicates}
 import graft.ktk.{DatasetMetadata, Ktk}
 
 /** Multi-dataset "Cube" (star-schema-ish) layer, re-expressing the
@@ -267,7 +267,9 @@ object Cube {
       .map(r => partitionBy.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
       .sortBy(_.toSeq.sortBy(_._1).map(_._2.toString).mkString("|"))
     groups.toSeq.map { values =>
-      val cond = values.map { case (c, v) => col(s"`$c`") === lit(v) }.reduce(_ && _)
+      // one compiled class for every group: values bind by reference
+      val cond = values.map { case (c, v) => col(s"`$c`") === ParamLiteral.column(v) }
+        .reduce(_ && _)
       values -> full.filter(cond)
     }
   }

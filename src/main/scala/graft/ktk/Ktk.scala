@@ -3,6 +3,8 @@ package graft.ktk
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.types._
 
 import graft.core.{PredLiteral, Predicates, SchemaUtil, UrlCodec}
@@ -1456,16 +1458,26 @@ object Ktk extends org.apache.spark.internal.Logging {
 
   /** Partition-scope filter of the maintenance rewrites (`compact`,
     * `materializeDeletes`, `clusterZOrder`) and of delete scopes: a
-    * condition over partition keys only, evaluated against label-path
-    * values.
+    * condition over partition keys only. A label is in scope exactly when
+    * `filter(scope.toColumn)` keeps its rows: its path values are cast to
+    * the keys' types, as the scan types them, and the condition is decided
+    * by [[Sidecars.rowFilter]] (`p < "3"` over int partitions keeps 0, not
+    * 25).
     */
-  private def partitionScope(
+  private def partitionScope(spark: SparkSession,
       md: DatasetMetadata, scope: Predicates, op: String): String => Boolean =
     if (scope.isEmpty) _ => true
     else {
       scope.columns.foreach(c => require(md.partitionKeys.contains(c),
         s"$op column '$c' must be a partition key"))
-      l => scope.matchesValues(md.partitionValues(l))
+      val keys = StructType(md.partitionKeys.map(md.schema(_)))
+      val inScope = Sidecars.rowFilter(spark, keys, scope.toColumn)
+      val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+      l => {
+        val values = md.partitionValues(l)
+        inScope(InternalRow.fromSeq(keys.map(f =>
+          Cast(Literal(values(f.name)), f.dataType, tz).eval())))
+      }
     }
 
   /** Apply one CDC batch (Debezium-style row images with an operation
@@ -1515,7 +1527,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     if (md.deleteFragments.isEmpty) return md
     // optional partition scope: fold tombstones only for matching
     // partitions' files — fragments covering out-of-scope files survive
-    val inScope = partitionScope(md, scope, "materialize scope")
+    val inScope = partitionScope(spark, md, scope, "materialize scope")
     val labels = DeleteVectors.labels(spark, base, md)
     val dirtyAll = labels.intersect(md.partitions.keySet)
     // with no live dirty file the fragments name only files earlier
@@ -1783,13 +1795,14 @@ object Ktk extends org.apache.spark.internal.Logging {
     //    (dynamic partition overwrite defers this to AFTER the write: its
     //    scope is the partition set the batch actually lands in — ONE pass
     //    over the source, no pre-computed distinct.)
+    lazy val inDeleteScope = partitionScope(spark, md, deleteScope, "delete_scope")
     val deleted: Set[String] =
       if (effDynamic) Set.empty
       else if (effReplaceAll) {
         require(deleteScope.isEmpty, "replaceAll and deleteScope are mutually exclusive")
         md.partitions.keySet
       } else if (deleteScope.isEmpty) Set.empty
-      else md.partitions.keySet.filter(partitionScope(md, deleteScope, "delete_scope"))
+      else md.partitions.keySet.filter(inDeleteScope)
 
     // 2. append new files; the schema check and CHECK constraints gate the
     //    batch BEFORE any file lands
@@ -1808,7 +1821,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     // the check fails BEFORE the metadata commit, so nothing publishes
     // (the orphan files are unreferenced; gc reclaims them).
     if (requireAppendsInScope && !deleteScope.isEmpty) {
-      val outOfScope = added.keySet.filterNot(l => deleteScope.matchesValues(md.partitionValues(l)))
+      val outOfScope = added.keySet.filterNot(inDeleteScope)
       if (outOfScope.nonEmpty)
         throw new IllegalArgumentException(
           s"overwrite scope violation: ${outOfScope.size} appended file(s) land outside " +
@@ -1926,7 +1939,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     // optional partition scope (OPTIMIZE ... WHERE over partition keys): at
     // large scale maintenance targets the HOT partitions, not the table —
     // out-of-scope files are untouchable, label parsing only
-    val inScope = partitionScope(md, scope, "compact scope")
+    val inScope = partitionScope(spark, md, scope, "compact scope")
     // compaction victims: small files sharing (partition dir, commit seq)
     // with at least one other small file — singletons gain nothing.
     // Sizes come from the catalog (sizeOf widens Jackson's narrowed
@@ -2138,7 +2151,7 @@ object Ktk extends org.apache.spark.internal.Logging {
     // the matching partitions' files; quantile boundaries are computed
     // over the scoped set (zone pruning is per-file min/max, so scoped
     // boundaries only affect balance within the rewritten files)
-    val inScope = partitionScope(md, scope, "z-order scope")
+    val inScope = partitionScope(spark, md, scope, "z-order scope")
     val allLabels = md.partitions.keys.toSeq.filter(inScope).sorted
     if (allLabels.isEmpty) return md
     val untouched = md.partitions.keys.toSeq.filterNot(inScope).sorted
@@ -2274,7 +2287,7 @@ object Ktk extends org.apache.spark.internal.Logging {
 
     val deleted: Set[String] =
       if (deleteScope.isEmpty) Set.empty
-      else md.partitions.keySet.filter(partitionScope(md, deleteScope, "delete_scope"))
+      else md.partitions.keySet.filter(partitionScope(spark, md, deleteScope, "delete_scope"))
     // sidecars merge exactly like [[update]]: the first commit after
     // [[createEmpty]] finds no sidecar file and builds from its labels.
     // Without a delete scope the commit is a pure append, blind to the

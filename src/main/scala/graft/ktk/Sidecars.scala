@@ -240,25 +240,16 @@ private[graft] object Sidecars {
         .sortWithinPartitions("value")
     }
 
-    /** The labels of every row whose value satisfies `l`, on the driver.
-      * The literal is the expression a DataFrame filter on the sidecar runs —
-      * `Predicates(...).toColumn` analyzed against the sidecar schema, then
-      * the optimizer's constant folding and IN-to-InSet rewrite — so
-      * coercion, ANSI cast errors and null handling are Spark's. It is
-      * interpreted: a sidecar's rows are too few to repay a code-generation
-      * compile per literal.
+    /** The labels of every row whose value satisfies `l`, on the driver,
+      * decided by [[rowFilter]] as a DataFrame filter on the sidecar would.
       */
     protected def matching(spark: SparkSession, base: String, md: DatasetMetadata, p: Path,
         l: PredLiteral): Option[Set[String]] = {
       val labels = Set.newBuilder[String]
       SidecarRows.scan(spark, base, md.uuid, p) { schema =>
-        val filter = analyzed(spark, schema)(
-          _.filter(Predicates(Seq(Seq(l.copy(col = "value")))).toColumn))
-        val Filter(cond, child) = OptimizeIn(ConstantFolding(filter)): @unchecked
-        val pred = Predicate.createInterpreted(BindReferences.bindReference(cond, child.output))
-        pred.initialize(0)
+        val pred = rowFilter(spark, schema, Predicates(Seq(Seq(l.copy(col = "value")))).toColumn)
         val parts = schema.fieldIndex("partitions")
-        row => if (pred.eval(row) && !row.isNullAt(parts)) {
+        row => if (pred(row) && !row.isNullAt(parts)) {
           val a = row.getArray(parts)
           var i = 0
           while (i < a.numElements()) { labels += a.getUTF8String(i).toString; i += 1 }
@@ -511,6 +502,20 @@ private[graft] object Sidecars {
       f: DataFrame => DataFrame): LogicalPlan =
     f(GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema))))
       .queryExecution.analyzed
+
+  /** `cond` over rows of `schema`, decided as a DataFrame filter decides
+    * it: analyzed against the schema, then the optimizer's constant folding
+    * and IN-to-InSet rewrite, so coercion, ANSI cast errors and null
+    * handling are Spark's. It is interpreted, for the driver's few rows.
+    */
+  private[ktk] def rowFilter(spark: SparkSession, schema: StructType,
+      cond: org.apache.spark.sql.Column): InternalRow => Boolean = {
+    val Filter(c, child) =
+      OptimizeIn(ConstantFolding(analyzed(spark, schema)(_.filter(cond)))): @unchecked
+    val pred = Predicate.createInterpreted(BindReferences.bindReference(c, child.output))
+    pred.initialize(0)
+    pred.eval
+  }
 
   /** The sidecar columns a writer asks for, in [[kinds]] order. */
   def wanted(indices: Seq[String], blooms: Seq[String], zones: Seq[String]): Seq[(Kind, Seq[String])] =

@@ -42,4 +42,15 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
       (out, n.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  /** Java classes Spark's code generator compiled while `f` runs, in the
+    * driver and (local mode) in its tasks; a class found in the compile
+    * cache does not count.
+    */
+  def compiles[A](f: => A): (A, Long) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = h.getCount
+    val out = f
+    (out, h.getCount - before)
+  }
 }

@@ -129,6 +129,20 @@ class CubeSpec extends SparkSpec {
     groups.map(_._2.count()).sum shouldBe 4
   }
 
+  test("queryByPartition's groups share one compiled class") {
+    val base = tmpDir("cube")
+    Cube.build(spark, base, cube, Map("seed" ->
+      (0 until 6).flatMap(x => Seq((x, 0, 0, x * 1.0), (x, 1, 1, x * 2.0))).toDF("x", "y", "p", "v1")))
+    // a dimension group column: its filter runs in generated code, not in
+    // partition pruning
+    val groups = Cube.queryByPartition(spark, base, cube, partitionBy = Seq("x"))
+    groups.map(_._1("x")) shouldBe (0L until 6L)
+    groups.head._2.collect()
+    val (counts, n) = compiles(groups.tail.map(_._2.collect().length))
+    counts shouldBe Seq.fill(5)(2)
+    n shouldBe 0
+  }
+
   test("cube query composes with row-level deletes on member datasets") {
     import graft.ktk.Ktk
     val base = tmpDir("cube")

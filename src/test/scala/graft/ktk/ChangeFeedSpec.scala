@@ -20,7 +20,7 @@ class ChangeFeedSpec extends SparkSpec {
       .select("k", "_change_type", "_commit_version")
       .as[(Long, String, Long)].collect().sorted.toSeq
 
-  test("distributed CDF planning matches the snapshot walk row for row") {
+  test("the change feed replays a churned log from version 0") {
     // churned fixture touching every feed shape: partitioned store (with a
     // multibyte label), appends, a DV delete, a MERGE (delete+insert), a
     // silent maintenance rewrite, and a delete_scope — the whole range

@@ -17,7 +17,7 @@ class VersioningSpec extends SparkSpec {
   private def df1 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
   private def df2 = Seq((3L, "c")).toDF("k", "v")
 
-  test("distributed history matches the driver walk row for row") {
+  test("history reports every version's metrics over a churned log") {
     // churned fixture covering every metrics edge: partitioned store,
     // update that ADDS and REPLACES labels, delete_scope removals, a DV
     // commit (tombstone fragments), a rollback (re-adds old-seq labels),
@@ -65,7 +65,7 @@ class VersioningSpec extends SparkSpec {
     }
   }
 
-  test("distributed history replays self-contained deltas like the driver walk") {
+  test("history replays self-contained deltas") {
     // a degraded writer's SELF-CONTAINED delta is a chain terminator that
     // lives at the delta key: the record scan must treat its adds as the
     // complete state (window [v, v]), exactly like loadVersion does
@@ -96,7 +96,7 @@ class VersioningSpec extends SparkSpec {
       Seq((9L, "z", "insert", 4L))
   }
 
-  test("distributed history nulls metrics across a retained-version gap like the driver walk") {
+  test("history nulls metrics across a retained-version gap") {
     // a MIDDLE version's records externally vacuumed while the versions on
     // both sides stay loadable (v1 checkpoint survives; v3 degraded to a
     // self-contained record): retained versions are {1, 3} — NOT
